@@ -139,19 +139,8 @@ object BenchIsolated {
       }
     val spark = Sessions.benchSession("graft-bench-isolated")
     spark.sparkContext.setLogLevel("WARN")
-    // same untimed build-artifact pre-pass as Bench
-    try {
-      ops.PipelineOps.persistAdmissionIndex(spark, sfDir)
-      ops.PipelineOps.sharedAudited(spark, sfDir).count()
-      ops.PipelineOps.sharedBaseIndex(spark, sfDir).count()
-      ops.PipelineOps.benchGramSet(spark, sfDir) // r18 session artifact
-      ops.SimilarityOps.sharedSimTruth(spark, sfDir).count()
-      ops.SimilarityOps.sharedRawTrain(spark, sfDir)
-      ops.SimilarityOps.sharedTrainedKit(spark, sfDir)
-      streaming.StreamingOps.stageSpiSlices(spark, sfDir)
-      ()
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench-isolated] prebuild: $e") }
+    try Bench.prebuild(spark, sfDir)
+    catch { case e: Throwable => System.err.println(s"[bench-isolated] prebuild: $e") }
     val byName = Registry.all.map(q => q.name -> q).toMap
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     val medians = scala.collection.mutable.LinkedHashMap[String, Double]()

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
-/** r18: per-lane scheduler-overhead profile — counts Spark jobs,
+/** Per-lane A/B timer and scheduler-overhead profile — counts Spark jobs,
   * stages and tasks for one registry-lane execution and compares the
   * executor-side task time against the lane's wall-clock, so the
   * optimization round can tell COMPUTE-bound lanes (task time ≈ wall ×
@@ -13,8 +13,9 @@ import org.apache.spark.sql.SparkSession
   * faster kernels).
   *
   * Usage: runMain graft.DevJobs <sfDir> <reps> <lane> [<lane>...]
-  * Artifacts are pre-built untimed (the Bench warm-up contract); each
-  * rep clears the cache like Bench/DevTime reps do.
+  * Artifacts are pre-built untimed by [[Bench.prebuild]]; each rep
+  * clears the cache like Bench reps do and prints its wall time, so
+  * interleaving two arms' runs on one box gives a per-lane A/B.
   */
 object DevJobs {
   final class Counter extends SparkListener {
@@ -73,18 +74,8 @@ object DevJobs {
     val names = args.drop(2).toSet
     val spark = Sessions.benchSession("graft-devjobs")
     spark.sparkContext.setLogLevel("WARN")
-    // untimed session-artifact pre-pass (the Bench warm-up contract)
-    try {
-      ops.PipelineOps.persistAdmissionIndex(spark, sfDir)
-      ops.PipelineOps.sharedAudited(spark, sfDir).count()
-      ops.PipelineOps.sharedBaseIndex(spark, sfDir).count()
-      ops.PipelineOps.benchGramSet(spark, sfDir)
-      ops.SimilarityOps.sharedSimTruth(spark, sfDir).count()
-      ops.SimilarityOps.sharedRawTrain(spark, sfDir)
-      ops.SimilarityOps.sharedTrainedKit(spark, sfDir)
-      streaming.StreamingOps.stageSpiSlices(spark, sfDir)
-      ()
-    } catch { case e: Throwable => System.err.println(s"[devjobs] prebuild: $e") }
+    try Bench.prebuild(spark, sfDir)
+    catch { case e: Throwable => System.err.println(s"[devjobs] prebuild: $e") }
     val c = new Counter
     spark.sparkContext.addSparkListener(c)
     Registry.all.filter(q => names.contains(q.name)).foreach { q =>

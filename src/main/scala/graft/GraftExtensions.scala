@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * custom kernels are first-class functions, not just Scala helpers.
   *
   * Activate with .config("spark.sql.extensions", "graft.GraftExtensions")
-  * (Bench/Verify do) or .withExtensions(new GraftExtensions).
+  * (as [[Sessions.benchSession]] does) or .withExtensions(new GraftExtensions).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -22,24 +22,12 @@ import org.apache.spark.sql.functions._
 object ScaleSmoke {
   private val Rows = 30300000L
 
-  /** 1-minute load average at run start/end — the Bench.loadAvg1m
-    * discipline extended to the scale-smoke artifact (r9 VERDICT #5):
-    * a contended box inflates stage times up to 2×, and without the
-    * annotation that contamination is only detectable forensically.
-    */
-  private def loadAvg1m(): Double =
-    try {
-      val src = scala.io.Source.fromFile("/proc/loadavg")
-      try src.getLines().next().split("\\s+")(0).toDouble
-      finally src.close()
-    } catch { case _: Throwable => -1.0 }
-
   def main(args: Array[String]): Unit = {
-    val loadStart = loadAvg1m()
-    // same threshold + flag as Bench (r13 verdict #3: the committed
-    // SCALE_SMOKE.json was captured at loadavg 4.76 with no flag,
-    // contradicting the repo's own contention rule) — flag, don't
-    // refuse, and a contended run must not clobber an idle artifact
+    // 1-minute load average at run start/end: a contended box inflates
+    // stage times up to 2x, and the stamp makes that visible
+    val loadStart = Bench.loadAvg1m()
+    // same threshold + flag as Bench — flag, don't refuse, and a
+    // contended run must not clobber an idle artifact
     val contendedStart = loadStart > Bench.ContendedLoadAvg
     if (contendedStart)
       System.err.println(
@@ -47,7 +35,7 @@ object ScaleSmoke {
           f"${Bench.ContendedLoadAvg}%.1f — box is contended; run is " +
           "stamped \"contended\": true and must not replace idle artifacts")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-scale-smoke")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -61,11 +49,7 @@ object ScaleSmoke {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    // ad-hoc conf overrides for tuning experiments, e.g.
-    // SPARK_GRAFT_EXTRA_CONF="spark.shuffle.compress=false;spark.io.compression.codec=lz4"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def force(df: DataFrame): Unit =
@@ -179,7 +163,7 @@ object ScaleSmoke {
       .mkString("{", ",", "}")
     val rs = rssMb.map { case (k, v) => "\"" + k + "\":" + num(v) }
       .mkString("{", ",", "}")
-    val loadEnd = loadAvg1m()
+    val loadEnd = Bench.loadAvg1m()
     // BOTH readings are judged (r14 verdict #6: the start-only stamp
     // missed a competitor arriving mid-run, and the end reading alone
     // is inflated by the run itself). The run's own 32 worker threads

@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Single source of truth for the benchmark-lane SparkSession config —
-  * Bench and DevTime must measure under IDENTICAL settings or outlier
-  * investigations chase config drift instead of plans (r2 review
-  * finding). Verify keeps its own leaner session (driver contract).
+  * Bench and DevJobs must measure under IDENTICAL settings or outlier
+  * investigations chase config drift instead of plans. Verify keeps its
+  * own leaner session (driver contract).
   */
 object Sessions {
   def benchSession(appName: String): SparkSession = {
@@ -23,16 +23,14 @@ object Sessions {
       // and does not need this).
       .config("spark.sql.files.maxPartitionBytes", "1m")
       .config("spark.sql.files.openCostInBytes", "128k")
-      // AQE small-partition floor (r18 third pass, A/B-measured): the
-      // default 1m minPartitionSize coalesces this workload's small-
-      // byte / high-CPU-per-row shuffles (gram postings, grain pairs,
+      // AQE small-partition floor (A/B-measured): the default 1m
+      // minPartitionSize coalesces this workload's small-byte /
+      // high-CPU-per-row shuffles (gram postings, grain pairs,
       // candidate windows) down to 8-16 of the 32 slots. Same rationale
-      // as the split-size override above, same env parameterization as
-      // the core count: fixture shuffles are KB-to-MB while the per-row
-      // kernels are real; a deployment's shuffles are GB-scale and
-      // never touch this floor.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
+      // as the split-size override above: fixture shuffles are
+      // KB-to-MB while the per-row kernels are real; a deployment's
+      // shuffles are GB-scale and never touch this floor.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
   }

@@ -62,13 +62,13 @@ object HashFns {
   /** Word n-grams (shingles) of a token array, distinct.
     *
     * Built from n offset slices + arrays_zip instead of an element_at
-    * lambda (r18, the [[adjacentPairs]] zip form generalized to n):
-    * the lambda form indexed the token array per (position, offset),
-    * and when `toks` is an UNBOUND split(text) expression — which is
-    * what every gate/dedup call site passes — each element_at
-    * re-tokenized the document, O(n·tokens²) per doc. Measured
-    * (DevExprProbe, sf0.1 corpus): the 8-gram set alone cost 4.2 s of
-    * a single corpus pass vs 0.2 s for the tokenization itself. The
+    * lambda (the [[adjacentPairs]] zip form generalized to n): the
+    * lambda form indexed the token array per (position, offset), and
+    * when `toks` is an UNBOUND split(text) expression — which is what
+    * every gate/dedup call site passes — each element_at re-tokenized
+    * the document, O(n·tokens²) per doc. Measured on the sf0.1 corpus
+    * (OPTIMIZATION_r18.md): the 8-gram set alone cost 4.2 s of a
+    * single corpus pass vs 0.2 s for the tokenization itself. The
     * zip form references `toks` only outside the lambda, so it costs a
     * constant number of array evaluations per row. Output identical:
     * grams in position order, size-n+1 entries, empty for short docs
@@ -263,8 +263,6 @@ object HashFns {
     */
   def simhashChunk(sh: Column, chunk: Int): Column =
     shiftright(sh, chunk * 8) % 256
-  def simhashChunkSql(shE: String, chunk: Int): String =
-    s"(($shE >> ${chunk * 8}) & 255)"
 
   // ---- Rolling polynomial fingerprint -----------------------------
   val FpMod: Long = 1000000007L

@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   *    before ranking — q163 measures it at mean nDCG@10 ≈ 0.5 where
   *    the single-table lane reads ≈ 0.01–0.07 (miss probability
   *    multiplies across tables). Index cost: T entries per vector,
-  *    T bucket probes per query; geometry picked by the DevAnnSweep
-  *    measured grid.
+  *    T bucket probes per query; geometry picked by the measured grid
+  *    in bench_evidence/r9_ann_sweep.md.
   *  - q39 single-table LSH: kept as the pedagogical single-table lane.
   *    Its own eval row (q163 'lsh') shows why one table is not enough:
   *    a 6-plane signature either nails a bucket or returns almost
@@ -66,22 +66,17 @@ object SimilarityOps {
     java.lang.Long.parseLong(hex.take(15), 16) % 2001L - 1000L
   }
 
-  /** Deterministic pseudo-random hyperplane weights, seed-prefix-stable
-    * in the plane count (plane p's weights don't depend on how many
-    * planes are requested) — the q163-driven sweep varies the count
-    * without perturbing the registered lane's buckets.
-    */
-  private[graft] def planeIntFor(planes: Int): IndexedSeq[IndexedSeq[Long]] =
-    (0 until planes).map(p => (0 until Dim).map(j => h15(s"hp_${p}_$j")))
-  private[graft] val planeInt: IndexedSeq[IndexedSeq[Long]] = planeIntFor(NPlanes)
+  /** q39's deterministic pseudo-random hyperplane weights. */
+  private val planeInt: IndexedSeq[IndexedSeq[Long]] =
+    (0 until NPlanes).map(p => (0 until Dim).map(j => h15(s"hp_${p}_$j")))
+
+  /** Exposed for Plans and the tests (the relation every lane starts from). */
+  private[graft] def baseFor(s: SparkSession, d: String): DataFrame = base(s, d)
 
   /** Raw float vectors feed graft.expressions.VecDot directly (floats
     * widen exactly, so results match the double-list SQL twin bit for
     * bit) — no per-element cast pass in the hot path.
     */
-  /** Exposed for DevAnnSweep's grid (same relation every lane starts from). */
-  private[graft] def baseFor(s: SparkSession, d: String): DataFrame = base(s, d)
-
   private def base(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d)
       .repartition(col("vec_id")) // single-file input → force compute parallelism
@@ -136,21 +131,17 @@ object SimilarityOps {
     (0 until Dim).map(j => s"($vE)[${j + 1}] * (${planeInt(p)(j)} / 1000.0)")
       .mkString(" + ")
 
-  private def bucketFor(v: Column, ws: IndexedSeq[IndexedSeq[Long]]): Column =
-    ws.indices.map(p => when(planeDot(v, ws(p)) > 0, lit(1L << p)).otherwise(lit(0L)))
+  private def bucket(v: Column): Column =
+    planeInt.indices
+      .map(p => when(planeDot(v, planeInt(p)) > 0, lit(1L << p)).otherwise(lit(0L)))
       .reduce(_ + _)
-  private def bucket(v: Column): Column = bucketFor(v, planeInt)
   private def bucketSql(vE: String): String =
     (0 until NPlanes)
       .map(p => s"(CASE WHEN ${planeDotSql(vE, p)} > 0 THEN ${1L << p} ELSE 0 END)")
       .mkString("(", " + ", ")")
 
-  def simAnnLsh(s: SparkSession, d: String): DataFrame =
-    simAnnLshOn(base(s, d), planeInt)
+  def simAnnLsh(s: SparkSession, d: String): DataFrame = simAnnLshOn(base(s, d))
 
-  /** Single-table LSH over an externally-supplied plane set — the
-    * registered q39 lane at [[planeInt]]; the sweep passes other counts.
-    */
   /** Shared top-K presentation: rank candidates per query by cosine
     * with a deterministic id tie-break, keep K, BIGINT the rank after
     * the filter (a cast between window and filter would hide the rn<=k
@@ -164,26 +155,19 @@ object SimilarityOps {
       .orderBy("qid", "rn")
   }
 
-  /** Single-table candidate set (qid, vec_id, cos_r) — scored bucket
-    * collisions, pre-ranking (DevAnnSweep counts these as probe cost).
+  /** Single-table LSH ranked over the first `nq` vectors as queries —
+    * q39 at NQueries, q163's 'lsh' system at EvalQueries.
     */
-  private[graft] def lshCandidates(
-      allIn: DataFrame, ws: IndexedSeq[IndexedSeq[Long]],
-      nq: Int = NQueries): DataFrame = {
-    val all = allIn.withColumn("bkt", bucketFor(col("v"), ws))
+  private def simAnnLshOn(allIn: DataFrame, nq: Int = NQueries): DataFrame = {
+    val all = allIn.withColumn("bkt", bucket(col("v")))
     val q = all.filter(col("vec_id") < nq)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
               col("nrm").as("qn"), col("bkt").as("qbkt"))
-    all.join(broadcast(q),
+    rankTopK(all.join(broadcast(q),
         col("bkt") === col("qbkt") && col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
-              round(vecDot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos_r"))
+              round(vecDot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos_r")))
   }
-
-  private[graft] def simAnnLshOn(
-      allIn: DataFrame, ws: IndexedSeq[IndexedSeq[Long]],
-      nq: Int = NQueries): DataFrame =
-    rankTopK(lshCandidates(allIn, ws, nq))
 
   private val simAnnLshSql =
     s"""WITH $baseCte,
@@ -208,32 +192,25 @@ object SimilarityOps {
   //      the index stores T entries per vector and probes T buckets per
   //      query — the classic recall-for-space trade, here measured
   //      rather than asserted (q163 scores this lane as 'mlsh' next to
-  //      'lsh', 'ivf' and 'adc'). Geometry chosen BY the DevAnnSweep
-  //      grid (bench_evidence/r9_ann_sweep.md): at fixed k=5, mean
+  //      'lsh', 'ivf' and 'adc'). Geometry chosen by the measured
+  //      grid in bench_evidence/r9_ann_sweep.md: at fixed k=5, mean
   //      nDCG@10 climbs 0.19 → 0.27 → 0.45 → 0.53 as T goes
   //      2 → 4 → 6 → 8, each table paying ~n/2^k scored candidates
   //      per query. In deployment k scales as log2(n / target bucket
   //      size) — k pins the per-table candidate fraction (2^-k of the
-  //      corpus), T multiplies recall at T× index entries; both are
-  //      parameters of the lane now (simAnnMultiLshOn), so re-sizing
-  //      is a measurement away, not a code change. Duplicate
-  //      candidates from multiple tables collapse
-  //      via a (qid, vec_id) MAX aggregate BEFORE ranking (scores of
+  //      corpus), T multiplies recall at T× index entries (MtPlanes
+  //      and MtTables below). Duplicate candidates from multiple tables
+  //      collapse via a (qid, vec_id) MAX aggregate BEFORE ranking (scores of
   //      duplicates are identical doubles, so MAX is a dedup, not a
   //      choice). Same seeded-md5 plane recipe as q39, seeded per
   //      table — both engines derive identical buckets. ----
   private[graft] val MtTables = 8
   private[graft] val MtPlanes = 5
 
-  /** Per-table plane weights, seed-stable in both counts (table t /
-    * plane p weights don't depend on how many are requested).
-    */
-  private[graft] def mtPlaneIntFor(
-      tables: Int, planes: Int): IndexedSeq[IndexedSeq[IndexedSeq[Long]]] =
-    (0 until tables).map(t => (0 until planes).map(p =>
-      (0 until Dim).map(j => h15(s"mt_${t}_${p}_$j"))))
+  /** Per-table plane weights (table t, plane p). */
   private[graft] val mtPlaneInt: IndexedSeq[IndexedSeq[IndexedSeq[Long]]] =
-    mtPlaneIntFor(MtTables, MtPlanes)
+    (0 until MtTables).map(t => (0 until MtPlanes).map(p =>
+      (0 until Dim).map(j => h15(s"mt_${t}_${p}_$j"))))
 
   private def mtBucket(v: Column, ws: IndexedSeq[IndexedSeq[Long]]): Column =
     ws.indices.map { p =>
@@ -249,45 +226,28 @@ object SimilarityOps {
     }.mkString("(", " + ", ")")
 
   def simAnnMultiLsh(s: SparkSession, d: String): DataFrame =
-    simAnnMultiLshOn(base(s, d), mtPlaneInt)
+    simAnnMultiLshOn(base(s, d))
 
-  /** Multi-table LSH over an externally-supplied table×plane weight
-    * set — the registered q164 lane at [[mtPlaneInt]]; DevAnnSweep
-    * passes other (T, k) geometries.
+  /** Multi-table LSH ranked over the first `nq` vectors as queries —
+    * q164 at NQueries, q163's 'mlsh' system at EvalQueries. Each
+    * (query, candidate, table) collision pays one scored dot product
+    * before the MAX dedup.
     */
-  /** PRE-dedup collision rows — one per (query, candidate, TABLE)
-    * collision, each paying a full scored dot product. This is the
-    * lane's true probe COST (DevAnnSweep reports it as scored/query;
-    * r9 ADVICE: counting the MAX-deduped uniques understated the
-    * per-table work the T-tables model describes).
-    */
-  private[graft] def mtCollisions(
-      all: DataFrame, tws: IndexedSeq[IndexedSeq[IndexedSeq[Long]]],
-      nq: Int = NQueries): DataFrame = {
+  private def simAnnMultiLshOn(all: DataFrame, nq: Int = NQueries): DataFrame = {
     val tagged = all.select(col("vec_id"), col("v"), col("nrm"),
-        posexplode(array(tws.map(tw => mtBucket(col("v"), tw)): _*))
+        posexplode(array(mtPlaneInt.map(tw => mtBucket(col("v"), tw)): _*))
           .as(Seq("t", "bkt")))
     val q = tagged.filter(col("vec_id") < nq)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"),
               col("t").as("qt"), col("bkt").as("qbkt"))
-    tagged.join(broadcast(q),
+    rankTopK(tagged.join(broadcast(q),
         col("t") === col("qt") && col("bkt") === col("qbkt")
           && col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
               round(vecDot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6)
                 .as("cos_r"))
+      .groupBy("qid", "vec_id").agg(max(col("cos_r")).as("cos_r")))
   }
-
-  private[graft] def mtCandidates(
-      all: DataFrame, tws: IndexedSeq[IndexedSeq[IndexedSeq[Long]]],
-      nq: Int = NQueries): DataFrame =
-    mtCollisions(all, tws, nq)
-      .groupBy("qid", "vec_id").agg(max(col("cos_r")).as("cos_r"))
-
-  private[graft] def simAnnMultiLshOn(
-      all: DataFrame, tws: IndexedSeq[IndexedSeq[IndexedSeq[Long]]],
-      nq: Int = NQueries): DataFrame =
-    rankTopK(mtCandidates(all, tws, nq))
 
   /** CTE chain ending in `mr (qid, vec_id, cos_r, rn)` — the SQL twin
     * of [[simAnnMultiLsh]]'s ranked list, shared by q164 and q163.
@@ -378,12 +338,10 @@ object SimilarityOps {
              lit(cid).as("cid"))
     }
 
-  def simAnnIvf(s: SparkSession, d: String): DataFrame =
-    simAnnIvfOn(base(s, d), ivfCellCount(s, d))
-
-  private[graft] def simAnnIvfOn(
-      all: DataFrame, k: Long, nProbes: Int = IvfProbes): DataFrame =
-    rankTopK(ivfCandidates(all, k, nProbes))
+  def simAnnIvf(s: SparkSession, d: String): DataFrame = {
+    val (assigned, probes) = ivfRouting(base(s, d), ivfCellCount(s, d))
+    simAnnIvfRouted(assigned, probes)
+  }
 
   /** IVF exact-cosine ranking from an ALREADY-COMPUTED routing — q163
     * evaluates three systems that share the same n×k coarse pass
@@ -395,25 +353,14 @@ object SimilarityOps {
       assigned: DataFrame, probes: DataFrame): DataFrame =
     rankTopK(scoreProbed(assigned, probes))
 
-  /** IVF candidate set (qid, vec_id, cos_r) at a given probe count —
-    * scored members of the probed cells, pre-ranking (DevAnnSweep
-    * sweeps `nProbes` and counts these as probe cost).
-    */
-  private[graft] def ivfCandidates(
-      all: DataFrame, k: Long, nProbes: Int = IvfProbes): DataFrame = {
-    val (assigned, probes) = ivfRouting(all, k, nProbes)
-    scoreProbed(assigned, probes)
-  }
-
   /** The IVF coarse index split from its scoring: `assigned (vec_id, v,
     * nrm, cell)` — every corpus vector routed to its nearest cell — and
-    * `probes (qid, qv, qn, cell)` — each query's top-nProbes cells.
+    * `probes (qid, qv, qn, cell)` — each query's top-IvfProbes cells.
     * q50 joins them and scores exact cosine; q171 joins them and scores
     * by the PQ lookup table instead.
     */
-  private[graft] def ivfRouting(
-      all: DataFrame, k: Long, nProbes: Int = IvfProbes): (DataFrame, DataFrame) = {
-    val (assigned, ranked) = ivfRoutingRanked(all, k, nProbes)
+  private[graft] def ivfRouting(all: DataFrame, k: Long): (DataFrame, DataFrame) = {
+    val (assigned, ranked) = ivfRoutingRanked(all, k, IvfProbes)
     (assigned, ranked.drop("crn"))
   }
 
@@ -521,7 +468,7 @@ object SimilarityOps {
               col("v"), col("nrm"))
 
   /** Exact-cosine scoring of a probe set's cell members — the shared
-    * candidate generator behind [[ivfCandidates]] and q174's modes.
+    * candidate generator behind [[simAnnIvf]] and q174's modes.
     */
   private def scoreProbed(assigned: DataFrame, probes: DataFrame): DataFrame =
     assigned.join(broadcast(probes), Seq("cell"))
@@ -549,7 +496,7 @@ object SimilarityOps {
        |           FROM ir0 WHERE crn <= $IvfProbes AND vec_id < $nq)""".stripMargin
 
   /** CTE chain ending in `ivr (qid, vec_id, cos_r, rn)` — the SQL twin
-    * of [[simAnnIvfOn]]'s ranked list, i-prefixed so it composes with
+    * of [[simAnnIvf]]'s ranked list, i-prefixed so it composes with
     * the PQ and multi-LSH chains inside q163's twin.
     */
   private def ivfCteSql(nq: Int = NQueries): String =
@@ -1497,19 +1444,12 @@ object SimilarityOps {
   // (the legacy fixed 3-round budget is gone — every caller passes the
   //  corpus-scaled pqTrainRoundsFor ladder explicitly, r12 advice)
 
-  /** One training pass under literal books: per (s, code, j) member
-    * count, quantized element sum, and quantized assignment-error sum
-    * (the j=0 slice carries exactly one row per assigned (vector,
-    * subspace) — the q160 trick, so the audit costs no extra pass).
-    * Collected: ≤ PqM·PqK·PqSub = 1 024 rows of metadata.
-    */
-  private def pqPassAgg(
-      all: DataFrame, books: PqBooks): Array[org.apache.spark.sql.Row] =
-    pqPassAggOn(all, col("v"), books)
-
-  /** The same training pass over an arbitrary vector column — q177
-    * runs the loop over the RESIDUAL relation's `rv` instead of the
-    * raw vectors.
+  /** One training pass under literal books over the vector column
+    * `vcol` (q177 runs it over the RESIDUAL relation's `rv`): per
+    * (s, code, j) member count, quantized element sum, and quantized
+    * assignment-error sum (the j=0 slice carries exactly one row per
+    * assigned (vector, subspace) — the q160 trick, so the audit costs
+    * no extra pass). Collected: ≤ PqM·PqK·PqSub = 1 024 rows of metadata.
     */
   private def pqPassAggOn(
       df: DataFrame, vcol: Column, books: PqBooks): Array[org.apache.spark.sql.Row] =
@@ -1529,23 +1469,15 @@ object SimilarityOps {
            sum(floor(col("dist") * lit(1000000.0)).cast("long")).as("qd"))
       .collect()
 
-  /** Bounded Lloyd loop: returns the trained books and the per-round
-    * audit rows (round, s, code, n_members, err_e6), round r scoring
-    * the assignment under books_{r-1} (round 1 == the seed books, so
-    * its rows equal q160's old-side audit).
-    */
-  private[graft] def pqTrainCoreFor(s: SparkSession, d: String)
-      : (IndexedSeq[IndexedSeq[(Long, Array[Double])]],
-         Seq[(Long, Long, Long, Long, Long)]) = {
-    val all = base(s, d).persist()
-    try pqTrainCore(all, rounds = trainRoundsOf(s, d))
-    finally all.unpersist(false)
-  }
-
   /** The ladder evaluated for a table dir (footer-metadata count). */
   private[graft] def trainRoundsOf(s: SparkSession, d: String): Int =
     pqTrainRoundsFor(embCount(s, d))
 
+  /** Bounded Lloyd loop from the seed books: returns the trained books
+    * and the per-round audit rows (round, s, code, n_members, err_e6),
+    * round r scoring the assignment under books_{r-1} (round 1 == the
+    * seed books, so its rows equal q160's old-side audit).
+    */
   private[graft] def pqTrainCore(all: DataFrame, seedLo: Long = 0L,
                                  rounds: Int)
       : (PqBooks, Seq[(Long, Long, Long, Long, Long)]) =
@@ -1575,84 +1507,6 @@ object SimilarityOps {
       }
     }
     (books, audit.result())
-  }
-
-  /** Dev probe for the PQ TRAINING BUDGET (r11 verdict #2): per rounds
-    * value, the trained residual books' mean nDCG@10 vs exact-L2 truth
-    * — alongside the seed-book baseline — over the standard query set.
-    * Shares one routing + one materialized residual relation across
-    * every rounds value (only the Lloyd loop re-runs).
-    */
-  private[graft] def pqBudgetProbe(s: SparkSession, d: String,
-                                   roundsList: Seq[Int],
-                                   nq: Int = NQueries): Seq[(Int, Long, Long)] = {
-    val all = base(s, d).persist()
-    try {
-      val k = ivfCellCount(s, d)
-      // exact-L2 truth over a WIDE query set: the registered lanes eval
-      // at NQueries = 5, where single-query nDCG swings exceed 0.5 —
-      // the budget question needs the variance beaten down
-      val q = all.filter(col("vec_id") < nq)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-      val exact = all.crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(vecDot(col("v"), col("v"))
-            - lit(2.0) * vecDot(col("qv"), col("v"))
-            + vecDot(col("qv"), col("qv")), 6).as("d_r"))
-      val we = Window.partitionBy("qid").orderBy(col("d_r").asc, col("vec_id").asc)
-      val topL2 = exact.withColumn("rn", row_number().over(we))
-        .filter(col("rn") <= TopK)
-        .select(col("qid"), col("vec_id"), col("rn").cast("long").as("rn"))
-        .localCheckpoint(true)
-      val (asg0, ranked) = ivfRoutingRankedFor(all, k, IvfProbes,
-        col("vec_id") < nq)
-      val routing = (asg0.localCheckpoint(true),
-        ranked.drop("crn").localCheckpoint(true))
-      val kit0 = residKit(all, k, Some(routing))
-      val kit = kit0.copy(resid = kit0.resid.localCheckpoint(true))
-      val discArms = (1 to TopK)
-        .map(p => s"WHEN $p THEN ${NdcgDisc(p - 1)}").mkString(" ")
-      def perQuery(top: DataFrame): Map[Long, Long] = {
-        val g = topL2.select(col("qid"), col("vec_id"),
-          (lit(TopK + 1L) - col("rn")).as("gain"))
-        top.join(g, Seq("qid", "vec_id"), "left")
-          .withColumn("gain", coalesce(col("gain"), lit(0L)))
-          .withColumn("disc", expr(s"CASE rn $discArms ELSE 0 END"))
-          .groupBy("qid").agg(sum(col("gain") * col("disc")).as("dcg"))
-          .select(col("qid"), expr(s"(dcg * 1000000) div $NdcgIdcgE9").as("n"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      }
-      val seedPer = perQuery(adcTopK(residualAdcOn(s, kit, kit.books)._2))
-      val seedN = seedPer.values.sum / nq
-      roundsList.map { r =>
-        val (books, _) = lloydLoopOn(kit.resid, col("rv"), kit.books, r)
-        val tp = perQuery(adcTopK(residualAdcOn(s, kit, books)._2))
-        (r, seedN, tp.values.sum / nq)
-      }
-    } finally { all.unpersist(false); () }
-  }
-
-  /** Code-survival diagnostic: after `rounds` of Lloyd, how many of
-    * the PqM*PqK codebook entries still exist (empty codes drop out
-    * permanently in the current loop), plus the final round's total
-    * assignment error.
-    */
-  private[graft] def pqBudgetCodeSurvival(s: SparkSession, d: String,
-      roundsList: Seq[Int]): Seq[(Int, Int, Long)] = {
-    val all = base(s, d).persist()
-    try {
-      val k = ivfCellCount(s, d)
-      val (asg0, prb0) = ivfRouting(all, k, IvfProbes)
-      val routing = (asg0.localCheckpoint(true), prb0.localCheckpoint(true))
-      val kit0 = residKit(all, k, Some(routing))
-      val kit = kit0.copy(resid = kit0.resid.localCheckpoint(true))
-      roundsList.map { r =>
-        val (books, audit) = lloydLoopOn(kit.resid, col("rv"), kit.books, r)
-        val lastErr = audit.filter(_._1 == r.toLong).map(_._5).sum
-        (r, books.map(_.size).sum, lastErr)
-      }
-    } finally { all.unpersist(false); () }
   }
 
   def pqTrain(s: SparkSession, d: String): DataFrame = {
@@ -1866,7 +1720,7 @@ cb$r AS MATERIALIZED (
       s: SparkSession, all: DataFrame, k: Long,
       routing: Option[(DataFrame, DataFrame)] = None,
       nq: Int = NQueries): (DataFrame, DataFrame) = {
-    val (assigned, probes) = routing.getOrElse(ivfRouting(all, k, IvfProbes))
+    val (assigned, probes) = routing.getOrElse(ivfRouting(all, k))
     val books = pqSeedBooks(all)
     val codes = pqCodesOnly(all, books)
     // nq must cover the routing's query width (q163 passes a wide
@@ -2041,7 +1895,7 @@ cb$r AS MATERIALIZED (
   private[graft] def residKit(
       all: DataFrame, k: Long,
       routing: Option[(DataFrame, DataFrame)] = None): ResidKit = {
-    val (assigned0, probes) = routing.getOrElse(ivfRouting(all, k, IvfProbes))
+    val (assigned0, probes) = routing.getOrElse(ivfRouting(all, k))
     // the n×k routing argmin feeds THREE consumers (the seed-book
     // collect, the corpus code assignment, the candidate join) —
     // materialize it once instead of recomputing per consumer; at
@@ -2760,7 +2614,7 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
   def ivfStats(s: SparkSession, d: String): DataFrame = {
     val all = base(s, d)
     val k = ivfCellCount(s, d)
-    val (assigned, _) = ivfRouting(all, k, IvfProbes)
+    val (assigned, _) = ivfRouting(all, k)
     val occ = all.filter(col("vec_id") < k).select(col("vec_id").as("cid"))
       .join(broadcast(assigned.groupBy("cell").agg(count(lit(1)).as("occ0"))),
             col("cid") === col("cell"), "left")
@@ -2804,7 +2658,7 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
   def cellSplit(s: SparkSession, d: String): DataFrame = {
     val all = base(s, d)
     val k = ivfCellCount(s, d)
-    val (assigned0, _) = ivfRouting(all, k, IvfProbes)
+    val (assigned0, _) = ivfRouting(all, k)
     // reused by three aggregates below — materialize the n×k routing
     // pass once (the q174/q171 checkpoint precedent)
     cellSplitOn(assigned0.localCheckpoint(true), k)
@@ -2911,7 +2765,7 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
       s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val all = base(s, d).localCheckpoint(true)
     val k = ivfCellCount(s, d)
-    val (assignedB0, probesB) = ivfRouting(all, k, IvfProbes)
+    val (assignedB0, probesB) = ivfRouting(all, k)
     val assignedB = assignedB0.localCheckpoint(true)
     val nSplit = math.max(1L, k / 8)
     val occB = assignedB.groupBy("cell").agg(count(lit(1)).as("ob"))
@@ -3063,8 +2917,8 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
   //      the label scan (the label attach is map-side — the corpus
   //      never shuffles for the filter), truth is the one controlled
   //      broadcast cross join every eval lane pays. The 4× boost is
-  //      MEASURED, not guessed (r10): the DevFilteredSweep grid
-  //      (bench_evidence/r10_filtered_sweep.md) shows 4× is the
+  //      measured, not guessed: the probe-budget grid in
+  //      bench_evidence/r10_filtered_sweep.md shows 4× is the
   //      largest budget that still prunes at test scale while
   //      recovering +0.20 recall at the registered label granularity;
   //      ≥8× saturates probes ≥ k there (degenerate full scan), and
@@ -3916,88 +3770,6 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
        |FROM pfull
        |ORDER BY gen_pin, cell, vec_id, s""".stripMargin
 
-  /** Dev-only sweep grid behind bench_evidence/r10_filtered_sweep.md +
-    * r11_filtered_sweep.md (r9 VERDICT #7, r10 VERDICT #3): recall vs
-    * probe budget for filtered ANN, per label granularity AND per
-    * serving mode — "post" scores the whole probed membership then
-    * filters (q174), "part" reads only the query-label's (lbl, cell)
-    * lists so every fetched candidate already matches (q183); the two
-    * modes share the kept set and therefore the recall at a given
-    * probe count — what differs is the CANDIDATE COST column, which is
-    * the entire point of the partitioned layout. One routing pass at
-    * the max budget per variant; each probe count filters the ranked
-    * probe set (the q174 prefix property). Label variants re-derive
-    * `lbl` from the raw label so selectivity sweeps from ~1/2 to
-    * ~1/(3·|labels|) without touching the corpus. Recall is
-    * TRUTH-ADJUSTED (r10 ADVICE): each query's overlap divides by
-    * min(TopK, its filtered-truth size) so fine granularities with
-    * small label classes aren't understated, and queries with NO
-    * same-label mate are counted explicitly instead of silently
-    * dropped. Returns (variant, n_labels, mode, probes, mean n_cand,
-    * mean n_kept, mean adjusted recall, n_truthless).
-    */
-  private[graft] def filteredSweepRows(
-      s: SparkSession, d: String, probeCounts: Seq[Int],
-      labelVariants: Seq[(String, Column)])
-      : Seq[(String, Long, String, Int, Double, Double, Double, Long)] = {
-    val maxP = probeCounts.max
-    labelVariants.flatMap { case (vname, lblCol) =>
-      val allL = Tables.embeddings(s, d)
-        .repartition(col("vec_id"))
-        .select(col("vec_id"), col("embedding").as("v"), lblCol.as("lbl"))
-        .withColumn("nrm", sqrt(vecDot(col("v"), col("v"))))
-        .persist()
-      val nLabels = allL.select("lbl").distinct().count()
-      val q = allL.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("qid"), col("v").as("qv"),
-                col("nrm").as("qn"), col("lbl").as("qlbl"))
-      val qlbl = q.select("qid", "qlbl")
-      val wt = Window.partitionBy("qid").orderBy(col("cos_r").desc, col("vec_id").asc)
-      val truth = allL.crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("qid") && col("lbl") === col("qlbl"))
-        .select(col("qid"), col("vec_id"),
-                round(vecDot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos_r"))
-        .withColumn("rn", row_number().over(wt))
-        .filter(col("rn") <= TopK)
-        .select("qid", "vec_id")
-        .localCheckpoint(true)
-      // per-query filtered-truth sizes: the adjusted-recall denominator
-      val truthCnt = truth.groupBy("qid").agg(count(lit(1)).as("tc"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val nTruthless = NQueries.toLong - truthCnt.size
-      val (assigned0, probesR0) = ivfRoutingRanked(allL, ivfCellCount(s, d), maxP)
-      val assigned = assigned0.localCheckpoint(true)
-      val probesR = probesR0.localCheckpoint(true)
-      val rows = probeCounts.flatMap { p =>
-        val scored = scoreProbed(assigned,
-          probesR.filter(col("crn") <= p).drop("crn"))
-        val kept = allL.select(col("vec_id"), col("lbl"))
-          .join(broadcast(scored), Seq("vec_id"))
-          .join(broadcast(qlbl), Seq("qid"))
-          .filter(col("lbl") === col("qlbl"))
-        val wk = Window.partitionBy("qid").orderBy(col("cos_r").desc, col("vec_id").asc)
-        val top = kept.withColumn("rn", row_number().over(wk))
-          .filter(col("rn") <= TopK).select(col("qid"), col("vec_id"), lit(1L).as("hit"))
-        val ovByQ = truth.join(broadcast(top), Seq("qid", "vec_id"), "left")
-          .groupBy("qid").agg(sum(coalesce(col("hit"), lit(0L))).as("ov"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val recall =
-          if (truthCnt.isEmpty) 0.0
-          else truthCnt.map { case (qid, tc) =>
-            ovByQ.getOrElse(qid, 0L).toDouble / math.min(TopK.toLong, tc)
-          }.sum / truthCnt.size
-        val nCand = scored.count().toDouble / NQueries
-        val nKept = kept.count().toDouble / NQueries
-        // "part" fetches exactly the kept set (pre-filter lists), so
-        // its candidate cost IS nKept; recall is shared by construction
-        Seq((vname, nLabels, "post", p, nCand, nKept, recall, nTruthless),
-            (vname, nLabels, "part", p, nKept, nKept, recall, nTruthless))
-      }
-      allL.unpersist(false)
-      rows
-    }
-  }
-
   private val filteredAnnSql = {
     def modeSql(tag: String, prb: String): String =
       s"""${tag}c AS (SELECT p.qid, s.vec_id,
@@ -4261,8 +4033,8 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
     val routing = (kitT.kit.assigned, kitT.kit.probes)
     def sysList(name: String, df: DataFrame): DataFrame =
       df.select(lit(name).as("sys"), col("qid"), col("vec_id"), col("rn"))
-    val sysRows = sysList("lsh", simAnnLshOn(all, planeInt, EvalQueries))
-      .unionByName(sysList("mlsh", simAnnMultiLshOn(all, mtPlaneInt, EvalQueries)))
+    val sysRows = sysList("lsh", simAnnLshOn(all, EvalQueries))
+      .unionByName(sysList("mlsh", simAnnMultiLshOn(all, EvalQueries)))
       .unionByName(sysList("ivf", simAnnIvfRouted(routing._1, routing._2)))
       .unionByName(sysList("adc", topAdc))
       .unionByName(sysList("ivfpq",

@@ -1537,16 +1537,13 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
     // static artifacts, ready BEFORE the stream starts. The curated-
     // base index is the PERSISTED q217 artifact — each micro-batch
     // probes only its candidate buckets through the pruned FileScan
-    // (r14: the lane previously re-materialized the whole banded index
-    // per run, an O(corpus) cost its own 100 TB story disclaims; the
-    // disk probe makes 'the artifact a deployment keeps on disk'
-    // literal, and DevAmpScale's 10x-docs decade dropped accordingly)
+    // instead of re-materializing the whole banded index per run.
     val idxDir = PipelineOps.persistAdmissionIndex(s, d)
     // collected once per (session, corpus) before the stream starts
     // (metadata-scale: the bounded BenchHoldout eval slice) — each
     // micro-batch's contam check is then a map-side arrays_overlap
-    // against this literal (r18: the session-shared benchGramSet,
-    // shared with the whole q215/q217-q220 family)
+    // against this literal (the session-shared benchGramSet, shared
+    // with the whole q215/q217-q220 family)
     val benchGrams: Array[Long] = PipelineOps.benchGramSet(s, d)
     withStreamShufflePartitions(s, 2) {
       val q = s.readStream.schema(StructType(Seq(
@@ -1564,22 +1561,14 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
           // term (gate 4.7x, contam 3.1x, sigs 3.2x per DevAmpBreak).
           // The per-batch JOIN width then scales with the batch (1
           // partition per ~1k rows, floor 2, cap at cluster width),
-          // set on batch.sparkSession — the session CLONED at query
-          // start that actually plans the batch chain (r15 set only
-          // the outer session's conf, which the clone had
-          // snapshotted). Measured both ways: at this lane's 3-30k-row
-          // micro-batches the ladder moves nothing (r16 A/B via
-          // GRAFT_Q216_NO_LADDER, kept re-runnable), and at the
-          // deployment-size trigger it exists for — a 131k-row batch
-          // against 92k prior signatures (DevLadderProbe, bench_
-          // evidence/r17_ladder.md) — the same chain runs 1.4x faster
-          // at the ladder's width than at the wrapper's fixed 2.
-          // batch row count from the slice files' parquet footers — a
-          // driver-side metadata read (r18): the micro-batch is a
-          // known file set (maxFilesPerTrigger routing), so counting
-          // it with a Spark job per batch paid plan+schedule for a
-          // number the footers already carry. Falls back to count()
-          // for a non-parquet batch shape.
+          // set on batch.sparkSession — the session cloned at query
+          // start that actually plans the batch chain. This width
+          // ladder runs a 131k-row batch 1.43x faster than the fixed
+          // width 2 and moves nothing at 3-30k rows
+          // (bench_evidence/r17_ladder.md).
+          // Batch row count from the slice files' parquet footers: a
+          // driver-side metadata read instead of a count job per
+          // batch. Falls back to count() for a non-parquet batch shape.
           val nrows = {
             val files = batch.inputFiles
             if (files.nonEmpty && files.forall(_.endsWith(".parquet")))
@@ -1594,10 +1583,8 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
           }
           val width = s.sparkContext.defaultParallelism
           val np = math.max(2, math.min(width, (nrows / 1000L + 1L).toInt))
-          if (!sys.env.contains("GRAFT_Q216_NO_LADDER")) {
-            batch.sparkSession.conf.set("spark.sql.shuffle.partitions", np)
-            s.conf.set("spark.sql.shuffle.partitions", np)
-          }
+          batch.sparkSession.conf.set("spark.sql.shuffle.partitions", np)
+          s.conf.set("spark.sql.shuffle.partitions", np)
           val wide = batch.repartition(width)
           val audit = PipelineOps.gateAudit(wide)
             .withColumn("n_tok", size(tokens(col("rtext"))).cast("long"))

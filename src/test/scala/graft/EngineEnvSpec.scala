@@ -1,0 +1,34 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Environment knobs live in the session factory and the harness mains
+  * only. An engine source that reads the environment makes a lane's
+  * plan or result depend on the shell that launched it, which neither
+  * the oracle nor Bench records.
+  */
+class EngineEnvSpec extends AnyFunSuite {
+
+  private val EnginePackages =
+    Seq("ops", "streaming", "functions", "expressions", "plans", "sources", "io")
+
+  private def scalaFiles(dir: Path): Seq[Path] = {
+    val s = Files.walk(dir)
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally s.close()
+  }
+
+  test("no engine source reads sys.env or System.getenv") {
+    val root = Paths.get("src/main/scala/graft")
+    val dirs = EnginePackages.map(root.resolve)
+    dirs.foreach(d => assert(Files.isDirectory(d), s"engine package $d not found"))
+    val offenders = for {
+      f <- dirs.flatMap(scalaFiles)
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("sys.env") || line.contains("System.getenv")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+}
