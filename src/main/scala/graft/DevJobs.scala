@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-lane A/B timer and scheduler-overhead profile — counts Spark jobs,
   * stages and tasks for one registry-lane execution and compares the
@@ -10,7 +9,10 @@ import org.apache.spark.sql.SparkSession
   * cores in use) from OVERHEAD-bound lanes (wall ≫ task time / width:
   * the cost is driver-side planning + AQE stage materialization +
   * scheduling latency, and the lever is fewer actions/stages, not
-  * faster kernels).
+  * faster kernels). After a lane's last rep it also prints one row per
+  * [[Steps]] tag — the composite lanes' logical steps, attributed from
+  * the real run — plus an `(untagged)` row; the rep's own noop write
+  * is the `sink` step.
   *
   * Usage: runMain graft.DevJobs <sfDir> <reps> <lane> [<lane>...]
   * Artifacts are pre-built untimed by [[Bench.prebuild]]; each rep
@@ -18,6 +20,15 @@ import org.apache.spark.sql.SparkSession
   * interleaving two arms' runs on one box gives a per-lane A/B.
   */
 object DevJobs {
+  private val Untagged = "(untagged)"
+
+  /** One step's totals; job wall times are summed, so overlapped jobs
+    * count twice. */
+  final class StepTotals {
+    var jobs, stages, tasks = 0
+    var taskMs, cpuMs, jobMs = 0L
+  }
+
   final class Counter extends SparkListener {
     @volatile var jobs = 0
     @volatile var stages = 0
@@ -26,14 +37,35 @@ object DevJobs {
     // per-stage totals keyed by (stageId): (name, tasks, taskMs, cpuMs)
     val byStage = new java.util.concurrent.ConcurrentHashMap[
       Int, (String, Int, Long, Long)]()
-    override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
+    // step attribution: a job's tag from its local properties at
+    // onJobStart, a stage's through the first job that lists it
+    private val jobTag = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
+    private val stageTag = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    private val bySteps = scala.collection.mutable.LinkedHashMap[String, StepTotals]()
+    private def step(tag: String)(f: StepTotals => Unit): Unit =
+      bySteps.synchronized(f(bySteps.getOrElseUpdate(tag, new StepTotals)))
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      jobs += 1
+      val tag = Option(j.properties).flatMap(p => Option(p.getProperty(Steps.Key)))
+        .getOrElse(Untagged)
+      jobTag.put(j.jobId, (tag, j.time))
+      j.stageIds.foreach(stageTag.putIfAbsent(_, tag))
+      step(tag)(_.jobs += 1)
+    }
+    override def onJobEnd(j: SparkListenerJobEnd): Unit =
+      Option(jobTag.get(j.jobId)).foreach { case (tag, t0) =>
+        step(tag)(_.jobMs += j.time - t0)
+      }
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
       stages += 1
       tasks += s.stageInfo.numTasks
       val prev = byStage.getOrDefault(s.stageInfo.stageId, ("", 0, 0L, 0L))
       byStage.put(s.stageInfo.stageId,
         (s.stageInfo.name, s.stageInfo.numTasks, prev._3, prev._4))
-      ()
+      step(stageTag.getOrDefault(s.stageInfo.stageId, Untagged)) { st =>
+        st.stages += 1
+        st.tasks += s.stageInfo.numTasks
+      }
     }
     val gcMs = new java.util.concurrent.atomic.AtomicLong(0L)
     val deserMs = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -52,11 +84,15 @@ object DevJobs {
         } else 0L
         byStage.merge(t.stageId, ("", 0, t.taskInfo.duration, cpu),
           (a, b) => (a._1, a._2, a._3 + b._3, a._4 + b._4))
-        ()
+        step(stageTag.getOrDefault(t.stageId, Untagged)) { st =>
+          st.taskMs += t.taskInfo.duration
+          st.cpuMs += cpu
+        }
       }
     def reset(): Unit = {
       jobs = 0; stages = 0; tasks = 0; taskTimeMs.set(0L); byStage.clear()
       gcMs.set(0L); deserMs.set(0L); fetchMs.set(0L); runMs.set(0L)
+      jobTag.clear(); stageTag.clear(); bySteps.synchronized(bySteps.clear())
     }
     def top(n: Int): Seq[String] = {
       import scala.jdk.CollectionConverters._
@@ -64,6 +100,17 @@ object DevJobs {
         case (id, (name, nt, ms, cpu)) =>
           f"    stage $id%4d ${ms / 1e3}%7.1f s (cpu ${cpu / 1e3}%7.1f s) " +
             f"$nt%4d tasks  ${name.take(90)}"
+      }
+    }
+    /** One row per tag in first-job order, then `(untagged)`. */
+    def steps: Seq[String] = bySteps.synchronized {
+      val untagged = bySteps.getOrElse(Untagged, new StepTotals)
+      val header = f"    ${"step"}%-28s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s " +
+        f"${"task_s"}%7s ${"cpu_s"}%7s ${"job_wall_s"}%10s"
+      header +: (bySteps.toSeq.filter(_._1 != Untagged) :+ (Untagged -> untagged)).map {
+        case (tag, t) =>
+          f"    $tag%-28s ${t.jobs}%5d ${t.stages}%6d ${t.tasks}%6d " +
+            f"${t.taskMs / 1e3}%7.2f ${t.cpuMs / 1e3}%7.2f ${t.jobMs / 1e3}%10.2f"
       }
     }
   }
@@ -78,17 +125,18 @@ object DevJobs {
     catch { case e: Throwable => System.err.println(s"[devjobs] prebuild: $e") }
     val c = new Counter
     spark.sparkContext.addSparkListener(c)
+    def drain(): Unit = org.apache.spark.sql.graftbridge.drainListenerBus(spark.sparkContext)
     Registry.all.filter(q => names.contains(q.name)).foreach { q =>
       (1 to reps).foreach { rep =>
         spark.catalog.clearCache()
         System.gc()
-        // let queued listener events from the previous rep drain
-        Thread.sleep(300)
+        drain() // events of the previous rep land before the reset
         c.reset()
         val t0 = System.nanoTime()
-        q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val out = q.build(spark, sfDir)
+        Steps.tag(spark, "sink") { out.write.format("noop").mode("overwrite").save() }
         val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // drain
+        drain()
         val tt = c.taskTimeMs.get() / 1e3
         println(f"[devjobs] ${q.name} rep$rep wall=$wall%.2f s " +
           f"jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks} " +
@@ -96,7 +144,10 @@ object DevJobs {
             if (c.tasks > 0) tt * 1000 / c.tasks else 0.0}%.1f ms/task) " +
           f"run=${c.runMs.get() / 1e3}%.1f gc=${c.gcMs.get() / 1e3}%.1f " +
           f"deser=${c.deserMs.get() / 1e3}%.1f fetchWait=${c.fetchMs.get() / 1e3}%.1f")
-        if (rep == reps) c.top(12).foreach(println)
+        if (rep == reps) {
+          c.top(12).foreach(println)
+          c.steps.foreach(println)
+        }
       }
     }
     spark.stop()

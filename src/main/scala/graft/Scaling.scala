@@ -195,7 +195,7 @@ object Scaling {
       "toy decade are FIXED-COST artifacts, not scaling defects —\n" +
       "settled by one more amplification decade in\n" +
       "bench_evidence/r13_media_amp.md (50k real containers: time-x\n" +
-      "0.8-1.8 against 10x data, `sbt \"runMain graft.DevAmpScale 10\"`).\n\n")
+      "0.8-1.8 against 10x data).\n\n")
     sb.append("| query | what | table | sf0.001 | sf0.01 | sf0.1 | data x | time x |\n")
     sb.append("|---|---|---|---|---|---|---|---|\n")
     Picks.foreach { case (name, what, table) =>

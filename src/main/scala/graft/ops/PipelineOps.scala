@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.HashFns._
-import graft.{Q, Tables}
+import graft.{Q, Steps, Tables}
 
 /** q214: the END-TO-END curation pipeline composite (r12 verdict #6).
   *
@@ -246,7 +246,7 @@ object PipelineOps {
     sharedAuditedAndPairs(s, d)._1
 
   def pipelineComposite(s: SparkSession, d: String): DataFrame = {
-    val d0 = CoreOps.jsonlDocs(s, d)
+    val d0 = Steps.tag(s, "read") { CoreOps.jsonlDocs(s, d) }
       .select(col("doc_id"), col("meta.source").as("source"), col("text"))
       .repartition(col("doc_id"))
       .persist()
@@ -309,9 +309,9 @@ object PipelineOps {
         coalesce(col("n_bins"), lit(0L)).as("n_bins"),
         coalesce(col("pack_tok"), lit(0L)).as("pack_tok"))
       .orderBy("source")
-      .localCheckpoint(true)
+    val card = Steps.tag(s, "card") { result.localCheckpoint(true) }
     Seq(fin0, d0, scored).foreach(_.unpersist(false))
-    result
+    card
   }
 
   /** The delta gate chain, `p`-prefixed so it composes next to the
@@ -786,13 +786,14 @@ object PipelineOps {
     * persisted index: an empty overlay pinned on it.
     */
   private[graft] def overlayEntry(
-      s: SparkSession, d: String, tag: String): OverlayIndex = {
-    val base = persistAdmissionIndex(s, d)
-    val ov = s"${System.getProperty("java.io.tmpdir")}/graft_admov_${tag}_" +
-      java.lang.Integer.toHexString(d.hashCode)
-    graft.io.LayoutFs.deleteTree(ov)
-    new OverlayIndex(base, ov)
-  }
+      s: SparkSession, d: String, tag: String): OverlayIndex =
+    Steps.tag(s, "overlay") {
+      val base = persistAdmissionIndex(s, d)
+      val ov = s"${System.getProperty("java.io.tmpdir")}/graft_admov_${tag}_" +
+        java.lang.Integer.toHexString(d.hashCode)
+      graft.io.LayoutFs.deleteTree(ov)
+      new OverlayIndex(base, ov)
+    }
 
   /** The pruned probe: dup-vs-base doc_ids of `dSigs` against the
     * on-disk index. The delta's candidate buckets are collected
@@ -868,21 +869,22 @@ object PipelineOps {
     foldIntoAdmissionIndex(s, DirIndex(dir), newSigs)
 
   private[graft] def foldIntoAdmissionIndex(
-      s: SparkSession, store: AdmIndex, newSigs: DataFrame): Seq[Long] = {
-    val kb = store.kb // folds PRESERVE the layout's kb
-    val add = indexRowsOf(newSigs, kb).localCheckpoint(true)
-    val touched = add.select("pb").distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    val existing = store.open(s, touched)
-      .select("doc_id", "sig", "band", "key")
-      .withColumn("pb", pbCol(col("band"), col("key"), kb))
-    val merged = existing.unionByName(
-        add.select("doc_id", "sig", "band", "key", "pb"))
-      .repartition(col("pb"))
-      .sortWithinPartitions("pb", "band", "key", "doc_id")
-    store.commit(merged, touched)
-    touched
-  }
+      s: SparkSession, store: AdmIndex, newSigs: DataFrame): Seq[Long] =
+    Steps.tag(s, "fold") {
+      val kb = store.kb // folds PRESERVE the layout's kb
+      val add = indexRowsOf(newSigs, kb).localCheckpoint(true)
+      val touched = add.select("pb").distinct()
+        .collect().map(_.getLong(0)).sorted.toSeq
+      val existing = store.open(s, touched)
+        .select("doc_id", "sig", "band", "key")
+        .withColumn("pb", pbCol(col("band"), col("key"), kb))
+      val merged = existing.unionByName(
+          add.select("doc_id", "sig", "band", "key", "pb"))
+        .repartition(col("pb"))
+        .sortWithinPartitions("pb", "band", "key", "doc_id")
+      store.commit(merged, touched)
+      touched
+    }
 
   /** q217: q215's incremental admission with the dup-vs-base stage
     * served by the PERSISTED index — the restart story: nothing here
@@ -892,14 +894,14 @@ object PipelineOps {
     val dir = persistAdmissionIndex(s, d)
     val (lazyResult, handles) = pipelineIncrementLazy(s, d,
       Some(dBandS => probeBandedIndex(s, DirIndex(dir), dBandS)))
-    val result = lazyResult.localCheckpoint(true)
+    val result = Steps.tag(s, "card") { lazyResult.localCheckpoint(true) }
     handles.foreach(_.unpersist(false))
     result
   }
 
   def pipelineIncrement(s: SparkSession, d: String): DataFrame = {
     val (lazyResult, handles) = pipelineIncrementLazy(s, d)
-    val result = lazyResult.localCheckpoint(true)
+    val result = Steps.tag(s, "card") { lazyResult.localCheckpoint(true) }
     handles.foreach(_.unpersist(false))
     result
   }
@@ -938,7 +940,9 @@ object PipelineOps {
       idxVia: Option[DataFrame => DataFrame] = None,
       deltaOf: DataFrame => DataFrame = deltaBatch)
       : (DataFrame, DataFrame, Seq[DataFrame]) = {
-    val d0 = CoreOps.jsonlDocs(s, d)
+    // "delta" covers the build-time jobs: the corpus read's JSON schema
+    // inference and, once per corpus, deltaBatch's id-headroom check
+    val d0 = Steps.tag(s, "delta") { CoreOps.jsonlDocs(s, d) }
       .select(col("doc_id"), col("meta.source").as("source"), col("text"))
       .repartition(col("doc_id"))
       .persist()
@@ -947,7 +951,7 @@ object PipelineOps {
     // deployment keeps on disk — shared too (a deployment never
     // re-fingerprints the corpus per ingest)
     val bSigs = sharedBaseIndex(s, d)
-    val dAudit = gateAudit(deltaOf(d0)).persist()
+    val dAudit = Steps.tag(s, "delta") { gateAudit(deltaOf(d0)).persist() }
     // dg3k is single-consumer (the `clean` persist right below adds
     // one map-side column and caches) — r18: its own persist was a
     // pure extra materialization per admission, the same overhead the
@@ -983,7 +987,7 @@ object PipelineOps {
           lit(benchGrams)), lit(false)))
       .persist()
     val dcln = clean.filter(!col("is_contam"))
-    val dSigs = sigsOf(dcln).localCheckpoint(true)
+    val dSigs = Steps.tag(s, "sigs") { sigsOf(dcln).localCheckpoint(true) }
     val matches = aggregate(
       zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1L).otherwise(0L)),
       lit(0L), _ + _)
@@ -1005,7 +1009,7 @@ object PipelineOps {
     // functionally determined by the doc id, so duplicates agree).
     val dBandS = bandedWithSig(dSigs)
     val bSide = (idxVia match {
-      case Some(f) => f(dBandS)
+      case Some(f) => Steps.tag(s, "probe") { f(dBandS) }
       case None =>
         capBandedFor(bandedWithSig(bSigs), dBandS)
           .select("doc_id", "sig", "band", "key")
@@ -1137,22 +1141,24 @@ object PipelineOps {
     deleteFromAdmissionIndex(s, DirIndex(dir), delSigs)
 
   private[graft] def deleteFromAdmissionIndex(
-      s: SparkSession, store: AdmIndex, delSigs: DataFrame): Seq[Long] = {
-    val kb = store.kb // deletes PRESERVE the layout's kb
-    val delRows = indexRowsOf(delSigs, kb).localCheckpoint(true)
-    val touched = delRows.select("pb").distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    if (touched.isEmpty) return Nil
-    val del = delRows.select("doc_id").distinct()
-    val remaining = store.open(s, touched)
-      .select("doc_id", "sig", "band", "key")
-      .withColumn("pb", pbCol(col("band"), col("key"), kb))
-      .join(broadcast(del), Seq("doc_id"), "left_anti")
-      .repartition(col("pb"))
-      .sortWithinPartitions("pb", "band", "key", "doc_id")
-    store.commit(remaining, touched)
-    touched
-  }
+      s: SparkSession, store: AdmIndex, delSigs: DataFrame): Seq[Long] =
+    Steps.tag(s, "tombstone") {
+      val kb = store.kb // deletes PRESERVE the layout's kb
+      val delRows = indexRowsOf(delSigs, kb).localCheckpoint(true)
+      val touched = delRows.select("pb").distinct()
+        .collect().map(_.getLong(0)).sorted.toSeq
+      if (touched.nonEmpty) {
+        val del = delRows.select("doc_id").distinct()
+        val remaining = store.open(s, touched)
+          .select("doc_id", "sig", "band", "key")
+          .withColumn("pb", pbCol(col("band"), col("key"), kb))
+          .join(broadcast(del), Seq("doc_id"), "left_anti")
+          .repartition(col("pb"))
+          .sortWithinPartitions("pb", "band", "key", "doc_id")
+        store.commit(remaining, touched)
+      }
+      touched
+    }
 
   /** Post-takedown serving state: the takedown set tombstoned out of
     * the persisted index via a GENERATION-PINNED overlay entry — the
@@ -1172,63 +1178,67 @@ object PipelineOps {
     // 1-2. tombstone the on-disk index; re-submit every deleted doc
     //      through the full gate chain + admission against it
     val tdIdx = takedownIndex(s, d)
-    val (resubCard0, handles) = pipelineIncrementLazy(s, d,
-      Some(dBandS => probeBandedIndex(s, tdIdx, dBandS)), takedownResubs)
-    val resubCard = resubCard0.localCheckpoint(true)
-    handles.foreach(_.unpersist(false))
-    // 3. the post-takedown card: weights refold from the cached pair
-    //    list (survivor pairs are identical in a from-scratch rerun —
-    //    banding is per-doc, so no surviving pair appears or vanishes)
-    val (audited, ndPairs) = sharedAuditedAndPairs(s, d)
-    val del = takedownPred(col("doc_id"))
-    val survivors = audited.filter(!del).drop("gkey", "w_e6")
-    val ndLive = ndPairs.filter(
-      !takedownPred(col("a")) && !takedownPred(col("b")))
-    val pmin2 = ndLive.select(col("a").as("doc_id"), col("b").as("p"))
-      .unionByName(ndLive.select(col("b").as("doc_id"), col("a").as("p")))
-      .groupBy("doc_id").agg(min(col("p")).as("pm"))
-    val wG = Window.partitionBy("gkey")
-    val refreshed = survivors.join(pmin2, Seq("doc_id"), "left")
-      .withColumn("gkey", least(col("doc_id"), coalesce(col("pm"), col("doc_id"))))
-      .withColumn("w_e6", floor(lit(1000000L) / count(lit(1)).over(wG)).cast("long"))
-    val finA = refreshed.filter(!col("is_bench") && !col("is_contam"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_final_after"),
-           sum(col("doc_id")).as("kept_checksum_after"),
-           sum(col("n_tok") * col("w_e6")).as("eff_tok_e6_after"))
-      .withColumn("wq",
-        floor(sqrt(col("eff_tok_e6_after").cast("double") / 1000000.0) * 1000000.0)
-          .cast("long"))
-    val taken = audited.filter(del && !col("is_bench") && !col("is_contam"))
-      .groupBy("source").agg(count(lit(1)).as("n_taken_down"))
-    val tot = finA.agg(sum(col("wq")).as("wq_tot"))
-    val spine = CoreOps.jsonlDocs(s, d)
-      .select(col("meta.source").as("source")).distinct()
-    val result = spine
-      .join(resubCard, Seq("source"), "left")
-      .join(taken, Seq("source"), "left")
-      .join(finA, Seq("source"), "left")
-      .crossJoin(broadcast(tot))
-      .select(col("source"),
-        coalesce(col("n_delta"), lit(0L)).as("n_resub"),
-        coalesce(col("n_quality_dropped"), lit(0L)).as("n_quality_dropped"),
-        coalesce(col("n_lang_dropped"), lit(0L)).as("n_lang_dropped"),
-        coalesce(col("n_pii_quarantined"), lit(0L)).as("n_pii_quarantined"),
-        coalesce(col("n_contam_dropped"), lit(0L)).as("n_contam_dropped"),
-        coalesce(col("n_dup_vs_base"), lit(0L)).as("n_dup_vs_base"),
-        coalesce(col("n_dup_within"), lit(0L)).as("n_dup_within"),
-        coalesce(col("n_admitted"), lit(0L)).as("n_readmitted"),
-        coalesce(col("admitted_checksum"), lit(0L)).as("readmitted_checksum"),
-        coalesce(col("admitted_tok"), lit(0L)).as("readmitted_tok"),
-        coalesce(col("n_taken_down"), lit(0L)).as("n_taken_down"),
-        coalesce(col("n_final_after"), lit(0L)).as("n_final_after"),
-        coalesce(col("kept_checksum_after"), lit(0L)).as("kept_checksum_after"),
-        coalesce(col("eff_tok_e6_after"), lit(0L)).as("eff_tok_e6_after"),
-        round(coalesce(col("wq"), lit(0L)).cast("double") / col("wq_tot"), 6)
-          .as("mix_weight_after"))
-      .orderBy("source")
-      .localCheckpoint(true)
-    result
+    val resubCard = Steps.tag(s, "resub") {
+      val (resubCard0, handles) = pipelineIncrementLazy(s, d,
+        Some(dBandS => probeBandedIndex(s, tdIdx, dBandS)), takedownResubs)
+      val card = Steps.tag(s, "card") { resubCard0.localCheckpoint(true) }
+      handles.foreach(_.unpersist(false))
+      card
+    }
+    Steps.tag(s, "refold") {
+      // 3. the post-takedown card: weights refold from the cached pair
+      //    list (survivor pairs are identical in a from-scratch rerun —
+      //    banding is per-doc, so no surviving pair appears or vanishes)
+      val (audited, ndPairs) = sharedAuditedAndPairs(s, d)
+      val del = takedownPred(col("doc_id"))
+      val survivors = audited.filter(!del).drop("gkey", "w_e6")
+      val ndLive = ndPairs.filter(
+        !takedownPred(col("a")) && !takedownPred(col("b")))
+      val pmin2 = ndLive.select(col("a").as("doc_id"), col("b").as("p"))
+        .unionByName(ndLive.select(col("b").as("doc_id"), col("a").as("p")))
+        .groupBy("doc_id").agg(min(col("p")).as("pm"))
+      val wG = Window.partitionBy("gkey")
+      val refreshed = survivors.join(pmin2, Seq("doc_id"), "left")
+        .withColumn("gkey", least(col("doc_id"), coalesce(col("pm"), col("doc_id"))))
+        .withColumn("w_e6", floor(lit(1000000L) / count(lit(1)).over(wG)).cast("long"))
+      val finA = refreshed.filter(!col("is_bench") && !col("is_contam"))
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_final_after"),
+             sum(col("doc_id")).as("kept_checksum_after"),
+             sum(col("n_tok") * col("w_e6")).as("eff_tok_e6_after"))
+        .withColumn("wq",
+          floor(sqrt(col("eff_tok_e6_after").cast("double") / 1000000.0) * 1000000.0)
+            .cast("long"))
+      val taken = audited.filter(del && !col("is_bench") && !col("is_contam"))
+        .groupBy("source").agg(count(lit(1)).as("n_taken_down"))
+      val tot = finA.agg(sum(col("wq")).as("wq_tot"))
+      val spine = CoreOps.jsonlDocs(s, d)
+        .select(col("meta.source").as("source")).distinct()
+      val result = spine
+        .join(resubCard, Seq("source"), "left")
+        .join(taken, Seq("source"), "left")
+        .join(finA, Seq("source"), "left")
+        .crossJoin(broadcast(tot))
+        .select(col("source"),
+          coalesce(col("n_delta"), lit(0L)).as("n_resub"),
+          coalesce(col("n_quality_dropped"), lit(0L)).as("n_quality_dropped"),
+          coalesce(col("n_lang_dropped"), lit(0L)).as("n_lang_dropped"),
+          coalesce(col("n_pii_quarantined"), lit(0L)).as("n_pii_quarantined"),
+          coalesce(col("n_contam_dropped"), lit(0L)).as("n_contam_dropped"),
+          coalesce(col("n_dup_vs_base"), lit(0L)).as("n_dup_vs_base"),
+          coalesce(col("n_dup_within"), lit(0L)).as("n_dup_within"),
+          coalesce(col("n_admitted"), lit(0L)).as("n_readmitted"),
+          coalesce(col("admitted_checksum"), lit(0L)).as("readmitted_checksum"),
+          coalesce(col("admitted_tok"), lit(0L)).as("readmitted_tok"),
+          coalesce(col("n_taken_down"), lit(0L)).as("n_taken_down"),
+          coalesce(col("n_final_after"), lit(0L)).as("n_final_after"),
+          coalesce(col("kept_checksum_after"), lit(0L)).as("kept_checksum_after"),
+          coalesce(col("eff_tok_e6_after"), lit(0L)).as("eff_tok_e6_after"),
+          round(coalesce(col("wq"), lit(0L)).cast("double") / col("wq_tot"), 6)
+            .as("mix_weight_after"))
+        .orderBy("source")
+      result.localCheckpoint(true)
+    }
   }
 
   private[graft] val pipelineTakedownSql: String = {
@@ -1436,9 +1446,12 @@ object PipelineOps {
     // epoch 1: q215's admission; keep the admitted relation alive past
     // the handle release (ONE checkpoint — r18: rows and sigs ride
     // the same relation; the r17 pair cost a second materialization)
-    val (_, admitted0, handles1) = pipelineIncrementFull(s, d)
-    val admitted = admitted0.localCheckpoint(true)
-    handles1.foreach(_.unpersist(false))
+    val admitted = Steps.tag(s, "epoch1") {
+      val (_, admitted0, handles1) = pipelineIncrementFull(s, d)
+      val adm = Steps.tag(s, "admitted") { admitted0.localCheckpoint(true) }
+      handles1.foreach(_.unpersist(false))
+      adm
+    }
     // the end-of-ingest checkpoint: fold admitted signatures through a
     // generation-pinned overlay on the persisted base (clone-free —
     // the pristine fixture stays untouched for q217/q218 because no
@@ -1447,12 +1460,14 @@ object PipelineOps {
     foldIntoAdmissionIndex(s, idx,
       admitted.filter(col("sig").isNotNull).select("doc_id", "sig"))
     // epoch 2 against the folded artifact
-    val (card2, handles2) = pipelineIncrementLazy(s, d,
-      Some(db => probeBandedIndex(s, idx, db)),
-      d0 => epoch2Batch(d0, admitted))
-    val result = card2.localCheckpoint(true)
-    handles2.foreach(_.unpersist(false))
-    result
+    Steps.tag(s, "epoch2") {
+      val (card2, handles2) = pipelineIncrementLazy(s, d,
+        Some(db => probeBandedIndex(s, idx, db)),
+        d0 => epoch2Batch(d0, admitted))
+      val result = Steps.tag(s, "card") { card2.localCheckpoint(true) }
+      handles2.foreach(_.unpersist(false))
+      result
+    }
   }
 
   // ---- q220: N-EPOCH INDEX LIFECYCLE (r14 verdict #2) — the text
@@ -1497,6 +1512,36 @@ object PipelineOps {
       epoch: Int, admSigs: DataFrame, tdSigs: DataFrame,
       foldTouched: Seq[Long], delTouched: Seq[Long])
 
+  /** One lifecycle epoch's admission against `idx`: the card and the
+    * admitted relation, both checkpointed BEFORE the index mutates
+    * (the probe reads the store lazily; a fold/delete between build
+    * and force would leak the NEXT epoch's state into this epoch's
+    * card). The two checkpoints are independent reads of the same
+    * persisted admission state, so they run as OVERLAPPED jobs (guide
+    * §2.6: actions are only sequential because the driver calls them
+    * sequentially) — the admitted job back-fills executors the card
+    * job's stage tails leave idle; cache-block races are handled by
+    * the BlockManager's per-block locks and both results are
+    * order-independent. If the card job fails, the admitted job is
+    * awaited (its outcome ignored) before the persisted handles are
+    * released under it, and the card's failure propagates.
+    */
+  private[graft] def lcAdmit(s: SparkSession, d: String, idx: AdmIndex,
+      deltaOf: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    import scala.concurrent.Await
+    import scala.concurrent.duration.Duration
+    val (card0, admitted0, handles) = pipelineIncrementFull(
+      s, d, Some(db => probeBandedIndex(s, idx, db)), deltaOf)
+    val admF = Steps.future(s, "admitted")(
+      admitted0.localCheckpoint(true))(checkpointEc)
+    try {
+      val card =
+        try Steps.tag(s, "card") { card0.localCheckpoint(true) }
+        catch { case e: Throwable => Await.ready(admF, Duration.Inf); throw e }
+      (card, Await.result(admF, Duration.Inf))
+    } finally handles.foreach(_.unpersist(false))
+  }
+
   /** The lane body, exposing the mutation trace + index dir (spec
     * surface); the registered build drops both.
     */
@@ -1505,40 +1550,27 @@ object PipelineOps {
     // generation-pinned overlay entry (clone-free; the pristine base
     // serves every epoch's untouched buckets directly)
     val idx = overlayEntry(s, d, "lc")
-    def epochRun(deltaOf: DataFrame => DataFrame)
-        : (DataFrame, DataFrame, DataFrame) = {
-      val (card0, admitted0, handles) = pipelineIncrementFull(
-        s, d, Some(db => probeBandedIndex(s, idx, db)), deltaOf)
-      // materialize BEFORE the index mutates (the probe reads the
-      // store lazily; a fold/delete between build and force would
-      // leak the NEXT epoch's state into this epoch's card). ONE
-      // admitted checkpoint per epoch (r18): signatures project off
-      // it lazily instead of a second materialization. The two
-      // checkpoints are independent reads of the same persisted
-      // admission state, so they run as OVERLAPPED jobs (guide §2.6:
-      // actions are only sequential because the driver calls them
-      // sequentially) — the admitted job back-fills executors the
-      // card job's stage tails leave idle; cache-block races are
-      // handled by the BlockManager's per-block locks and both
-      // results are order-independent.
-      val admF = scala.concurrent.Future(
-        admitted0.localCheckpoint(true))(checkpointEc)
-      val card = card0.localCheckpoint(true)
-      val adm = scala.concurrent.Await.result(
-        admF, scala.concurrent.duration.Duration.Inf)
-      handles.foreach(_.unpersist(false))
-      (card, adm, adm.filter(col("sig").isNotNull).select("doc_id", "sig"))
-    }
-    // epoch 1: q215's delta against the pristine clone
-    val (card1, adm1, sig1) = epochRun(deltaBatch)
-    assertIdHeadroom(adm1, LcTd1ResubOffset, "lifecycle epoch1")
-    val ft1 = foldIntoAdmissionIndex(s, idx, sig1)
-    // lazy over the epoch's admitted checkpoint (no store reads in
-    // the lineage, so post-mutation consumers — the delete below and
-    // the lifecycle spec — recompute it safely; its own checkpoint
-    // was a third materialization per epoch)
-    val td1Sigs = sig1.filter(col("doc_id") % 3 === 0)
-    val dt1 = deleteFromAdmissionIndex(s, idx, td1Sigs)
+    // one epoch: admit, then (tdMod > 0) fold the admitted signatures
+    // in and tombstone the takedown (admitted ids % tdMod == 0) out.
+    // ONE admitted checkpoint per epoch (r18): signatures project off
+    // it lazily; the takedown sigs stay lazy over it too (no store
+    // reads in the lineage, so post-mutation consumers — the delete
+    // and the lifecycle spec — recompute them safely)
+    def epoch(e: Int, deltaOf: DataFrame => DataFrame, tdMod: Int,
+        headroom: Long): (DataFrame, DataFrame, LcEpoch) =
+      Steps.tag(s, s"epoch$e") {
+        val (card, adm) = lcAdmit(s, d, idx, deltaOf)
+        val sig = adm.filter(col("sig").isNotNull).select("doc_id", "sig")
+        if (tdMod == 0) (card, adm, LcEpoch(e, sig, sig.limit(0), Nil, Nil))
+        else {
+          assertIdHeadroom(adm, headroom, s"lifecycle epoch$e")
+          val ft = foldIntoAdmissionIndex(s, idx, sig)
+          val td = sig.filter(col("doc_id") % tdMod === 0)
+          (card, adm, LcEpoch(e, sig, td, ft, deleteFromAdmissionIndex(s, idx, td)))
+        }
+      }
+    // epoch 1: q215's delta against the pristine base
+    val (card1, adm1, ep1) = epoch(1, deltaBatch, 3, LcTd1ResubOffset)
     // epoch 2: takedown re-submissions (admit) + survivor re-submissions (reject)
     // lazy over adm1's checkpoint: single-consumer (the epoch's
     // gateAudit persist materializes it once) — r18, the dg3k rule.
@@ -1551,21 +1583,21 @@ object PipelineOps {
         .as("doc_id"), col("source"), col("text"))
     val delta2 = resubSplit(adm1, col("doc_id") % 3 === 0,
       LcTd1ResubOffset, LcSurv1ResubOffset)
-    val (card2, adm2, sig2) = epochRun(_ => delta2)
-    assertIdHeadroom(adm2, LcTd2ResubOffset - LcSurv1ResubOffset, "lifecycle epoch2")
-    val ft2 = foldIntoAdmissionIndex(s, idx, sig2)
-    val td2Sigs = sig2.filter(col("doc_id") % 2 === 0) // lazy — see td1Sigs
-    val dt2 = deleteFromAdmissionIndex(s, idx, td2Sigs)
+    val (card2, adm2, ep2) = epoch(2, _ => delta2, 2,
+      LcTd2ResubOffset - LcSurv1ResubOffset)
     // epoch 3: cycle again + fresh near-dups of pre-fold base entries
-    val d0 = CoreOps.jsonlDocs(s, d)
-      .select(col("doc_id"), col("meta.source").as("source"), col("text"))
-    val fresh = d0.filter(col("doc_id") % 19 === 4)
-      .select((col("doc_id") + LcFreshOffset).as("doc_id"), col("source"),
-              concat(lit("delta "), col("text")).as("text"))
-    val delta3 = resubSplit(adm2, col("doc_id") % 2 === 0,
-        LcTd2ResubOffset, LcSurv2ResubOffset)
-      .unionByName(fresh) // lazy — see delta2
-    val (card3, adm3, sig3) = epochRun(_ => delta3)
+    // (built inside the epoch, so its corpus read is tagged with it)
+    def delta3: DataFrame = {
+      val fresh = CoreOps.jsonlDocs(s, d)
+        .select(col("doc_id"), col("meta.source").as("source"), col("text"))
+        .filter(col("doc_id") % 19 === 4)
+        .select((col("doc_id") + LcFreshOffset).as("doc_id"), col("source"),
+                concat(lit("delta "), col("text")).as("text"))
+      resubSplit(adm2, col("doc_id") % 2 === 0,
+          LcTd2ResubOffset, LcSurv2ResubOffset)
+        .unionByName(fresh) // lazy — see delta2
+    }
+    val (card3, adm3, ep3) = epoch(3, _ => delta3, 0, 0L)
     // assemble: one row per (epoch, source), q215's card + n_taken_down
     def withTd(card: DataFrame, e: Int, tdRows: DataFrame): DataFrame =
       card.join(tdRows.groupBy("source").agg(count(lit(1)).as("ntd")),
@@ -1580,11 +1612,7 @@ object PipelineOps {
       .unionByName(withTd(card2, 2, adm2.filter(col("doc_id") % 2 === 0)))
       .unionByName(withTd(card3, 3, adm3.limit(0)))
       .orderBy("epoch", "source")
-      .localCheckpoint(true)
-    (out, Seq(
-      LcEpoch(1, sig1, td1Sigs, ft1, dt1),
-      LcEpoch(2, sig2, td2Sigs, ft2, dt2),
-      LcEpoch(3, sig3, sig3.limit(0), Nil, Nil)), idx)
+    (Steps.tag(s, "assemble") { out.localCheckpoint(true) }, Seq(ep1, ep2, ep3), idx)
   }
 
   def pipelineLifecycle(s: SparkSession, d: String): DataFrame =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Fixtures, Q, Tables}
+import graft.{Fixtures, Q, Steps, Tables}
 import graft.functions.HashFns._
 import graft.ops.EventOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -1289,31 +1289,33 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
                 explode(transform(col("pcells"), p => p.getField("cid"))).as("cell"))
       val q = routed.writeStream.outputMode("append")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val b = batch.persist()
-          try {
-            val cells = b.select("cell").distinct()
-              .collect().map(_.getLong(0)).sorted.toSeq
-            if (cells.nonEmpty) {
-              // resolve the generation COMMITTED AT FETCH TIME — a
-              // manifest-dir listing (r18), not a per-batch Spark job
-              val pin = graft.ops.SimilarityOps.latestGen(laneManifest)
-              graft.ops.SimilarityOps
-                .manifestPinnedRead(s, laneManifest, versionRoot, pin, cells)
-                .join(broadcast(b.select("qid", "cell")), Seq("cell"))
-                .filter(col("vec_id") =!= col("qid"))
-                .select(lit(pin).as("gen_served"), col("qid"), col("cell"),
-                        col("vec_id"), col("s"), col("code"), col("err_e6"))
-                .write.mode("append").parquet(outDir)
-            }
-            // the production moment: the compactor commits generation
-            // 1 while queries keep arriving — the NEXT batch resolves
-            // it atomically, this one never saw it
-            if (batchId == 0) {
-              s.read.parquet(s"$versionRoot/manifest")
-                .filter(col("gen") === 1).select("cell", "dir").coalesce(1)
-                .write.mode("overwrite").parquet(s"$laneManifest/gen=1")
-            }
-          } finally { b.unpersist(); () }
+          Steps.tag(s, "batch") {
+            val b = batch.persist()
+            try {
+              val cells = b.select("cell").distinct()
+                .collect().map(_.getLong(0)).sorted.toSeq
+              if (cells.nonEmpty) {
+                // resolve the generation COMMITTED AT FETCH TIME — a
+                // manifest-dir listing (r18), not a per-batch Spark job
+                val pin = graft.ops.SimilarityOps.latestGen(laneManifest)
+                graft.ops.SimilarityOps
+                  .manifestPinnedRead(s, laneManifest, versionRoot, pin, cells)
+                  .join(broadcast(b.select("qid", "cell")), Seq("cell"))
+                  .filter(col("vec_id") =!= col("qid"))
+                  .select(lit(pin).as("gen_served"), col("qid"), col("cell"),
+                          col("vec_id"), col("s"), col("code"), col("err_e6"))
+                  .write.mode("append").parquet(outDir)
+              }
+              // the production moment: the compactor commits generation
+              // 1 while queries keep arriving — the NEXT batch resolves
+              // it atomically, this one never saw it
+              if (batchId == 0) Steps.tag(s, "swap") {
+                s.read.parquet(s"$versionRoot/manifest")
+                  .filter(col("gen") === 1).select("cell", "dir").coalesce(1)
+                  .write.mode("overwrite").parquet(s"$laneManifest/gen=1")
+              }
+            } finally { b.unpersist(); () }
+          }
         }
         .start()
       try q.processAllAvailable()
@@ -1402,34 +1404,36 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
                 explode(transform(col("pcells"), p => p.getField("cid"))).as("cell"))
       val q = routed.writeStream.outputMode("append")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val b = batch.persist()
-          try {
-            val cells = b.select("cell").distinct()
-              .collect().map(_.getLong(0)).sorted.toSeq
-            if (cells.nonEmpty) {
-              // pin from the manifest-dir listing (r18) — see q193
-              val pin = graft.ops.SimilarityOps.latestGen(laneManifest)
-              svServeRelation(s, laneManifest, storeRoot, pin, cells,
-                  b.select("qid", "cell"))
-                .select(lit(batchId).cast("int").as("batch"),
-                        lit(pin).as("gen_served"), col("qid"), col("cell"),
-                        col("vec_id"), col("s"), col("code"), col("err_e6"))
-                .write.mode("append").parquet(outDir)
-            }
-            // after batch 0: the zero-downtime swap (the q193 moment)
-            if (batchId == 0) {
-              graft.ops.SimilarityOps.seedManifest(
-                s, s"$storeRoot/manifest", laneManifest, Seq(1))
-            }
-            // after batch 1: the ONLINE vacuum (the q210 primitive,
-            // metadata half) — gen 0's superseded rows leave the
-            // run-local manifest and the floor is recorded while the
-            // stream is live; batch 2 must serve gen 1 unchanged
-            if (batchId == 1) {
-              graft.ops.SimilarityOps.vacuumManifest(s, laneManifest, floor = 1)
-              ()
-            }
-          } finally { b.unpersist(); () }
+          Steps.tag(s, "batch") {
+            val b = batch.persist()
+            try {
+              val cells = b.select("cell").distinct()
+                .collect().map(_.getLong(0)).sorted.toSeq
+              if (cells.nonEmpty) {
+                // pin from the manifest-dir listing (r18) — see q193
+                val pin = graft.ops.SimilarityOps.latestGen(laneManifest)
+                svServeRelation(s, laneManifest, storeRoot, pin, cells,
+                    b.select("qid", "cell"))
+                  .select(lit(batchId).cast("int").as("batch"),
+                          lit(pin).as("gen_served"), col("qid"), col("cell"),
+                          col("vec_id"), col("s"), col("code"), col("err_e6"))
+                  .write.mode("append").parquet(outDir)
+              }
+              // after batch 0: the zero-downtime swap (the q193 moment)
+              if (batchId == 0) Steps.tag(s, "swap") {
+                graft.ops.SimilarityOps.seedManifest(
+                  s, s"$storeRoot/manifest", laneManifest, Seq(1))
+              }
+              // after batch 1: the ONLINE vacuum (the q210 primitive,
+              // metadata half) — gen 0's superseded rows leave the
+              // run-local manifest and the floor is recorded while the
+              // stream is live; batch 2 must serve gen 1 unchanged
+              if (batchId == 1) Steps.tag(s, "vacuum") {
+                graft.ops.SimilarityOps.vacuumManifest(s, laneManifest, floor = 1)
+                ()
+              }
+            } finally { b.unpersist(); () }
+          }
         }
         .start()
       try q.processAllAvailable()
@@ -1524,7 +1528,8 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
     // fresh run-local state every run: the accumulated index mutates
     Fixtures.clearDir(java.nio.file.Paths.get(laneRoot))
     // arrival slices: the q215 delta in doc_id order, three files
-    val srcDir = stageSpiSlices(s, d)
+    // (staged by Bench.prebuild; its corpus read still infers a schema)
+    val srcDir = Steps.tag(s, "static") { stageSpiSlices(s, d) }
     // driver-side ledger of the batch ids this run has actually
     // written to the store — the foreachBatch closure below owns
     // every write, so probing LayoutFs.exists for batch=0..id-1 per
@@ -1553,87 +1558,94 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
         .parquet(srcDir.toString)
         .writeStream.outputMode("append")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // widen the arrival slice to cluster parallelism BEFORE the
-          // per-row chain: a micro-batch arrives as ONE file (one scan
-          // task), so without this the batch's gate/shingle/minhash
-          // CPU runs 1-2 wide while everything downstream is keyed —
-          // measured at 10x data this was q216's whole super-linear
-          // term (gate 4.7x, contam 3.1x, sigs 3.2x per DevAmpBreak).
-          // The per-batch JOIN width then scales with the batch (1
-          // partition per ~1k rows, floor 2, cap at cluster width),
-          // set on batch.sparkSession — the session cloned at query
-          // start that actually plans the batch chain. This width
-          // ladder runs a 131k-row batch 1.43x faster than the fixed
-          // width 2 and moves nothing at 3-30k rows
-          // (bench_evidence/r17_ladder.md).
-          // Batch row count from the slice files' parquet footers: a
-          // driver-side metadata read instead of a count job per
-          // batch. Falls back to count() for a non-parquet batch shape.
-          val nrows = {
-            val files = batch.inputFiles
-            if (files.nonEmpty && files.forall(_.endsWith(".parquet")))
-              files.map { f =>
-                val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-                  org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                    new org.apache.hadoop.fs.Path(f),
-                    s.sparkContext.hadoopConfiguration))
-                try rd.getRecordCount finally rd.close()
-              }.sum
-            else batch.count()
-          }
-          val width = s.sparkContext.defaultParallelism
-          val np = math.max(2, math.min(width, (nrows / 1000L + 1L).toInt))
-          batch.sparkSession.conf.set("spark.sql.shuffle.partitions", np)
-          s.conf.set("spark.sql.shuffle.partitions", np)
-          val wide = batch.repartition(width)
-          val audit = PipelineOps.gateAudit(wide)
-            .withColumn("n_tok", size(tokens(col("rtext"))).cast("long"))
-            .persist()
-          try {
-            // prior-arrival index: batches STRICTLY BEFORE this one —
-            // path-addressed per-batch dirs (batch=<id>) make a
-            // re-executed micro-batch idempotent (r13 ADVICE: blind
-            // appends would duplicate rows on retry) and the strict
-            // filter keeps this batch's own partial output, if any
-            // survived a crash, out of its re-run's probe side
-            // opened by TARGETED batch=<id> dirs strictly below this
-            // id, never a root listing: a root open re-lists every
-            // batch dir after each write invalidates the listing
-            // cache, an O(total-batches) term per micro-batch that
-            // grows with stream length (r15 verdict #6 — the same
-            // listing term the layout opens killed). batch 0 has no
-            // store yet: hand-built empty (nothing to derive a schema
-            // from on disk).
-            val priorIds = writtenBatches.synchronized {
-              if (writtenBatches.isEmpty && batchId > 0L)
-                writtenBatches ++= (0L until batchId).filter(i =>
-                  graft.io.LayoutFs.exists(s"$storeDir/batch=$i"))
-              writtenBatches.iterator.filter(_ < batchId).toSeq
+          Steps.tag(s, "batch") {
+            // widen the arrival slice to cluster parallelism BEFORE the
+            // per-row chain: a micro-batch arrives as ONE file (one scan
+            // task), so without this the batch's gate/shingle/minhash
+            // CPU runs 1-2 wide while everything downstream is keyed —
+            // measured at 10x data this was q216's whole super-linear
+            // term (gate 4.7x, contam 3.1x, sigs 3.2x —
+            // bench_evidence/r15_idx_prune.md).
+            // The per-batch JOIN width then scales with the batch (1
+            // partition per ~1k rows, floor 2, cap at cluster width),
+            // set on batch.sparkSession — the session cloned at query
+            // start that actually plans the batch chain. This width
+            // ladder runs a 131k-row batch 1.43x faster than the fixed
+            // width 2 and moves nothing at 3-30k rows
+            // (bench_evidence/r17_ladder.md).
+            // Batch row count from the slice files' parquet footers: a
+            // driver-side metadata read instead of a count job per
+            // batch. Falls back to count() for a non-parquet batch shape.
+            val nrows = {
+              val files = batch.inputFiles
+              if (files.nonEmpty && files.forall(_.endsWith(".parquet")))
+                files.map { f =>
+                  val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+                    org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                      new org.apache.hadoop.fs.Path(f),
+                      s.sparkContext.hadoopConfiguration))
+                  try rd.getRecordCount finally rd.close()
+                }.sum
+              else batch.count()
             }
-            val prior =
-              if (priorIds.isEmpty) s.createDataFrame(
-                new java.util.ArrayList[org.apache.spark.sql.Row](),
-                org.apache.spark.sql.types.StructType(Seq(
-                  StructField("doc_id", LongType),
-                  StructField("sig", ArrayType(LongType)))))
-              else s.read.option("basePath", storeDir)
-                .parquet(priorIds.map(i => s"$storeDir/batch=$i"): _*)
-                .select("doc_id", "sig")
-            val (verdicts, dSigs, dg3k) =
-              spiBatchAdmit(s, audit, benchGrams, prior,
-                db => PipelineOps.probeBandedIndex(
-                  s, PipelineOps.DirIndex(idxDir), db))
-            verdicts.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-            // the stream's state lives in the index: this batch's
-            // clean signatures land in their OWN batch=<id> partition
-            // for later arrivals to probe — overwrite, not append, so
-            // a re-executed micro-batch replaces rather than
-            // duplicates its contribution (restart/retry-safe)
-            dSigs.write.mode("overwrite").parquet(s"$storeDir/batch=$batchId")
-            writtenBatches.synchronized { writtenBatches += batchId }
-            dg3k.unpersist(false)
-            ()
-          } finally { audit.unpersist(false); () }
+            val width = s.sparkContext.defaultParallelism
+            val np = math.max(2, math.min(width, (nrows / 1000L + 1L).toInt))
+            batch.sparkSession.conf.set("spark.sql.shuffle.partitions", np)
+            s.conf.set("spark.sql.shuffle.partitions", np)
+            val wide = batch.repartition(width)
+            val audit = PipelineOps.gateAudit(wide)
+              .withColumn("n_tok", size(tokens(col("rtext"))).cast("long"))
+              .persist()
+            try {
+              // prior-arrival index: batches STRICTLY BEFORE this one —
+              // path-addressed per-batch dirs (batch=<id>) make a
+              // re-executed micro-batch idempotent (r13 ADVICE: blind
+              // appends would duplicate rows on retry) and the strict
+              // filter keeps this batch's own partial output, if any
+              // survived a crash, out of its re-run's probe side
+              // opened by TARGETED batch=<id> dirs strictly below this
+              // id, never a root listing: a root open re-lists every
+              // batch dir after each write invalidates the listing
+              // cache, an O(total-batches) term per micro-batch that
+              // grows with stream length (r15 verdict #6 — the same
+              // listing term the layout opens killed). batch 0 has no
+              // store yet: hand-built empty (nothing to derive a schema
+              // from on disk).
+              val priorIds = writtenBatches.synchronized {
+                if (writtenBatches.isEmpty && batchId > 0L)
+                  writtenBatches ++= (0L until batchId).filter(i =>
+                    graft.io.LayoutFs.exists(s"$storeDir/batch=$i"))
+                writtenBatches.iterator.filter(_ < batchId).toSeq
+              }
+              val prior =
+                if (priorIds.isEmpty) s.createDataFrame(
+                  new java.util.ArrayList[org.apache.spark.sql.Row](),
+                  org.apache.spark.sql.types.StructType(Seq(
+                    StructField("doc_id", LongType),
+                    StructField("sig", ArrayType(LongType)))))
+                else s.read.option("basePath", storeDir)
+                  .parquet(priorIds.map(i => s"$storeDir/batch=$i"): _*)
+                  .select("doc_id", "sig")
+              val (verdicts, dSigs, dg3k) =
+                spiBatchAdmit(s, audit, benchGrams, prior,
+                  db => PipelineOps.probeBandedIndex(
+                    s, PipelineOps.DirIndex(idxDir), db))
+              Steps.tag(s, "verdicts") {
+                verdicts.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+              }
+              // the stream's state lives in the index: this batch's
+              // clean signatures land in their OWN batch=<id> partition
+              // for later arrivals to probe — overwrite, not append, so
+              // a re-executed micro-batch replaces rather than
+              // duplicates its contribution (restart/retry-safe)
+              Steps.tag(s, "state") {
+                dSigs.write.mode("overwrite").parquet(s"$storeDir/batch=$batchId")
+              }
+              writtenBatches.synchronized { writtenBatches += batchId }
+              dg3k.unpersist(false)
+              ()
+            } finally { audit.unpersist(false); () }
+          }
         }
         .start()
       try q.processAllAvailable()
@@ -1641,8 +1653,8 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
     }
     // the q215 card from the streamed verdicts — SAME columns, SAME
     // oracle (pipelineIncrementSql)
-    val v = s.read.parquet(outDir)
-    v.groupBy("source").agg(
+    Steps.tag(s, "card") {
+      s.read.parquet(outDir).groupBy("source").agg(
         count(lit(1)).as("n_delta"),
         sum(when(col("bucket") === "quality", 1L).otherwise(0L)).as("n_quality_dropped"),
         sum(when(col("bucket") === "lang", 1L).otherwise(0L)).as("n_lang_dropped"),
@@ -1655,8 +1667,9 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
           .as("admitted_checksum"),
         sum(when(col("bucket") === "admitted", col("n_tok")).otherwise(0L))
           .as("admitted_tok"))
-      .orderBy("source")
-      .localCheckpoint(true)
+        .orderBy("source")
+        .localCheckpoint(true)
+    }
   }
 
   /** q216's per-batch admission relation — the whole stateless gate +
@@ -1706,7 +1719,7 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
     val contam = dg3k.filter(col("is_contam")).select("doc_id")
       .withColumn("is_contam", lit(true))
     val dcln = dg3k.filter(!col("is_contam")).drop("is_contam")
-    val dSigs = PipelineOps.sigsOf(dcln).localCheckpoint(true)
+    val dSigs = Steps.tag(s, "sigs") { PipelineOps.sigsOf(dcln).localCheckpoint(true) }
     // BOTH dup checks as ONE candidate join (r18, the q215 shape):
     // the static-index side (org 'b', the q217 pruned disk probe via
     // `idxOf`) unions with the accumulated-prior ∪ within-batch side
@@ -1718,7 +1731,7 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
     // rescore reads them off the candidate row — the r17 shape
     // re-attached both sides' sigs with two extra joins per batch.
     val dBandS = PipelineOps.bandedWithSig(dSigs)
-    val bSide = idxOf(dBandS).withColumn("org", lit("b"))
+    val bSide = Steps.tag(s, "probe") { idxOf(dBandS) }.withColumn("org", lit("b"))
     val earlierS = PipelineOps.bandedWithSig(prior).unionByName(dBandS)
     val dSide = capBandedFor(earlierS, dBandS)
       .select("doc_id", "sig", "band", "key")

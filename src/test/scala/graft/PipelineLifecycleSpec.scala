@@ -17,6 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *     epoch-1 takedown's re-submission is admitted in epoch 2;
   *     every epoch-1 survivor's re-submission is rejected; epoch 3
   *     cycles both again.
+  *  4. ERROR PATH of the overlapped epoch checkpoints: when the card
+  *     job fails alone, the failure propagates only after the
+  *     admitted job has finished, and the persisted handles are
+  *     released.
   */
 class PipelineLifecycleSpec extends AnyFunSuite with SparkTestBase {
   import ops.PipelineOps
@@ -111,5 +115,42 @@ class PipelineLifecycleSpec extends AnyFunSuite with SparkTestBase {
         s"conservation violated: $r")
     }
     Fixtures.clearDir(java.nio.file.Paths.get(root))
+  }
+
+  test("q220 epoch: a failing card awaits the admitted job and releases the handles") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val idx = PipelineOps.DirIndex(PipelineOps.persistAdmissionIndex(spark, sf))
+    // every delta id sits within 1e8 of Long.MaxValue, so a source with
+    // two admissions overflows the card's admitted_checksum under ANSI;
+    // the admitted relation does no arithmetic on ids and succeeds.
+    // Reversed-token copies pass the gates and match no base entry.
+    val off = Long.MaxValue - 100000000L
+    val overflow = (d0: org.apache.spark.sql.DataFrame) =>
+      d0.filter(col("doc_id") % 11 === 1)
+        .select((col("doc_id") + off).as("doc_id"), col("source"),
+          concat_ws(" ", reverse(split(col("text"), " "))).as("text"))
+    val open = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty(Steps.Key) == "admitted")) {
+          open.add(j.jobId); started.incrementAndGet(); ()
+        }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = { open.remove(j.jobId); () }
+    }
+    def drain(): Unit =
+      org.apache.spark.sql.graftbridge.drainListenerBus(spark.sparkContext)
+    spark.catalog.clearCache()
+    drain()
+    spark.sparkContext.addSparkListener(l)
+    val e = try intercept[Exception](PipelineOps.lcAdmit(spark, sf, idx, overflow))
+      finally { drain(); spark.sparkContext.removeSparkListener(l) }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(msgs.contains("ARITHMETIC_OVERFLOW"), s"not the card's overflow: $msgs")
+    assert(started.get > 0, "the admitted checkpoint never ran")
+    assert(open.isEmpty, s"admitted jobs $open still running when the epoch failed")
+    assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty, "persisted admission handles leaked")
   }
 }

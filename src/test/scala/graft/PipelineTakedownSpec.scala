@@ -26,11 +26,34 @@ import org.scalatest.funsuite.AnyFunSuite
   *     lane's own joins.
   *  6. TOMBSTONE CORRECTNESS: the tombstoned on-disk index holds
   *     exactly the pristine index's rows minus the deleted docs'.
+  *  7. STEP-TAG COVERAGE: with the session artifacts prebuilt (the
+  *     DevJobs/Bench contract), every job the lane launches carries a
+  *     [[Steps]] tag — a new untagged action fails here.
   */
 class PipelineTakedownSpec extends AnyFunSuite with SparkTestBase {
 
   test("q218: liveness, conservation, identities, per-doc semantics") {
-    val got = ops.PipelineOps.pipelineTakedown(spark, sf).collect()
+    // ---- 7. every job of the lane carries a step tag ----
+    Bench.prebuild(spark, sf)
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        tags.add(Option(j.properties).flatMap(p => Option(p.getProperty(Steps.Key)))
+          .getOrElse("(untagged)"))
+        ()
+      }
+    }
+    def drain(): Unit =
+      org.apache.spark.sql.graftbridge.drainListenerBus(spark.sparkContext)
+    drain()
+    spark.sparkContext.addSparkListener(l)
+    val card = try ops.PipelineOps.pipelineTakedown(spark, sf)
+      finally { drain(); spark.sparkContext.removeSparkListener(l) }
+    assert(!tags.isEmpty)
+    assert(!tags.contains("(untagged)"), s"untagged q218 jobs; tags seen: $tags")
+
+    val got = card.collect()
       .map(r => r.getString(0) -> (1 to 15).map(i =>
         if (i == 15) 0L else r.getLong(i)).toVector)
       .toMap
