@@ -211,8 +211,8 @@ object Bench {
     }
 
     // schema-INFERRED read, the reference's O3 contract — via the
-    // sampled single-file inference path (CsvIngest): inference costs
-    // 1/n_files of a pass instead of a full extra type-parsing pass,
+    // prefix inference path (CsvIngest): inference reads a bounded
+    // prefix of one file instead of a full extra type-parsing pass,
     // which is what the reference's fastest engines (polars/datatable)
     // also do. Inference runs INSIDE the timed region, every rep.
     stage("read") {

@@ -122,10 +122,10 @@ object ScaleSmoke {
       .csv(tmp).limit(1000))
 
     // ---- read: schema-inferred CSV scan, 30.3 M-row cap. Inference
-    //      via the sampled single-file path (graft.sources.CsvIngest):
+    //      via the bounded-prefix path (graft.sources.CsvIngest):
     //      the full-pass inferSchema re-parses all 30.3 M rows before
     //      loading them — the contract the reference engines actually
-    //      implement is sampled inference (polars infer_schema_length,
+    //      implement is prefix inference (polars infer_schema_length,
     //      datatable sampling), VERDICT r4 #4. The row cap runs through
     //      readPrefix — exact pandas-nrows semantics (file-order
     //      prefix) — NOT Dataset.limit, whose plan funnels all 30.3 M

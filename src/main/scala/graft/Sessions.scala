@@ -17,19 +17,20 @@ object Sessions {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      // testdata tables are single ~1-10 MB parquet files; at the
-      // default 128 MB split size every scan is ONE task. Small splits
-      // restore scan parallelism (a real deployment reads many files
-      // and does not need this).
-      .config("spark.sql.files.maxPartitionBytes", "1m")
+      // File scans keep Spark's split rule, maxSplitBytes =
+      // min(maxPartitionBytes, max(openCostInBytes, totalBytes / cores)):
+      // a scan of more than cores × 128 KiB gets about one split per
+      // core. Every testdata parquet file holds exactly one row group,
+      // so a smaller split cap only adds empty parquet tasks, and on CSV
+      // (the reference table, and the cache built from it) per-task
+      // scheduling and deserialisation.
       .config("spark.sql.files.openCostInBytes", "128k")
-      // AQE small-partition floor (A/B-measured): the default 1m
-      // minPartitionSize coalesces this workload's small-byte /
-      // high-CPU-per-row shuffles (gram postings, grain pairs,
-      // candidate windows) down to 8-16 of the 32 slots. Same rationale
-      // as the split-size override above: fixture shuffles are
-      // KB-to-MB while the per-row kernels are real; a deployment's
-      // shuffles are GB-scale and never touch this floor.
+      // AQE small-partition floor: the default 1m minPartitionSize
+      // coalesces this workload's small-byte / high-CPU-per-row
+      // shuffles (gram postings, grain pairs, candidate windows) down
+      // to 8-16 of the 32 slots. Fixture shuffles are KB-to-MB while
+      // the per-row kernels are real; a deployment's shuffles are
+      // GB-scale and never touch this floor.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

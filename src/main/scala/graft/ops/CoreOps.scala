@@ -273,7 +273,7 @@ object CoreOps {
        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
 
   // ---- O3 variant: schema-INFERRED CSV read on the fast path
-  //      (graft.sources.CsvIngest — sampled single-file inference
+  //      (graft.sources.CsvIngest — inference over a bounded prefix
   //      instead of Spark's full extra pass; the polars
   //      infer_schema_length contract). The oracle proves the inferred
   //      types load the same values the parquet truth holds. ----
@@ -310,7 +310,7 @@ object CoreOps {
   // ---- q194: JSONL ingest with NESTED metadata — the interchange
   //      format LLM corpora actually ship in (one object per line,
   //      metadata as a nested struct), read through JsonIngest's
-  //      sampled single-file inference (q125's contract, but the
+  //      prefix schema inference (q125's contract, but the
   //      inferred schema is a TREE: meta lands as a StructType and
   //      the aggregate addresses it by dot path — flattening at
   //      inference would break the lane). The fixture is the
@@ -318,7 +318,7 @@ object CoreOps {
   //      n_chars}, text} and written as real multi-file JSONL, so
   //      inference genuinely sees one file of many; the oracle
   //      derives the same per-source rollup from the parquet — green
-  //      proves JSON write → sampled-infer → nested read → dot-path
+  //      proves JSON write → prefix-infer → nested read → dot-path
   //      aggregation round-trips every field exactly. ----
   /** Stage (idempotently) the q194 JSONL fixture and return the
     * DECODED document relation — the composite pipeline lane (q214)
@@ -916,9 +916,9 @@ object CoreOps {
     Q("q12_amplify", amplify, Some(amplifySql), "O2 row amplification"),
     Q("q13_csv_roundtrip", csvRoundtrip, Some(csvRoundtripSql), "O3/O5 CSV write+read"),
     Q("q125_csv_infer", csvInferFast, Some(csvInferFastSql),
-      "O3 schema-inferred CSV read via sampled single-file inference (CsvIngest)"),
+      "O3 schema-inferred CSV read via prefix inference (CsvIngest)"),
     Q("q194_jsonl_ingest", jsonlIngest, Some(jsonlIngestSql),
-      "JSONL ingest with nested metadata: sampled single-file schema inference preserving the struct tree (JsonIngest), dot-path rollup — the LLM-corpus interchange format as a first-class source"),
+      "JSONL ingest with nested metadata: prefix schema inference preserving the struct tree (JsonIngest), dot-path rollup — the LLM-corpus interchange format as a first-class source"),
     Q("q200_warc_ingest", warcIngest, Some(shardedDocsSql),
       "WARC crawl-shard ingestion: concatenated per-record gzip members walked by the own DEFLATE decoder, WARC header walk + Content-Length slicing + HTTP envelope strip — exact payload recovery proven per-doc via md5"),
     Q("q208_tgz_archive", tgzArchive, Some(shardedDocsSql),

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Shape: the URL names ONE logical file, so the fetch is a driver-side
   * stream-to-spool (exactly what the reference engines do internally —
   * none of them range-parallelize HTTP), and everything AFTER the spool
-  * is the engine's normal distributed CSV lane ([[CsvIngest]] sampled
+  * is the engine's normal distributed CSV lane ([[CsvIngest]] prefix
   * inference + schema-pinned scan, pushdown and partitioning intact).
   * For multi-file / petabyte ingest the URL belongs in a manifest read
   * by `spark.read.csv(paths*)` against an object store, not here.
@@ -22,7 +22,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object UrlIngest {
 
   /** Fetch `url` to a local spool file, then read it as CSV with
-    * sampled schema inference. Returns the spool-backed DataFrame.
+    * prefix schema inference. Returns the spool-backed DataFrame.
     */
   def readCsvFromUrl(spark: SparkSession, url: String,
                      header: Boolean = true): DataFrame = {

@@ -11,15 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SkewJoinSpec extends AnyFunSuite with SparkTestBase {
 
-  private def withConf[A](pairs: (String, String)*)(f: => A): A = {
-    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("AQE splits the hot key of a skewed sort-merge join at runtime") {
     import spark.implicits._
     // 50k rows of key 0 + 1k spread keys vs a 2k-row right side

@@ -21,4 +21,31 @@ object TestSession {
 trait SparkTestBase {
   lazy val spark: SparkSession = TestSession.spark
   def sf: String = TestSession.Sf
+
+  /** Runs `f` with the given session confs set, then restores them. */
+  def withConf[A](pairs: (String, String)*)(f: => A): A = {
+    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** `f`'s result and the file bytes its tasks read (summed task
+    * `inputMetrics.bytesRead`).
+    */
+  def taskBytesRead[A](f: => A): (A, Long) = {
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) bytes.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val a = f
+      org.apache.spark.sql.graftbridge.drainListenerBus(spark.sparkContext)
+      (a, bytes.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
