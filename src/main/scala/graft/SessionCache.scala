@@ -2,20 +2,23 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Cross-lane session cache for deterministic build artifacts (truth
-  * sets, trained codebooks, curated-corpus audits): computed once per
-  * (session, input-file fingerprint) and shared by every lane that
-  * derives the identical artifact — what a deployment does with build
-  * outputs it serves many times. Entries are keyed by the
-  * SparkSession OBJECT (identity — r12 advice: identity-HASH keys can
-  * be reused after GC and collide across sessions) and evicted
+/** Cross-lane session cache. It holds two kinds of entry:
+  *  - deterministic build artifacts (truth sets, trained codebooks,
+  *    curated-corpus audits), computed once per (session, input-file
+  *    fingerprint) and shared by every lane that derives the identical
+  *    artifact ([[cachedAs]]);
+  *  - the resolved relations of the read-only input tables
+  *    ([[Tables.table]]), one per (session, path, schema conf), replaced
+  *    when the files' fingerprint changes ([[cachedAt]]).
+  * Entries are keyed by the SparkSession OBJECT (identity: identity-hash
+  * keys can be reused after GC and collide across sessions) and evicted
   * EXPLICITLY by a SparkListener on application end: weak keys alone
   * never collect here, because cached values (localCheckpoint'd
-  * DataFrames, trained kits) hold strong references back to their
-  * session — a value-to-key strong reference pins a WeakHashMap entry
-  * for the JVM lifetime (r13 ADVICE). Derivations must be
-  * deterministic — outputs are bit-identical on hit or miss, so
-  * oracles never observe the cache.
+  * DataFrames, trained kits, relations) hold strong references back to
+  * their session, and a value-to-key strong reference pins a
+  * WeakHashMap entry for the JVM lifetime. Derivations must be
+  * deterministic: outputs are bit-identical on hit or miss, so oracles
+  * never observe the cache.
   */
 object SessionCache {
 
@@ -38,6 +41,18 @@ object SessionCache {
         }
       })
 
+  private def entries(s: SparkSession)
+      : java.util.concurrent.ConcurrentHashMap[String, AnyRef] =
+    cache.synchronized {
+      var created = false
+      val m = cache.computeIfAbsent(s, { _ =>
+        created = true
+        new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+      })
+      if (created) evictOnEnd(s)
+      m
+    }
+
   /** Compute-once per (session, kind, fingerprint of `files`). NOT
     * computeIfAbsent: cached builds nest (a trained kit derives from
     * the untrained kit), and a nested computeIfAbsent on the same
@@ -47,15 +62,7 @@ object SessionCache {
     */
   def cachedAs[T <: AnyRef](s: SparkSession, kind: String,
                             files: Seq[String])(f: => T): T = {
-    val perSession = cache.synchronized {
-      var created = false
-      val m = cache.computeIfAbsent(s, { _ =>
-        created = true
-        new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-      })
-      if (created) evictOnEnd(s)
-      m
-    }
+    val perSession = entries(s)
     val key = kind + "|" + Fixtures.fingerprint(files)
     val existing = perSession.get(key)
     if (existing != null) existing.asInstanceOf[T]
@@ -63,6 +70,24 @@ object SessionCache {
       val v = f
       val prev = perSession.putIfAbsent(key, v)
       (if (prev != null) prev else v).asInstanceOf[T]
+    }
+  }
+
+  /** The value stored under `key` if it was computed at `version`, else
+    * `f`'s value, stored in its place. One slot per key, so a changed
+    * input replaces its stale entry rather than adding one. Computed
+    * outside the map like [[cachedAs]]; a concurrent duplicate resolve
+    * is benign.
+    */
+  def cachedAt[T <: AnyRef](s: SparkSession, key: String,
+                            version: String)(f: => T): T = {
+    val perSession = entries(s)
+    perSession.get(key) match {
+      case (`version`, v) => v.asInstanceOf[T]
+      case _ =>
+        val v = f
+        perSession.put(key, (version, v))
+        v
     }
   }
 }

@@ -1,15 +1,48 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 
 /** Loaders for the driver's read-only parquet testdata (TESTDATA.md).
   * All queries take an `sfDir` like /root/testdata/sf0.01 and read the
   * star-schema tables from it. Parquet scans are columnar + vectorized;
   * Catalyst pushes filters/projections into the scan.
+  *
+  * Each table is resolved once per session. A bare `spark.read.parquet`
+  * lists the files and runs a schema-merge Spark job before the lane's
+  * plan exists; [[table]] does that on the first call only and keeps
+  * the analyzed relation (schema plus file index) in [[SessionCache]].
+  * The memo holds for read-only inputs:
+  *  - the key is the session, the path and the value of
+  *    `spark.sql.legacy.parquet.nanosAsLong` (which changes the
+  *    inferred `events.ts` type);
+  *  - the entry is valid for a fingerprint of the path's files (name,
+  *    length, mtime, listed through the Hadoop FS), so a rewritten
+  *    table resolves again, as `REFRESH TABLE` would make a catalog
+  *    table do;
+  *  - every call returns the relation under fresh attribute ids
+  *    (`newInstance`), so two reads of one table in one plan are two
+  *    distinct self-join sides;
+  *  - no data is cached: each query still scans the files.
+  * Mutable layouts (admission index, LSM cells, generation manifests)
+  * do not come through here: a memoized file index would go stale
+  * across their stage-and-swap.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val key = s"table|$path|$NanosAsLong=${spark.conf.get(NanosAsLong, "false")}"
+    val rel = SessionCache.cachedAt(spark, key,
+        sources.DataFiles.fingerprint(spark, path)) {
+      spark.read.parquet(path).queryExecution.analyzed match {
+        case r: LogicalRelation => r
+        case p => throw new IllegalStateException(s"$path resolved to ${p.nodeName}")
+      }
+    }
+    graftbridge.ofRows(spark, rel.newInstance())
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")
@@ -46,7 +79,7 @@ object Tables {
   }
 
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    s.conf.set(NanosAsLong, "true")
     normalizeEventsTs(table(s, d, "events"))
   }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")

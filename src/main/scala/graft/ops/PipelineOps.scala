@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.functions.HashFns._
 import graft.{Q, Steps, Tables}
 
-/** q214: the END-TO-END curation pipeline composite (r12 verdict #6).
+/** q214: the END-TO-END curation pipeline composite.
   *
   * Every gate below exists as its own green lane — ingest (q194),
   * quality (q30), language-ID (q31), PII redaction (q61), near-dup
@@ -168,8 +168,8 @@ object PipelineOps {
     sigs.select(col("doc_id"), posexplode(bandCols).as(Seq("band", "key")))
   }
 
-  /** [[bandedOf]] with the signature carried through the explode
-    * (r17): the dup checks rescore candidate pairs by signature
+  /** [[bandedOf]] with the signature carried through the explode:
+    * the dup checks rescore candidate pairs by signature
     * agreement, and re-attaching sigs through per-side joins cost two
     * extra join stages per check — carrying the (delta-scale) sig
     * array through the banded rows is strictly cheaper.
@@ -182,13 +182,13 @@ object PipelineOps {
 
   /** The benchmark 8-gram set as a sorted literal array — the
     * decontamination reference every admission checks against.
-    * Session-cached (r18, the sharedBaseIndex discipline): the set is
+    * Session-cached (the sharedBaseIndex discipline): the set is
     * a deterministic, metadata-scale artifact of the corpus (the
     * bounded BenchHoldout eval slice — a few thousand 60-bit longs at
-    * any corpus size), yet r17 re-collected it per
-    * pipelineIncrementFull CALL — once each for q215/q217/q218, twice
-    * in q219 and three times across q220's epochs, a distinct+collect
-    * job (~0.4 s) each time. One compute per (session, corpus) serves
+    * any corpus size), and collecting it per pipelineIncrementFull
+    * CALL — once each for q215/q217/q218, twice in q219 and three
+    * times across q220's epochs — cost a distinct+collect job
+    * (~0.4 s) each time. One compute per (session, corpus) serves
     * them all; outputs are bit-identical on hit or miss.
     */
   private[graft] def benchGramSet(s: SparkSession, d: String): Array[Long] =
@@ -225,7 +225,7 @@ object PipelineOps {
     * outcome) PLUS the verified near-dup pair list — q214/q215/q218
     * derive IDENTICALLY from the same corpus, so the build is computed
     * once per (session, documents fingerprint) and checkpointed (the
-    * r12 cross-lane cache discipline; outputs bit-identical on hit or
+    * cross-lane cache discipline; outputs bit-identical on hit or
     * miss). The pair list rides along because it is the EXPENSIVE
     * mined artifact (banded candidates + est_j verification): q218's
     * takedown recomputes group weights from `pairs minus pairs
@@ -338,7 +338,7 @@ object PipelineOps {
     * to `${p}g3k`; q215's delta chain reads its post-contamination
     * relation instead). sigs/banded are MATERIALIZED: both get
     * referenced by multiple downstream CTEs and DuckDB re-inlines
-    * multi-referenced CTEs per reference (the r12 lesson).
+    * multi-referenced CTEs per reference.
     */
   private def sigChainSql(p: String, inCte: String = null): String = {
     val in = if (inCte == null) s"${p}g3k" else inCte
@@ -496,19 +496,17 @@ object PipelineOps {
   /** Smallest spacing between the synthetic-branch id offsets (the
     * delta branches sit 1 M apart). Both engine and oracle share the
     * offset constants, so an id-range overflow would alias branches
-    * SILENTLY with no oracle signal (r14 ADVICE — the same hazard
-    * class the r13 derived-amp-offset fix addressed): assert headroom
+    * SILENTLY with no oracle signal: assert headroom
     * loudly at lane entry instead. One metadata-scale agg job.
     */
   private[graft] val MinOffsetSpacing = 1000000L
 
   // memoized by the input's FULL canonicalized plan + bound + site
-  // label (r15 ADVICE introduced the memo so 'lazy' plan sweeps stop
-  // paying a corpus-column scan per lane invocation; r16 ADVICE
-  // tightened the key: the previous 32-bit semanticHash could collide
-  // and silently skip the guard — structural plan equality cannot,
-  // and the handful of distinct corpus plans per JVM makes holding
-  // them as keys free). Same corpus => same canonicalized plan =>
+  // label, so 'lazy' plan sweeps stop paying a corpus-column scan per
+  // lane invocation. The key is structural plan equality, not a
+  // 32-bit semanticHash, whose collision would silently skip the
+  // guard; the handful of distinct corpus plans per JVM makes holding
+  // them as keys free. Same corpus => same canonicalized plan =>
   // one job per JVM; a localCheckpointed input (epoch admissions,
   // whose rows genuinely change run-to-run) is a fresh plan each run
   // and correctly re-asserts.
@@ -533,7 +531,7 @@ object PipelineOps {
   private[graft] def deltaBatch(d0: DataFrame): DataFrame = {
     assertIdHeadroom(d0, MinOffsetSpacing, "deltaBatch")
     val rev = concat_ws(" ", reverse(split(col("text"), " ")))
-    // ONE pass over the corpus instead of a 4-branch union (r18): each
+    // ONE pass over the corpus instead of a 4-branch union: each
     // doc emits the branch rows it matches via a map-side explode —
     // identical row multiset (a doc matching several branch predicates
     // emits one row per match, exactly as the union did), but the d0
@@ -568,7 +566,7 @@ object PipelineOps {
         .select("doc_id", "rtext")).localCheckpoint(true)
     }
 
-  // ---- q217: the PERSISTED admission index (r13 verdict #1) — the
+  // ---- q217: the PERSISTED admission index — the
   //      q179 on-disk discipline applied to the TEXT side. q215/q216's
   //      own docs call the curated-base MinHash fingerprint index "the
   //      persisted artifact at 100 TB", yet until this lane it lived
@@ -589,7 +587,7 @@ object PipelineOps {
   //      byte-for-byte on row sets and that only touched buckets
   //      change). The lane itself is q215's admission run THROUGH the
   //      disk index — same card, same oracle, verbatim. ----
-  /** Key buckets per band, CORPUS-SCALED (r14: the fixed 8 was the
+  /** Key buckets per band, CORPUS-SCALED (a fixed count would be the
     * last scale constant in the index layout): one bucket per ~2500
     * indexed docs, floor 8, cap 4096. The divisor is deliberately
     * COARSE: below ~20k docs more buckets only multiply small-file
@@ -684,9 +682,9 @@ object PipelineOps {
       s: SparkSession, dir: String, pbs: Seq[Long]): DataFrame = {
     // existence resolves through the path's Hadoop FileSystem, and the
     // degenerate all-missing selection derives its empty relation from
-    // the layout's REAL schema via a root open filtered to false (r15
-    // ADVICE: a hand-built StructType silently diverges if the layout
-    // ever gains a column) — the root-listing cost only ever applies
+    // the layout's REAL schema via a root open filtered to false (a
+    // hand-built StructType silently diverges if the layout ever gains
+    // a column) — the root-listing cost only ever applies
     // to this rare empty case
     val paths = pbs.map(pb => s"$dir/pb=$pb").filter(graft.io.LayoutFs.exists)
     if (paths.isEmpty)
@@ -694,7 +692,7 @@ object PipelineOps {
     else s.read.option("basePath", dir).parquet(paths: _*)
   }
 
-  // ---- generation-pinned index entry (r16 verdict #3) ----
+  // ---- generation-pinned index entry ----
   // The mutation lanes (q218/q219/q220) used to CLONE the pristine
   // persisted index into a run-local tree and mutate the clone —
   // zero-copy locally (hardlinks) but a byte-copy on any non-`file`
@@ -811,7 +809,7 @@ object PipelineOps {
 
   private[graft] def probeAdmissionIndex(
       s: SparkSession, store: AdmIndex, dSigs: DataFrame): DataFrame = {
-    // delta sigs ride the banded probe rows (r17): the store side
+    // delta sigs ride the banded probe rows: the store side
     // already carries its signature inline, so est_j verification
     // reads both sigs off the candidate row — no re-attach join
     val dBand = bandedWithSig(dSigs)
@@ -829,8 +827,8 @@ object PipelineOps {
   }
 
   /** The probe's capped, pruned, sig-carrying banded STORE side — the
-    * candidate relation [[probeAdmissionIndex]] joins, split out (r18)
-    * so admissions can UNION it with the within-delta side and pay one
+    * candidate relation [[probeAdmissionIndex]] joins, split out so
+    * admissions can UNION it with the within-delta side and pay one
     * candidate join for both dup checks. `dBandS` carries
     * (doc_id, sig, band, key) — [[bandedWithSig]]'s shape.
     *
@@ -925,169 +923,189 @@ object PipelineOps {
     (card, handles)
   }
 
+  /** Unpersists the RDD a `localCheckpoint`ed relation reads. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(false)
+      case _ =>
+    }
+
   /** [[pipelineIncrementLazy]] plus the ADMITTED relation — q219's
     * epoch-1 state: what an ingest run hands to the index fold. One
-    * relation (doc_id, source, text, rtext, sig) instead of the r17
-    * (rows, sigs) pair (r18: the pair cost every epoch TWO
-    * checkpoints of overlapping data; callers needing only the
-    * signatures project them — `sig` is null exactly for the sub-3-
-    * token admitted docs the old sigs relation inner-joined away).
+    * relation (doc_id, source, text, rtext, sig), so an epoch pays one
+    * checkpoint of it; callers needing only the signatures project
+    * them (`sig` is null exactly for the sub-3-token admitted docs).
     * The extra is lazy over the persisted handles; a caller that
-    * needs it past release must checkpoint first.
+    * needs it past release must checkpoint first. If the call throws,
+    * it has released every handle it persisted before the failure
+    * propagates.
     */
   private[graft] def pipelineIncrementFull(
       s: SparkSession, d: String,
       idxVia: Option[DataFrame => DataFrame] = None,
       deltaOf: DataFrame => DataFrame = deltaBatch)
       : (DataFrame, DataFrame, Seq[DataFrame]) = {
-    // "delta" covers the build-time jobs: the corpus read's JSON schema
-    // inference and, once per corpus, deltaBatch's id-headroom check
-    val d0 = Steps.tag(s, "delta") { CoreOps.jsonlDocs(s, d) }
-      .select(col("doc_id"), col("meta.source").as("source"), col("text"))
-      .repartition(col("doc_id"))
-      .persist()
-    // the base curated state = q214's final survivor set (the session-
-    // shared audited build); its fingerprint index is what a
-    // deployment keeps on disk — shared too (a deployment never
-    // re-fingerprints the corpus per ingest)
-    val bSigs = sharedBaseIndex(s, d)
-    val dAudit = Steps.tag(s, "delta") { gateAudit(deltaOf(d0)).persist() }
-    // dg3k is single-consumer (the `clean` persist right below adds
-    // one map-side column and caches) — r18: its own persist was a
-    // pure extra materialization per admission, the same overhead the
-    // r17 q148 fix removed from the shingle cache
-    val dg3k = dAudit
-      .filter(col("score") >= QualityMin && col("lang_pred") =!= "und" &&
-        col("n_red") < PiiQuarantineAt)
-      .select("doc_id", "source", "text", "rtext")
-    // contamination against the SAME benchmark grams (original text).
-    // r17: the benchmark gram set is metadata-scale by construction
-    // (the BenchHoldout eval slice — bounded at any corpus size), so
-    // it collects once per call and the per-doc check becomes a pure
-    // map-side arrays_overlap against the literal set — replacing the
-    // old explode -> broadcast join -> distinct -> left-join chain
-    // (three jobs and a delta-gram shuffle) with zero extra stages.
-    // Semantics identical: overlap(grams(doc), bench) == "shares at
-    // least one 8-gram"; sub-8-token docs have an empty gram array
-    // and overlap() is false, exactly as they produced no explode
-    // rows before. (A benchmark suite too large to inline — far
-    // beyond any real eval set — would fall back to the broadcast
-    // semi-join form; the set here is a few thousand longs.)
-    // r18: session-cached — one distinct+collect per (session, corpus)
-    // instead of one per admission call (see benchGramSet)
-    val benchGrams: Array[Long] = benchGramSet(s, d)
-    val clean = dg3k
-      // coalesce: arrays_overlap is null-propagating, and the old
-      // join form mapped a (hypothetical) null text to not-contam —
-      // keep that mapping explicit rather than letting a null ride
-      // the downstream flag algebra
-      .withColumn("is_contam",
-        coalesce(arrays_overlap(
-          hashedShingles(shingles(tokens(col("text")), DecontamGram)),
-          lit(benchGrams)), lit(false)))
-      .persist()
-    val dcln = clean.filter(!col("is_contam"))
-    val dSigs = Steps.tag(s, "sigs") { sigsOf(dcln).localCheckpoint(true) }
-    val matches = aggregate(
-      zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1L).otherwise(0L)),
-      lit(0L), _ + _)
-    def estOk = matches.cast("double") / lit(MinhashK.toDouble) >= 0.5
-    // BOTH dup checks as ONE candidate join (r18): the dup-vs-base
-    // side (the q137 asymmetry — the base contributes only its banded
-    // index rows, never re-pairing itself) and the within-delta
-    // smaller-id side union into one org-tagged candidate relation, so
-    // the delta's banded rows pay one join, one (a, b, org) dedup and
-    // one flag aggregate instead of two of each plus two flag joins.
-    // Per-org semantics are r17's exactly: each side keeps its own
-    // hot-bucket cap (capBandedFor's broadcast-semi prefilter on the
-    // base/index side — identical output, batch-proportional cost,
-    // guide §3.2 — and capBanded on the delta side), the within pair
-    // rule (x.doc_id > y.doc_id) applies only to org 'd' rows via the
-    // join condition, sigs ride the banded rows (bandedWithSig — r17)
-    // so est_j reads both off the candidate row, and the (a, b, org)
-    // dedup reproduces each check's independent (a, b) dedup (sig is
-    // functionally determined by the doc id, so duplicates agree).
-    val dBandS = bandedWithSig(dSigs)
-    val bSide = (idxVia match {
-      case Some(f) => Steps.tag(s, "probe") { f(dBandS) }
-      case None =>
-        capBandedFor(bandedWithSig(bSigs), dBandS)
-          .select("doc_id", "sig", "band", "key")
-    }).withColumn("org", lit("b"))
-    val dSide = capBanded(dBandS)
-      .select("doc_id", "sig", "band", "key")
-      .withColumn("org", lit("d"))
-    val cand = dBandS.as("x").join(bSide.unionByName(dSide).as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          (col("y.org") === "b" || col("x.doc_id") > col("y.doc_id")))
-      .select(col("x.doc_id").as("a"), col("x.sig").as("sig_a"),
-              col("y.doc_id").as("b"), col("y.sig").as("sig_b"), col("y.org").as("org"))
-      .dropDuplicates("a", "b", "org")
-      .filter(estOk)
-    val dupFlags = cand.groupBy(col("a").as("doc_id"))
-      .agg(max(col("org") === "b").as("f_dvb"),
-           max(col("org") === "d").as("f_dwd"))
-    val flagged = clean
-      .join(dupFlags, Seq("doc_id"), "left")
-      .withColumn("is_dvb", !col("is_contam") && coalesce(col("f_dvb"), lit(false)))
-      .withColumn("is_dwd",
-        !col("is_contam") && !col("is_dvb") && coalesce(col("f_dwd"), lit(false)))
-      .drop("f_dvb", "f_dwd")
-      .persist()
-    // dataset card as ONE conditional aggregate (r17): the per-gate
-    // rollup used to run 8 separate groupBy(source) aggregates (ing +
-    // z1..z6 + adm) stitched by a 7-way left join — measured at ~3 s
-    // of the lane, all plan/shuffle overhead over a |sources|-row
-    // result. The audit relation LEFT-joined to the flag columns
-    // classifies every delta doc into exactly one gate bucket (the
-    // same mutually-exclusive when-chain q216's verdict log uses), so
-    // one groupBy(source) with sum(when(...)) columns produces the
-    // identical card: audit rows == deltaOf(d0) rows (n_delta), the
-    // g1-g3 predicates partition audit exactly as z1..z3 filtered,
-    // and g4-g6/admitted come from the flags (null — never reached
-    // g4 — coalesces to false, exactly the old join semantics).
-    val gateOk = col("score") >= QualityMin && col("lang_pred") =!= "und" &&
-      col("n_red") < PiiQuarantineAt
-    val admitted = gateOk && !coalesce(col("is_contam"), lit(false)) &&
-      !coalesce(col("is_dvb"), lit(false)) && !coalesce(col("is_dwd"), lit(false))
-    val result = dAudit
-      .join(flagged.select("doc_id", "is_contam", "is_dvb", "is_dwd"),
-        Seq("doc_id"), "left")
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_delta"),
-        sum(when(col("score") < QualityMin, 1L).otherwise(0L))
-          .as("n_quality_dropped"),
-        sum(when(col("score") >= QualityMin && col("lang_pred") === "und", 1L)
-          .otherwise(0L)).as("n_lang_dropped"),
-        sum(when(col("score") >= QualityMin && col("lang_pred") =!= "und" &&
-          col("n_red") >= PiiQuarantineAt, 1L).otherwise(0L))
-          .as("n_pii_quarantined"),
-        sum(when(coalesce(col("is_contam"), lit(false)), 1L).otherwise(0L))
-          .as("n_contam_dropped"),
-        sum(when(coalesce(col("is_dvb"), lit(false)), 1L).otherwise(0L))
-          .as("n_dup_vs_base"),
-        sum(when(coalesce(col("is_dwd"), lit(false)), 1L).otherwise(0L))
-          .as("n_dup_within"),
-        sum(when(admitted, 1L).otherwise(0L)).as("n_admitted"),
-        sum(when(admitted, col("doc_id")).otherwise(0L))
-          .as("admitted_checksum"),
-        sum(when(admitted, size(tokens(col("rtext"))).cast("long"))
-          .otherwise(0L)).as("admitted_tok"))
-      .orderBy("source")
-    // the admitted relation with the signature riding along (LEFT
-    // join: sub-3-token admitted docs have no signature row — the old
-    // separate sigs relation inner-joined them away, so `sig IS NULL`
-    // marks exactly those docs for callers that fold signatures)
-    val admittedRel = flagged
-      .filter(!col("is_contam") && !col("is_dvb") && !col("is_dwd"))
-      .select("doc_id", "source", "text", "rtext")
-      .join(dSigs, Seq("doc_id"), "left")
-    // audited is the session-shared checkpoint — NOT unpersisted here
-    (result, admittedRel, Seq(dAudit, clean, flagged, d0))
+    // what this call has persisted so far: if one of its own jobs
+    // (sigs, probe, the shared builds) throws, no caller holds the
+    // handles, so they are released here before the failure propagates
+    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def held(df: DataFrame): DataFrame = { persisted += df; df }
+    var sigs = Option.empty[DataFrame]
+    try {
+      // "delta" covers the build-time jobs: the corpus read's JSON schema
+      // inference and, once per corpus, deltaBatch's id-headroom check
+      val d0 = held(Steps.tag(s, "delta") { CoreOps.jsonlDocs(s, d) }
+        .select(col("doc_id"), col("meta.source").as("source"), col("text"))
+        .repartition(col("doc_id"))
+        .persist())
+      // the base curated state = q214's final survivor set (the session-
+      // shared audited build); its fingerprint index is what a
+      // deployment keeps on disk — shared too (a deployment never
+      // re-fingerprints the corpus per ingest)
+      val bSigs = sharedBaseIndex(s, d)
+      val dAudit = held(Steps.tag(s, "delta") { gateAudit(deltaOf(d0)).persist() })
+      // dg3k is single-consumer (the `clean` persist right below adds
+      // one map-side column and caches), so its own persist would be a
+      // pure extra materialization per admission
+      val dg3k = dAudit
+        .filter(col("score") >= QualityMin && col("lang_pred") =!= "und" &&
+          col("n_red") < PiiQuarantineAt)
+        .select("doc_id", "source", "text", "rtext")
+      // contamination against the SAME benchmark grams (original text).
+      // The benchmark gram set is metadata-scale by construction
+      // (the BenchHoldout eval slice — bounded at any corpus size), so
+      // it collects once per call and the per-doc check becomes a pure
+      // map-side arrays_overlap against the literal set — replacing the
+      // old explode -> broadcast join -> distinct -> left-join chain
+      // (three jobs and a delta-gram shuffle) with zero extra stages.
+      // Semantics identical: overlap(grams(doc), bench) == "shares at
+      // least one 8-gram"; sub-8-token docs have an empty gram array
+      // and overlap() is false, exactly as they produced no explode
+      // rows before. (A benchmark suite too large to inline — far
+      // beyond any real eval set — would fall back to the broadcast
+      // semi-join form; the set here is a few thousand longs.)
+      // Session-cached: one distinct+collect per (session, corpus)
+      // instead of one per admission call (see benchGramSet)
+      val benchGrams: Array[Long] = benchGramSet(s, d)
+      val clean = held(dg3k
+        // coalesce: arrays_overlap is null-propagating, and the old
+        // join form mapped a (hypothetical) null text to not-contam —
+        // keep that mapping explicit rather than letting a null ride
+        // the downstream flag algebra
+        .withColumn("is_contam",
+          coalesce(arrays_overlap(
+            hashedShingles(shingles(tokens(col("text")), DecontamGram)),
+            lit(benchGrams)), lit(false)))
+        .persist())
+      val dcln = clean.filter(!col("is_contam"))
+      val dSigs = Steps.tag(s, "sigs") { sigsOf(dcln).localCheckpoint(true) }
+      sigs = Some(dSigs)
+      val matches = aggregate(
+        zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1L).otherwise(0L)),
+        lit(0L), _ + _)
+      def estOk = matches.cast("double") / lit(MinhashK.toDouble) >= 0.5
+      // BOTH dup checks as ONE candidate join: the dup-vs-base
+      // side (the q137 asymmetry — the base contributes only its banded
+      // index rows, never re-pairing itself) and the within-delta
+      // smaller-id side union into one org-tagged candidate relation, so
+      // the delta's banded rows pay one join, one (a, b, org) dedup and
+      // one flag aggregate instead of two of each plus two flag joins.
+      // Per-org semantics are those of two separate checks: each side
+      // keeps its own hot-bucket cap (capBandedFor's broadcast-semi prefilter on the
+      // base/index side — identical output, batch-proportional cost,
+      // guide §3.2 — and capBanded on the delta side), the within pair
+      // rule (x.doc_id > y.doc_id) applies only to org 'd' rows via the
+      // join condition, sigs ride the banded rows (bandedWithSig)
+      // so est_j reads both off the candidate row, and the (a, b, org)
+      // dedup reproduces each check's independent (a, b) dedup (sig is
+      // functionally determined by the doc id, so duplicates agree).
+      val dBandS = bandedWithSig(dSigs)
+      val bSide = (idxVia match {
+        case Some(f) => Steps.tag(s, "probe") { f(dBandS) }
+        case None =>
+          capBandedFor(bandedWithSig(bSigs), dBandS)
+            .select("doc_id", "sig", "band", "key")
+      }).withColumn("org", lit("b"))
+      val dSide = capBanded(dBandS)
+        .select("doc_id", "sig", "band", "key")
+        .withColumn("org", lit("d"))
+      val cand = dBandS.as("x").join(bSide.unionByName(dSide).as("y"),
+          col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
+            (col("y.org") === "b" || col("x.doc_id") > col("y.doc_id")))
+        .select(col("x.doc_id").as("a"), col("x.sig").as("sig_a"),
+                col("y.doc_id").as("b"), col("y.sig").as("sig_b"), col("y.org").as("org"))
+        .dropDuplicates("a", "b", "org")
+        .filter(estOk)
+      val dupFlags = cand.groupBy(col("a").as("doc_id"))
+        .agg(max(col("org") === "b").as("f_dvb"),
+             max(col("org") === "d").as("f_dwd"))
+      val flagged = held(clean
+        .join(dupFlags, Seq("doc_id"), "left")
+        .withColumn("is_dvb", !col("is_contam") && coalesce(col("f_dvb"), lit(false)))
+        .withColumn("is_dwd",
+          !col("is_contam") && !col("is_dvb") && coalesce(col("f_dwd"), lit(false)))
+        .drop("f_dvb", "f_dwd")
+        .persist())
+      // dataset card as ONE conditional aggregate: the per-gate
+      // rollup used to run 8 separate groupBy(source) aggregates (ing +
+      // z1..z6 + adm) stitched by a 7-way left join — measured at ~3 s
+      // of the lane, all plan/shuffle overhead over a |sources|-row
+      // result. The audit relation LEFT-joined to the flag columns
+      // classifies every delta doc into exactly one gate bucket (the
+      // same mutually-exclusive when-chain q216's verdict log uses), so
+      // one groupBy(source) with sum(when(...)) columns produces the
+      // identical card: audit rows == deltaOf(d0) rows (n_delta), the
+      // g1-g3 predicates partition audit exactly as z1..z3 filtered,
+      // and g4-g6/admitted come from the flags (null — never reached
+      // g4 — coalesces to false, exactly the old join semantics).
+      val gateOk = col("score") >= QualityMin && col("lang_pred") =!= "und" &&
+        col("n_red") < PiiQuarantineAt
+      val admitted = gateOk && !coalesce(col("is_contam"), lit(false)) &&
+        !coalesce(col("is_dvb"), lit(false)) && !coalesce(col("is_dwd"), lit(false))
+      val result = dAudit
+        .join(flagged.select("doc_id", "is_contam", "is_dvb", "is_dwd"),
+          Seq("doc_id"), "left")
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_delta"),
+          sum(when(col("score") < QualityMin, 1L).otherwise(0L))
+            .as("n_quality_dropped"),
+          sum(when(col("score") >= QualityMin && col("lang_pred") === "und", 1L)
+            .otherwise(0L)).as("n_lang_dropped"),
+          sum(when(col("score") >= QualityMin && col("lang_pred") =!= "und" &&
+            col("n_red") >= PiiQuarantineAt, 1L).otherwise(0L))
+            .as("n_pii_quarantined"),
+          sum(when(coalesce(col("is_contam"), lit(false)), 1L).otherwise(0L))
+            .as("n_contam_dropped"),
+          sum(when(coalesce(col("is_dvb"), lit(false)), 1L).otherwise(0L))
+            .as("n_dup_vs_base"),
+          sum(when(coalesce(col("is_dwd"), lit(false)), 1L).otherwise(0L))
+            .as("n_dup_within"),
+          sum(when(admitted, 1L).otherwise(0L)).as("n_admitted"),
+          sum(when(admitted, col("doc_id")).otherwise(0L))
+            .as("admitted_checksum"),
+          sum(when(admitted, size(tokens(col("rtext"))).cast("long"))
+            .otherwise(0L)).as("admitted_tok"))
+        .orderBy("source")
+      // the admitted relation with the signature riding along (LEFT
+      // join: sub-3-token admitted docs have no signature row — the old
+      // separate sigs relation inner-joined them away, so `sig IS NULL`
+      // marks exactly those docs for callers that fold signatures)
+      val admittedRel = flagged
+        .filter(!col("is_contam") && !col("is_dvb") && !col("is_dwd"))
+        .select("doc_id", "source", "text", "rtext")
+        .join(dSigs, Seq("doc_id"), "left")
+      // audited is the session-shared checkpoint — NOT unpersisted here
+      (result, admittedRel, Seq(dAudit, clean, flagged, d0))
+    } catch {
+      case e: Throwable =>
+        persisted.foreach(_.unpersist(false))
+        sigs.foreach(releaseCheckpoint)
+        throw e
+    }
   }
 
-  // ---- q218: TAKEDOWN through the CURATION composite (r13 verdict
-  //      #6) — the right-to-be-forgotten path: a deterministic delete
+  // ---- q218: TAKEDOWN through the CURATION composite — the
+  //      right-to-be-forgotten path: a deterministic delete
   //      set (doc_id % 17 == 5, outside the benchmark holdout) is
   //      propagated through the CURATED corpus as one oracle-checked
   //      pipeline: (1) the docs leave the persisted admission index
@@ -1163,8 +1181,8 @@ object PipelineOps {
   /** Post-takedown serving state: the takedown set tombstoned out of
     * the persisted index via a GENERATION-PINNED overlay entry — the
     * pristine base is never opened for write and nothing is cloned
-    * (r16 verdict #3: the old clone entry was zero-copy only on the
-    * local scheme; the overlay is O(1) entry on every scheme). Only
+    * (a clone entry is zero-copy only on the local scheme; the
+    * overlay is an O(1) entry on every scheme). Only
     * the takedown's touched buckets materialize in the overlay.
     */
   private[graft] def takedownIndex(s: SparkSession, d: String): AdmIndex = {
@@ -1390,7 +1408,7 @@ object PipelineOps {
   }
 
   // ---- q219: TWO-EPOCH INGEST CONTINUITY — the fold primitive under
-  //      an oracle (r14; AdmissionIndexSpec proves fold == rebuild,
+  //      an oracle (AdmissionIndexSpec proves fold == rebuild,
   //      this lane proves the folded artifact SERVES). Epoch 1 is
   //      q215's admission verbatim; its ADMITTED signatures then fold
   //      into a run-local clone of the persisted base index (the
@@ -1426,7 +1444,7 @@ object PipelineOps {
     // must stay below the next epoch-2 branch
     assertIdHeadroom(adm1, Epoch2CopyOffset - Epoch2AdmOffset, "epoch2Batch")
     val rev = concat_ws(" ", reverse(split(col("text"), " ")))
-    // the two d0 branches as ONE corpus pass (r18, the deltaBatch
+    // the two d0 branches as ONE corpus pass (the deltaBatch
     // shape): same row multiset, one cache scan, no partition stacking
     def branch(pred: Column, off: Long, text: Column) =
       when(pred, struct((col("doc_id") + off).as("doc_id"),
@@ -1444,8 +1462,8 @@ object PipelineOps {
 
   def pipelineTwoEpoch(s: SparkSession, d: String): DataFrame = {
     // epoch 1: q215's admission; keep the admitted relation alive past
-    // the handle release (ONE checkpoint — r18: rows and sigs ride
-    // the same relation; the r17 pair cost a second materialization)
+    // the handle release (ONE checkpoint: rows and sigs ride the
+    // same relation)
     val admitted = Steps.tag(s, "epoch1") {
       val (_, admitted0, handles1) = pipelineIncrementFull(s, d)
       val adm = Steps.tag(s, "admitted") { admitted0.localCheckpoint(true) }
@@ -1470,7 +1488,7 @@ object PipelineOps {
     }
   }
 
-  // ---- q220: N-EPOCH INDEX LIFECYCLE (r14 verdict #2) — the text
+  // ---- q220: N-EPOCH INDEX LIFECYCLE — the text
   //      index's full maintenance loop under ONE oracle, closing the
   //      symmetry with the vector side (compaction q182, tombstones
   //      q187, vacuum q210, swap q212). THREE epochs drive
@@ -1552,7 +1570,7 @@ object PipelineOps {
     val idx = overlayEntry(s, d, "lc")
     // one epoch: admit, then (tdMod > 0) fold the admitted signatures
     // in and tombstone the takedown (admitted ids % tdMod == 0) out.
-    // ONE admitted checkpoint per epoch (r18): signatures project off
+    // ONE admitted checkpoint per epoch: signatures project off
     // it lazily; the takedown sigs stay lazy over it too (no store
     // reads in the lineage, so post-mutation consumers — the delete
     // and the lifecycle spec — recompute them safely)
@@ -1573,9 +1591,9 @@ object PipelineOps {
     val (card1, adm1, ep1) = epoch(1, deltaBatch, 3, LcTd1ResubOffset)
     // epoch 2: takedown re-submissions (admit) + survivor re-submissions (reject)
     // lazy over adm1's checkpoint: single-consumer (the epoch's
-    // gateAudit persist materializes it once) — r18, the dg3k rule.
+    // gateAudit persist materializes it once) — the dg3k rule.
     // Every adm row lands in exactly one branch, so the two resub
-    // slices fuse into one conditional-offset pass (r18): same rows,
+    // slices fuse into one conditional-offset pass: same rows,
     // one checkpoint scan, no partition stacking into the epoch chain.
     def resubSplit(rows: DataFrame, pred: Column, offT: Long,
         offF: Long): DataFrame =

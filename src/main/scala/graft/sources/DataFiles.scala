@@ -47,6 +47,22 @@ private[graft] object DataFiles {
     }
   }
 
+  /** Name, length and modification time of every file under `path`
+    * (recursively), or of `path` itself if it is a file, in name order.
+    * It changes when a file is rewritten, added or removed, so it keys
+    * anything derived from the files' contents or listing.
+    */
+  def fingerprint(spark: SparkSession, path: String): String = {
+    val p = new Path(path)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    val files = ArrayBuffer.empty[String]
+    while (it.hasNext) {
+      val f = it.next()
+      files += s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}"
+    }
+    files.sorted.mkString("\n")
+  }
+
   /** The whole lines in the first [[PrefixBytes]] of `files`, read in
     * order on the driver and decoded through each file's compression
     * codec if it has one. A file shorter than the budget, such as the

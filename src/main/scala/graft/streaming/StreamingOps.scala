@@ -36,19 +36,6 @@ object StreamingOps {
     case f => f
   })
 
-  /** The `ts` type the events file at `path` actually carries — raw
-    * nanos Long (TIMESTAMP(NANOS) under legacy.parquet.nanosAsLong),
-    * TIMESTAMP_NTZ (un-adjusted micros), or plain TIMESTAMP. File
-    * streams need an explicit schema, so the batch reader probes the
-    * footer once per call — metadata only, no data scan. The stream is
-    * then declared with the file's native type and normalized with
-    * [[Tables.normalizeEventsTs]], the same path batch reads take.
-    */
-  private def probeTsType(s: SparkSession, path: String): org.apache.spark.sql.types.DataType = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(path).schema("ts").dataType
-  }
-
   def streamingEvents(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // The file-stream source wants a *directory* it can monitor; the
@@ -70,7 +57,13 @@ object StreamingOps {
       java.nio.file.Files.copy(src, tgt,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING,
         java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
-    val tsType = probeTsType(s, tgt.toString)
+    // File streams need an explicit schema. The staged file is a byte
+    // copy of the table, so the stream declares the `ts` type of the
+    // table's resolved relation: raw nanos Long (TIMESTAMP(NANOS) under
+    // nanosAsLong), TIMESTAMP_NTZ (un-adjusted micros) or TIMESTAMP. Once
+    // the table is resolved in the session this reads no file and runs
+    // no job; normalizeEventsTs then folds the type as batch reads do.
+    val tsType = Tables.table(s, d, "events").schema("ts").dataType
     val schema = StructType(eventsRawSchema.map {
       case f if f.name == "ts" => StructField("ts", tsType)
       case f => f
@@ -83,8 +76,8 @@ object StreamingOps {
     * the checkpoint per micro-batch. At oracle/bench scale (thousands
     * of rows, 1-2 micro-batches) the session default of 32 partitions
     * is 4× the store setup/commit/maintenance overhead of 8 for zero
-    * parallelism benefit — this fixed cost was ~2 s per streaming query
-    * (VERDICT r4 #7). Partition count never changes WHAT a stateful
+    * parallelism benefit — this fixed cost was ~2 s per streaming
+    * query. Partition count never changes WHAT a stateful
     * query computes (state is keyed; partitioning only places keys), so
     * the cross-batch assertions are untouched. Production streams size
     * this to throughput: it is a per-query knob, not a semantic one.
@@ -118,7 +111,7 @@ object StreamingOps {
   final case class SessionOut(user_id: Long, session_start: java.sql.Timestamp,
                               n_events: Int, sum_value: Double)
 
-  /** flatMapGroupsWithState sessionizer — BATCH MODE ONLY (ADVICE r1):
+  /** flatMapGroupsWithState sessionizer — BATCH MODE ONLY:
     * each invocation sees the whole group, emits every session including
     * the still-open one, and clears state. Running this under a real
     * multi-micro-batch stream would emit a batch-spanning session twice
@@ -204,7 +197,7 @@ object StreamingOps {
                 // extend the session BACKWARD without rewinding `last` —
                 // st.copy(last = t) here would re-arm the timeout in the
                 // past and split a session that session_window semantics
-                // keep whole (r2 review finding)
+                // keep whole
                 case Some(st) if t - st.last <= gapMs && st.start - t <= gapMs =>
                   cur = Some(st.copy(
                     start = math.min(st.start, t), last = math.max(st.last, t),
@@ -348,8 +341,8 @@ object StreamingOps {
        |      FROM events)
        |WHERE rn <= $StreamK ORDER BY event_type, rank""".stripMargin
 
-  // ---- q121: the STREAMING-CORRECT sessionizer as a registry query
-  //      (VERDICT r3 #3). sessionizeStreaming runs the event stream with
+  // ---- q121: the STREAMING-CORRECT sessionizer as a registry
+  //      query. sessionizeStreaming runs the event stream with
   //      a 0-second watermark; sessions closed by later events emit in
   //      batch 0, trailing open sessions flush via event-time TIMEOUT in
   //      the no-data micro-batch once the watermark reaches max(ts).
@@ -434,7 +427,7 @@ object StreamingOps {
   private val stagedSchema = eventsMicrosSchema
 
   // ---- q127: stream-stream interval join as a registry query — the
-  //      last spec-only streaming family (VERDICT r4). For every
+  //      last spec-only streaming family. For every
   //      purchase, the clicks by the same user in the PRECEDING hour:
   //      both sides are watermarked streams, the join carries the
   //      event-time range constraint Spark needs to bound state (rows
@@ -445,7 +438,7 @@ object StreamingOps {
   //      StreamingSpec; this entry oracles the JOIN SEMANTICS.
   //      Each side streams from its own pre-filtered staged slice
   //      (purchases are ~1/6 of events) rather than scanning the full
-  //      table twice per run (VERDICT r5 #6). ----
+  //      table twice per run. ----
   def streamStreamJoin(s: SparkSession, d: String): DataFrame = {
     val qname = "graft_ssj_" + java.lang.Integer.toHexString(d.hashCode)
     val pDir = stagedEventSlice(s, d, "purch", col("event_type") === "purchase")
@@ -785,7 +778,7 @@ object StreamingOps {
     // static prep: corpus-slice histograms -> ratio array + cutoff.
     // ONE conditional aggregate (count + count-when-en per bucket): the
     // former raw/tgt split aggregated the unpersisted tokenize+explode
-    // relation twice — a full second corpus pass (VERDICT r8 #4) — and
+    // relation twice — a full second corpus pass — and
     // needed a left join + null-fill that the conditional count gets by
     // construction (0 for buckets with no target grams).
     val B = graft.ops.TextOps.DsirB
@@ -811,7 +804,7 @@ object StreamingOps {
     }
     val ratioArr = array(ratios.toIndexedSeq.map(lit): _*)
     withStreamShufflePartitions(s, 2) {
-      // zip-form bigrams (HashFns.adjacentPairs — r17): the lambda
+      // zip-form bigrams (HashFns.adjacentPairs): the lambda
       // form re-tokenized the doc per position (unbound toks inside a
       // streaming projection, where no repartition barrier exists)
       val toks = tokens(col("text"))
@@ -953,7 +946,7 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
   //      broadcast DATA, not plan literals, so the documented
   //      50k-cell cap (~25 MB of centroids) stays inside what the
   //      broadcast machinery is built for instead of what the codegen
-  //      constant pool can absorb (r9 VERDICT #2). Only the residual
+  //      constant pool can absorb. Only the residual
   //      codebooks stay literal: PqM·PqK·PqSub = 1 024 doubles by
   //      construction, corpus-independent. The stream stage is
   //      entirely STATELESS and map-side: per arriving vector, one
@@ -1115,9 +1108,7 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
   //      vectorLayoutDir): foreachBatch collects the batch's probe
   //      cells (metadata-scale — arrivals × probes ids) and
   //      probedVectorRead prunes the scan to those partition
-  //      directories on DISK (r10 VERDICT #1 — previously the static
-  //      side was an in-memory checkpoint and this pruning was a
-  //      comment, not a plan; PlanShapeSpec now asserts the fetch's
+  //      directories on DISK (PlanShapeSpec asserts the fetch's
   //      FileScan carries PartitionFilters); (3) the native vec_dot
   //      cosine scores each candidate map-side — the bounded batch
   //      probe relation BROADCASTS against the pruned lists — and the
@@ -1296,7 +1287,7 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
                 .collect().map(_.getLong(0)).sorted.toSeq
               if (cells.nonEmpty) {
                 // resolve the generation COMMITTED AT FETCH TIME — a
-                // manifest-dir listing (r18), not a per-batch Spark job
+                // manifest-dir listing, not a per-batch Spark job
                 val pin = graft.ops.SimilarityOps.latestGen(laneManifest)
                 graft.ops.SimilarityOps
                   .manifestPinnedRead(s, laneManifest, versionRoot, pin, cells)
@@ -1346,7 +1337,7 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
     val laneRoot = s"${System.getProperty("java.io.tmpdir")}/graft_svvac_$hex"
     val laneManifest = s"$laneRoot/manifest"
     val outDir = s"$laneRoot/out"
-    // generation-pinned overlay entry (r16 verdict #3): the pristine
+    // generation-pinned overlay entry: the pristine
     // q191 store stays the immutable data root; the lane owns ONLY a
     // run-local manifest + floor (fresh every run — the mid-stream
     // commit and the online vacuum both mutate the manifest, never
@@ -1410,7 +1401,7 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
               val cells = b.select("cell").distinct()
                 .collect().map(_.getLong(0)).sorted.toSeq
               if (cells.nonEmpty) {
-                // pin from the manifest-dir listing (r18) — see q193
+                // pin from the manifest-dir listing — see q193
                 val pin = graft.ops.SimilarityOps.latestGen(laneManifest)
                 svServeRelation(s, laneManifest, storeRoot, pin, cells,
                     b.select("qid", "cell"))
@@ -1478,8 +1469,8 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
   //      discipline, here for the whole curation chain). ----
   /** Stage (idempotently, marker-keyed) q216's three id-ordered
     * arrival-slice files. Factored out of the lane so Bench's warm-up
-    * can pre-build it (r14 verdict #4: the cold fixture build landed
-    * inside the driver's timed rep 1). Returns the slice dir.
+    * can pre-build it (a cold fixture build would land inside the
+    * timed rep 1). Returns the slice dir.
     */
   private[graft] def stageSpiSlices(
       s: SparkSession, d: String): java.nio.file.Path = {
@@ -1534,9 +1525,9 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
     // written to the store — the foreachBatch closure below owns
     // every write, so probing LayoutFs.exists for batch=0..id-1 per
     // micro-batch (O(n²) existence checks over the stream's life,
-    // each a remote metadata call on an object store) is redundant
-    // (r16 ADVICE). The lane clears laneRoot at entry, so the ledger
-    // starts correctly empty; a one-time disk seed covers the
+    // each a remote metadata call on an object store) is redundant.
+    // The lane clears laneRoot at entry, so the ledger starts
+    // correctly empty; a one-time disk seed covers the
     // restart-from-checkpoint shape this lane never stages.
     val writtenBatches = scala.collection.mutable.TreeSet.empty[Long]
     // static artifacts, ready BEFORE the stream starts. The curated-
@@ -1599,16 +1590,16 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
             try {
               // prior-arrival index: batches STRICTLY BEFORE this one —
               // path-addressed per-batch dirs (batch=<id>) make a
-              // re-executed micro-batch idempotent (r13 ADVICE: blind
-              // appends would duplicate rows on retry) and the strict
+              // re-executed micro-batch idempotent (blind appends
+              // would duplicate rows on retry) and the strict
               // filter keeps this batch's own partial output, if any
               // survived a crash, out of its re-run's probe side
               // opened by TARGETED batch=<id> dirs strictly below this
               // id, never a root listing: a root open re-lists every
               // batch dir after each write invalidates the listing
               // cache, an O(total-batches) term per micro-batch that
-              // grows with stream length (r15 verdict #6 — the same
-              // listing term the layout opens killed). batch 0 has no
+              // grows with stream length (the same listing term the
+              // layout opens removed). batch 0 has no
               // store yet: hand-built empty (nothing to derive a schema
               // from on disk).
               val priorIds = writtenBatches.synchronized {
@@ -1681,7 +1672,7 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
     * buckets — and dup-within
     * via a (band,key) equi-join against the accumulated prior-arrival
     * index unioned with the batch's own smaller ids. A NAMED surface
-    * (r13 verdict #2) so PlanShapeSpec can fence the shape — banded
+    * so PlanShapeSpec can fence the shape — banded
     * equi-joins and a broadcast attach, never a cartesian — without
     * running the stream. Returns (verdict rows, the batch's clean
     * signatures to fold into the accumulated index, the dg3k handle
@@ -1697,15 +1688,14 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
         lit(0L), _ + _)
       m.cast("double") / lit(MinhashK.toDouble) >= 0.5
     }
-    // map-side contamination check (r17, the q215 discipline): the
+    // map-side contamination check (the q215 discipline): the
     // bounded benchmark gram set rides the plan as a literal and each
     // doc pays one arrays_overlap — no per-batch gram explode,
     // shuffle-distinct, or join. Same verdict set: empty gram arrays
-    // (sub-8-token docs) overlap nothing, as before. r18: the flag is
-    // computed INTO the persisted batch cache, so the clean set is a
-    // cache filter — the r17 shape re-joined dg3k against its own
-    // contaminated subset, one join stage per micro-batch for a
-    // column the cache can carry.
+    // (sub-8-token docs) overlap nothing. The flag is computed INTO
+    // the persisted batch cache, so the clean set is a cache filter,
+    // not a re-join of dg3k against its own contaminated subset (one
+    // join stage per micro-batch for a column the cache can carry).
     val dg3k = audit.filter(col("score") >= PipelineOps.QualityMin &&
         col("lang_pred") =!= "und" &&
         col("n_red") < PipelineOps.PiiQuarantineAt)
@@ -1720,16 +1710,16 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
       .withColumn("is_contam", lit(true))
     val dcln = dg3k.filter(!col("is_contam")).drop("is_contam")
     val dSigs = Steps.tag(s, "sigs") { PipelineOps.sigsOf(dcln).localCheckpoint(true) }
-    // BOTH dup checks as ONE candidate join (r18, the q215 shape):
+    // BOTH dup checks as ONE candidate join (the q215 shape):
     // the static-index side (org 'b', the q217 pruned disk probe via
     // `idxOf`) unions with the accumulated-prior ∪ within-batch side
     // (org 'd' — hot-bucket capBandedFor rank over prior∪current
     // membership exactly as before; batches arrive id-ordered here,
     // so a > b matches the batch twin's full-delta rule at any bucket
     // size the fixture can stage, and bounds, not loses, work beyond
-    // it). Sigs ride the banded rows on every side now, so the est_j
-    // rescore reads them off the candidate row — the r17 shape
-    // re-attached both sides' sigs with two extra joins per batch.
+    // it). Sigs ride the banded rows on every side, so the est_j
+    // rescore reads them off the candidate row with no re-attach
+    // joins.
     val dBandS = PipelineOps.bandedWithSig(dSigs)
     val bSide = Steps.tag(s, "probe") { idxOf(dBandS) }.withColumn("org", lit("b"))
     val earlierS = PipelineOps.bandedWithSig(prior).unionByName(dBandS)

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class CsvIngestSpec extends AnyFunSuite with SparkTestBase {
 
   private def writeCsv(name: String): String = {
-    val out = java.nio.file.Files.createTempDirectory(name).toString
+    val out = tempDir(name).toString
     Tables.lineitem(spark, sf)
       .select("l_orderkey", "l_linenumber", "l_quantity",
               "l_extendedprice", "l_shipdate", "l_returnflag")
@@ -80,12 +80,12 @@ class CsvIngestSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("readPrefix: boundary file yields its FIRST rows even when split") {
-    // Pin the exact-prefix contract (r6 ADVICE): the boundary file's
+    // Pin the exact-prefix contract: the boundary file's
     // remainder must be its leading rows in within-file order, not an
     // arbitrary `limit` pick. Force the boundary file into many splits
     // so a bare Dataset.limit WOULD be free to take rows from any
     // split, then check the taken rows against the file's true head.
-    val out = java.nio.file.Files.createTempDirectory("graft_csvpfx_split").toString
+    val out = tempDir("graft_csvpfx_split").toString
     // one sorted single-file csv: file order == l_orderkey order
     Tables.lineitem(spark, sf)
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")

@@ -47,7 +47,7 @@ class JsonIngestSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("inference reads whole lines of a gzipped file, and all of an over-budget first line") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_head")
+    val dir = tempDir("graft_jsonl_head")
     val budget = sources.DataFiles.PrefixBytes
     def write(name: String, lines: Iterator[String], gzip: Boolean): String = {
       val f = dir.resolve(name)

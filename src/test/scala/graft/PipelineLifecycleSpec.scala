@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** q220 lifecycle properties (r14 verdict #2's "Done" bar):
+/** q220 lifecycle properties:
   *  1. BUCKET-SET MINIMALITY per epoch: every fold touched exactly
   *     the buckets the admitted signatures' banded rows hash into,
   *     every takedown exactly the deleted signatures' buckets —
@@ -21,6 +21,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     job fails alone, the failure propagates only after the
   *     admitted job has finished, and the persisted handles are
   *     released.
+  *  5. ERROR PATH of the admission itself: when one of its own
+  *     build-time jobs (sigs, probe) fails, no persisted handle is
+  *     left behind.
   */
 class PipelineLifecycleSpec extends AnyFunSuite with SparkTestBase {
   import ops.PipelineOps
@@ -152,5 +155,33 @@ class PipelineLifecycleSpec extends AnyFunSuite with SparkTestBase {
     assert(open.isEmpty, s"admitted jobs $open still running when the epoch failed")
     assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.isEmpty, "persisted admission handles leaked")
+  }
+
+  test("q215 admission: a failing sigs or probe job leaves no persisted handle") {
+    // the session-shared builds persist for every later admission;
+    // build them before taking the snapshot
+    PipelineOps.sharedBaseIndex(spark, sf)
+    PipelineOps.benchGramSet(spark, sf)
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val failText = udf { (t: String) =>
+      if (t != null) throw new IllegalStateException("forced sigs failure")
+      t
+    }
+    val failures = Seq(
+      "sigs" -> (() => PipelineOps.pipelineIncrementFull(spark, sf,
+        deltaOf = d0 => d0.filter(col("doc_id") % 11 === 1)
+          .select(col("doc_id") + 1000000000L as "doc_id", col("source"),
+            failText(col("text")) as "text"))),
+      "probe" -> (() => PipelineOps.pipelineIncrementFull(spark, sf,
+        idxVia = Some(_ => throw new IllegalStateException("forced probe failure")))))
+    failures.foreach { case (step, run) =>
+      val before = persisted
+      val e = intercept[Exception](run())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString("\n")
+      assert(msgs.contains(s"forced $step failure"), s"$step: not the forced failure: $msgs")
+      val leaked = persisted -- before
+      assert(leaked.isEmpty, s"$step failure left persisted RDDs $leaked")
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** One shared SparkSession for the whole test run (per-suite sessions
   * thrash codegen caches and dominate test time).
@@ -18,9 +19,24 @@ object TestSession {
   val Sf = "/root/testdata/sf0.001"
 }
 
-trait SparkTestBase {
+trait SparkTestBase extends BeforeAndAfterAll { this: Suite =>
   lazy val spark: SparkSession = TestSession.spark
   def sf: String = TestSession.Sf
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+  /** A new empty directory under the JVM temp dir, deleted with all its
+    * contents when the suite ends.
+    */
+  def tempDir(prefix: String): java.nio.file.Path = tempDirs.synchronized {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs += dir
+    dir
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.synchronized(tempDirs.foreach(Fixtures.clearDir))
+    finally super.afterAll()
 
   /** Runs `f` with the given session confs set, then restores them. */
   def withConf[A](pairs: (String, String)*)(f: => A): A = {

@@ -86,7 +86,7 @@ class StepsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("a tag inside foreachBatch keeps the stream's job group, so stop() cancels the batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_steps_stream")
+    val dir = tempDir("graft_steps_stream")
     spark.range(0, 8).write.mode("overwrite").parquet(s"$dir/src")
     val started = new CountDownLatch(1)
     val ended = new CountDownLatch(1)
@@ -126,9 +126,6 @@ class StepsSpec extends AnyFunSuite with SparkTestBase {
       assert(ended.await(60, TimeUnit.SECONDS),
         "stop() did not cancel the tagged batch job")
       assert((System.nanoTime() - t0) / 1e9 < 60.0)
-    } finally {
-      spark.sparkContext.removeSparkListener(l)
-      Fixtures.clearDir(dir)
-    }
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 }

@@ -121,7 +121,7 @@ class StreamFunnelSpec extends AnyFunSuite with SparkTestBase {
       // a far-future tail event pushes the watermark past everything
       // above so the final batch can finalize (and emissions settle)
       Row(2L, "purchase", base + 500 * h / 100, 105L))
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel_ooo_case")
+    val dir = tempDir("graft_funnel_ooo_case")
     (Seq(slice0, slice1).zipWithIndex).foreach { case (rows, i) =>
       val stage = dir.resolve(s"_stage_$i")
       spark.createDataFrame(

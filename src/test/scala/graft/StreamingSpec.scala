@@ -138,9 +138,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
   test("checkpoint recovery: restart resumes exactly-once from the sink+checkpoint") {
     import spark.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_ckpt_src").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_ckpt_out").toString
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt_meta").toString
+    val srcDir = tempDir("graft_ckpt_src").toString
+    val outDir = tempDir("graft_ckpt_out").toString
+    val ckptDir = tempDir("graft_ckpt_meta").toString
     def writeBatch(name: String, vals: Seq[Long]): Unit =
       vals.toDF("v").coalesce(1).write.mode("overwrite").parquet(s"$srcDir/$name")
     def startQuery() = spark.readStream
@@ -174,7 +174,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
   test("foreachBatch sink: batchId-keyed writes are idempotent under replay") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val outDir = java.nio.file.Files.createTempDirectory("graft_fb_sink").toString
+    val outDir = tempDir("graft_fb_sink").toString
     val mem = MemoryStream[(java.sql.Timestamp, Long)]
     val seen = scala.collection.mutable.ListBuffer[Long]()
     val q = mem.toDF().toDF("ts", "v").writeStream
@@ -346,7 +346,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
   test("q173 stream vector ingest == batch residual coding of the arrival slice") {
     import org.apache.spark.sql.functions._
     // the stream carries its centroid index as a one-row stream-static
-    // BROADCAST side (r10 — broadcast data, not plan literals) and
+    // BROADCAST side (broadcast data, not plan literals) and
     // encodes with a map-side argmin per arriving vector; the batch
     // twin encodes via the q172 broadcast-join plan — same semantics,
     // different physical path, so agreement checks routing, residuals,
@@ -414,7 +414,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("q173 index metadata rides as broadcast DATA, not plan literals (r10)") {
-    // the r9 scale-killer fence: at the 50k-cell cap the centroid
+    // the scale-killer fence: at the 50k-cell cap the centroid
     // table is ~25 MB — as a plan literal that breaks codegen's
     // constant pool; as a broadcast side it is routine. Guard that the
     // one-row kit relation joins in as a BroadcastHashJoin and that

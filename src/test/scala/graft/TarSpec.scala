@@ -66,7 +66,7 @@ class TarSpec extends AnyFunSuite with SparkTestBase {
     val files = Seq("doc_1.txt" -> "first doc", "doc_2.txt" -> "second body")
     val tgz = GzipIngest.gzipOwn(TarIngest.archive(
       files.map { case (n, t) => (n, t.getBytes("UTF-8")) }), "s.tar")
-    val dir = java.nio.file.Files.createTempDirectory("graft_tar").toFile
+    val dir = tempDir("graft_tar").toFile
     val f = new java.io.File(dir, "s.tgz")
     java.nio.file.Files.write(f.toPath, tgz)
     val list = new ProcessBuilder(tarBin.get, "-tzf", f.getAbsolutePath)

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class UrlIngestSpec extends AnyFunSuite with SparkTestBase {
 
   test("file:// URL fetch equals a direct read of the same file") {
-    val out = java.nio.file.Files.createTempDirectory("graft_urlspec").toString
+    val out = tempDir("graft_urlspec").toString
     Tables.lineitem(spark, sf)
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
       .coalesce(1)

@@ -62,7 +62,7 @@ class VersionSpec extends AnyFunSuite with SparkTestBase {
     // logic on a synthetic two-generation index where cell 0 stays
     // owned by g0 and cell 1 is rewritten by g1
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_genspec_").toString
+    val root = tempDir("graft_genspec_").toString
     def codes(rows: Seq[(Long, Long, Long, Long, Long)]) =
       rows.toDF("vec_id", "cell", "s", "code", "err_e6")
     codes(Seq((10L, 0L, 0L, 1L, 5L), (11L, 1L, 0L, 2L, 6L)))
@@ -82,7 +82,6 @@ class VersionSpec extends AnyFunSuite with SparkTestBase {
     // pin 1: cell 0 still resolves to g0, cell 1 to g1 — one read,
     // two generation directories
     assert(read(1) == Seq((0L, 10L, 1L), (1L, 11L, 9L), (1L, 12L, 3L)))
-    Fixtures.clearDir(java.nio.file.Paths.get(root))
     // and the REAL fixture's fold must at least be non-trivial
     SimilarityOps.indexVersions(spark, sf).collect()
     val g1Cells = spark.read.parquet(s"$dir/manifest")
@@ -146,7 +145,7 @@ class VersionSpec extends AnyFunSuite with SparkTestBase {
     // batch 2 was served AFTER the vacuum (foreachBatch is sequential)
     assert(out.filter(_.getInt(0) == 2).forall(_.getInt(1) == 1),
       "batch 2 must serve pin 1")
-    // clone-free entry (r17): the lane owns only a manifest + floor;
+    // clone-free entry: the lane owns only a manifest + floor;
     // the pristine store is the data root and must stay intact
     val hex = java.lang.Integer.toHexString(sf.hashCode)
     val laneRoot = java.nio.file.Paths.get(
@@ -192,8 +191,7 @@ class VersionSpec extends AnyFunSuite with SparkTestBase {
     // synthetic store: g0 owns cells 0,1,2; g1 supersedes ONLY cell 1
     // (the real fixture's delta touches every cell at test sf, so the
     // partial-survival property needs a controlled store)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_vacuum_cellgran").toString
+    val root = tempDir("graft_vacuum_cellgran").toString
     def writeGen(dir: String, rows: Seq[(Long, Long, Long, Long, Long)]): Unit =
       rows.toDF("vec_id", "s", "code", "err_e6", "cell")
         .write.partitionBy("cell").mode("overwrite").parquet(s"$root/$dir")
@@ -223,8 +221,7 @@ class VersionSpec extends AnyFunSuite with SparkTestBase {
   test("q210: the recorded vacuum floor is MONOTONE — a later vacuum " +
        "with a lower floor cannot re-admit reclaimed pins (r12 advice)") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_vacuum_monotone").toString
+    val root = tempDir("graft_vacuum_monotone").toString
     def writeGen(dir: String, rows: Seq[(Long, Long, Long, Long, Long)]): Unit =
       rows.toDF("vec_id", "s", "code", "err_e6", "cell")
         .write.partitionBy("cell").mode("overwrite").parquet(s"$root/$dir")

@@ -17,14 +17,14 @@ class WriteLayoutSpec extends AnyFunSuite with SparkTestBase {
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
 
   test("repartition(n) compacts the sink to exactly n files") {
-    val out = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val out = tempDir("graft_compact").toString
     Tables.lineitem(spark, sf).repartition(4)
       .write.mode("overwrite").parquet(out)
     assert(partFiles(out).length == 4)
   }
 
   test("maxRecordsPerFile bounds every file") {
-    val out = java.nio.file.Files.createTempDirectory("graft_maxrec").toString
+    val out = tempDir("graft_maxrec").toString
     Tables.lineitem(spark, sf).coalesce(1)
       .write.mode("overwrite")
       .option("maxRecordsPerFile", 1000)
@@ -41,7 +41,7 @@ class WriteLayoutSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("repartitionByRange + sortWithinPartitions yields disjoint per-file key ranges") {
-    val out = java.nio.file.Files.createTempDirectory("graft_cluster").toString
+    val out = tempDir("graft_cluster").toString
     Tables.lineitem(spark, sf)
       .repartitionByRange(4, col("l_shipdate"))
       .sortWithinPartitions("l_shipdate")
