@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 
 /** Per-lane A/B timer and scheduler-overhead profile — counts Spark jobs,
@@ -9,10 +10,13 @@ import org.apache.spark.scheduler._
   * cores in use) from OVERHEAD-bound lanes (wall ≫ task time / width:
   * the cost is driver-side planning + AQE stage materialization +
   * scheduling latency, and the lever is fewer actions/stages, not
-  * faster kernels). After a lane's last rep it also prints one row per
-  * [[Steps]] tag — the composite lanes' logical steps, attributed from
-  * the real run — plus an `(untagged)` row; the rep's own noop write
-  * is the `sink` step.
+  * faster kernels). `compiles=` counts the classes Spark's code
+  * generator compiled during the rep; a warm rep should compile none
+  * (see [[Sessions]]), so a nonzero count there is a cache miss.
+  * After a lane's last rep it also prints one row per [[Steps]] tag —
+  * the composite lanes' logical steps, attributed from the real run —
+  * plus an `(untagged)` row; the rep's own noop write is the `sink`
+  * step.
   *
   * Usage: runMain graft.DevJobs <sfDir> <reps> <lane> [<lane>...]
   * Artifacts are pre-built untimed by [[Bench.prebuild]]; each rep
@@ -132,14 +136,16 @@ object DevJobs {
         System.gc()
         drain() // events of the previous rep land before the reset
         c.reset()
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         val out = q.build(spark, sfDir)
         Steps.tag(spark, "sink") { out.write.format("noop").mode("overwrite").save() }
         val wall = (System.nanoTime() - t0) / 1e9
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
         drain()
         val tt = c.taskTimeMs.get() / 1e3
         println(f"[devjobs] ${q.name} rep$rep wall=$wall%.2f s " +
-          f"jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks} " +
+          f"jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks} compiles=$compiles " +
           f"taskTime=$tt%.1f s (avg ${
             if (c.tasks > 0) tt * 1000 / c.tasks else 0.0}%.1f ms/task) " +
           f"run=${c.runMs.get() / 1e3}%.1f gc=${c.gcMs.get() / 1e3}%.1f " +

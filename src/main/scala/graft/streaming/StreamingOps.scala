@@ -409,18 +409,45 @@ object StreamingOps {
     * [[stagedSchema]].
     */
   private def stagedEventSlice(s: SparkSession, d: String, name: String,
-                               pred: org.apache.spark.sql.Column): String = {
+                               pred: org.apache.spark.sql.Column): String =
+    stagedSource(d, s"stream_$name", "events") { dir =>
+      writeOneFile(Tables.events(s, d).filter(pred), dir.resolve("slice.parquet"))
+    }.toString
+
+  /** The landing directory `graft_<name>_src_<hash of d>` under the
+    * JVM temp dir, filled by `stage` ONCE per version of the input
+    * table `d/<table>.parquet` (marker-guarded, shared across
+    * invocations and bench reps).
+    */
+  private def stagedSource(d: String, name: String, table: String)(
+      stage: java.nio.file.Path => Unit): java.nio.file.Path = {
     val hex = java.lang.Integer.toHexString(d.hashCode)
     val dir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_stream_${name}_$hex")
+      System.getProperty("java.io.tmpdir"), s"graft_${name}_src_$hex")
     val marker = dir.resolve("_STAGED")
-    if (!Fixtures.markerCurrent(marker, s"$d/events.parquet")) {
+    if (!Fixtures.markerCurrent(marker, s"$d/$table.parquet")) {
       Fixtures.clearDir(dir)
-      Tables.events(s, d).filter(pred)
-        .coalesce(1).write.mode("overwrite").parquet(dir.toString)
-      Fixtures.writeMarker(marker, s"$d/events.parquet")
+      java.nio.file.Files.createDirectories(dir)
+      stage(dir)
+      Fixtures.writeMarker(marker, s"$d/$table.parquet")
     }
-    dir.toString
+    dir
+  }
+
+  /** Writes `df` as the single parquet file `dst`, replacing it: a
+    * one-partition write into a temp directory, whose part file is
+    * moved out (a `df` that is one sorted partition keeps its order).
+    * The temp directory is deleted whatever happens.
+    */
+  private def writeOneFile(df: DataFrame, dst: java.nio.file.Path): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_stage")
+    try {
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = tmp.toFile.listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(part.toPath, dst,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    } finally Fixtures.clearDir(tmp)
   }
 
   /** events schema for slices re-written by this session (micros ts). */
@@ -503,29 +530,16 @@ object StreamingOps {
   //      valued doubles add exactly in any order. ----
   def checkpointRecovery(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tmp = System.getProperty("java.io.tmpdir")
     val hex = java.lang.Integer.toHexString(d.hashCode)
-    val srcDir = java.nio.file.Paths.get(tmp, s"graft_ckpt_src_$hex")
-    val ckptMarker = srcDir.resolve("_STAGED")
-    if (!graft.Fixtures.markerCurrent(ckptMarker, s"$d/events.parquet")) {
-      graft.Fixtures.clearDir(srcDir)
-      java.nio.file.Files.createDirectories(srcDir)
-      def stageHalf(even: Boolean, name: String): Unit = {
-        val part = java.nio.file.Files.createTempDirectory("graft_ckpt_half")
-        Tables.events(s, d)
-          .filter(if (even) col("event_id") % 2 === 0 else col("event_id") % 2 === 1)
-          .coalesce(1).write.mode("overwrite").parquet(part.toString)
-        val f = new java.io.File(part.toString).listFiles()
-          .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(f.toPath, srcDir.resolve(name),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-      stageHalf(even = true, "a.parquet")
-      stageHalf(even = false, "b.parquet")
-      graft.Fixtures.writeMarker(ckptMarker, s"$d/events.parquet")
+    val srcDir = stagedSource(d, "ckpt", "events") { dir =>
+      writeOneFile(Tables.events(s, d).filter(col("event_id") % 2 === 0), dir.resolve("a.parquet"))
+      writeOneFile(Tables.events(s, d).filter(col("event_id") % 2 === 1), dir.resolve("b.parquet"))
     }
-    // fresh checkpoint per invocation: recovery is the thing under test
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    // fresh checkpoint per invocation: recovery is the thing under test.
+    // The result lives in the memory table, so the checkpoint goes once
+    // both queries have stopped.
+    val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    val ckpt = ckptDir.toString
     val qname = s"graft_ckpt_$hex"
     def agged = s.readStream.schema(stagedSchema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
@@ -535,7 +549,7 @@ object StreamingOps {
     // 2 partitions: 3 aggregation keys, and BOTH queries commit one
     // state-store delta per partition per batch — at 8 partitions the
     // store overhead is 4x the benefit (see withStreamShufflePartitions)
-    withStreamShufflePartitions(s, 2) {
+    try withStreamShufflePartitions(s, 2) {
       val q1 = agged.writeStream.outputMode("complete").format("memory")
         .queryName(qname).option("checkpointLocation", ckpt)
         // first trigger fires immediately and takes ONE file; the next
@@ -553,7 +567,7 @@ object StreamingOps {
         .start()
       try q2.processAllAvailable()
       finally q2.stop()
-    }
+    } finally Fixtures.clearDir(ckptDir)
     s.table(qname).orderBy("event_type")
   }
 
@@ -588,21 +602,9 @@ object StreamingOps {
     val qname = s"graft_ssd_$hex"
     // stage the arriving batch (the doc_id % 5 = 4 slice) as the
     // file-stream landing dir; written once, marker-guarded
-    val srcDir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_ssd_src_$hex")
-    val ssdMarker = srcDir.resolve("_STAGED")
-    if (!graft.Fixtures.markerCurrent(ssdMarker, s"$d/documents.parquet")) {
-      graft.Fixtures.clearDir(srcDir)
-      java.nio.file.Files.createDirectories(srcDir)
-      val part = java.nio.file.Files.createTempDirectory("graft_ssd_stage")
-      Tables.documents(s, d).filter(col("doc_id") % 5 === 4)
-        .select("doc_id", "text")
-        .coalesce(1).write.mode("overwrite").parquet(part.toString)
-      val f = new java.io.File(part.toString).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(f.toPath, srcDir.resolve("delta.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      graft.Fixtures.writeMarker(ssdMarker, s"$d/documents.parquet")
+    val srcDir = stagedSource(d, "ssd", "documents") { dir =>
+      writeOneFile(Tables.documents(s, d).filter(col("doc_id") % 5 === 4)
+        .select("doc_id", "text"), dir.resolve("delta.parquet"))
     }
     def sigify(df: DataFrame, idAs: String, sigAs: String, shAs: String): DataFrame =
       df.select(col("doc_id").as(idAs), tokens(col("text")).as("toks"))
@@ -675,21 +677,9 @@ object StreamingOps {
     val hex = java.lang.Integer.toHexString(d.hashCode)
     val qname = s"graft_sig_$hex"
     // stage the arriving batch (doc_id, source, text) as the landing dir
-    val srcDir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_sig_src_$hex")
-    val sigMarker = srcDir.resolve("_STAGED")
-    if (!Fixtures.markerCurrent(sigMarker, s"$d/documents.parquet")) {
-      Fixtures.clearDir(srcDir)
-      java.nio.file.Files.createDirectories(srcDir)
-      val part = java.nio.file.Files.createTempDirectory("graft_sig_stage")
-      Tables.documents(s, d).filter(col("doc_id") % 5 === 4)
-        .select("doc_id", "source", "text")
-        .coalesce(1).write.mode("overwrite").parquet(part.toString)
-      val f = new java.io.File(part.toString).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(f.toPath, srcDir.resolve("delta.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      Fixtures.writeMarker(sigMarker, s"$d/documents.parquet")
+    val srcDir = stagedSource(d, "sig", "documents") { dir =>
+      writeOneFile(Tables.documents(s, d).filter(col("doc_id") % 5 === 4)
+        .select("doc_id", "source", "text"), dir.resolve("delta.parquet"))
     }
     def sigify(df: DataFrame, idAs: String, sigAs: String): DataFrame =
       df.select(col("doc_id").as(idAs), tokens(col("text")).as("toks"))
@@ -759,21 +749,9 @@ object StreamingOps {
   def streamDsirGate(s: SparkSession, d: String): DataFrame = {
     val hex = java.lang.Integer.toHexString(d.hashCode)
     val qname = s"graft_sdg_$hex"
-    val srcDir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_sdg_src_$hex")
-    val sdgMarker = srcDir.resolve("_STAGED")
-    if (!Fixtures.markerCurrent(sdgMarker, s"$d/documents.parquet")) {
-      Fixtures.clearDir(srcDir)
-      java.nio.file.Files.createDirectories(srcDir)
-      val part = java.nio.file.Files.createTempDirectory("graft_sdg_stage")
-      Tables.documents(s, d).filter(col("doc_id") % 5 === 4)
-        .select("doc_id", "text")
-        .coalesce(1).write.mode("overwrite").parquet(part.toString)
-      val f = new java.io.File(part.toString).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(f.toPath, srcDir.resolve("delta.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      Fixtures.writeMarker(sdgMarker, s"$d/documents.parquet")
+    val srcDir = stagedSource(d, "sdg", "documents") { dir =>
+      writeOneFile(Tables.documents(s, d).filter(col("doc_id") % 5 === 4)
+        .select("doc_id", "text"), dir.resolve("delta.parquet"))
     }
     // static prep: corpus-slice histograms -> ratio array + cutoff.
     // ONE conditional aggregate (count + count-when-en per bucket): the
@@ -879,21 +857,9 @@ object StreamingOps {
   def streamTokenMeter(s: SparkSession, d: String): DataFrame = {
     val hex = java.lang.Integer.toHexString(d.hashCode)
     val qname = s"graft_stm_$hex"
-    val srcDir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_stm_src_$hex")
-    val stmMarker = srcDir.resolve("_STAGED")
-    if (!Fixtures.markerCurrent(stmMarker, s"$d/documents.parquet")) {
-      Fixtures.clearDir(srcDir)
-      java.nio.file.Files.createDirectories(srcDir)
-      val part = java.nio.file.Files.createTempDirectory("graft_stm_stage")
-      Tables.documents(s, d).filter(col("doc_id") % 5 === 4)
-        .select("doc_id", "text")
-        .coalesce(1).write.mode("overwrite").parquet(part.toString)
-      val f = new java.io.File(part.toString).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(f.toPath, srcDir.resolve("delta.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      Fixtures.writeMarker(stmMarker, s"$d/documents.parquet")
+    val srcDir = stagedSource(d, "stm", "documents") { dir =>
+      writeOneFile(Tables.documents(s, d).filter(col("doc_id") % 5 === 4)
+        .select("doc_id", "text"), dir.resolve("delta.parquet"))
     }
     // static prep: train the tokenizer on the corpus slice
     val (wsyms, handle) =
@@ -964,26 +930,11 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
   /** Stage the q173/q188 arrival slice (vec_id % 7 = 3) as a one-file
     * parquet stream source; fixture-markered, returns the source dir.
     */
-  private def stageIngestSource(s: SparkSession, d: String): java.nio.file.Path = {
-    val hex = java.lang.Integer.toHexString(d.hashCode)
-    val srcDir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_svi_src_$hex")
-    val marker = srcDir.resolve("_STAGED")
-    if (!Fixtures.markerCurrent(marker, s"$d/embeddings.parquet")) {
-      Fixtures.clearDir(srcDir)
-      java.nio.file.Files.createDirectories(srcDir)
-      val part = java.nio.file.Files.createTempDirectory("graft_svi_stage")
-      Tables.embeddings(s, d).filter(col("vec_id") % 7 === 3)
-        .select("vec_id", "embedding")
-        .coalesce(1).write.mode("overwrite").parquet(part.toString)
-      val f = new java.io.File(part.toString).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(f.toPath, srcDir.resolve("delta.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      Fixtures.writeMarker(marker, s"$d/embeddings.parquet")
+  private def stageIngestSource(s: SparkSession, d: String): java.nio.file.Path =
+    stagedSource(d, "svi", "embeddings") { dir =>
+      writeOneFile(Tables.embeddings(s, d).filter(col("vec_id") % 7 === 3)
+        .select("vec_id", "embedding"), dir.resolve("delta.parquet"))
     }
-    srcDir
-  }
 
   /** The q173 ingest coder as a STREAMING relation — arriving vectors
     * routed (broadcast one-row centroid kit, stateless argmin) and
@@ -1124,21 +1075,9 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
     import graft.expressions.VecDot.vecDot
     val hex = java.lang.Integer.toHexString(d.hashCode)
     val qname = s"graft_saq_$hex"
-    val srcDir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_saq_src_$hex")
-    val marker = srcDir.resolve("_STAGED")
-    if (!Fixtures.markerCurrent(marker, s"$d/embeddings.parquet")) {
-      Fixtures.clearDir(srcDir)
-      java.nio.file.Files.createDirectories(srcDir)
-      val part = java.nio.file.Files.createTempDirectory("graft_saq_stage")
-      Tables.embeddings(s, d).filter(col("vec_id") % 7 === 5)
-        .select("vec_id", "embedding")
-        .coalesce(1).write.mode("overwrite").parquet(part.toString)
-      val f = new java.io.File(part.toString).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(f.toPath, srcDir.resolve("delta.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      Fixtures.writeMarker(marker, s"$d/embeddings.parquet")
+    val srcDir = stagedSource(d, "saq", "embeddings") { dir =>
+      writeOneFile(Tables.embeddings(s, d).filter(col("vec_id") % 7 === 5)
+        .select("vec_id", "embedding"), dir.resolve("delta.parquet"))
     }
     val (kitDf, _) = graft.ops.SimilarityOps.ingestCoderKitDf(s, d)
     val layout = graft.ops.SimilarityOps.vectorLayoutDir(s, d)
@@ -1236,28 +1175,15 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
       .write.mode("overwrite").parquet(s"$laneManifest/gen=0")
     // the arrival stream: two files with ordered mtimes → two
     // deterministic micro-batches (evens then odds)
-    val srcDir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_svsrv_src_$hex")
-    val marker = srcDir.resolve("_STAGED")
-    if (!Fixtures.markerCurrent(marker, s"$d/embeddings.parquet")) {
-      Fixtures.clearDir(srcDir)
-      java.nio.file.Files.createDirectories(srcDir)
+    val srcDir = stagedSource(d, "svsrv", "embeddings") { dir =>
       Seq(("evens", col("vec_id") % 2 === 0, 20000L),
           ("odds", col("vec_id") % 2 =!= 0, 10000L)).foreach {
         case (name, pred, ageMs) =>
-          val part = java.nio.file.Files.createTempDirectory("graft_svsrv_stage")
-          Tables.embeddings(s, d).filter(col("vec_id") % 7 === 5 && pred)
-            .select("vec_id", "embedding")
-            .coalesce(1).write.mode("overwrite").parquet(part.toString)
-          val f = new java.io.File(part.toString).listFiles()
-            .filter(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).head
-          val dst = srcDir.resolve(s"$name.parquet")
-          java.nio.file.Files.move(f.toPath, dst,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          val dst = dir.resolve(s"$name.parquet")
+          writeOneFile(Tables.embeddings(s, d).filter(col("vec_id") % 7 === 5 && pred)
+            .select("vec_id", "embedding"), dst)
           dst.toFile.setLastModified(System.currentTimeMillis() - ageMs)
       }
-      Fixtures.writeMarker(marker, s"$d/embeddings.parquet")
     }
     val (kitDf, _) = graft.ops.SimilarityOps.ingestCoderKitDf(s, d)
     val nProbes = graft.ops.SimilarityOps.IvfProbes
@@ -1351,28 +1277,15 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
       s, s"$storeRoot/manifest", laneManifest, Seq(0))
     // the arrival stream: three files with ordered mtimes -> three
     // deterministic micro-batches (qid % 3 slices)
-    val srcDir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_svvac_src_$hex")
-    val marker = srcDir.resolve("_STAGED")
-    if (!Fixtures.markerCurrent(marker, s"$d/embeddings.parquet")) {
-      Fixtures.clearDir(srcDir)
-      java.nio.file.Files.createDirectories(srcDir)
+    val srcDir = stagedSource(d, "svvac", "embeddings") { dir =>
       (0 until 3).foreach { i =>
-        val part = java.nio.file.Files.createTempDirectory("graft_svvac_stage")
-        Tables.embeddings(s, d)
+        val dst = dir.resolve(s"f$i.parquet")
+        writeOneFile(Tables.embeddings(s, d)
           .filter(col("vec_id") % 7 === 5 && col("vec_id") % 3 === i)
-          .select("vec_id", "embedding")
-          .coalesce(1).write.mode("overwrite").parquet(part.toString)
-        val f = new java.io.File(part.toString).listFiles()
-          .filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).head
-        val dst = srcDir.resolve(s"f$i.parquet")
-        java.nio.file.Files.move(f.toPath, dst,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          .select("vec_id", "embedding"), dst)
         dst.toFile.setLastModified(
           System.currentTimeMillis() - (30000L - i * 10000L))
       }
-      Fixtures.writeMarker(marker, s"$d/embeddings.parquet")
     }
     val (kitDf, _) = graft.ops.SimilarityOps.ingestCoderKitDf(s, d)
     val nProbes = graft.ops.SimilarityOps.IvfProbes
@@ -1490,20 +1403,13 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
           org.apache.spark.sql.expressions.Window.orderBy(col("doc_id"))))
       val n = ranked.count()
       (0 until 3).foreach { i =>
-        val stage = srcDir.resolve(s"_stage_$i")
-        ranked.filter(col("rk") > lit(i * n / 3) && col("rk") <= lit((i + 1) * n / 3))
-          .select("doc_id", "source", "text")
-          .coalesce(1).sortWithinPartitions("doc_id")
-          .write.mode("overwrite").parquet(stage.toString)
-        val part = new java.io.File(stage.toString).listFiles()
-          .filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).head
         val dst = srcDir.resolve(s"f$i.parquet")
-        java.nio.file.Files.move(part.toPath, dst,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        writeOneFile(
+          ranked.filter(col("rk") > lit(i * n / 3) && col("rk") <= lit((i + 1) * n / 3))
+            .select("doc_id", "source", "text")
+            .coalesce(1).sortWithinPartitions("doc_id"), dst)
         dst.toFile.setLastModified(
           System.currentTimeMillis() - (30000L - i * 10000L))
-        Fixtures.clearDir(stage)
       }
       Fixtures.writeMarker(marker, fixSrcs: _*)
     }
@@ -1881,11 +1787,7 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
 
   def streamFunnel(s: SparkSession, d: String): DataFrame = {
     val hex = java.lang.Integer.toHexString(d.hashCode)
-    val srcDir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_funnel_src_$hex")
-    val marker = srcDir.resolve("_STAGED")
-    if (!Fixtures.markerCurrent(marker, s"$d/events.parquet")) {
-      Fixtures.clearDir(srcDir)
+    val srcDir = stagedSource(d, "funnel", "events") { dir =>
       // three event-time-ordered arrival slices by global ts rank;
       // sequential moves give mtime order = name order = time order
       val ranked = Tables.events(s, d)
@@ -1894,8 +1796,7 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
         .withColumn("rk", row_number().over(
           org.apache.spark.sql.expressions.Window
             .orderBy(col("tus"), col("event_id"))))
-      stageFunnelSlices(s, srcDir, ranked)
-      Fixtures.writeMarker(marker, s"$d/events.parquet")
+      stageFunnelSlices(s, dir, ranked)
     }
     funnelRollup(orderedFoldFinal(s, srcDir.toString, s"graft_funnel_$hex"))
   }
@@ -1910,16 +1811,11 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
                                 ranked: DataFrame): Unit = {
     val n = ranked.count()
     (0 until 3).foreach { i =>
-      val stage = srcDir.resolve(s"_stage_$i")
-      ranked.filter(col("rk") > lit(i * n / 3) && col("rk") <= lit((i + 1) * n / 3))
-        .select("user_id", "event_type", "tus", "event_id")
-        .coalesce(1).sortWithinPartitions("tus", "event_id")
-        .write.mode("overwrite").parquet(stage.toString)
-      val part = new java.io.File(stage.toString).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, srcDir.resolve(s"f$i.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      Fixtures.clearDir(stage)
+      writeOneFile(
+        ranked.filter(col("rk") > lit(i * n / 3) && col("rk") <= lit((i + 1) * n / 3))
+          .select("user_id", "event_type", "tus", "event_id")
+          .coalesce(1).sortWithinPartitions("tus", "event_id"),
+        srcDir.resolve(s"f$i.parquet"))
     }
   }
 
@@ -2031,13 +1927,8 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
   /** Stage (idempotently) and return q209's jittered-arrival source
     * dir — shared by the registered lane and the plan fence.
     */
-  private[graft] def wmFunnelSrcDir(s: SparkSession, d: String): String = {
-    val hex = java.lang.Integer.toHexString(d.hashCode)
-    val srcDir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_funnelw_src_$hex")
-    val marker = srcDir.resolve("_STAGED")
-    if (!Fixtures.markerCurrent(marker, s"$d/events.parquet")) {
-      Fixtures.clearDir(srcDir)
+  private[graft] def wmFunnelSrcDir(s: SparkSession, d: String): String =
+    stagedSource(d, "funnelw", "events") { dir =>
       // arrival order = event time + bounded deterministic jitter:
       // slices cut by ARRIVAL rank are genuinely out of event-time
       // order across batches, with disorder provably <= 2*DisorderUs
@@ -2050,11 +1941,8 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
         .withColumn("rk", row_number().over(
           org.apache.spark.sql.expressions.Window
             .orderBy(col("arrival"), col("event_id"))))
-      stageFunnelSlices(s, srcDir, ranked)
-      Fixtures.writeMarker(marker, s"$d/events.parquet")
-    }
-    srcDir.toString
-  }
+      stageFunnelSlices(s, dir, ranked)
+    }.toString
 
   def streamFunnelWm(s: SparkSession, d: String): DataFrame = {
     val hex = java.lang.Integer.toHexString(d.hashCode)

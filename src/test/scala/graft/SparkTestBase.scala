@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** One shared SparkSession for the whole test run (per-suite sessions
-  * thrash codegen caches and dominate test time).
+  * thrash codegen caches and dominate test time). It takes the bench
+  * session's two static codegen settings, so the forked test JVM's
+  * `CodeGenerator` is created with them (`CodegenCacheSpec`).
   */
 object TestSession {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -14,6 +16,8 @@ object TestSession {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.extensions", "graft.GraftExtensions")
+    .config("spark.sql.codegen.cache.maxEntries", Sessions.CodegenCacheEntries.toLong)
+    .config("spark.sql.artifact.isolation.enabled", Sessions.ArtifactIsolation)
     .getOrCreate()
 
   val Sf = "/root/testdata/sf0.001"

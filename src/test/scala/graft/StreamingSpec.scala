@@ -171,6 +171,18 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       s"restart lost or duplicated rows: ${rows.toSeq}")
   }
 
+  test("q129 leaves no checkpoint or staging directory under java.io.tmpdir") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def entries(): Set[String] = tmp.listFiles().map(_.getName)
+      .filter(n => n.startsWith("graft_ckpt") || n.startsWith("graft_stage")).toSet
+    // the marker-guarded landing directory of the staged events is the
+    // one entry q129 keeps
+    val staged = s"graft_ckpt_src_${Integer.toHexString(sf.hashCode)}"
+    val before = entries()
+    (1 to 2).foreach(_ => StreamingOps.checkpointRecovery(spark, sf).collect())
+    assert(entries() -- before -- Set(staged) == Set.empty)
+  }
+
   test("foreachBatch sink: batchId-keyed writes are idempotent under replay") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
