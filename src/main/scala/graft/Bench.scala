@@ -136,7 +136,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val spark = Sessions.benchSession("graft-bench")
-    spark.sparkContext.setLogLevel("WARN")
 
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     val memMb = scala.collection.mutable.LinkedHashMap[String, Double]()

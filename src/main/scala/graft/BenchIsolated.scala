@@ -138,7 +138,6 @@ object BenchIsolated {
         DefaultLanes ++ auto.map(_._1)
       }
     val spark = Sessions.benchSession("graft-bench-isolated")
-    spark.sparkContext.setLogLevel("WARN")
     try Bench.prebuild(spark, sfDir)
     catch { case e: Throwable => System.err.println(s"[bench-isolated] prebuild: $e") }
     val byName = Registry.all.map(q => q.name -> q).toMap

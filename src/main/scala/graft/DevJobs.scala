@@ -124,7 +124,6 @@ object DevJobs {
     val reps = args(1).toInt
     val names = args.drop(2).toSet
     val spark = Sessions.benchSession("graft-devjobs")
-    spark.sparkContext.setLogLevel("WARN")
     try Bench.prebuild(spark, sfDir)
     catch { case e: Throwable => System.err.println(s"[devjobs] prebuild: $e") }
     val c = new Counter

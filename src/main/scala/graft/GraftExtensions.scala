@@ -9,8 +9,11 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * expressions for SQL use (`SELECT vec_dot(a, b)`), so the engine's
   * custom kernels are first-class functions, not just Scala helpers.
   *
-  * Activate with .config("spark.sql.extensions", "graft.GraftExtensions")
-  * (as [[Sessions.benchSession]] does) or .withExtensions(new GraftExtensions).
+  * Every session of the engine loads it: [[Sessions.benchSession]], the
+  * one factory that Bench, Verify (the oracle's dump), ScaleSmoke, Plans
+  * and the tests share, sets `spark.sql.extensions` to this class. So the
+  * DuckDB oracle checks the plans these rules produce, the ones Bench
+  * times; `ExtensionEquivalenceSpec` shows they change no answer.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SimpleMode
 
 /** Dumps the physical plans of representative queries to PLANS.md —
@@ -10,14 +9,7 @@ import org.apache.spark.sql.execution.SimpleMode
   */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-plans")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.benchSession("graft-plans")
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.01"
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Reference-scale benchmark: reproduces the published workload of
@@ -34,23 +34,8 @@ object ScaleSmoke {
         f"[scale-smoke] WARNING: loadavg_start $loadStart%.2f > " +
           f"${Bench.ContendedLoadAvg}%.1f — box is contended; run is " +
           "stamped \"contended\": true and must not replace idle artifacts")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-smoke")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // sort-stage stability (VERDICT r4 #5): the global sort range-
-      // partitions on a 60-distinct-value key (Age); the default 100
-      // samples/partition draw boundaries loose enough that partition
-      // sizes — and the stage time — swing between runs. 4x the sample
-      // is microseconds of work for boundaries that keep the 32 sort
-      // partitions near-even every run.
-      .config("spark.sql.execution.rangeExchange.sampleSizePerPartition", "400")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.benchSession("graft-scale-smoke")
+    val cpus = spark.sparkContext.defaultParallelism
 
     def force(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -166,7 +151,7 @@ object ScaleSmoke {
     val loadEnd = Bench.loadAvg1m()
     // BOTH readings are judged (r14 verdict #6: the start-only stamp
     // missed a competitor arriving mid-run, and the end reading alone
-    // is inflated by the run itself). The run's own 32 worker threads
+    // is inflated by the run itself). The run's own `cpus` worker threads
     // can push the 1-min loadavg up to ~cpus; anything beyond
     // cpus + threshold at the end cannot be us, so it flags.
     val contendedEnd = loadEnd > cpus.toDouble + Bench.ContendedLoadAvg

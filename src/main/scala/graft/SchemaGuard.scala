@@ -86,12 +86,11 @@ object SchemaGuard {
   }
 
   /** Check every table under `sfDir`; throws with the full diff on any
-    * mismatch. Footer reads only — no data scan. The nanos flag is set
-    * first so a TIMESTAMP(NANOS) generation probes as LongType instead
-    * of failing the read outright.
+    * mismatch. Footer reads only — no data scan. A TIMESTAMP(NANOS)
+    * generation probes as LongType instead of failing the read outright
+    * because every [[Sessions]] session sets `nanosAsLong`.
     */
   def check(s: SparkSession, sfDir: String): Unit = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val problems = expected.keys.toSeq.sorted.flatMap { t =>
       val path = s"$sfDir/$t.parquet"
       if (!new java.io.File(path).exists()) Seq(s"$t: file missing at $path")

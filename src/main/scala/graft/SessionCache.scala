@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   *    fingerprint) and shared by every lane that derives the identical
   *    artifact ([[cachedAs]]);
   *  - the resolved relations of the read-only input tables
-  *    ([[Tables.table]]), one per (session, path, schema conf), replaced
+  *    ([[Tables.table]]), one per (session, path), replaced
   *    when the files' fingerprint changes ([[cachedAt]]).
   * Entries are keyed by the SparkSession OBJECT (identity: identity-hash
   * keys can be reused after GC and collide across sessions) and evicted

@@ -13,9 +13,9 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   * plan exists; [[table]] does that on the first call only and keeps
   * the analyzed relation (schema plus file index) in [[SessionCache]].
   * The memo holds for read-only inputs:
-  *  - the key is the session, the path and the value of
-  *    `spark.sql.legacy.parquet.nanosAsLong` (which changes the
-  *    inferred `events.ts` type);
+  *  - the key is the session and the path (the one setting that
+  *    changes an inferred type, `spark.sql.legacy.parquet.nanosAsLong`
+  *    for `events.ts`, is fixed for every session by [[Sessions]]);
   *  - the entry is valid for a fingerprint of the path's files (name,
   *    length, mtime, listed through the Hadoop FS), so a rewritten
   *    table resolves again, as `REFRESH TABLE` would make a catalog
@@ -29,12 +29,9 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   * across their stage-and-swap.
   */
 object Tables {
-  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
-
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val key = s"table|$path|$NanosAsLong=${spark.conf.get(NanosAsLong, "false")}"
-    val rel = SessionCache.cachedAt(spark, key,
+    val rel = SessionCache.cachedAt(spark, s"table|$path",
         sources.DataFiles.fingerprint(spark, path)) {
       spark.read.parquet(path).queryExecution.analyzed match {
         case r: LogicalRelation => r
@@ -54,9 +51,10 @@ object Tables {
   /** events.ts has shipped as parquet TIMESTAMP(NANOS) and as
     * TIMESTAMP(MICROS, isAdjustedToUTC=false) across testdata
     * generations. Spark's vectorized reader rejects NANOS
-    * ([PARQUET_TYPE_ILLEGAL]) unless legacy.parquet.nanosAsLong surfaces
-    * it as a raw Long (a no-op for micros columns), and the
-    * un-adjusted micros variant arrives as TIMESTAMP_NTZ. Probe the
+    * ([PARQUET_TYPE_ILLEGAL]) unless legacy.parquet.nanosAsLong (set
+    * by [[Sessions]]) surfaces it as a raw Long (a no-op for micros
+    * columns), and the un-adjusted micros variant arrives as
+    * TIMESTAMP_NTZ. Probe the
     * footer-derived schema and normalize every generation to plain
     * TimestampType so downstream event-time code (unix_micros, window,
     * watermarks, java.sql.Timestamp encoders) sees one type:
@@ -64,7 +62,7 @@ object Tables {
     *    (a double round-trip would lose ns precision — exactly DuckDB's
     *    ns→us truncation, so oracle timestamps agree);
     *  - TIMESTAMP_NTZ → cast; the session timezone is pinned to UTC
-    *    everywhere (Sessions/Verify/Bench/tests), so wall-clock values
+    *    for every session ([[Sessions]]), so wall-clock values
     *    are preserved bit-for-bit and match DuckDB's naive timestamps;
     *  - TIMESTAMP passes through untouched.
     */
@@ -78,10 +76,8 @@ object Tables {
     }
   }
 
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set(NanosAsLong, "true")
+  def events(s: SparkSession, d: String): DataFrame =
     normalizeEventsTs(table(s, d, "events"))
-  }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }

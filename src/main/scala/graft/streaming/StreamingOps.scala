@@ -37,7 +37,6 @@ object StreamingOps {
   })
 
   def streamingEvents(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // The file-stream source wants a *directory* it can monitor; the
     // testdata table is a single file, so stage it into a tmp dir (in
     // production this is the landing directory new files arrive in).
@@ -529,7 +528,6 @@ object StreamingOps {
   //      split is written once. Sum uses floor(value*100) — integer-
   //      valued doubles add exactly in any order. ----
   def checkpointRecovery(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val hex = java.lang.Integer.toHexString(d.hashCode)
     val srcDir = stagedSource(d, "ckpt", "events") { dir =>
       writeOneFile(Tables.events(s, d).filter(col("event_id") % 2 === 0), dir.resolve("a.parquet"))

@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Environment knobs live in the session factory and the harness mains
   * only. An engine source that reads the environment makes a lane's
   * plan or result depend on the shell that launched it, which neither
-  * the oracle nor Bench records.
+  * the oracle nor Bench records. The session itself, and the core count
+  * it reads from the environment, come from [[Sessions]] alone, so the
+  * oracle, the tests and Bench run one session policy.
   */
 class EngineEnvSpec extends AnyFunSuite {
 
@@ -28,6 +30,19 @@ class EngineEnvSpec extends AnyFunSuite {
       f <- dirs.flatMap(scalaFiles)
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
       if line.contains("sys.env") || line.contains("System.getenv")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("only Sessions builds a SparkSession or reads the core-count variable") {
+    val roots = Seq("src/main/scala", "src/test/scala").map(Paths.get(_))
+    roots.foreach(d => assert(Files.isDirectory(d), s"source root $d not found"))
+    val factory = Paths.get("src/main/scala/graft/Sessions.scala")
+    val offenders = for {
+      f <- roots.flatMap(scalaFiles)
+      if f != factory
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if Seq("SparkSession" + ".builder", "SPARK_GRAFT" + "_CPUS").exists(line.contains)
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }

@@ -4,21 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** One shared SparkSession for the whole test run (per-suite sessions
-  * thrash codegen caches and dominate test time). It takes the bench
-  * session's two static codegen settings, so the forked test JVM's
-  * `CodeGenerator` is created with them (`CodegenCacheSpec`).
+  * thrash codegen caches and dominate test time). It is the bench
+  * session of [[Sessions]] pinned to 4 cores, so the tests run the plans
+  * Bench times: the extension rules, the split rule, the AQE floor and
+  * the static codegen settings (`CodegenCacheSpec`).
   */
 object TestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.codegen.cache.maxEntries", Sessions.CodegenCacheEntries.toLong)
-    .config("spark.sql.artifact.isolation.enabled", Sessions.ArtifactIsolation)
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.benchSession("graft-tests", cpus = 4)
 
   val Sf = "/root/testdata/sf0.001"
 }

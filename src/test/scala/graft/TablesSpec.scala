@@ -82,12 +82,13 @@ class TablesSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("Tables.events has one ts type whatever was resolved before it") {
-    // fresh sessions: nothing memoized, nanosAsLong unset
+    // fresh sessions: nothing memoized; each inherits the factory's
+    // nanosAsLong, so no read order can change the inferred ts type
     val first = spark.newSession()
     val direct = Tables.events(first, sf).schema("ts").dataType
     val second = spark.newSession()
     Tables.lineitem(second, sf)
-    Tables.table(second, sf, "events") // the raw relation, nanosAsLong unset
+    Tables.table(second, sf, "events") // the raw relation, before normalizeEventsTs
     val after = Tables.events(second, sf).schema("ts").dataType
     assert(direct == TimestampType)
     assert(after == direct)
