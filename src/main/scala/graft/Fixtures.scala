@@ -3,15 +3,13 @@ package graft
 import java.nio.file.{Files, Path}
 
 /** Content-aware guards for derived /tmp fixtures (staged stream
-  * slices, partitioned rewrites, CSV round-trip inputs).
-  *
-  * The r7 testdata regeneration proved the hazard of bare `_SUCCESS` /
-  * `_STAGED` markers keyed only on the source *path*: a fixture staged
-  * from the previous generation survives the marker check and silently
-  * feeds stale rows to the oracle. Every marker now records a
-  * fingerprint of the source file(s) — size + mtime — and a fixture is
-  * only reused when the fingerprint still matches; otherwise the
-  * fixture directory is cleared and rebuilt.
+  * slices, partitioned rewrites, CSV round-trip inputs, persisted
+  * layouts). A marker keyed only on the source *path* would let a
+  * fixture staged from an earlier testdata generation survive and feed
+  * stale rows to the oracle, so every marker records a fingerprint of
+  * the source file(s) — size + mtime — and a fixture is only reused
+  * while the fingerprint matches; otherwise its directory is cleared
+  * and rebuilt.
   */
 object Fixtures {
 
@@ -26,16 +24,31 @@ object Fixtures {
     }.mkString("\n")
 
   /** Marker exists and matches the current fingerprint of `srcs`. */
-  def markerCurrent(marker: Path, srcs: String*): Boolean =
+  private def markerCurrent(marker: Path, srcs: String*): Boolean =
     Files.exists(marker) &&
       new String(Files.readAllBytes(marker),
         java.nio.charset.StandardCharsets.UTF_8) == fingerprint(srcs)
 
   /** Write (or overwrite) the marker with the current fingerprint. */
-  def writeMarker(marker: Path, srcs: String*): Unit = {
+  private def writeMarker(marker: Path, srcs: String*): Unit = {
     Files.createDirectories(marker.getParent)
     Files.write(marker, fingerprint(srcs)
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
+
+  /** Build the fixture in `dir` unless its `_STAGED` marker matches the
+    * current fingerprint of `srcs`: clear `dir`, run `build`, then write
+    * the marker, so a build that dies midway is redone in full. Returns
+    * `dir`.
+    */
+  def staged(dir: Path, srcs: String*)(build: => Unit): Path = {
+    val marker = dir.resolve("_STAGED")
+    if (!markerCurrent(marker, srcs: _*)) {
+      clearDir(dir)
+      build
+      writeMarker(marker, srcs: _*)
+    }
+    dir
   }
 
   /** Recursively delete the contents of `dir` (and the dir itself) so a

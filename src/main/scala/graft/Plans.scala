@@ -381,7 +381,7 @@ object Plans {
         .queryExecution.explainString(SimpleMode)
       sb.append("\n## q180_stream_ann_query (per-micro-batch serving fetch)\n\n" +
         "the streaming serving path's static side IS the on-disk " +
-        "cell-partitioned layout (r10 verdict #1): each micro-batch " +
+        "cell-partitioned layout: each micro-batch " +
         "collects its arrivals' probe cells (metadata-scale) and " +
         "issues exactly this read — the FileScan's PartitionFilters " +
         "carries the probed-cell predicate, so a probes-of-k fetch " +
@@ -392,7 +392,7 @@ object Plans {
       ops.SimilarityOps.indexCompaction(spark, d).collect()
       val delta = ops.SimilarityOps.compactionDeltaFor(spark, d)
       val (merged, touched) = ops.SimilarityOps.compactionMerge(
-        spark, ops.SimilarityOps.compactionDir(d), delta)
+        spark, io.Layout.snapshot(ops.SimilarityOps.compactionDir(d)), delta)
       val plan182 = merged.queryExecution.explainString(SimpleMode)
       sb.append("\n## q182_index_compaction (merge relation, " +
         s"${touched.size} touched cells)\n\n" +
@@ -408,7 +408,7 @@ object Plans {
       ops.SimilarityOps.indexDelete(spark, d).collect()
       val tombstones = ops.SimilarityOps.deleteTombstonesFor(spark, d)
       val (survivors, touched) = ops.SimilarityOps.deleteMerge(
-        spark, ops.SimilarityOps.deleteDir(d), tombstones)
+        spark, io.Layout.snapshot(ops.SimilarityOps.deleteDir(d)), tombstones)
       val plan187 = survivors.queryExecution.explainString(SimpleMode)
       sb.append("\n## q187_index_delete (tombstone merge, " +
         s"${touched.size} touched cells)\n\n" +
@@ -418,15 +418,15 @@ object Plans {
         "(PlanShapeSpec-counted), so a delete costs the touched " +
         "lists, never the index\n\n```\n" + plan187 + "```\n")
       ops.SimilarityOps.indexVersions(spark, d).collect()
-      val plan191 = ops.SimilarityOps.genPinnedRead(
-          spark, ops.SimilarityOps.versionDir(d), 1, Seq(0L, 1L))
+      val plan191 = ops.SimilarityOps.pinnedRead(spark,
+          io.Layout.snapshot(ops.SimilarityOps.versionDir(d), Some(1L)), Seq(0L, 1L))
         .queryExecution.explainString(SimpleMode)
       sb.append("\n## q191_index_versions (generation-pinned read, pin=1)\n\n" +
-        "versioned-manifest serving read: owner resolution is " +
-        "manifest-scale (the only collect), and EVERY generation " +
+        "versioned serving read: owner resolution reads the pinned " +
+        "log entry (one small file, no Spark job), and EVERY data " +
         "directory in the pinned union is scanned with its own " +
         "non-empty PartitionFilters (PlanShapeSpec-guarded for both " +
-        "pins) — snapshot isolation costs a tiny manifest read, never " +
+        "pins) — snapshot isolation costs one log-entry read, never " +
         "a second copy of the index\n\n```\n" + plan191 + "```\n")
       val plan185 = ops.SimilarityOps.adcServePostingsFor(spark, d)
         .queryExecution.explainString(SimpleMode)
@@ -475,19 +475,19 @@ object Plans {
         "equi-join, no corpus-corpus shuffle at any scale\n\n```\n" +
         plan199 + "```\n")
     }
-    // q193 per-batch serving fetch: the stream's foreachBatch resolves
-    // the manifest pin and calls manifestPinnedRead — the SAME function
-    // q191 registers and PlanShapeSpec guards at both pins; dumped here
-    // against the lane's generation-0 manifest for the record
+    // q193 per-batch serving fetch: the stream's foreachBatch reads the
+    // latest log entry and calls pinnedRead — the SAME function q191
+    // registers and PlanShapeSpec guards at both pins; dumped here
+    // against generation 0 for the record
     locally {
       ops.SimilarityOps.indexVersions(spark, d).collect()
-      val plan193 = ops.SimilarityOps.genPinnedRead(
-          spark, ops.SimilarityOps.versionDir(d), 0, Seq(0L, 1L, 2L))
+      val plan193 = ops.SimilarityOps.pinnedRead(spark,
+          io.Layout.snapshot(ops.SimilarityOps.versionDir(d), Some(0L)), Seq(0L, 1L, 2L))
         .queryExecution.explainString(SimpleMode)
       sb.append("\n## q193_stream_versioned_serve (per-micro-batch pinned fetch)\n\n" +
-        "zero-downtime swap serving: each micro-batch resolves the " +
-        "manifest pin committed at fetch time (metadata-scale collect) " +
-        "and fetches ONLY its probed cells through manifestPinnedRead — " +
+        "zero-downtime swap serving: each micro-batch reads the log " +
+        "entry committed at fetch time (one small file, no Spark job) " +
+        "and fetches ONLY its probed cells through pinnedRead — " +
         "the identical function behind q191's registered lane, " +
         "PlanShapeSpec-guarded at both pins (pruned PartitionFilters " +
         "per generation directory). The streaming wrapper adds no plan " +
@@ -495,34 +495,27 @@ object Plans {
         "shape (q180's fence) and the fetch below is this plan at the " +
         "batch's pin\n\n```\n" + plan193 + "```\n")
     }
-    // q210 post-vacuum pinned read: same pruned union-of-generations
-    // shape as q191 (the vacuum only removes manifest rows a pin >=
-    // floor never resolves to), dumped against the lane's clone-free
-    // run-local manifest over the pristine store (r17)
+    // q210 post-vacuum pinned read: same pruned union-of-directories
+    // shape as q191 (the vacuum only commits a floor a pin >= floor
+    // never sees), dumped against the lane's run-local fork of the store
     locally {
-      ops.SimilarityOps.indexVersions(spark, d)
-      val pristine = ops.SimilarityOps.versionDir(d)
       val laneRoot =
         s"${System.getProperty("java.io.tmpdir")}/graft_vacplan"
-      graft.io.LayoutFs.deleteTree(laneRoot)
-      val laneManifest = s"$laneRoot/manifest"
-      ops.SimilarityOps.seedManifest(
-        spark, s"$pristine/manifest", laneManifest, Seq(0, 1))
-      ops.SimilarityOps.vacuumManifest(spark, laneManifest, floor = 1)
-      val cells = spark.read.parquet(laneManifest)
-        .select("cell").distinct().collect().map(_.getLong(0)).sorted.toSeq
+      ops.SimilarityOps.forkVersions(spark, d, laneRoot, upTo = 1)
+      io.Layout.vacuum(laneRoot, floor = 1L)
+      val snap = io.Layout.snapshot(laneRoot, Some(1L))
       val plan210 = ops.SimilarityOps
-        .manifestPinnedRead(spark, laneManifest, pristine, 1, cells)
+        .pinnedRead(spark, snap, snap.parts.keys.toSeq.sorted)
         .queryExecution.explainString(SimpleMode)
       sb.append("\n## q210_index_vacuum (post-vacuum pinned read)\n\n" +
-        "generation vacuum, metadata half (clone-free overlay entry): " +
-        "reclamation drops superseded rows from the run-local manifest " +
-        "and records the floor (metadata-scale, no data job at all); " +
-        "the physical GC (vacuumTo) runs only on stores the caller " +
-        "owns. The post-vacuum pin-1 read keeps q191's exact shape — " +
-        "each surviving generation scanned with its own pruned " +
-        "PartitionFilters; pins below the recorded floor refuse before " +
-        "any scan is planned\n\n```\n" + plan210 + "```\n")
+        "generation vacuum, metadata half (a run-local fork of the " +
+        "store): the raised floor is committed as the next log entry " +
+        "(metadata-scale, no data job at all); the physical half " +
+        "(Layout.gc) runs only on stores the caller owns. The " +
+        "post-vacuum pin-1 read keeps q191's exact shape — each data " +
+        "directory scanned with its own pruned PartitionFilters; pins " +
+        "below the committed floor refuse before any scan is " +
+        "planned\n\n```\n" + plan210 + "```\n")
     }
     // checkpointing / streaming lanes whose registered plans print as
     // RDD scans or run inside a streaming query — shapes documented
@@ -599,17 +592,17 @@ object Plans {
     sb.append("\n## q218_pipeline_takedown (takedown composite)\n\n" +
       "three reused surfaces, no new join shapes: the tombstone delete " +
       "rewrites ONLY the buckets the deleted docs' bands hash into " +
-      "(stage-and-swap, same primitive as q182/q187 — bucket set " +
+      "(one log commit, same primitive as q182/q187 — bucket set " +
       "derived from the cached signatures, no index scan); the weight " +
       "refold is one window over survivors fed by the session-cached " +
       "near-dup pair list (filter + groupBy-min — no re-banding or " +
       "re-pairing); the re-submission admission is q217's pruned probe " +
-      "against the tombstoned clone plus q215's within-batch check. " +
+      "against the tombstoned fork plus q215's within-batch check. " +
       "Oracle = from-scratch re-curation; PipelineTakedownSpec pins " +
       "per-doc semantics from the pair list.\n")
     sb.append("\n## q219_pipeline_two_epoch (two-epoch ingest continuity)\n\n" +
       "no new join shapes: epoch 1 is q215's admission plan verbatim; " +
-      "the fold is the q182-style stage-and-swap over only the " +
+      "the fold is the q182-style log commit over only the " +
       "admitted docs' buckets (bucket set derived from their " +
       "signatures, no index scan); epoch 2 is q217's pruned probe " +
       "against the folded layout plus q215's within-batch check. " +
@@ -620,7 +613,7 @@ object Plans {
       "no new join shapes — the lifecycle composes the four primitives " +
       "already dumped: each epoch's admission is q215's plan with the " +
       "dvb stage swapped for q217's pruned disk probe, each fold and " +
-      "each takedown is the q182/q187 stage-and-swap over EXACTLY the " +
+      "each takedown is the q182/q187 log commit over EXACTLY the " +
       "delta signatures' buckets (bucket sets derived from the " +
       "signatures, never an index scan; PipelineLifecycleSpec asserts " +
       "set-equality per epoch and fold == rebuild at all four epoch " +
@@ -629,9 +622,9 @@ object Plans {
       "\\ td1 and I2 = (I1 ∪ adm2) \\ td2 closed-form.\n")
     sb.append("\n## q212_stream_vacuum_serve (streaming lifecycle composite)\n\n" +
       "swap + vacuum under a live query stream: per-batch serving is " +
-      "the SAME manifestPinnedRead plan dumped for q193 above (pruned " +
-      "per-generation FileScans at the batch's pin); the vacuum step " +
-      "is metadata-scale directory deletion (no data job); nothing in " +
+      "the SAME pinnedRead plan dumped for q193 above (pruned " +
+      "per-directory FileScans at the batch's log entry); the vacuum " +
+      "step commits a floor (one small file, no data job); nothing in " +
       "the composite adds plan surface beyond its parts — shape " +
       "narrated in COVERAGE.md, liveness in VersionSpec.\n")
     sb.append("\n## q216_stream_pipeline_ingest (streaming curation composite)\n\n" +

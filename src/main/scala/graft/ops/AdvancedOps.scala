@@ -381,13 +381,11 @@ object AdvancedOps {
       java.lang.Integer.toHexString(d.hashCode)
     // content-aware reuse: fingerprint the SOURCE parquet (size+mtime)
     // so a regenerated testdata file rebuilds the fixture rather than
-    // silently serving stale rows to the oracle (VERDICT r7 #2)
-    val marker = java.nio.file.Paths.get(out, "_FIXTURE_OK")
-    if (!graft.Fixtures.markerCurrent(marker, s"$d/events.parquet")) {
+    // silently serving stale rows to the oracle
+    graft.Fixtures.staged(java.nio.file.Paths.get(out), s"$d/events.parquet") {
       Tables.events(s, d)
         .withColumn("event_date", to_date(col("ts")))
         .write.partitionBy("event_date").mode("overwrite").parquet(out)
-      graft.Fixtures.writeMarker(marker, s"$d/events.parquet")
     }
     s.read.parquet(out)
       .filter(col("event_date") === lit("2024-01-15"))
@@ -421,8 +419,7 @@ object AdvancedOps {
     val out = s"${System.getProperty("java.io.tmpdir")}/graft_layout_" +
       java.lang.Integer.toHexString(d.hashCode)
     // content-aware reuse (see partitionPrune)
-    val marker = java.nio.file.Paths.get(out, "_FIXTURE_OK")
-    if (!graft.Fixtures.markerCurrent(marker, s"$d/lineitem.parquet")) {
+    graft.Fixtures.staged(java.nio.file.Paths.get(out), s"$d/lineitem.parquet") {
       Tables.lineitem(s, d)
         .withColumn("bucket", floor(col("l_orderkey") / LayoutBucketWidth))
         // hash-repartition on the bucket column: every bucket is owned
@@ -434,7 +431,6 @@ object AdvancedOps {
         .write.partitionBy("bucket")
         .option("maxRecordsPerFile", LayoutMaxRecords)
         .mode("overwrite").parquet(out)
-      graft.Fixtures.writeMarker(marker, s"$d/lineitem.parquet")
     }
     val wB = Window.partitionBy("bucket").orderBy("lo", "f")
     s.read.parquet(out)

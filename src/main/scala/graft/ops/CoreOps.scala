@@ -282,12 +282,10 @@ object CoreOps {
     // content-aware reuse: the marker records the SOURCE parquet's
     // size+mtime, so a driver-side testdata regeneration invalidates
     // the fixture instead of silently feeding stale rows to the oracle
-    val marker = java.nio.file.Paths.get(tmp, "_FIXTURE_OK")
-    if (!graft.Fixtures.markerCurrent(marker, s"$d/lineitem.parquet")) {
+    graft.Fixtures.staged(java.nio.file.Paths.get(tmp), s"$d/lineitem.parquet") {
       li(s, d).select("l_orderkey", "l_linenumber", "l_quantity",
                       "l_extendedprice", "l_shipdate", "l_returnflag")
         .write.mode("overwrite").option("header", "true").csv(tmp)
-      graft.Fixtures.writeMarker(marker, s"$d/lineitem.parquet")
     }
     graft.sources.CsvIngest.readInferFast(s, tmp)
       .groupBy("l_returnflag")
@@ -327,15 +325,13 @@ object CoreOps {
     */
   private[graft] def jsonlDocs(s: SparkSession, d: String): DataFrame = {
     val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_jsonl_${math.abs(d.hashCode)}"
-    val marker = java.nio.file.Paths.get(tmp, "_FIXTURE_OK")
-    if (!graft.Fixtures.markerCurrent(marker, s"$d/documents.parquet")) {
+    graft.Fixtures.staged(java.nio.file.Paths.get(tmp), s"$d/documents.parquet") {
       Tables.documents(s, d)
         .select(col("doc_id"),
                 struct(col("lang"), col("source"), col("n_chars")).as("meta"),
                 col("text"))
         .repartition(4) // real multi-file JSONL — inference sees 1 of 4
         .write.mode("overwrite").json(tmp)
-      graft.Fixtures.writeMarker(marker, s"$d/documents.parquet")
     }
     graft.sources.JsonIngest.readInferFast(s, tmp)
   }
@@ -377,10 +373,8 @@ object CoreOps {
   def gzipIngest(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_gz_${math.abs(d.hashCode)}"
-    val marker = java.nio.file.Paths.get(tmp, "_STAGED")
     val srcs = Seq(s"$d/documents.parquet", "gz-fixture-v1:levels0169+fname")
-    if (!graft.Fixtures.markerCurrent(marker, srcs: _*)) {
-      graft.Fixtures.clearDir(java.nio.file.Paths.get(tmp))
+    graft.Fixtures.staged(java.nio.file.Paths.get(tmp), srcs: _*) {
       // distributed ENCODE stage: executors compress each document with
       // the JDK Deflater at the doc's cycling level, own gzip framing
       Tables.documents(s, d).select(col("doc_id"), col("text"))
@@ -392,7 +386,6 @@ object CoreOps {
         })
         .toDF("doc_id", "lvl", "gz")
         .write.mode("overwrite").parquet(tmp)
-      graft.Fixtures.writeMarker(marker, srcs: _*)
     }
     s.read.parquet(tmp)
       .as[(Long, Int, Array[Byte])]
@@ -438,10 +431,8 @@ object CoreOps {
   def warcIngest(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_warc_${math.abs(d.hashCode)}"
-    val marker = java.nio.file.Paths.get(tmp, "_STAGED")
     val srcs = Seq(s"$d/documents.parquet", "warc-fixture-v1:16shards+gzip-members")
-    if (!graft.Fixtures.markerCurrent(marker, srcs: _*)) {
-      graft.Fixtures.clearDir(java.nio.file.Paths.get(tmp))
+    graft.Fixtures.staged(java.nio.file.Paths.get(tmp), srcs: _*) {
       // bin-pack into shards: bounded groups (n/16 docs each), records
       // ordered by doc_id inside the shard, one gzip member per record
       Tables.documents(s, d)
@@ -454,7 +445,6 @@ object CoreOps {
         })
         .toDF("shard", "warc")
         .write.mode("overwrite").parquet(tmp)
-      graft.Fixtures.writeMarker(marker, srcs: _*)
     }
     s.read.parquet(tmp)
       .as[(Long, Array[Byte])]
@@ -507,10 +497,8 @@ object CoreOps {
   def gzipSink(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_gzsink_${math.abs(d.hashCode)}"
-    val marker = java.nio.file.Paths.get(tmp, "_STAGED")
     val srcs = Seq(s"$d/documents.parquet", "gzsink-fixture-v1:own-fixed-huffman")
-    if (!graft.Fixtures.markerCurrent(marker, srcs: _*)) {
-      graft.Fixtures.clearDir(java.nio.file.Paths.get(tmp))
+    graft.Fixtures.staged(java.nio.file.Paths.get(tmp), srcs: _*) {
       Tables.documents(s, d).select(col("doc_id"), col("text"))
         .as[(Long, String)]
         .mapPartitions(_.map { case (id, text) =>
@@ -519,7 +507,6 @@ object CoreOps {
         })
         .toDF("doc_id", "gz")
         .write.mode("overwrite").parquet(tmp)
-      graft.Fixtures.writeMarker(marker, srcs: _*)
     }
     s.read.parquet(tmp)
       .as[(Long, Array[Byte])]
@@ -555,13 +542,11 @@ object CoreOps {
   def tgzArchive(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_tgz_${math.abs(d.hashCode)}"
-    val marker = java.nio.file.Paths.get(tmp, "_STAGED")
     val srcs = Seq(s"$d/documents.parquet", "tgz-fixture-v1:ustar+own-gzip")
-    if (!graft.Fixtures.markerCurrent(marker, srcs: _*)) {
-      graft.Fixtures.clearDir(java.nio.file.Paths.get(tmp))
+    graft.Fixtures.staged(java.nio.file.Paths.get(tmp), srcs: _*) {
       Tables.documents(s, d)
         // same shard-count constant as q200 (and as shardedDocsSql) so
-        // engine and oracle can never desynchronize (r11 ADVICE)
+        // engine and oracle can never desynchronize
         .groupBy((col("doc_id") % graft.sources.WarcIngest.NShards)
           .as("shard"))
         .agg(sort_array(collect_list(struct(col("doc_id"), col("text"))))
@@ -574,7 +559,6 @@ object CoreOps {
         })
         .toDF("shard", "tgz")
         .write.mode("overwrite").parquet(tmp)
-      graft.Fixtures.writeMarker(marker, srcs: _*)
     }
     s.read.parquet(tmp)
       .as[(Long, Array[Byte])]
@@ -610,13 +594,11 @@ object CoreOps {
     val dir = new java.io.File(tmp)
     // content-aware reuse (see csvInferFast): rebuilt when the source
     // parquet's size+mtime fingerprint changes
-    val marker = java.nio.file.Paths.get(tmp, "_FIXTURE_READY")
-    if (!graft.Fixtures.markerCurrent(marker, s"$d/lineitem.parquet")) {
+    graft.Fixtures.staged(java.nio.file.Paths.get(tmp), s"$d/lineitem.parquet") {
       def rmrf(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles().foreach(rmrf)
         f.delete(); ()
       }
-      if (dir.exists()) rmrf(dir)
       dir.mkdirs()
       (0 until 3).foreach { b =>
         val stage = s"$tmp/_stage_b$b"
@@ -631,7 +613,6 @@ object CoreOps {
           s"fixture rename failed for bucket $b")
         rmrf(new java.io.File(stage))
       }
-      graft.Fixtures.writeMarker(marker, s"$d/lineitem.parquet")
     }
     tmp
   }
@@ -678,12 +659,10 @@ object CoreOps {
   def urlCsvRead(s: SparkSession, d: String): DataFrame = {
     val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_urlcsv_${math.abs(d.hashCode)}"
     // content-aware reuse (see csvInferFast)
-    val marker = java.nio.file.Paths.get(tmp, "_FIXTURE_OK")
-    if (!graft.Fixtures.markerCurrent(marker, s"$d/lineitem.parquet")) {
+    graft.Fixtures.staged(java.nio.file.Paths.get(tmp), s"$d/lineitem.parquet") {
       li(s, d).select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
         .coalesce(1) // the reference's O24 fetches ONE csv file
         .write.mode("overwrite").option("header", "true").csv(tmp)
-      graft.Fixtures.writeMarker(marker, s"$d/lineitem.parquet")
     }
     val part = new java.io.File(tmp).listFiles()
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv")).head

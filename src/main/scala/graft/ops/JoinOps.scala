@@ -217,18 +217,14 @@ object JoinOps {
     val csvDir = s"$tmpBase/graft_fed_csv_${math.abs(d.hashCode)}"
     val orcDir = s"$tmpBase/graft_fed_orc_${math.abs(d.hashCode)}"
     // content-aware reuse: fingerprint the source parquet (size+mtime)
-    // so regenerated testdata rebuilds the staged copies (VERDICT r7 #2)
-    val csvMarker = java.nio.file.Paths.get(csvDir, "_FIXTURE_OK")
-    if (!graft.Fixtures.markerCurrent(csvMarker, s"$d/lineitem.parquet")) {
+    // so regenerated testdata rebuilds the staged copies
+    graft.Fixtures.staged(java.nio.file.Paths.get(csvDir), s"$d/lineitem.parquet") {
       li.filter(col("l_linenumber") === 1).select(cols.map(col): _*)
         .write.mode("overwrite").option("header", "true").csv(csvDir)
-      graft.Fixtures.writeMarker(csvMarker, s"$d/lineitem.parquet")
     }
-    val orcMarker = java.nio.file.Paths.get(orcDir, "_FIXTURE_OK")
-    if (!graft.Fixtures.markerCurrent(orcMarker, s"$d/lineitem.parquet")) {
+    graft.Fixtures.staged(java.nio.file.Paths.get(orcDir), s"$d/lineitem.parquet") {
       li.filter(col("l_linenumber") === 2).select(cols.map(col): _*)
         .write.mode("overwrite").orc(orcDir)
-      graft.Fixtures.writeMarker(orcMarker, s"$d/lineitem.parquet")
     }
     val csvSchema = StructType(Seq(
       StructField("l_orderkey", LongType), StructField("l_linenumber", IntegerType),

@@ -148,15 +148,12 @@ object MultimodalOps {
   private[graft] def mediaMixFixture(s: SparkSession, d: String): String = {
     import s.implicits._
     val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_mediamix_${math.abs(d.hashCode)}"
-    val marker = java.nio.file.Paths.get(tmp, "_STAGED")
     val srcs = Seq(s"$d/documents.parquet", "mediamix-fixture-v1:6formats")
-    if (!graft.Fixtures.markerCurrent(marker, srcs: _*)) {
-      graft.Fixtures.clearDir(java.nio.file.Paths.get(tmp))
+    graft.Fixtures.staged(java.nio.file.Paths.get(tmp), srcs: _*) {
       Tables.documents(s, d).select(col("doc_id")).as[Long]
         .mapPartitions(_.map(id => (id, MediaDispatch.encodeFor(id))))
         .toDF("doc_id", "content")
         .write.mode("overwrite").parquet(tmp)
-      graft.Fixtures.writeMarker(marker, srcs: _*)
     }
     tmp
   }
@@ -295,15 +292,12 @@ object MultimodalOps {
   def frameSample(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_y4mfs_${math.abs(d.hashCode)}"
-    val marker = java.nio.file.Paths.get(tmp, "_STAGED")
     val srcs = Seq(s"$d/documents.parquet", "y4m-framesample-fixture-v1")
-    if (!graft.Fixtures.markerCurrent(marker, srcs: _*)) {
-      graft.Fixtures.clearDir(java.nio.file.Paths.get(tmp))
+    graft.Fixtures.staged(java.nio.file.Paths.get(tmp), srcs: _*) {
       Tables.documents(s, d).select(col("doc_id")).as[Long]
         .mapPartitions(_.map(id => (id, Y4mCodec.encode(id))))
         .toDF("doc_id", "content")
         .write.mode("overwrite").parquet(tmp)
-      graft.Fixtures.writeMarker(marker, srcs: _*)
     }
     s.read.parquet(tmp)
       .as[MediaRow]
@@ -561,9 +555,7 @@ object MultimodalOps {
     val hex = java.lang.Integer.toHexString(d.hashCode)
     val dir = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), s"graft_bmp_$hex")
-    val marker = dir.resolve("_STAGED")
-    if (!graft.Fixtures.markerCurrent(marker, s"$d/documents.parquet")) {
-      graft.Fixtures.clearDir(dir)
+    graft.Fixtures.staged(dir, s"$d/documents.parquet") {
       // distributed ENCODE stage: executors render real BMP files from
       // the doc ids (ImageIO runs per-partition), parquet stores them
       // as an opaque binary column — the at-rest shape of an image
@@ -572,7 +564,6 @@ object MultimodalOps {
         .mapPartitions(_.map(id => BmpRow(id, BmpCodec.encode(id))))
         .toDF()
         .write.mode("overwrite").parquet(dir.toString)
-      graft.Fixtures.writeMarker(marker, s"$d/documents.parquet")
     }
     s.read.parquet(dir.toString)
       .select(col("doc_id"), col("img"))
@@ -937,15 +928,12 @@ object MultimodalOps {
     val hex = java.lang.Integer.toHexString(d.hashCode)
     val dir = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), s"graft_png_$hex")
-    val marker = dir.resolve("_STAGED")
     val srcs = Seq(s"$d/documents.parquet", "png-fixture-v2:37*id+101*y+13*x+idmod7*xx*3+idmod5*yy*11")
-    if (!graft.Fixtures.markerCurrent(marker, srcs: _*)) {
-      graft.Fixtures.clearDir(dir)
+    graft.Fixtures.staged(dir, srcs: _*) {
       Tables.documents(s, d).select(col("doc_id")).as[Long]
         .mapPartitions(_.map(id => PngRow(id, PngCodec.encode(id))))
         .toDF()
         .write.mode("overwrite").parquet(dir.toString)
-      graft.Fixtures.writeMarker(marker, srcs: _*)
     }
     dir.toString
   }
@@ -1113,13 +1101,11 @@ object MultimodalOps {
     val hex = java.lang.Integer.toHexString(d.hashCode)
     val dir = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), s"graft_wav_$hex")
-    val marker = dir.resolve("_STAGED")
     // the generator-version pseudo-source makes the marker stale when
     // the FORMULA changes, not just the source parquet — a staged
     // fixture from an older sample formula must not survive
     val srcs = Seq(s"$d/documents.parquet", "wav-fixture-v2:7919*id+523*i")
-    if (!graft.Fixtures.markerCurrent(marker, srcs: _*)) {
-      graft.Fixtures.clearDir(dir)
+    graft.Fixtures.staged(dir, srcs: _*) {
       // distributed ENCODE stage: executors render real WAV files from
       // the doc ids (javax.sound.sampled runs per-partition), parquet
       // stores them as an opaque binary column
@@ -1127,7 +1113,6 @@ object MultimodalOps {
         .mapPartitions(_.map(id => WavRow(id, WavCodec.encode(id))))
         .toDF()
         .write.mode("overwrite").parquet(dir.toString)
-      graft.Fixtures.writeMarker(marker, srcs: _*)
     }
     s.read.parquet(dir.toString)
       .select(col("doc_id"), col("audio"))
@@ -1419,16 +1404,13 @@ object MultimodalOps {
     val hex = java.lang.Integer.toHexString(d.hashCode)
     val dir = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), s"graft_gif_$hex")
-    val marker = dir.resolve("_STAGED")
     val srcs = Seq(s"$d/documents.parquet",
       "gif-fixture-v1:37*id+59*f+101*y+13*x+idmod7*xx*3+idmod5*yy*11")
-    if (!graft.Fixtures.markerCurrent(marker, srcs: _*)) {
-      graft.Fixtures.clearDir(dir)
+    graft.Fixtures.staged(dir, srcs: _*) {
       Tables.documents(s, d).select(col("doc_id")).as[Long]
         .mapPartitions(_.map(id => GifRow(id, GifCodec.encode(id))))
         .toDF()
         .write.mode("overwrite").parquet(dir.toString)
-      graft.Fixtures.writeMarker(marker, srcs: _*)
     }
     dir.toString
   }
@@ -1793,15 +1775,12 @@ object MultimodalOps {
     val hex = java.lang.Integer.toHexString(d.hashCode)
     val dir = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), s"graft_y4m_$hex")
-    val marker = dir.resolve("_STAGED")
     val srcs = Seq(s"$d/documents.parquet", "y4m-fixture-v1:31/53/97/17+chroma")
-    if (!graft.Fixtures.markerCurrent(marker, srcs: _*)) {
-      graft.Fixtures.clearDir(dir)
+    graft.Fixtures.staged(dir, srcs: _*) {
       Tables.documents(s, d).select(col("doc_id")).as[Long]
         .mapPartitions(_.map(id => Y4mRow(id, Y4mCodec.encode(id))))
         .toDF()
         .write.mode("overwrite").parquet(dir.toString)
-      graft.Fixtures.writeMarker(marker, srcs: _*)
     }
     s.read.parquet(dir.toString)
       .select(col("doc_id"), col("video"))
@@ -1891,17 +1870,14 @@ object MultimodalOps {
     val hex = java.lang.Integer.toHexString(d.hashCode)
     val dir = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), s"graft_ulaw_$hex")
-    val marker = dir.resolve("_STAGED")
     val srcs = Seq(s"$d/documents.parquet", "ulaw-fixture-v1:6151*id+389*i")
-    if (!graft.Fixtures.markerCurrent(marker, srcs: _*)) {
-      graft.Fixtures.clearDir(dir)
+    graft.Fixtures.staged(dir, srcs: _*) {
       // distributed ENCODE stage: executors compand + containerize via
       // the JDK per-partition; parquet stores the opaque binary files
       Tables.documents(s, d).select(col("doc_id")).as[Long]
         .mapPartitions(_.map(id => UlawRow(id, UlawCodec.encode(id))))
         .toDF()
         .write.mode("overwrite").parquet(dir.toString)
-      graft.Fixtures.writeMarker(marker, srcs: _*)
     }
     s.read.parquet(dir.toString)
       .select(col("doc_id"), col("audio"))
@@ -2057,10 +2033,8 @@ object MultimodalOps {
   private[graft] def audioGrainsFor(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_audnd_${math.abs(d.hashCode)}"
-    val marker = java.nio.file.Paths.get(tmp, "_STAGED")
     val srcs = Seq(s"$d/documents.parquet", "audnd-fixture-v3:clipped-ulaw-curved")
-    if (!graft.Fixtures.markerCurrent(marker, srcs: _*)) {
-      graft.Fixtures.clearDir(java.nio.file.Paths.get(tmp))
+    graft.Fixtures.staged(java.nio.file.Paths.get(tmp), srcs: _*) {
       Tables.documents(s, d).select(col("doc_id")).as[Long]
         .mapPartitions(_.flatMap { id =>
           val full = Seq((id * 2,
@@ -2074,7 +2048,6 @@ object MultimodalOps {
         })
         .toDF("vid", "content")
         .write.mode("overwrite").parquet(tmp)
-      graft.Fixtures.writeMarker(marker, srcs: _*)
     }
     s.read.parquet(tmp)
       // decode at session width (r18 third pass): the staged WAV table
@@ -2209,10 +2182,8 @@ object MultimodalOps {
   private[graft] def videoSigsFor(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_vidnd_${math.abs(d.hashCode)}"
-    val marker = java.nio.file.Paths.get(tmp, "_STAGED")
     val srcs = Seq(s"$d/documents.parquet", "vidnd-fixture-v1:trimmed-clips")
-    if (!graft.Fixtures.markerCurrent(marker, srcs: _*)) {
-      graft.Fixtures.clearDir(java.nio.file.Paths.get(tmp))
+    graft.Fixtures.staged(java.nio.file.Paths.get(tmp), srcs: _*) {
       Tables.documents(s, d).select(col("doc_id")).as[Long]
         .mapPartitions(_.flatMap { id =>
           val full = Seq((id * 2, Y4mCodec.encode(id)))
@@ -2224,7 +2195,6 @@ object MultimodalOps {
         })
         .toDF("vid", "content")
         .write.mode("overwrite").parquet(tmp)
-      graft.Fixtures.writeMarker(marker, srcs: _*)
     }
     s.read.parquet(tmp)
       .as[(Long, Array[Byte])]

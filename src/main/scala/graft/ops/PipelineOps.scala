@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.HashFns._
 import graft.{Q, Steps, Tables}
+import graft.io.{Layout, Snapshot}
 
 /** q214: the END-TO-END curation pipeline composite.
   *
@@ -581,11 +582,11 @@ object PipelineOps {
   //      touches the buckets its own keys hash into, and the probe's
   //      bucket list is metadata-scale (bounded by bands x buckets and
   //      by 4 x batch rows, whichever is smaller). Compaction = fold
-  //      newly-admitted signatures into exactly the touched buckets
-  //      via the q182 stage-and-swap — untouched buckets are never
-  //      read OR rewritten (AdmissionIndexSpec proves fold == rebuild
-  //      byte-for-byte on row sets and that only touched buckets
-  //      change). The lane itself is q215's admission run THROUGH the
+  //      newly-admitted signatures into exactly the touched buckets,
+  //      committed as the layout's next log entry (graft.io.Layout) —
+  //      untouched buckets are never read OR rewritten
+  //      (AdmissionIndexSpec proves fold == rebuild byte-for-byte on
+  //      row sets and that only touched buckets change). The lane itself is q215's admission run THROUGH the
   //      disk index — same card, same oracle, verbatim. ----
   /** Key buckets per band, CORPUS-SCALED (a fixed count would be the
     * last scale constant in the index layout): one bucket per ~2500
@@ -595,9 +596,9 @@ object PipelineOps {
     * 1.70x -> 1.79x — every probe at toy scale spans all buckets
     * anyway), while at deployment scale the cap dominates and a batch
     * touches the buckets its own keys hash into. The CHOSEN value is
-    * part of the on-disk artifact (persisted in `_META`, read back by
-    * every probe/fold/delete) — pb values are meaningless without it,
-    * exactly like a manifest.
+    * part of the on-disk artifact (recorded as `kb` in every log
+    * entry, read back by every probe/fold/delete) — pb values are
+    * meaningless without it.
     */
   private[graft] def bucketsFor(nDocs: Long): Int =
     math.min(4096, math.max(8, math.ceil(nDocs / 2500.0).toInt))
@@ -622,28 +623,26 @@ object PipelineOps {
     s"${System.getProperty("java.io.tmpdir")}/graft_admidx_" +
       java.lang.Integer.toHexString(d.hashCode)
 
-  /** Write an admission index of `sigs` to `dir` under bucket count
-    * `kb`, recording kb in the layout's `_META` — shared by the
-    * fixture build, the fold spec's twin dirs, and nothing else (the
-    * maintenance ops go through fold/delete, which preserve kb).
+  /** Write an admission index of `sigs` as a new layout at `root` under
+    * bucket count `kb`, recorded in its log entry — shared by the
+    * fixture build and the specs' twin layouts (the maintenance ops go
+    * through fold/delete, which preserve kb).
     */
   private[graft] def writeAdmissionIndex(
-      sigs: DataFrame, dir: String, kb: Int): Unit = {
-    indexRowsOf(sigs, kb)
-      .repartition(col("pb"))
-      .sortWithinPartitions("pb", "band", "key", "doc_id")
-      .write.partitionBy("pb").mode("overwrite").parquet(dir)
-    graft.io.LayoutFs.writeSmallFile(s"$dir/_META", s"kb=$kb\n")
+      sigs: DataFrame, root: String, kb: Int): Unit = {
+    Layout.create(root,
+      indexRowsOf(sigs, kb).repartition(col("pb"))
+        .sortWithinPartitions("pb", "band", "key", "doc_id"),
+      "pb", Map("kb" -> kb.toString))
+    ()
   }
 
-  /** The layout's bucket count, read back from `_META` — the probe
-    * must bucket its keys with the INDEX's kb, not a recomputed one
-    * (an index built at a different corpus size has a different kb).
+  /** The bucket count a snapshot of an admission index was laid out
+    * with — the probe must bucket its keys with the INDEX's kb, not a
+    * recomputed one (an index built at a different corpus size has a
+    * different kb).
     */
-  private[graft] def indexBuckets(dir: String): Int =
-    graft.io.LayoutFs.readSmallFile(s"$dir/_META")
-      .getOrElse(sys.error(s"admission index at $dir has no _META"))
-      .trim.stripPrefix("kb=").toInt
+  private[graft] def indexBuckets(idx: Snapshot): Int = idx.meta("kb").toInt
 
   /** Fixture marker version: bump when the layout scheme changes so a
     * stale tmp index from an older round regenerates.
@@ -657,140 +656,25 @@ object PipelineOps {
     */
   private[graft] def persistAdmissionIndex(s: SparkSession, d: String): String = {
     val dir = admissionIndexDir(d)
-    val marker = java.nio.file.Paths.get(dir, "_FIXTURE_OK")
-    val srcs = Seq(s"$d/documents.parquet", IdxLayoutV)
-    if (!graft.Fixtures.markerCurrent(marker, srcs: _*)) {
+    graft.Fixtures.staged(java.nio.file.Paths.get(dir), s"$d/documents.parquet", IdxLayoutV) {
       val sigs = sharedBaseIndex(s, d)
       writeAdmissionIndex(sigs, dir, bucketsFor(sigs.count()))
-      graft.Fixtures.writeMarker(marker, srcs: _*)
     }
     dir
   }
 
-  /** Open ONLY the given pb bucket directories of an admission-index
-    * layout (`basePath` keeps pb a partition column). A root-dir open
-    * pays an O(all-buckets) partition-DISCOVERY listing before any
-    * pruning can apply — measured at the 5 M-doc layout (8000 bucket
-    * dirs): 14 s per fold/delete vs ~3 s at 800 dirs, because every
-    * mutation invalidates Spark's listing cache and the next open
-    * re-lists the whole tree. Listing exactly the touched dirs makes
-    * open cost track the BATCH like the read itself. Bucket values
-    * that never materialized have no dir and are skipped; an empty
-    * selection returns an empty, correctly-typed relation.
+  /** Clone-free entry into mutations over the pristine persisted index:
+    * a run-local fork of it (graft.io.Layout.fork). Every fold and
+    * takedown writes the fork's root only; untouched buckets keep
+    * resolving into the base, which no code path writes. Returns the
+    * fork's root.
     */
-  private[graft] def openBuckets(
-      s: SparkSession, dir: String, pbs: Seq[Long]): DataFrame = {
-    // existence resolves through the path's Hadoop FileSystem, and the
-    // degenerate all-missing selection derives its empty relation from
-    // the layout's REAL schema via a root open filtered to false (a
-    // hand-built StructType silently diverges if the layout ever gains
-    // a column) — the root-listing cost only ever applies
-    // to this rare empty case
-    val paths = pbs.map(pb => s"$dir/pb=$pb").filter(graft.io.LayoutFs.exists)
-    if (paths.isEmpty)
-      s.read.option("basePath", dir).parquet(dir).filter(lit(false))
-    else s.read.option("basePath", dir).parquet(paths: _*)
-  }
-
-  // ---- generation-pinned index entry ----
-  // The mutation lanes (q218/q219/q220) used to CLONE the pristine
-  // persisted index into a run-local tree and mutate the clone —
-  // zero-copy locally (hardlinks) but a byte-copy on any non-`file`
-  // scheme, so on HDFS/S3 entry cost would have been O(index). The
-  // deployment-true shape is the q191/q212 generation-manifest idea
-  // applied at pb-bucket granularity: PIN the pristine layout as the
-  // base generation and write only MUTATED buckets to a run-local
-  // OVERLAY; a bucket is served from the overlay iff a mutation has
-  // committed it there (ownership ledger `_OWNED`, metadata-scale),
-  // else from the base. No clone, no fallback copy, entry cost O(1)
-  // on every scheme — and the pristine base is structurally
-  // unwritable from the lane (no code path targets it).
-
-  /** Handle to an admission-index state: a plain directory, or a
-    * base+overlay pair resolved per bucket. All maintenance ops
-    * (probe/fold/delete) run against this interface, so a lane picks
-    * clone-free overlay entry without touching the op logic.
-    */
-  private[graft] sealed trait AdmIndex {
-    def kb: Int
-    /** Pruned open of exactly `pbs`, ownership-resolved. */
-    def open(s: SparkSession, pbs: Seq[Long]): DataFrame
-    /** Commit the merged contents of the `touched` buckets. */
-    def commit(merged: DataFrame, touched: Seq[Long]): Unit
-    /** The full logical index state (spec/debug surface). */
-    def readAll(s: SparkSession): DataFrame
-  }
-
-  private[graft] final case class DirIndex(dir: String) extends AdmIndex {
-    lazy val kb: Int = indexBuckets(dir)
-    def open(s: SparkSession, pbs: Seq[Long]): DataFrame =
-      openBuckets(s, dir, pbs)
-    def commit(merged: DataFrame, touched: Seq[Long]): Unit =
-      SimilarityOps.stageAndSwap(dir, merged, touched, partCol = "pb")
-    def readAll(s: SparkSession): DataFrame = s.read.parquet(dir)
-  }
-
-  /** Run-local overlay over a pristine base index. `commit` stages
-    * and swaps into the OVERLAY only and appends the touched ids to
-    * the `_OWNED` ledger; an owned bucket whose overlay dir does not
-    * exist is owned-but-EMPTY (every row deleted) and correctly
-    * yields no rows — it must not fall back to the base. The ledger
-    * is re-read at construction, so a handle can be re-opened on an
-    * existing overlay (the lifecycle spec replays against one).
-    */
-  private[graft] final class OverlayIndex(
-      val base: String, val overlayDir: String) extends AdmIndex {
-    val kb: Int = indexBuckets(base)
-    private val owned = scala.collection.mutable.SortedSet.empty[Long]
-    graft.io.LayoutFs.readSmallFile(s"$overlayDir/_OWNED").foreach { txt =>
-      owned ++= txt.split("\\s+").iterator.filter(_.nonEmpty).map(_.toLong)
-    }
-    def ownedBuckets: Set[Long] = owned.toSet
-
-    private def openOverlay(s: SparkSession, pbs: Seq[Long]): DataFrame = {
-      val paths = pbs.map(pb => s"$overlayDir/pb=$pb")
-        .filter(graft.io.LayoutFs.exists)
-      if (paths.isEmpty)
-        // schema from the base layout (the overlay may hold nothing)
-        s.read.option("basePath", base).parquet(base).filter(lit(false))
-      else s.read.option("basePath", overlayDir).parquet(paths: _*)
-    }
-
-    def open(s: SparkSession, pbs: Seq[Long]): DataFrame = {
-      val (ov, bs) = pbs.partition(owned.contains)
-      if (ov.isEmpty) openBuckets(s, base, bs)
-      else if (bs.isEmpty) openOverlay(s, ov)
-      else openOverlay(s, ov).unionByName(openBuckets(s, base, bs))
-    }
-
-    def commit(merged: DataFrame, touched: Seq[Long]): Unit = {
-      graft.io.LayoutFs.mkdirs(overlayDir)
-      SimilarityOps.stageAndSwap(overlayDir, merged, touched, partCol = "pb")
-      owned ++= touched
-      graft.io.LayoutFs.writeSmallFile(s"$overlayDir/_OWNED",
-        owned.mkString("", "\n", "\n"))
-    }
-
-    def readAll(s: SparkSession): DataFrame = {
-      val ownedSeq = owned.toSeq
-      if (ownedSeq.isEmpty) s.read.parquet(base)
-      else s.read.parquet(base)
-        .filter(!col("pb").isin(ownedSeq: _*))
-        .unionByName(openOverlay(s, ownedSeq))
-    }
-  }
-
-  /** Fresh clone-free entry into mutations over the pristine
-    * persisted index: an empty overlay pinned on it.
-    */
-  private[graft] def overlayEntry(
-      s: SparkSession, d: String, tag: String): OverlayIndex =
+  private[graft] def forkIndex(s: SparkSession, d: String, tag: String): String =
     Steps.tag(s, "overlay") {
-      val base = persistAdmissionIndex(s, d)
-      val ov = s"${System.getProperty("java.io.tmpdir")}/graft_admov_${tag}_" +
+      val root = s"${System.getProperty("java.io.tmpdir")}/graft_admov_${tag}_" +
         java.lang.Integer.toHexString(d.hashCode)
-      graft.io.LayoutFs.deleteTree(ov)
-      new OverlayIndex(base, ov)
+      Layout.fork(Layout.snapshot(persistAdmissionIndex(s, d)), root)
+      root
     }
 
   /** The pruned probe: dup-vs-base doc_ids of `dSigs` against the
@@ -804,16 +688,12 @@ object PipelineOps {
     * oracle verbatim.
     */
   private[graft] def probeAdmissionIndex(
-      s: SparkSession, dir: String, dSigs: DataFrame): DataFrame =
-    probeAdmissionIndex(s, DirIndex(dir), dSigs)
-
-  private[graft] def probeAdmissionIndex(
-      s: SparkSession, store: AdmIndex, dSigs: DataFrame): DataFrame = {
+      s: SparkSession, root: String, dSigs: DataFrame): DataFrame = {
     // delta sigs ride the banded probe rows: the store side
     // already carries its signature inline, so est_j verification
     // reads both sigs off the candidate row — no re-attach join
     val dBand = bandedWithSig(dSigs)
-    val idx = probeBandedIndex(s, store, dBand)
+    val idx = probeBandedIndex(s, root, dBand)
     val matches = aggregate(
       zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1L).otherwise(0L)),
       lit(0L), _ + _)
@@ -834,9 +714,8 @@ object PipelineOps {
     *
     * The delta's candidate buckets are collected driver-side
     * (metadata-scale: <= MinhashBands * kb values regardless of batch
-    * size) and opened DIRECTLY (targeted listing + partition filter;
-    * partition values discover as int, so the pruning predicate probes
-    * ints — a cast kills partition pruning). The hot-bucket cap ranks
+    * size) and opened DIRECTLY from the latest log entry (targeted
+    * listing + partition filter). The hot-bucket cap ranks
     * over the bucket's full (band, key) membership — pb is a function
     * of (band, key), so every member of a touched bucket lands in an
     * opened pb dir AND survives the capBandedFor semi-join on the
@@ -845,42 +724,37 @@ object PipelineOps {
     * lets q217 share q215's oracle verbatim.
     */
   private[graft] def probeBandedIndex(
-      s: SparkSession, store: AdmIndex, dBandS: DataFrame): DataFrame = {
-    val kb = store.kb
-    val dPb = dBandS.withColumn("pb", pbCol(col("band"), col("key"), kb))
+      s: SparkSession, root: String, dBandS: DataFrame): DataFrame = {
+    val idx = Layout.snapshot(root)
+    val dPb = dBandS.withColumn("pb", pbCol(col("band"), col("key"), indexBuckets(idx)))
     val pbs = dPb.select("pb").distinct()
-      .collect().map(_.getLong(0).toInt).sorted
-    capBandedFor(
-      store.open(s, pbs.map(_.toLong).toIndexedSeq)
-        .filter(col("pb").isin(pbs.toIndexedSeq: _*)), dPb)
+      .collect().map(_.getLong(0)).sorted.toSeq
+    capBandedFor(idx.open(s, pbs), dPb)
       .select("doc_id", "sig", "band", "key")
   }
 
   /** Fold newly-admitted signatures into an EXISTING on-disk admission
-    * index without a rebuild (q182's stage-and-swap for the text
-    * side): only the fold's touched pb buckets are read back and
-    * rewritten; untouched buckets are never opened. Returns the
-    * touched bucket ids (spec surface).
+    * index without a rebuild (q182's compaction for the text side):
+    * only the fold's touched pb buckets are read back and rewritten,
+    * and committed as the index's next log entry; untouched buckets
+    * are never opened. Returns the touched bucket ids (spec surface).
     */
   private[graft] def foldIntoAdmissionIndex(
-      s: SparkSession, dir: String, newSigs: DataFrame): Seq[Long] =
-    foldIntoAdmissionIndex(s, DirIndex(dir), newSigs)
-
-  private[graft] def foldIntoAdmissionIndex(
-      s: SparkSession, store: AdmIndex, newSigs: DataFrame): Seq[Long] =
+      s: SparkSession, root: String, newSigs: DataFrame): Seq[Long] =
     Steps.tag(s, "fold") {
-      val kb = store.kb // folds PRESERVE the layout's kb
+      val idx = Layout.snapshot(root)
+      val kb = indexBuckets(idx) // folds PRESERVE the layout's kb
       val add = indexRowsOf(newSigs, kb).localCheckpoint(true)
       val touched = add.select("pb").distinct()
         .collect().map(_.getLong(0)).sorted.toSeq
-      val existing = store.open(s, touched)
+      val existing = idx.open(s, touched)
         .select("doc_id", "sig", "band", "key")
         .withColumn("pb", pbCol(col("band"), col("key"), kb))
       val merged = existing.unionByName(
           add.select("doc_id", "sig", "band", "key", "pb"))
         .repartition(col("pb"))
         .sortWithinPartitions("pb", "band", "key", "doc_id")
-      store.commit(merged, touched)
+      Layout.rewrite(idx, merged, touched)
       touched
     }
 
@@ -891,7 +765,7 @@ object PipelineOps {
   def pipelineIncrementDisk(s: SparkSession, d: String): DataFrame = {
     val dir = persistAdmissionIndex(s, d)
     val (lazyResult, handles) = pipelineIncrementLazy(s, d,
-      Some(dBandS => probeBandedIndex(s, DirIndex(dir), dBandS)))
+      Some(dBandS => probeBandedIndex(s, dir, dBandS)))
     val result = Steps.tag(s, "card") { lazyResult.localCheckpoint(true) }
     handles.foreach(_.unpersist(false))
     result
@@ -1109,7 +983,7 @@ object PipelineOps {
   //      set (doc_id % 17 == 5, outside the benchmark holdout) is
   //      propagated through the CURATED corpus as one oracle-checked
   //      pipeline: (1) the docs leave the persisted admission index
-  //      via q187-shaped TOMBSTONE deletes (stage-and-swap of ONLY
+  //      via q187-shaped TOMBSTONE deletes (a rewrite of ONLY
   //      the buckets their bands hash into — at 100 TB a takedown
   //      touches a handful of partitions, never the index);
   //      (2) group weights are RECOMPUTED from the session-shared
@@ -1151,42 +1025,37 @@ object PipelineOps {
   /** q187's tombstone shape for the admission index: remove
     * `delSigs`'s docs from the on-disk index by rewriting ONLY the
     * buckets their banded rows live in (derived from the signatures —
-    * no index scan locates them) via stage-and-swap. Returns touched
-    * bucket ids.
+    * no index scan locates them), committed as the next log entry.
+    * Returns touched bucket ids.
     */
   private[graft] def deleteFromAdmissionIndex(
-      s: SparkSession, dir: String, delSigs: DataFrame): Seq[Long] =
-    deleteFromAdmissionIndex(s, DirIndex(dir), delSigs)
-
-  private[graft] def deleteFromAdmissionIndex(
-      s: SparkSession, store: AdmIndex, delSigs: DataFrame): Seq[Long] =
+      s: SparkSession, root: String, delSigs: DataFrame): Seq[Long] =
     Steps.tag(s, "tombstone") {
-      val kb = store.kb // deletes PRESERVE the layout's kb
+      val idx = Layout.snapshot(root)
+      val kb = indexBuckets(idx) // deletes PRESERVE the layout's kb
       val delRows = indexRowsOf(delSigs, kb).localCheckpoint(true)
       val touched = delRows.select("pb").distinct()
         .collect().map(_.getLong(0)).sorted.toSeq
       if (touched.nonEmpty) {
         val del = delRows.select("doc_id").distinct()
-        val remaining = store.open(s, touched)
+        val remaining = idx.open(s, touched)
           .select("doc_id", "sig", "band", "key")
           .withColumn("pb", pbCol(col("band"), col("key"), kb))
           .join(broadcast(del), Seq("doc_id"), "left_anti")
           .repartition(col("pb"))
           .sortWithinPartitions("pb", "band", "key", "doc_id")
-        store.commit(remaining, touched)
+        Layout.rewrite(idx, remaining, touched)
       }
       touched
     }
 
-  /** Post-takedown serving state: the takedown set tombstoned out of
-    * the persisted index via a GENERATION-PINNED overlay entry — the
-    * pristine base is never opened for write and nothing is cloned
-    * (a clone entry is zero-copy only on the local scheme; the
-    * overlay is an O(1) entry on every scheme). Only
-    * the takedown's touched buckets materialize in the overlay.
+  /** Post-takedown serving state: the takedown set tombstoned out of a
+    * run-local fork of the persisted index — the pristine base is never
+    * opened for write and nothing is copied. Only the takedown's
+    * touched buckets materialize in the fork. Returns the fork's root.
     */
-  private[graft] def takedownIndex(s: SparkSession, d: String): AdmIndex = {
-    val idx = overlayEntry(s, d, "td")
+  private[graft] def takedownIndex(s: SparkSession, d: String): String = {
+    val idx = forkIndex(s, d, "td")
     deleteFromAdmissionIndex(s, idx,
       sharedBaseIndex(s, d).filter(takedownPred(col("doc_id"))))
     idx
@@ -1431,7 +1300,7 @@ object PipelineOps {
   //           text now lives in the folded index: a cross-epoch
   //           near-dup catch that no single-epoch lane can express.
   //      Cost shape: the fold rewrites only the admitted docs' buckets
-  //      (stage-and-swap); epoch 2 is the q217 pruned probe against
+  //      (one log commit); epoch 2 is the q217 pruned probe against
   //      the folded layout. Oracle = base chain + epoch-1 chain + a
   //      folded index defined as (base ∪ admitted) + the epoch-2
   //      admission chain — all closed-form. ----
@@ -1470,11 +1339,10 @@ object PipelineOps {
       handles1.foreach(_.unpersist(false))
       adm
     }
-    // the end-of-ingest checkpoint: fold admitted signatures through a
-    // generation-pinned overlay on the persisted base (clone-free —
-    // the pristine fixture stays untouched for q217/q218 because no
-    // write path targets it, not because a copy shields it)
-    val idx = overlayEntry(s, d, "e2")
+    // the end-of-ingest checkpoint: fold admitted signatures into a
+    // fork of the persisted base (the pristine fixture q217/q218 read
+    // stays untouched: no write path targets it)
+    val idx = forkIndex(s, d, "e2")
     foldIntoAdmissionIndex(s, idx,
       admitted.filter(col("sig").isNotNull).select("doc_id", "sig"))
     // epoch 2 against the folded artifact
@@ -1512,7 +1380,7 @@ object PipelineOps {
   //                 match after two fold+delete cycles.
   //      Cost shape at 100 TB: each epoch's admission is the q217
   //      pruned probe (cost ∝ batch buckets), each fold/delete is a
-  //      stage-and-swap of exactly the touched buckets (spec:
+  //      rewrite of exactly the touched buckets (spec:
   //      minimality + fold == rebuild at EVERY epoch boundary) — K
   //      epochs cost K x delta work, never K x corpus. Oracle models
   //      the index state closed-form per epoch: I1 = (base ∪ adm1) \
@@ -1544,7 +1412,7 @@ object PipelineOps {
     * awaited (its outcome ignored) before the persisted handles are
     * released under it, and the card's failure propagates.
     */
-  private[graft] def lcAdmit(s: SparkSession, d: String, idx: AdmIndex,
+  private[graft] def lcAdmit(s: SparkSession, d: String, idx: String,
       deltaOf: DataFrame => DataFrame): (DataFrame, DataFrame) = {
     import scala.concurrent.Await
     import scala.concurrent.duration.Duration
@@ -1564,10 +1432,10 @@ object PipelineOps {
     * surface); the registered build drops both.
     */
   private[graft] def pipelineLifecycleFull(
-      s: SparkSession, d: String): (DataFrame, Seq[LcEpoch], AdmIndex) = {
-    // generation-pinned overlay entry (clone-free; the pristine base
+      s: SparkSession, d: String): (DataFrame, Seq[LcEpoch], String) = {
+    // a fork of the persisted index (clone-free; the pristine base
     // serves every epoch's untouched buckets directly)
-    val idx = overlayEntry(s, d, "lc")
+    val idx = forkIndex(s, d, "lc")
     // one epoch: admit, then (tdMod > 0) fold the admitted signatures
     // in and tombstone the takedown (admitted ids % tdMod == 0) out.
     // ONE admitted checkpoint per epoch: signatures project off
@@ -1910,11 +1778,11 @@ object PipelineOps {
     Q("q220_pipeline_lifecycle", pipelineLifecycle, Some(pipelineLifecycleSql),
       "N-EPOCH INDEX LIFECYCLE — the text admission index's full maintenance loop under one oracle (the vector side's q182/q187/q210/q212 symmetry): THREE epochs of admit -> fold -> takedown on the persisted q217 artifact; epoch 2 re-submits the epoch-1 takedowns (ADMITTED: delete is live) alongside the epoch-1 survivors (REJECTED against their own folded entries: fold is live), epoch 3 cycles both again plus fresh near-dup variants probing base entries that predate both folds — the oracle models each epoch's index state closed-form (I1 = (base ∪ adm1) \\ td1, I2 = (I1 ∪ adm2) \\ td2); spec asserts bucket-set minimality and fold == rebuild at every epoch boundary"),
     Q("q219_pipeline_two_epoch", pipelineTwoEpoch, Some(pipelineTwoEpochSql),
-      "TWO-EPOCH ingest continuity — the fold primitive under an oracle: epoch 1 is q215's admission verbatim, its admitted signatures fold into a clone of the persisted base index (stage-and-swap of only the touched buckets — the end-of-ingest checkpoint q216's accumulated state becomes), and epoch 2 admits a second closed-form delta against the FOLDED artifact: re-submissions of epoch-1 admissions are rejected against their OWN folded entries, the q215 copy branch classifies as before except where its epoch-1 twin was admitted, and reversed copies catch cross-epoch near-dups of the folded reversed twins"),
+      "TWO-EPOCH ingest continuity — the fold primitive under an oracle: epoch 1 is q215's admission verbatim, its admitted signatures fold into a fork of the persisted base index (a rewrite of only the touched buckets — the end-of-ingest checkpoint q216's accumulated state becomes), and epoch 2 admits a second closed-form delta against the FOLDED artifact: re-submissions of epoch-1 admissions are rejected against their OWN folded entries, the q215 copy branch classifies as before except where its epoch-1 twin was admitted, and reversed copies catch cross-epoch near-dups of the folded reversed twins"),
     Q("q218_pipeline_takedown", pipelineTakedown, Some(pipelineTakedownSql),
-      "TAKEDOWN through the curation composite: a deterministic delete set leaves the persisted admission index via q187-shaped tombstones (stage-and-swap of only the touched buckets), group weights refold from the cached near-dup pair list (no re-mining), the per-source card re-emits (final count/checksum/weighted mass/mixture), and every deleted doc is RE-SUBMITTED against the post-takedown state — admitted unless it still near-matches a surviving doc (the inverse of q215's always-rejected assertion); oracle = from-scratch re-curation without the deleted docs + the q215 admission chain"),
+      "TAKEDOWN through the curation composite: a deterministic delete set leaves the persisted admission index via q187-shaped tombstones (a rewrite of only the touched buckets), group weights refold from the cached near-dup pair list (no re-mining), the per-source card re-emits (final count/checksum/weighted mass/mixture), and every deleted doc is RE-SUBMITTED against the post-takedown state — admitted unless it still near-matches a surviving doc (the inverse of q215's always-rejected assertion); oracle = from-scratch re-curation without the deleted docs + the q215 admission chain"),
     Q("q217_pipeline_index_disk", pipelineIncrementDisk, Some(pipelineIncrementSql),
-      "q215's incremental admission with the dup-vs-base stage served by the PERSISTED on-disk MinHash index (the q179 discipline for the text side): banded rows written partitionBy(pb = band x bucket(key)) with signatures inline, the delta probe reads ONLY its candidate buckets through a partition-PRUNED FileScan, and compaction folds admitted signatures into exactly the touched buckets via stage-and-swap (AdmissionIndexSpec: fold == rebuild) — card and oracle shared with q215 verbatim"),
+      "q215's incremental admission with the dup-vs-base stage served by the PERSISTED on-disk MinHash index (the q179 discipline for the text side): banded rows written partitionBy(pb = band x bucket(key)) with signatures inline, the delta probe reads ONLY its candidate buckets through a partition-PRUNED FileScan, and compaction folds admitted signatures into exactly the touched buckets, one log commit each (AdmissionIndexSpec: fold == rebuild) — card and oracle shared with q215 verbatim"),
     Q("q215_pipeline_increment", pipelineIncrement, Some(pipelineIncrementSql),
       "INCREMENTAL composite (the q137 discipline over the whole gate chain): a closed-form delta batch (near-dup variants + exact re-submissions) runs the same quality/lang/PII gates, decontaminates against the same benchmark grams, then is ADMITTED against the q214-curated base corpus's MinHash fingerprint index (delta x index banded join — cost linear in the batch) plus a within-batch self-check; disjoint buckets in pipeline order make the per-source admission card a conservation-complete audit"),
     Q("q214_pipeline_composite", pipelineComposite, Some(pipelineCompositeSql),

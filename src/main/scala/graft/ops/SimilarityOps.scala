@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import graft.io.{Layout, Snapshot}
 import graft.functions.VectorFns._
 import graft.expressions.VecDot.vecDot
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -439,15 +440,12 @@ object SimilarityOps {
   private[graft] def vectorLayoutDir(s: SparkSession, d: String): String = {
     val out = s"${System.getProperty("java.io.tmpdir")}/graft_srvvec_" +
       java.lang.Integer.toHexString(d.hashCode)
-    val marker = java.nio.file.Paths.get(out, "_FIXTURE_OK")
-    if (!graft.Fixtures.markerCurrent(marker, s"$d/embeddings.parquet")) {
-      graft.Fixtures.clearDir(java.nio.file.Paths.get(out))
+    graft.Fixtures.staged(java.nio.file.Paths.get(out), s"$d/embeddings.parquet") {
       val (assigned, _) = ivfRouting(base(s, d), ivfCellCount(s, d))
       // one writer task per cell, clustered by vec_id within the list
       assigned.repartition(col("cell"))
         .sortWithinPartitions("cell", "vec_id")
         .write.partitionBy("cell").mode("overwrite").parquet(out)
-      graft.Fixtures.writeMarker(marker, s"$d/embeddings.parquet")
     }
     out
   }
@@ -2058,17 +2056,14 @@ cb$r AS MATERIALIZED (
     cachedAs(s, d, "simtruth") {
       val dir = s"${System.getProperty("java.io.tmpdir")}/graft_simtruth_" +
         java.lang.Integer.toHexString(d.hashCode)
-      val marker = java.nio.file.Paths.get(dir, "_FIXTURE_OK")
-      // derivation-version token alongside the corpus fingerprint
-      // (r14 ADVICE: a marker keyed only on the corpus would silently
-      // reuse a stale truth set after a simTopKOn/EvalQueries change —
-      // same discipline as amp-fixture-v2 / admidx-v3)
+      // derivation-version token alongside the corpus fingerprint: a
+      // marker keyed only on the corpus would silently reuse a stale
+      // truth set after a simTopKOn/EvalQueries change
       val srcs = Seq(s"$d/embeddings.parquet",
         s"simtruth-v1:topk$TopK-q$EvalQueries")
-      if (!graft.Fixtures.markerCurrent(marker, srcs: _*)) {
+      graft.Fixtures.staged(java.nio.file.Paths.get(dir), srcs: _*) {
         simTopKOn(base(s, d), EvalQueries)
           .write.mode("overwrite").parquet(dir)
-        graft.Fixtures.writeMarker(marker, srcs: _*)
       }
       s.read.parquet(dir)
     }
@@ -2399,7 +2394,7 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
     * routed by the same `ir0` machinery; EVEN qids arrive in batch 0
     * and are served from the gen-0 snapshot (postings exclude the
     * % 7 = 3 delta slice), ODD qids arrive in batch 1 — after the
-    * mid-stream manifest commit — and are served from gen 1 (all
+    * mid-stream commit of generation 1 — and are served from it (all
     * postings). Green == each batch's fetch is snapshot-consistent
     * with the generation committed at its fetch time.
     */
@@ -3013,18 +3008,10 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
   def indexLayout(s: SparkSession, d: String): DataFrame = {
     val out = s"${System.getProperty("java.io.tmpdir")}/graft_ivfidx_" +
       java.lang.Integer.toHexString(d.hashCode)
-    val marker = java.nio.file.Paths.get(out, "_FIXTURE_OK")
     val kit = sharedKitAtNq(s, d)
-    if (!graft.Fixtures.markerCurrent(marker, s"$d/embeddings.parquet")) {
-      val codes = kit.resid.select(col("vec_id"), col("cell"),
-          posexplode(array(pqArgminsOn(col("rv"), kit.books): _*)).as(Seq("s", "c")))
-        .select(col("vec_id"), col("cell"), col("s").cast("long").as("s"),
-                col("c.cid").as("code"),
-                floor(col("c.dist") * 1000000.0).cast("long").as("err_e6"))
-      codes.repartition(col("cell"))
-        .sortWithinPartitions("cell", "vec_id", "s")
+    graft.Fixtures.staged(java.nio.file.Paths.get(out), s"$d/embeddings.parquet") {
+      cellClustered(compactionCodes(kit, lit(true)))
         .write.partitionBy("cell").mode("overwrite").parquet(out)
-      graft.Fixtures.writeMarker(marker, s"$d/embeddings.parquet")
     }
     // the probe: query 0's IvfProbes cells — metadata-scale collect
     val probeCells = kit.probes.filter(col("qid") === 0)
@@ -3062,10 +3049,10 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
   //      delta-touched cells through a partition-PRUNED scan — at
   //      100 TB an hourly delta touches a small fraction of 50k
   //      cells, and untouched cells are never read OR rewritten —
-  //      (3) merges and rewrites those cells via a stage-and-swap
-  //      (write merged lists to a staging dir, then atomically swap
-  //      the touched cell directories — the manifest-commit a real
-  //      compactor does, so readers never see a half-written list).
+  //      (3) merges those cells into a fresh data directory and
+  //      commits it as the layout's next log entry (graft.io.Layout),
+  //      so readers see the old lists or the new ones, never a
+  //      half-written list.
   //      The merge plan carries ONE exchange, on the DELTA side only:
   //      the touched base lists are already cell-pure files, so each
   //      base task reads one clustered list and writes it straight
@@ -3077,34 +3064,20 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
   //      that minor compaction and a from-scratch rebuild are
   //      hash-indistinguishable. ----
   def indexCompaction(s: SparkSession, d: String): DataFrame = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_lsmidx_" +
-      java.lang.Integer.toHexString(d.hashCode)
-    val marker = java.nio.file.Paths.get(out, "_COMPACTED_OK")
+    val out = compactionDir(d)
     val kit = sharedKitAtNq(s, d)
-    if (!graft.Fixtures.markerCurrent(marker, s"$d/embeddings.parquet")) {
-      graft.Fixtures.clearDir(java.nio.file.Paths.get(out))
+    graft.Fixtures.staged(java.nio.file.Paths.get(out), s"$d/embeddings.parquet") {
       // bulk load: the base index = corpus minus the arrival slice
-      compactionCodes(kit, col("vec_id") % 7 =!= 3)
-        .repartition(col("cell"))
-        .sortWithinPartitions("cell", "vec_id", "s")
-        .write.partitionBy("cell").mode("overwrite").parquet(out)
+      val base = Layout.create(out,
+        cellClustered(compactionCodes(kit, col("vec_id") % 7 =!= 3)), "cell")
       // the delta: the q173 arrival slice's codes, materialized so the
-      // merge plan below is exactly Union(prunedBaseScan, Exchange(delta))
-      val delta = compactionCodes(kit, col("vec_id") % 7 === 3)
-        .localCheckpoint(true)
-      val (merged, touched) = compactionMerge(s, out, delta)
-      stageAndSwap(out, merged, touched)
-      graft.Fixtures.writeMarker(marker, s"$d/embeddings.parquet")
+      // merge plan is exactly Union(prunedBaseScan, Exchange(delta))
+      foldCells(s, base, compactionDeltaFor(s, d))
+      ()
     }
     // q179's probe against the compacted index — must be
     // hash-indistinguishable from the full rebuild
-    val probeCells = kit.probes.filter(col("qid") === 0)
-      .select("cell").collect().map(_.getLong(0)).sorted
-    openCells(s, out, probeCells.toIndexedSeq)
-      .filter(col("cell").isin(probeCells: _*))
-      .select(col("cell").cast("long").as("cell"), col("vec_id"),
-              col("s"), col("code"), col("err_e6"))
-      .orderBy("cell", "vec_id", "s")
+    probeReadBack(s, d, out)
   }
 
   /** The delta/base code derivation shared by q182's two stages —
@@ -3119,7 +3092,13 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
               col("c.cid").as("code"),
               floor(col("c.dist") * 1000000.0).cast("long").as("err_e6"))
 
-  /** q182's lazy merge relation over an existing base layout — split
+  /** A cell layout's write order: one writer task per cell, each list
+    * one clustered run.
+    */
+  private[graft] def cellClustered(codes: DataFrame): DataFrame =
+    codes.repartition(col("cell")).sortWithinPartitions("cell", "vec_id", "s")
+
+  /** q182's lazy merge relation over a committed cell layout — split
     * out so PlanShapeSpec can hold its physical plan: one pruned
     * FileScan on the base (PartitionFilters non-empty) unioned with
     * ONE Exchange on the delta, and nothing corpus-scale. Returns the
@@ -3127,23 +3106,28 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
     * bounded by min(delta rows, k)).
     */
   private[graft] def compactionMerge(
-      s: SparkSession, out: String, delta: DataFrame): (DataFrame, Seq[Long]) = {
+      s: SparkSession, base: Snapshot, delta: DataFrame): (DataFrame, Seq[Long]) = {
     val touched = delta.select("cell").distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
-    val baseTouched = openCells(s, out, touched)
-      .filter(col("cell").isin(touched: _*))
-      .select(col("vec_id"), col("cell").cast("long").as("cell"),
-              col("s"), col("code"), col("err_e6"))
+    val baseTouched = base.open(s, touched)
+      .select("vec_id", "cell", "s", "code", "err_e6")
     val merged = baseTouched.unionByName(
-      delta.repartition(col("cell"))
-        .sortWithinPartitions("cell", "vec_id", "s")
-        .select("vec_id", "cell", "s", "code", "err_e6"))
+      cellClustered(delta).select("vec_id", "cell", "s", "code", "err_e6"))
     (merged, touched)
   }
 
-  /** The arrival-slice delta codes over the existing fixture — the
-    * spec-side handle for building [[compactionMerge]]'s plan without
-    * re-running the bulk load.
+  /** Fold `delta`'s postings into the cell layout `base` (q182, q188,
+    * q191): the touched cells are merged into a fresh data directory
+    * and committed as the next entry, with `meta` over the base's.
+    */
+  private[graft] def foldCells(s: SparkSession, base: Snapshot, delta: DataFrame,
+                               meta: Map[String, String] = Map.empty): Snapshot = {
+    val (merged, touched) = compactionMerge(s, base, delta)
+    Layout.rewrite(base, merged, touched, meta)
+  }
+
+  /** The arrival-slice delta codes — q182's fold input, and the
+    * spec-side handle for building [[compactionMerge]]'s plan.
     */
   private[graft] def compactionDeltaFor(s: SparkSession, d: String): DataFrame =
     compactionCodes(sharedKitAtNq(s, d),
@@ -3156,11 +3140,10 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
       s: SparkSession, d: String, pred: Column): DataFrame =
     compactionCodes(sharedKitAtNq(s, d), pred)
 
-  /** Open ONLY the given partition subdirectories of an on-disk
+  /** Open ONLY the given partition subdirectories of q179's write-once
     * layout (`basePath` keeps the partition columns). A root open
     * pays an O(all-partitions) partition-DISCOVERY listing BEFORE any
-    * pruning applies, and every compaction/delete invalidates the
-    * listing cache — measured on the text-side twin at an 8000-dir
+    * pruning applies — measured on the text-side twin at an 8000-dir
     * layout: 14 s per maintenance op via the root vs ~1.9 s targeted,
     * flat across a 100x corpus (bench_evidence/r15_idx_prune.md). At
     * deployment cell counts (50 k) the listing term would dominate
@@ -3171,9 +3154,6 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
     */
   private[graft] def openPartDirs(
       s: SparkSession, dir: String, subdirs: Seq[String]): DataFrame = {
-    // existence resolves through the path's Hadoop FileSystem (r15
-    // ADVICE: java.nio only ever worked on local disk — this is the
-    // code path a cluster runs against HDFS/S3)
     val paths = subdirs.map(sd => s"$dir/$sd").filter(graft.io.LayoutFs.exists)
     if (paths.isEmpty) s.read.parquet(dir).filter(lit(false))
     else s.read.option("basePath", dir).parquet(paths: _*)
@@ -3183,43 +3163,26 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
       s: SparkSession, dir: String, cells: Seq[Long]): DataFrame =
     openPartDirs(s, dir, cells.map(c => s"cell=$c"))
 
-  /** The stage-and-swap commit shared by q182/q187/q188 (and, via
-    * `partCol`, by the q217 text admission index): write the merged
-    * partitions to a staging dir, then atomically replace exactly
-    * the touched partition directories (a fully-emptied partition
-    * writes no stage dir — the cleared destination IS its correct
-    * final state).
-    */
-  private[graft] def stageAndSwap(
-      out: String, merged: DataFrame, touched: Seq[Long],
-      partCol: String = "cell"): Unit = {
-    import graft.io.LayoutFs
-    val stage = out + "_stage"
-    LayoutFs.deleteTree(stage)
-    merged.write.partitionBy(partCol).mode("overwrite").parquet(stage)
-    touched.foreach { c =>
-      val src = s"$stage/$partCol=$c"
-      val dst = s"$out/$partCol=$c"
-      LayoutFs.deleteTree(dst)
-      if (LayoutFs.exists(src)) LayoutFs.rename(src, dst)
-    }
-    LayoutFs.deleteTree(stage)
-  }
-
-  /** q179's probe read-back tail, shared by every on-disk index lane:
-    * query 0's probe cells read through the pruned scan.
+  /** q179's probe read-back tail, shared by every committed cell
+    * layout: query 0's probe cells read through the pruned scan.
     */
   private[graft] def probeReadBack(
-      s: SparkSession, d: String, dir: String): DataFrame = {
-    val kit = sharedKitAtNq(s, d)
-    val probeCells = kit.probes.filter(col("qid") === 0)
-      .select("cell").collect().map(_.getLong(0)).sorted
-    openCells(s, dir, probeCells.toIndexedSeq)
-      .filter(col("cell").isin(probeCells: _*))
-      .select(col("cell").cast("long").as("cell"), col("vec_id"),
-              col("s"), col("code"), col("err_e6"))
+      s: SparkSession, d: String, root: String): DataFrame =
+    pinnedRead(s, Layout.snapshot(root), probeCellsQ0(s, d))
       .orderBy("cell", "vec_id", "s")
-  }
+
+  /** Query 0's IvfProbes cells — a metadata-scale collect. */
+  private def probeCellsQ0(s: SparkSession, d: String): Seq[Long] =
+    sharedKitAtNq(s, d).probes.filter(col("qid") === 0)
+      .select("cell").collect().map(_.getLong(0)).sorted.toSeq
+
+  /** The postings of `cells` in one committed state of a cell layout —
+    * q191's pinned read, q193/q212's per-batch fetch, the q182/q187
+    * read-back. Resolving the state reads one log entry: no Spark job.
+    */
+  private[graft] def pinnedRead(
+      s: SparkSession, snap: Snapshot, cells: Seq[Long]): DataFrame =
+    snap.open(s, cells).select("cell", "vec_id", "s", "code", "err_e6")
 
   /** The shared rebuild oracle text — q182/q188 register it as their
     * twin (green == indistinguishable from a full rebuild).
@@ -3241,11 +3204,11 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
   //      back ONLY the tombstone-touched cells through a
   //      partition-PRUNED scan, drops the deleted postings with a
   //      broadcast LEFT ANTI join (map-side — deletes never shuffle
-  //      anything), and rewrites those cells via the q182
-  //      stage-and-swap. The merge plan carries ZERO exchanges: the
-  //      touched lists ride partition-aligned and the anti join
-  //      broadcasts, so a delete costs the touched lists, never the
-  //      index. Oracle = the rebuild-from-retained-corpus derivation
+  //      anything), and commits those cells as q182 does (a fresh
+  //      data directory, then the next log entry). The merge plan
+  //      carries ZERO exchanges: the touched lists ride
+  //      partition-aligned and the anti join broadcasts, so a delete
+  //      costs the touched lists, never the index. Oracle = the rebuild-from-retained-corpus derivation
   //      (q179's twin + the delete predicate), so the green row IS
   //      the proof that tombstone compaction == rebuild-without-the-
   //      deleted; DeleteSpec additionally holds the FULL index equal
@@ -3254,34 +3217,18 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
   private[graft] val DeletePredSql = "l.vec_id % 11 <> 4"
 
   def indexDelete(s: SparkSession, d: String): DataFrame = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_delidx_" +
-      java.lang.Integer.toHexString(d.hashCode)
-    val marker = java.nio.file.Paths.get(out, "_DELETED_OK")
+    val out = deleteDir(d)
     val kit = sharedKitAtNq(s, d)
-    if (!graft.Fixtures.markerCurrent(marker, s"$d/embeddings.parquet")) {
-      graft.Fixtures.clearDir(java.nio.file.Paths.get(out))
+    graft.Fixtures.staged(java.nio.file.Paths.get(out), s"$d/embeddings.parquet") {
       // bulk load: the full-corpus index (q179's shape)
-      compactionCodes(kit, lit(true))
-        .repartition(col("cell"))
-        .sortWithinPartitions("cell", "vec_id", "s")
-        .write.partitionBy("cell").mode("overwrite").parquet(out)
-      // the tombstone set: delete-window-scale (vec_id, cell) pairs
-      val tombstones = kit.assigned.filter(col("vec_id") % 11 === 4)
-        .select("vec_id", "cell").localCheckpoint(true)
-      val (survivors, touched) = deleteMerge(s, out, tombstones)
-      // a cell whose every posting was tombstoned writes no stage
-      // dir — stageAndSwap leaves its cleared destination, which IS
-      // the correct final state
-      stageAndSwap(out, survivors, touched)
-      graft.Fixtures.writeMarker(marker, s"$d/embeddings.parquet")
+      val base = Layout.create(out, cellClustered(compactionCodes(kit, lit(true))), "cell")
+      // the tombstone set: delete-window-scale (vec_id, cell) pairs; a
+      // cell whose every posting is tombstoned leaves the layout
+      val (survivors, touched) = deleteMerge(s, base, deleteTombstonesFor(s, d))
+      Layout.rewrite(base, survivors, touched)
+      ()
     }
-    val probeCells = kit.probes.filter(col("qid") === 0)
-      .select("cell").collect().map(_.getLong(0)).sorted
-    openCells(s, out, probeCells.toIndexedSeq)
-      .filter(col("cell").isin(probeCells: _*))
-      .select(col("cell").cast("long").as("cell"), col("vec_id"),
-              col("s"), col("code"), col("err_e6"))
-      .orderBy("cell", "vec_id", "s")
+    probeReadBack(s, d, out)
   }
 
   /** q187's lazy merge relation: the tombstone-touched cells' postings
@@ -3290,13 +3237,11 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
     * survivor relation plus the touched cell ids.
     */
   private[graft] def deleteMerge(
-      s: SparkSession, out: String, tombstones: DataFrame): (DataFrame, Seq[Long]) = {
+      s: SparkSession, base: Snapshot, tombstones: DataFrame): (DataFrame, Seq[Long]) = {
     val touched = tombstones.select("cell").distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
-    val survivors = openCells(s, out, touched)
-      .filter(col("cell").isin(touched: _*))
-      .select(col("vec_id"), col("cell").cast("long").as("cell"),
-              col("s"), col("code"), col("err_e6"))
+    val survivors = base.open(s, touched)
+      .select("vec_id", "cell", "s", "code", "err_e6")
       .join(broadcast(tombstones.select("vec_id")), Seq("vec_id"), "left_anti")
     (survivors, touched)
   }
@@ -3355,10 +3300,8 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
     val probeCells = kit.probes.select("cell").distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
     // the serving read: probed cells' postings only, pruned on disk
-    val postings = openCells(s, compactionDir(d), probeCells)
-      .filter(col("cell").isin(probeCells: _*))
-      .select(col("vec_id"), col("cell").cast("long").as("cell"),
-              col("s"), col("code"))
+    val postings = Layout.snapshot(compactionDir(d)).open(s, probeCells)
+      .select("vec_id", "cell", "s", "code")
       .join(broadcast(kit.probes.select(col("qid"), col("cell"))), Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
     val cand = postings.filter(col("s") === 0).select("qid", "vec_id")
@@ -3380,157 +3323,52 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
     val kit = sharedKitAtNq(s, d)
     val probeCells = kit.probes.select("cell").distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
-    openCells(s, compactionDir(d), probeCells)
-      .filter(col("cell").isin(probeCells: _*))
-      .select(col("vec_id"), col("cell").cast("long").as("cell"),
-              col("s"), col("code"))
+    Layout.snapshot(compactionDir(d)).open(s, probeCells)
+      .select("vec_id", "cell", "s", "code")
       .join(broadcast(kit.probes.select(col("qid"), col("cell"))), Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
   }
 
-  // ---- q191: VERSIONED INDEX MANIFEST — generation-pinned reads,
-  //      the snapshot-isolation piece the LSM family (q179 layout,
-  //      q182 compaction, q187 deletes, q188 stream fold) still
-  //      lacked: a real serving tier swaps indexes ATOMICALLY and
-  //      keeps old snapshots readable while queries pinned to them
-  //      drain. The manifest is the Iceberg/Delta idea at cell
-  //      granularity: generation g0 = the bulk-loaded base layout,
-  //      g1 = the compaction fold of the arrival delta written to its
-  //      OWN directory (never touching g0's files), and a tiny
-  //      manifest relation (gen, cell, dir) — committed LAST, so the
-  //      manifest write IS the atomic swap: a reader pinned at gen 0
-  //      resolves every cell to g0 and cannot observe a half-written
-  //      g1, and after the commit a reader pinned at gen 1 resolves
-  //      delta-touched cells to g1 and untouched cells to g0 (reads
-  //      span generations — the whole point of the manifest). Owner
-  //      resolution is manifest-scale (≤ k cells; the only collect),
-  //      and each generation directory is read through a
-  //      partition-PRUNED FileScan on exactly its owned probe cells.
-  //      Output = query 0's probe postings under BOTH pins; oracle
-  //      derives pin 1 from the full corpus and pin 0 from the
-  //      corpus minus the delta slice — green proves time travel
-  //      (the old snapshot is byte-identical to pre-delta state) AND
-  //      the post-swap read (identical to a full rebuild). ----
+  // ---- q191: VERSIONED INDEX — generation-pinned reads, the
+  //      snapshot-isolation piece the LSM family (q179 layout, q182
+  //      compaction, q187 deletes, q188 stream fold) still lacked: a
+  //      real serving tier swaps indexes ATOMICALLY and keeps old
+  //      snapshots readable while queries pinned to them drain. The
+  //      store is one graft.io.Layout: log entry 0 = the bulk-loaded
+  //      base layout, entry 1 = the compaction fold of the arrival
+  //      delta written to its OWN data directory (never touching entry
+  //      0's files). Committing entry 1 IS the atomic swap: a reader
+  //      pinned at 0 resolves every cell to the base directory and
+  //      cannot observe a half-written fold, and a reader pinned at 1
+  //      resolves delta-touched cells to the fold's directory and
+  //      untouched cells to the base's (reads span directories).
+  //      Owner resolution reads one small log entry — no Spark job —
+  //      and each data directory is read through a partition-PRUNED
+  //      FileScan on exactly its owned probe cells. Output = query 0's
+  //      probe postings under BOTH pins; oracle derives pin 1 from the
+  //      full corpus and pin 0 from the corpus minus the delta slice —
+  //      green proves time travel (the old snapshot is byte-identical
+  //      to pre-delta state) AND the post-swap read (identical to a
+  //      full rebuild). ----
   def indexVersions(s: SparkSession, d: String): DataFrame = {
     val out = versionDir(d)
-    val marker = java.nio.file.Paths.get(out, "_VERSIONED_OK")
     val kit = sharedKitAtNq(s, d)
-    if (!graft.Fixtures.markerCurrent(marker, s"$d/embeddings.parquet")) {
-      graft.Fixtures.clearDir(java.nio.file.Paths.get(out))
+    graft.Fixtures.staged(java.nio.file.Paths.get(out), s"$d/embeddings.parquet") {
       // generation 0: bulk load of the pre-delta corpus
-      compactionCodes(kit, col("vec_id") % 7 =!= 3)
-        .repartition(col("cell"))
-        .sortWithinPartitions("cell", "vec_id", "s")
-        .write.partitionBy("cell").mode("overwrite").parquet(s"$out/g0")
-      commitManifest(s, out, gen = 0, dir = "g0", cells = listCells(s"$out/g0"))
-      // generation 1: the q182 fold, written to its OWN directory —
-      // g0's files are never modified, so pin-0 readers stay correct
-      val delta = compactionCodes(kit, col("vec_id") % 7 === 3)
-        .localCheckpoint(true)
-      val touched = delta.select("cell").distinct()
-        .collect().map(_.getLong(0)).sorted.toSeq
-      val merged = openCells(s, s"$out/g0", touched)
-        .filter(col("cell").isin(touched: _*))
-        .select(col("vec_id"), col("cell").cast("long").as("cell"),
-                col("s"), col("code"), col("err_e6"))
-        .unionByName(delta.repartition(col("cell"))
-          .sortWithinPartitions("cell", "vec_id", "s")
-          .select("vec_id", "cell", "s", "code", "err_e6"))
-      merged.write.partitionBy("cell").mode("overwrite").parquet(s"$out/g1")
-      // the ATOMIC swap: commit gen 1's manifest rows last
-      commitManifest(s, out, gen = 1, dir = "g1", cells = touched)
-      graft.Fixtures.writeMarker(marker, s"$d/embeddings.parquet")
+      val g0 = Layout.create(out,
+        cellClustered(compactionCodes(kit, col("vec_id") % 7 =!= 3)), "cell",
+        Map("gen" -> "0"))
+      // generation 1: the q182 fold, in its own data directory
+      foldCells(s, g0, compactionDeltaFor(s, d), Map("gen" -> "1"))
+      ()
     }
-    val probeCells = kit.probes.filter(col("qid") === 0)
-      .select("cell").collect().map(_.getLong(0)).sorted.toSeq
+    val probeCells = probeCellsQ0(s, d)
     Seq(0, 1).map { pin =>
-      genPinnedRead(s, out, pin, probeCells)
+      pinnedRead(s, Layout.snapshot(out, Some(pin.toLong)), probeCells)
         .select(lit(pin).as("gen_pin"), col("cell"), col("vec_id"),
                 col("s"), col("code"), col("err_e6"))
     }.reduce(_ unionByName _)
       .orderBy("gen_pin", "cell", "vec_id", "s")
-  }
-
-  /** One manifest commit: a (cell, dir) relation written under
-    * manifest/gen=N — append-only, generation-partitioned, and tiny
-    * (cell-granularity metadata, never postings).
-    */
-  private def commitManifest(
-      s: SparkSession, out: String, gen: Int, dir: String, cells: Seq[Long]): Unit = {
-    import s.implicits._
-    cells.map(c => (c, dir)).toDF("cell", "dir")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$out/manifest/gen=$gen")
-  }
-
-  /** The cells a generation directory owns — pure directory-listing
-    * metadata (cell=N partition dirs), no data files opened.
-    */
-  private def listCells(dir: String): Seq[Long] =
-    graft.io.LayoutFs.listSubdirNames(dir)
-      .filter(_.startsWith("cell="))
-      .map(_.substring(5).toLong).sorted
-
-  /** A generation-pinned probe read: resolve each probe cell's owner
-    * directory from the manifest (max gen ≤ pin — manifest-scale, the
-    * only collect), then read each owner directory through a
-    * partition-PRUNED scan of exactly its owned cells.
-    */
-  private[graft] def genPinnedRead(
-      s: SparkSession, out: String, pin: Int, probeCells: Seq[Long]): DataFrame =
-    manifestPinnedRead(s, s"$out/manifest", out, pin, probeCells)
-
-  /** The same resolution against a manifest living OUTSIDE the data
-    * root — q193's serving stream keeps a run-local manifest (the
-    * mid-stream commit mutates it) over q191's immutable generation
-    * directories.
-    */
-  private[graft] def manifestPinnedRead(
-      s: SparkSession, manifestDir: String, dataRoot: String, pin: Int,
-      probeCells: Seq[Long]): DataFrame = {
-    // a vacuumed store records its pin floor — generations below it
-    // were reclaimed, and serving them would silently return partial
-    // cells (the g0 scan finds no files); refuse LOUDLY instead. The
-    // floor lives beside whichever layer the vacuum ran against: the
-    // data root (physical vacuumTo) or the manifest's own root (the
-    // logical vacuumManifest a run-local overlay uses) — check both.
-    (Seq(s"$dataRoot/_VACUUM_FLOOR") ++ floorPathFor(manifestDir))
-      .distinct
-      .flatMap(graft.io.LayoutFs.readSmallFile)
-      .foreach { raw =>
-        val floor = raw.trim.toInt
-        require(pin >= floor,
-          s"pin $pin is below the vacuum floor $floor: its generation data was reclaimed")
-      }
-    val owners = s.read.parquet(manifestDir)
-      .filter(col("gen") <= pin && col("cell").isin(probeCells: _*))
-      .groupBy("cell").agg(max(struct(col("gen"), col("dir"))).as("o"))
-      .select(col("cell"), col("o.dir").as("dir"))
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    // explicit schema: a fully-vacuumed generation directory may hold
-    // nothing but _SUCCESS, so the base cannot be inferred from files
-    val empty = s.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(
-        Seq("cell", "vec_id", "s", "code", "err_e6").map(n =>
-          org.apache.spark.sql.types.StructField(
-            n, org.apache.spark.sql.types.LongType))))
-    owners.groupBy(_._2).toSeq.sortBy(_._1).map { case (dir, cs) =>
-      val cells = cs.map(_._1).sorted
-      openCells(s, s"$dataRoot/$dir", cells.toIndexedSeq)
-        .filter(col("cell").isin(cells: _*))
-        .select(col("cell").cast("long").as("cell"), col("vec_id"),
-                col("s"), col("code"), col("err_e6"))
-    }.foldLeft(empty)(_ unionByName _)
-  }
-
-  /** The `_VACUUM_FLOOR` path beside a manifest directory (its parent
-    * root) — None for a degenerate path with no parent.
-    */
-  private def floorPathFor(manifestDir: String): Option[String] = {
-    val trimmed = manifestDir.stripSuffix("/")
-    val cut = trimmed.lastIndexOf('/')
-    if (cut <= 0) None else Some(trimmed.substring(0, cut) + "/_VACUUM_FLOOR")
   }
 
   /** q191's fixture directory — for specs needing the on-disk state. */
@@ -3538,188 +3376,56 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
     s"${System.getProperty("java.io.tmpdir")}/graft_genidx_" +
       java.lang.Integer.toHexString(d.hashCode)
 
+  /** A run-local layout over q191's store holding its generations as
+    * entries 0..`upTo` (q193, q210, q212): entry 0 forks the store's
+    * generation 0, each later entry adopts the next generation. The
+    * store is never written.
+    */
+  private[graft] def forkVersions(s: SparkSession, d: String, root: String,
+                                  upTo: Int): Snapshot = {
+    indexVersions(s, d) // stages the store if absent
+    val store = versionDir(d)
+    (1 to upTo).foldLeft(Layout.fork(Layout.snapshot(store, Some(0L)), root)) {
+      (lane, g) => Layout.adopt(lane, Layout.snapshot(store, Some(g.toLong)))
+    }
+  }
+
   // ---- q210: GENERATION VACUUM — the lifecycle piece q191/q193 left
-  //      open (r11 verdict "what's missing" #4): nothing reclaimed
-  //      superseded generation data after a swap, so the store grew
-  //      forever. The vacuum is MANIFEST-DRIVEN: given a pin FLOOR
-  //      (the lowest generation any live reader may still hold), a
-  //      cell's data under generation g is reclaimable iff some newer
-  //      generation <= floor owns that cell — resolution is the same
-  //      metadata-scale manifest fold every pinned read does, and the
-  //      deletes are per-cell partition directories (never whole
-  //      generations: g0 keeps serving every cell g1 did not touch —
-  //      reads SPAN generations, so the vacuum must too). The floor is
-  //      then recorded beside the vacuumed layer and pinned reads
-  //      BELOW it refuse loudly (a pin-0 read against a vacuumed store
-  //      would otherwise silently return partial cells). The vacuum
-  //      SPLITS Iceberg/Delta-style: the lane commits the METADATA
-  //      half (vacuumManifest — floor + superseded manifest rows
-  //      dropped) against a run-local manifest over the pristine
-  //      store, clone-free; the PHYSICAL half (vacuumTo — delete the
-  //      unreferenced per-cell dirs) is the GC a deployment schedules
-  //      on a store it owns, proven by VersionSpec on spec-local
-  //      copies. The lane reads pin 1 BEFORE, vacuums to floor 1,
-  //      reads pin 1 AFTER: oracle = the q191 pin-1 relation TWICE
-  //      (vacuum must be invisible at or above the floor), plus the
-  //      reclaimed-cell count in closed form (cells with both a
-  //      pre-delta and a delta member — exactly the g0 partitions g1
-  //      superseded). VersionSpec additionally vacuums while a pin-1
-  //      read is in flight. ----
+  //      open: nothing reclaimed superseded generation data after a
+  //      swap, so the store grew forever. Given a pin FLOOR (the
+  //      lowest generation any live reader may still hold), the vacuum
+  //      commits the raised floor as the next log entry; the data only
+  //      entries below the floor reference — per (cell, directory), so
+  //      a base directory keeps serving every cell the fold did not
+  //      touch — is then reclaimable, and pinned reads BELOW the floor
+  //      refuse loudly (a pin-0 read of a reclaimed store would
+  //      otherwise silently return partial cells). The vacuum splits
+  //      Delta-style: the lane commits the floor on a run-local fork
+  //      of the store (Layout.vacuum — metadata only, no data job),
+  //      and the physical half (Layout.gc — delete the unreferenced
+  //      partition directories) runs only on a store the caller owns,
+  //      proven by VersionSpec. The lane reads pin 1 BEFORE, vacuums
+  //      to floor 1, reads pin 1 AFTER: oracle = the q191 pin-1
+  //      relation TWICE (vacuum must be invisible at or above the
+  //      floor), plus the reclaimed-cell count in closed form (cells
+  //      with both a pre-delta and a delta member — exactly the base
+  //      partitions the fold superseded). VersionSpec additionally
+  //      reclaims while a pin-1 read is in flight. ----
   private[graft] def vacuumDir(d: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_vacidx_" +
       java.lang.Integer.toHexString(d.hashCode)
 
-  /** Zero-data-byte clone of a layout tree (hardlinks on the local
-    * scheme — r15 VERDICT #2: the byte-copy this replaces made every
-    * mutation lane pay an O(index) setup term; linked inodes are safe
-    * because mutations only ever REPLACE partition files via
-    * stageAndSwap, never write in place). See
-    * [[graft.io.LayoutFs.cloneTree]].
-    */
-  private[graft] def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit =
-    graft.io.LayoutFs.cloneTree(src.toString, dst.toString)
-
-  /** SPEC-ONLY since r17: clone the q191 generation store into a
-    * throwaway root for proving the PHYSICAL vacuum half ([[vacuumTo]])
-    * — the registered lanes (q210/q212) enter via a run-local manifest
-    * over the pristine store instead ([[vacuumManifest]]) and never
-    * clone.
-    */
-  private[graft] def cloneVersionStore(s: SparkSession, d: String): String =
-    cloneVersionStoreTo(s, d, s"${vacuumDir(d)}_phys")
-
-  /** Clone into an explicit root (spec scaffolding for physical-vacuum
-    * proofs; see [[cloneVersionStore]]).
-    */
-  private[graft] def cloneVersionStoreTo(s: SparkSession, d: String,
-                                         root: String): String = {
-    indexVersions(s, d) // stages the source store if absent
-    graft.io.LayoutFs.deleteTree(root)
-    graft.io.LayoutFs.cloneTree(versionDir(d), root)
-    root
-  }
-
-  /** Reclaim generation data superseded at `floor`: delete each
-    * (gen, cell) partition directory whose cell is owned by a NEWER
-    * generation <= floor, then record the floor so lower pins refuse.
-    * Returns the distinct cells reclaimed. Metadata-scale throughout —
-    * the manifest fold is the only collect, deletes are directory ops.
-    */
-  private[graft] def vacuumTo(s: SparkSession, root: String, floor: Int): Seq[Long] = {
-    // The recorded floor is monotone (r12 advice): a later vacuum with a
-    // LOWER floor must not lower it — generation data at the old floor
-    // was already reclaimed, and a lowered record would let
-    // manifestPinnedRead accept pins whose cells silently read partial.
-    val floorPath = s"$root/_VACUUM_FLOOR"
-    val recorded = graft.io.LayoutFs.readSmallFile(floorPath)
-      .map(_.trim.toInt).getOrElse(Int.MinValue)
-    val eff = math.max(recorded, floor)
-    val rows = s.read.parquet(s"$root/manifest")
-      .filter(col("gen") <= eff)
-      .select(col("gen").cast("int"), col("cell"), col("dir"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getString(2)))
-    val ownerGen = rows.groupBy(_._2).map { case (c, rs) => c -> rs.map(_._1).max }
-    val stale = rows.filter { case (g, c, _) => g < ownerGen(c) }
-    stale.foreach { case (_, c, dir) =>
-      graft.io.LayoutFs.deleteTree(s"$root/$dir/cell=$c")
-    }
-    graft.io.LayoutFs.writeSmallFile(floorPath, eff.toString)
-    stale.map(_._2).distinct.sorted.toSeq
-  }
-
-  /** The METADATA half of the vacuum — the Iceberg/Delta split: record
-    * the floor and drop superseded (gen, cell) rows from the MANIFEST,
-    * leaving generation data untouched. Pinned reads at/above the
-    * floor are unchanged (owner resolution never picks a superseded
-    * row); reads below refuse on the recorded floor. Physical
-    * reclamation ([[vacuumTo]] — delete the now-unreferenced dirs) is
-    * the separate GC step a deployment schedules against a store it
-    * OWNS; the registered lanes run over the shared pristine fixture
-    * through a run-local manifest, so they commit exactly this
-    * metadata half and never need a cloned store (r16 verdict #3 —
-    * the clone's non-`file`-scheme byte-copy fallback leaves the
-    * timed path entirely). Returns the reclaimed cells — identical to
-    * what vacuumTo would return for the same manifest state
-    * (VersionSpec proves the physical half on spec-local copies).
-    */
-  private[graft] def vacuumManifest(
-      s: SparkSession, manifestDir: String, floor: Int): Seq[Long] = {
-    val floorPath = floorPathFor(manifestDir).getOrElse(
-      sys.error(s"manifest dir $manifestDir has no parent for a floor"))
-    val recorded = graft.io.LayoutFs.readSmallFile(floorPath)
-      .map(_.trim.toInt).getOrElse(Int.MinValue)
-    val eff = math.max(recorded, floor)
-    val rows = s.read.parquet(manifestDir)
-      .filter(col("gen") <= eff)
-      .select(col("gen").cast("int"), col("cell"), col("dir"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getString(2)))
-    val ownerGen = rows.groupBy(_._2).map { case (c, rs) => c -> rs.map(_._1).max }
-    val stale = rows.filter { case (g, c, _) => g < ownerGen(c) }
-    // rewrite only the generations that lost rows (manifest-scale)
-    stale.groupBy(_._1).foreach { case (g, gone) =>
-      val goneCells = gone.map(_._2).toSet
-      val keep = rows.filter { case (rg, c, _) => rg == g && !goneCells.contains(c) }
-      val genDir = s"$manifestDir/gen=$g"
-      if (keep.isEmpty) graft.io.LayoutFs.deleteTree(genDir)
-      else {
-        import s.implicits._
-        keep.map { case (_, c, dir) => (c, dir) }.toSeq.toDF("cell", "dir")
-          .coalesce(1).write.mode("overwrite").parquet(genDir)
-      }
-    }
-    graft.io.LayoutFs.writeSmallFile(floorPath, eff.toString)
-    stale.map(_._2).distinct.sorted.toSeq
-  }
-
-  /** Latest committed generation of a run-local manifest, resolved
-    * from its directory layout: gen=<N> dirs are the lane's atomic
-    * commit unit (seedManifest / the mid-stream gen write create them
-    * whole; vacuumManifest deletes a generation's dir outright when
-    * it empties), so the max dir number IS the max committed gen.
-    * r18: q193/q212 resolved the pin with a per-micro-batch Spark job
-    * (parquet read + max aggregate) for what is a metadata question —
-    * this is one filesystem listing, the same class of operation the
-    * manifest exists to make cheap.
-    */
-  private[graft] def latestGen(manifestDir: String): Int =
-    graft.io.LayoutFs.listSubdirNames(manifestDir)
-      .filter(_.startsWith("gen="))
-      .map(_.stripPrefix("gen=").toInt)
-      .max
-
-  /** Seed a run-local manifest from a store's committed one (tiny —
-    * cell-granularity metadata rows, never postings).
-    */
-  private[graft] def seedManifest(
-      s: SparkSession, srcManifest: String, dstManifest: String,
-      gens: Seq[Int]): Unit =
-    gens.foreach { g =>
-      s.read.parquet(srcManifest).filter(col("gen") === g)
-        .select("cell", "dir").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dstManifest/gen=$g")
-    }
-
   def indexVacuum(s: SparkSession, d: String): DataFrame = {
-    // generation-pinned overlay entry (r16 verdict #3): the pristine
-    // store stays the data root; the lane owns only a run-local
-    // manifest + floor and vacuums THAT (the metadata half — see
-    // vacuumManifest). No clone, O(manifest) entry on every scheme.
-    indexVersions(s, d) // stages the pristine store if absent
-    val pristine = versionDir(d)
-    val laneRoot = vacuumDir(d)
-    graft.io.LayoutFs.deleteTree(laneRoot)
-    val laneManifest = s"$laneRoot/manifest"
-    seedManifest(s, s"$pristine/manifest", laneManifest, Seq(0, 1))
-    val kit = sharedKitAtNq(s, d)
-    val probeCells = kit.probes.filter(col("qid") === 0)
-      .select("cell").collect().map(_.getLong(0)).sorted.toSeq
+    val lane = vacuumDir(d)
+    forkVersions(s, d, lane, upTo = 1)
+    val probeCells = probeCellsQ0(s, d)
     def read(phase: String) =
-      manifestPinnedRead(s, laneManifest, pristine, 1, probeCells)
+      pinnedRead(s, Layout.snapshot(lane, Some(1L)), probeCells)
         .select(lit(phase).as("phase"), col("cell"), col("vec_id"),
                 col("s"), col("code"), col("err_e6"))
-    // BEFORE must materialize before the manifest mutates
+    // BEFORE must materialize before the floor moves
     val before = read("before").localCheckpoint(true)
-    val reclaimed = vacuumManifest(s, laneManifest, floor = 1)
+    val reclaimed = Layout.vacuum(lane, floor = 1L)
     val after = read("after")
     before.unionByName(after)
       .withColumn("n_reclaimed", lit(reclaimed.size.toLong))
@@ -3930,14 +3636,11 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
   private[graft] def labelLayoutDir(s: SparkSession, d: String): String = {
     val out = s"${System.getProperty("java.io.tmpdir")}/graft_lblidx_" +
       java.lang.Integer.toHexString(d.hashCode)
-    val marker = java.nio.file.Paths.get(out, "_FIXTURE_OK")
-    if (!graft.Fixtures.markerCurrent(marker, s"$d/embeddings.parquet")) {
-      graft.Fixtures.clearDir(java.nio.file.Paths.get(out))
+    graft.Fixtures.staged(java.nio.file.Paths.get(out), s"$d/embeddings.parquet") {
       labeledAssigned(labeledBase(s, d), ivfCellCount(s, d))
         .repartition(col("lbl"), col("cell"))
         .sortWithinPartitions("lbl", "cell", "vec_id")
         .write.partitionBy("lbl", "cell").mode("overwrite").parquet(out)
-      graft.Fixtures.writeMarker(marker, s"$d/embeddings.parquet")
     }
     out
   }
@@ -4240,16 +3943,16 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
     Q("q179_index_layout", indexLayout, Some(indexLayoutSql),
       "index storage layout: postings written partitionBy(cell) — one inverted list per writer, clustered runs — probe cells read back through a partition-PRUNED scan (2-of-k cells touch 2-of-k files)"),
     Q("q182_index_compaction", indexCompaction, Some(indexLayoutSql),
-      "LSM index compaction: the q173 arrival delta folds into the base cell-partitioned layout — pruned read of ONLY the delta-touched cells, one exchange on the delta, stage-and-swap commit; oracle = the full-rebuild chain, so green == compaction is hash-indistinguishable from rebuild"),
+      "LSM index compaction: the q173 arrival delta folds into the base cell-partitioned layout — pruned read of ONLY the delta-touched cells, one exchange on the delta, the touched cells committed as the layout's next log entry; oracle = the full-rebuild chain, so green == compaction is hash-indistinguishable from rebuild"),
     Q("q183_partitioned_filtered_ann", partitionedFilteredAnn,
       Some(partitionedFilteredAnnSql),
       "label-PARTITIONED pre-filter ANN: (label, cell) inverted lists on disk, a filtered query reads only its own label's probed lists (filter prunes at the FileScan, before scoring) — q174's boost recall at ~1/|labels| the scored candidates"),
     Q("q187_index_delete", indexDelete, Some(indexDeleteSql),
-      "index tombstone deletes (right-to-be-forgotten): tombstone-touched cells read through a pruned scan, deleted postings dropped by a broadcast LEFT ANTI join (zero exchanges), stage-and-swap rewrite — oracle = rebuild-from-retained-corpus, hash-equal"),
+      "index tombstone deletes (right-to-be-forgotten): tombstone-touched cells read through a pruned scan, deleted postings dropped by a broadcast LEFT ANTI join (zero exchanges), the touched cells committed as the next log entry — oracle = rebuild-from-retained-corpus, hash-equal"),
     Q("q210_index_vacuum", indexVacuum, Some(indexVacuumSql),
-      "generation vacuum (manifest-driven GC): per-cell partition dirs superseded at the pin floor reclaimed (reads span generations, so the vacuum does too — untouched g0 cells survive), floor recorded so lower pins refuse LOUDLY; oracle = the pin-1 relation before AND after (the vacuum must be invisible at/above the floor) + the reclaimed-cell count in closed form"),
+      "generation vacuum (log-driven GC): the raised pin floor committed as a log entry, per-cell partition dirs only sub-floor entries reference become reclaimable (reads span generations, so the vacuum does too — untouched g0 cells survive), lower pins refuse LOUDLY; oracle = the pin-1 relation before AND after (the vacuum must be invisible at/above the floor) + the reclaimed-cell count in closed form"),
     Q("q191_index_versions", indexVersions, Some(indexVersionsSql),
-      "versioned index manifest (snapshot isolation): g0 bulk load + g1 compaction fold in its OWN directory, tiny (gen, cell, dir) manifest committed LAST as the atomic swap — pin-0 reads are byte-identical to the pre-delta snapshot (time travel), pin-1 reads span generations via manifest resolution, every generation scan partition-pruned"),
+      "versioned index (snapshot isolation): g0 bulk load + g1 compaction fold in its OWN directory, the g1 log entry committed LAST as the atomic swap — pin-0 reads are byte-identical to the pre-delta snapshot (time travel), pin-1 reads span generations via the log entry's cell map, every generation scan partition-pruned"),
     Q("q185_adc_serve_disk", adcServeFromDisk, Some(ivfPqResidualSql),
       "ADC serving from the COMPACTED on-disk index: probed cells' code postings read through a partition-pruned scan, broadcast probe relation + per-(query, cell) integer LUT, map-side lookup sums — byte-identical to q172's in-memory lane (shared oracle), closing train -> ingest -> persist -> compact -> serve on disk"),
     Q("q174_filtered_ann", filteredAnn, Some(filteredAnnSql),

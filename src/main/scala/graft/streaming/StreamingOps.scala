@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.{Fixtures, Q, Steps, Tables}
 import graft.functions.HashFns._
+import graft.io.{Layout, Snapshot}
 import graft.ops.EventOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -423,14 +424,10 @@ object StreamingOps {
     val hex = java.lang.Integer.toHexString(d.hashCode)
     val dir = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), s"graft_${name}_src_$hex")
-    val marker = dir.resolve("_STAGED")
-    if (!Fixtures.markerCurrent(marker, s"$d/$table.parquet")) {
-      Fixtures.clearDir(dir)
+    Fixtures.staged(dir, s"$d/$table.parquet") {
       java.nio.file.Files.createDirectories(dir)
       stage(dir)
-      Fixtures.writeMarker(marker, s"$d/$table.parquet")
     }
-    dir
   }
 
   /** Writes `df` as the single parquet file `dst`, replacing it: a
@@ -999,8 +996,8 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
   //      coding — with foreachBatch appending each micro-batch's
   //      postings to the delta area (a real ingest tier's L0 files);
   //      (3) fold: read the delta area back, prune the base scan to
-  //      the delta-touched cells, one delta-side exchange, stage-and-
-  //      swap the touched cells (q182's merge machinery verbatim).
+  //      the delta-touched cells, one delta-side exchange, commit the
+  //      touched cells as the next log entry (q182's fold verbatim).
   //      Oracle = the full-rebuild chain (q179's twin), so green ==
   //      the streamed-ingest + compaction pipeline is hash-
   //      indistinguishable from rebuilding the index from scratch —
@@ -1010,15 +1007,11 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
     val hex = java.lang.Integer.toHexString(d.hashCode)
     val out = s"${System.getProperty("java.io.tmpdir")}/graft_slsmidx_$hex"
     val deltaDir = s"${System.getProperty("java.io.tmpdir")}/graft_slsmdelta_$hex"
-    val marker = java.nio.file.Paths.get(out, "_FOLDED_OK")
-    if (!Fixtures.markerCurrent(marker, s"$d/embeddings.parquet")) {
-      Fixtures.clearDir(java.nio.file.Paths.get(out))
+    Fixtures.staged(java.nio.file.Paths.get(out), s"$d/embeddings.parquet") {
       Fixtures.clearDir(java.nio.file.Paths.get(deltaDir))
       // (1) bulk-load the base: corpus minus the arrival slice
-      graft.ops.SimilarityOps.compactionCodesFor(s, d, col("vec_id") % 7 =!= 3)
-        .repartition(col("cell"))
-        .sortWithinPartitions("cell", "vec_id", "s")
-        .write.partitionBy("cell").mode("overwrite").parquet(out)
+      val base = Layout.create(out, graft.ops.SimilarityOps.cellClustered(
+        graft.ops.SimilarityOps.compactionCodesFor(s, d, col("vec_id") % 7 =!= 3)), "cell")
       // (2) the q173 ingest stream appends its postings to the delta
       // area — the L0 files a serving tier accumulates between folds
       val srcDir = stageIngestSource(s, d)
@@ -1032,13 +1025,10 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
         try q.processAllAvailable()
         finally q.stop()
       }
-      // (3) fold the streamed delta into the base (q182's merge)
-      val delta = s.read.parquet(deltaDir)
-        .select("vec_id", "cell", "s", "code", "err_e6")
-      val (merged, touched) =
-        graft.ops.SimilarityOps.compactionMerge(s, out, delta)
-      graft.ops.SimilarityOps.stageAndSwap(out, merged, touched)
-      Fixtures.writeMarker(marker, s"$d/embeddings.parquet")
+      // (3) fold the streamed delta into the base (q182's fold)
+      graft.ops.SimilarityOps.foldCells(s, base, s.read.parquet(deltaDir)
+        .select("vec_id", "cell", "s", "code", "err_e6"))
+      ()
     }
     graft.ops.SimilarityOps.probeReadBack(s, d, out)
   }
@@ -1140,37 +1130,32 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
 
   // ---- q193: VERSIONED SERVING UNDER A LIVE QUERY STREAM — the
   //      zero-downtime index swap, stitching q180 (serve-on-arrival)
-  //      to q191 (manifest generations): query vectors keep arriving
+  //      to q191 (index generations): query vectors keep arriving
   //      while the compactor commits generation 1 BETWEEN micro-
-  //      batches, and each batch's fetch resolves the manifest AT
-  //      FETCH TIME — so batch 0 (the even-qid arrivals) serves the
+  //      batches, and each batch's fetch resolves the latest log entry
+  //      AT FETCH TIME — so batch 0 (the even-qid arrivals) serves the
   //      gen-0 snapshot, the commit lands, and batch 1 (the odd-qid
   //      arrivals) serves gen 1, with no restart, no partial state,
   //      and no batch ever observing a half-committed generation
   //      (q191's atomicity property, now exercised mid-stream). The
   //      stream is q180's stateless routing (broadcast centroid kit,
-  //      per-row probe-cell sort); the fetch is manifest-pinned
-  //      (owner resolution manifest-scale, every generation scan
-  //      partition-PRUNED); generation DATA directories are q191's
-  //      immutable fixtures — only the run-local manifest mutates,
-  //      exactly the mutation boundary a real manifest design buys.
+  //      per-row probe-cell sort); the fetch is pinned to one log
+  //      entry (owner resolution reads one small file, every data
+  //      directory scan partition-PRUNED); the data directories are
+  //      q191's immutable fixtures — only the run-local fork's log
+  //      grows, exactly the mutation boundary a commit log buys.
   //      Output = each arrival's fetched postings tagged with the
   //      generation that served it; oracle derives batch 0 from the
   //      pre-delta corpus and batch 1 from the full corpus. ----
   def streamVersionedServe(s: SparkSession, d: String): DataFrame = {
     import graft.expressions.VecDot.vecDot
     val hex = java.lang.Integer.toHexString(d.hashCode)
-    graft.ops.SimilarityOps.indexVersions(s, d) // ensure g0/g1 + manifest
     val versionRoot = graft.ops.SimilarityOps.versionDir(d)
     val laneRoot = s"${System.getProperty("java.io.tmpdir")}/graft_svsrv_$hex"
-    val laneManifest = s"$laneRoot/manifest"
     val outDir = s"$laneRoot/out"
-    // run-local manifest starts at generation 0 ONLY — the stream's
+    // the run-local fork starts at generation 0 ONLY — the stream's
     // foreachBatch commits gen 1 mid-flight, so this must reset per run
-    Fixtures.clearDir(java.nio.file.Paths.get(laneRoot))
-    s.read.parquet(s"$versionRoot/manifest").filter(col("gen") === 0)
-      .select("cell", "dir").coalesce(1)
-      .write.mode("overwrite").parquet(s"$laneManifest/gen=0")
+    graft.ops.SimilarityOps.forkVersions(s, d, laneRoot, upTo = 0)
     // the arrival stream: two files with ordered mtimes → two
     // deterministic micro-batches (evens then odds)
     val srcDir = stagedSource(d, "svsrv", "embeddings") { dir =>
@@ -1210,24 +1195,22 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
               val cells = b.select("cell").distinct()
                 .collect().map(_.getLong(0)).sorted.toSeq
               if (cells.nonEmpty) {
-                // resolve the generation COMMITTED AT FETCH TIME — a
-                // manifest-dir listing, not a per-batch Spark job
-                val pin = graft.ops.SimilarityOps.latestGen(laneManifest)
-                graft.ops.SimilarityOps
-                  .manifestPinnedRead(s, laneManifest, versionRoot, pin, cells)
-                  .join(broadcast(b.select("qid", "cell")), Seq("cell"))
-                  .filter(col("vec_id") =!= col("qid"))
-                  .select(lit(pin).as("gen_served"), col("qid"), col("cell"),
-                          col("vec_id"), col("s"), col("code"), col("err_e6"))
+                // resolve the generation COMMITTED AT FETCH TIME — one
+                // log entry read, not a per-batch Spark job
+                val snap = Layout.snapshot(laneRoot)
+                svServeRelation(s, snap, cells, b.select("qid", "cell"))
+                  .select(lit(snap.meta("gen").toInt).as("gen_served"), col("qid"),
+                          col("cell"), col("vec_id"), col("s"), col("code"),
+                          col("err_e6"))
                   .write.mode("append").parquet(outDir)
               }
               // the production moment: the compactor commits generation
               // 1 while queries keep arriving — the NEXT batch resolves
               // it atomically, this one never saw it
               if (batchId == 0) Steps.tag(s, "swap") {
-                s.read.parquet(s"$versionRoot/manifest")
-                  .filter(col("gen") === 1).select("cell", "dir").coalesce(1)
-                  .write.mode("overwrite").parquet(s"$laneManifest/gen=1")
+                Layout.adopt(Layout.snapshot(laneRoot),
+                  Layout.snapshot(versionRoot, Some(1L)))
+                ()
               }
             } finally { b.unpersist(); () }
           }
@@ -1242,37 +1225,32 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
   }
 
   // ---- q212: STREAMING VACUUM UNDER LIVE SERVING — q193 proved the
-  //      zero-downtime SWAP; q210 proved the manifest-driven VACUUM;
+  //      zero-downtime SWAP; q210 proved the log-driven VACUUM;
   //      this lane closes the online lifecycle loop by running BOTH
   //      under one live query stream: batch 0 serves the gen-0
   //      snapshot, gen 1 commits between batches, batch 1 serves gen 1
   //      — and then the VACUUM reclaims gen 0's superseded cells while
   //      the stream is still up, with batch 2 proving post-vacuum
   //      serving is indistinguishable from batch 1 (the oracle derives
-  //      both from the full corpus). The lane clones the generation
+  //      both from the full corpus). The lane forks the generation
   //      store per run (q210's discipline — q191's pristine store is
-  //      never mutated) and the vacuum is the exact q210 primitive
-  //      (floor recorded, sub-floor pins refuse). Three query slices
+  //      never written) and the vacuum is the exact q210 primitive
+  //      (floor committed, sub-floor pins refuse). Three query slices
   //      (qid % 3, mtime-ordered files) make three deterministic
   //      micro-batches. ----
   def streamVacuumServe(s: SparkSession, d: String): DataFrame = {
     import graft.expressions.VecDot.vecDot
     val hex = java.lang.Integer.toHexString(d.hashCode)
     val laneRoot = s"${System.getProperty("java.io.tmpdir")}/graft_svvac_$hex"
-    val laneManifest = s"$laneRoot/manifest"
     val outDir = s"$laneRoot/out"
-    // generation-pinned overlay entry: the pristine
-    // q191 store stays the immutable data root; the lane owns ONLY a
-    // run-local manifest + floor (fresh every run — the mid-stream
-    // commit and the online vacuum both mutate the manifest, never
-    // the data). No clone: the online vacuum is the metadata half
-    // (SimilarityOps.vacuumManifest — the Iceberg/Delta split), and
-    // the physical GC half is vacuumTo, spec-proven on its own copy.
-    Fixtures.clearDir(java.nio.file.Paths.get(laneRoot))
-    graft.ops.SimilarityOps.indexVersions(s, d) // stages the store if absent
+    // a run-local fork of the q191 store: the store stays the
+    // immutable data root and the lane owns ONLY its fork's log (fresh
+    // every run — the mid-stream commit and the online vacuum both
+    // append entries, never data). The online vacuum is the metadata
+    // half (Layout.vacuum); the physical half, Layout.gc, runs only on
+    // a store its caller owns.
     val storeRoot = graft.ops.SimilarityOps.versionDir(d)
-    graft.ops.SimilarityOps.seedManifest(
-      s, s"$storeRoot/manifest", laneManifest, Seq(0))
+    graft.ops.SimilarityOps.forkVersions(s, d, laneRoot, upTo = 0)
     // the arrival stream: three files with ordered mtimes -> three
     // deterministic micro-batches (qid % 3 slices)
     val srcDir = stagedSource(d, "svvac", "embeddings") { dir =>
@@ -1312,26 +1290,26 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
               val cells = b.select("cell").distinct()
                 .collect().map(_.getLong(0)).sorted.toSeq
               if (cells.nonEmpty) {
-                // pin from the manifest-dir listing — see q193
-                val pin = graft.ops.SimilarityOps.latestGen(laneManifest)
-                svServeRelation(s, laneManifest, storeRoot, pin, cells,
-                    b.select("qid", "cell"))
+                // the state committed at fetch time — see q193
+                val snap = Layout.snapshot(laneRoot)
+                svServeRelation(s, snap, cells, b.select("qid", "cell"))
                   .select(lit(batchId).cast("int").as("batch"),
-                          lit(pin).as("gen_served"), col("qid"), col("cell"),
-                          col("vec_id"), col("s"), col("code"), col("err_e6"))
+                          lit(snap.meta("gen").toInt).as("gen_served"), col("qid"),
+                          col("cell"), col("vec_id"), col("s"), col("code"),
+                          col("err_e6"))
                   .write.mode("append").parquet(outDir)
               }
               // after batch 0: the zero-downtime swap (the q193 moment)
               if (batchId == 0) Steps.tag(s, "swap") {
-                graft.ops.SimilarityOps.seedManifest(
-                  s, s"$storeRoot/manifest", laneManifest, Seq(1))
+                Layout.adopt(Layout.snapshot(laneRoot),
+                  Layout.snapshot(storeRoot, Some(1L)))
+                ()
               }
               // after batch 1: the ONLINE vacuum (the q210 primitive,
-              // metadata half) — gen 0's superseded rows leave the
-              // run-local manifest and the floor is recorded while the
+              // metadata half) — the floor is committed while the
               // stream is live; batch 2 must serve gen 1 unchanged
               if (batchId == 1) Steps.tag(s, "vacuum") {
-                graft.ops.SimilarityOps.vacuumManifest(s, laneManifest, floor = 1)
+                Layout.vacuum(laneRoot, floor = 1L)
                 ()
               }
             } finally { b.unpersist(); () }
@@ -1347,16 +1325,15 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
       .orderBy("batch", "qid", "cell", "vec_id", "s")
   }
 
-  /** q212's per-micro-batch serving relation — the q193 manifest-pinned
-    * pruned fetch joined against the batch's broadcast probe set. A
-    * named surface so PlanShapeSpec can fence the shape (pruned store
-    * FileScans + broadcast probe join) outside the running stream.
+  /** q193/q212's per-micro-batch serving relation — the pinned, pruned
+    * fetch of one committed state joined against the batch's broadcast
+    * probe set. A named surface so PlanShapeSpec can fence the shape
+    * (pruned store FileScans + broadcast probe join) outside the
+    * running stream.
     */
-  private[graft] def svServeRelation(s: SparkSession, laneManifest: String,
-      storeRoot: String, pin: Int, cells: Seq[Long],
-      probes: DataFrame): DataFrame =
-    graft.ops.SimilarityOps
-      .manifestPinnedRead(s, laneManifest, storeRoot, pin, cells)
+  private[graft] def svServeRelation(s: SparkSession, snap: Snapshot,
+      cells: Seq[Long], probes: DataFrame): DataFrame =
+    graft.ops.SimilarityOps.pinnedRead(s, snap, cells)
       .join(broadcast(probes), Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
 
@@ -1391,10 +1368,8 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
       .select(col("doc_id"), col("meta.source").as("source"), col("text"))
     val srcDir = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), s"graft_spi_src_$hex")
-    val marker = srcDir.resolve("_STAGED")
     val fixSrcs = Seq(s"$d/documents.parquet", "spi-fixture-v2:rev-twins")
-    if (!Fixtures.markerCurrent(marker, fixSrcs: _*)) {
-      Fixtures.clearDir(srcDir)
+    Fixtures.staged(srcDir, fixSrcs: _*) {
       java.nio.file.Files.createDirectories(srcDir)
       val ranked = PipelineOps.deltaBatch(d0)
         .withColumn("rk", row_number().over(
@@ -1409,9 +1384,7 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
         dst.toFile.setLastModified(
           System.currentTimeMillis() - (30000L - i * 10000L))
       }
-      Fixtures.writeMarker(marker, fixSrcs: _*)
     }
-    srcDir
   }
 
   def streamPipelineIngest(s: SparkSession, d: String): DataFrame = {
@@ -1523,8 +1496,7 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
                   .select("doc_id", "sig")
               val (verdicts, dSigs, dg3k) =
                 spiBatchAdmit(s, audit, benchGrams, prior,
-                  db => PipelineOps.probeBandedIndex(
-                    s, PipelineOps.DirIndex(idxDir), db))
+                  db => PipelineOps.probeBandedIndex(s, idxDir, db))
               Steps.tag(s, "verdicts") {
                 verdicts.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
               }
@@ -1962,7 +1934,7 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
       "ONLINE lifecycle loop under one live query stream: batch 0 serves the gen-0 snapshot, the swap commits between batches, batch 1 serves gen 1, the q210 vacuum reclaims gen 0's superseded cells MID-STREAM, and batch 2 proves post-vacuum serving is byte-identical to pre-vacuum gen-1 serving (oracle derives all three batches closed-form)"),
     Q("q193_stream_versioned_serve", streamVersionedServe,
       Some(graft.ops.SimilarityOps.streamVersionedServeSql),
-      "zero-downtime index swap under a live query stream: stateless q180 routing, manifest-pinned fetch per micro-batch, generation 1 committed BETWEEN batches — batch 0 serves the gen-0 snapshot, batch 1 serves gen 1, both snapshot-consistent (oracle splits the corpus accordingly)"),
+      "zero-downtime index swap under a live query stream: stateless q180 routing, a fetch pinned to the latest log entry per micro-batch, generation 1 committed BETWEEN batches — batch 0 serves the gen-0 snapshot, batch 1 serves gen 1, both snapshot-consistent (oracle splits the corpus accordingly)"),
     Q("q188_stream_ingest_compact", streamIngestCompact,
       Some(graft.ops.SimilarityOps.indexLayoutOracle),
       "stream-ingested delta folded into the base index: q173's coder streams postings into an L0 delta area via foreachBatch, compaction prunes the base to the touched cells and stage-and-swaps them — oracle = the full-rebuild chain, so the streamed maintenance loop is hash-indistinguishable from a rebuild"),

@@ -8,14 +8,14 @@ import org.scalatest.funsuite.AnyFunSuite
   *     equals the q215 card (in-memory index) row-for-row — the two
   *     lanes already share one oracle; this pins it in-process too.
   *  2. FOLD == REBUILD: folding a signature delta into an existing
-  *     index via stage-and-swap yields exactly the row set of an index
+  *     index (one log commit) yields exactly the row set of an index
   *     rebuilt from scratch over base + delta (the q182 compaction
   *     contract, here for the text side).
   *  3. FOLD LOCALITY: only the fold's touched pb buckets are
-  *     rewritten — untouched bucket directories keep their files
-  *     byte-identical (names + sizes + content hashes), which is the
-  *     on-disk witness that compaction cost tracks the delta, not the
-  *     corpus.
+  *     rewritten — untouched buckets keep resolving to the same
+  *     partition directory with the same files (names + sizes), which
+  *     is the on-disk witness that compaction cost tracks the delta,
+  *     not the corpus.
   */
 class AdmissionIndexSpec extends AnyFunSuite with SparkTestBase {
 
@@ -40,21 +40,22 @@ class AdmissionIndexSpec extends AnyFunSuite with SparkTestBase {
     val fullDir = s"$root/rebuilt"
     Fixtures.clearDir(java.nio.file.Paths.get(root))
     // BOTH dirs at the SEED's bucket count: a fold preserves the
-    // layout's kb (read from _META), so the rebuild twin must be laid
-    // out at the same kb for row-set equality to include pb
+    // layout's kb (read from its log entry), so the rebuild twin must be
+    // laid out at the same kb for row-set equality to include pb
     val kb = ops.PipelineOps.bucketsFor(seed.count())
     ops.PipelineOps.writeAdmissionIndex(seed, foldDir, kb)
     ops.PipelineOps.writeAdmissionIndex(bSigs, fullDir, kb)
-    assert(ops.PipelineOps.indexBuckets(foldDir) == kb, "META kb roundtrip")
+    assert(ops.PipelineOps.indexBuckets(io.Layout.snapshot(foldDir)) == kb,
+      "kb roundtrip")
 
-    // snapshot per-bucket file listings before the fold
-    def bucketFiles(dir: String): Map[String, Seq[(String, Long)]] = {
-      val d = new java.io.File(dir)
-      d.listFiles().filter(f => f.isDirectory && f.getName.startsWith("pb="))
-        .map { b =>
-          b.getName -> b.listFiles().filter(_.getName.endsWith(".parquet"))
-            .map(f => (f.getName, f.length())).sortBy(_._1).toSeq
-        }.toMap
+    // per-bucket partition directory + file listing of a state
+    def bucketFiles(dir: String): Map[Long, (String, Seq[(String, Long)])] = {
+      val snap = io.Layout.snapshot(dir)
+      snap.parts.keys.map { pb =>
+        val b = new java.io.File(s"${snap.dirOf(pb)}/pb=$pb")
+        pb -> (b.getPath -> b.listFiles().filter(_.getName.endsWith(".parquet"))
+          .map(f => (f.getName, f.length())).sortBy(_._1).toSeq)
+      }.toMap
     }
     val before = bucketFiles(foldDir)
 
@@ -64,7 +65,7 @@ class AdmissionIndexSpec extends AnyFunSuite with SparkTestBase {
     // 2. fold == rebuild on the full row set (sig compared as a string
     //    key — array equality via the same deterministic rendering)
     def rowsOf(dir: String): Set[(Long, Long, Long, Long, String)] =
-      spark.read.parquet(dir)
+      io.Layout.snapshot(dir).readAll(spark)
         .select(col("doc_id"), col("band").cast("long").as("band"), col("key"),
                 col("pb").cast("long").as("pb"),
                 concat_ws(",", col("sig")).as("sigkey"))
@@ -79,11 +80,10 @@ class AdmissionIndexSpec extends AnyFunSuite with SparkTestBase {
 
     // 3. locality: untouched buckets keep their exact files
     val after = bucketFiles(foldDir)
-    val touchedNames = touched.map(c => s"pb=$c").toSet
-    before.foreach { case (bucket, files) =>
-      if (!touchedNames.contains(bucket))
-        assert(after(bucket) == files,
-          s"untouched bucket $bucket was rewritten: $files -> ${after(bucket)}")
+    before.foreach { case (pb, files) =>
+      if (!touched.contains(pb))
+        assert(after(pb) == files,
+          s"untouched bucket $pb was rewritten: $files -> ${after(pb)}")
     }
     Fixtures.clearDir(java.nio.file.Paths.get(root))
   }

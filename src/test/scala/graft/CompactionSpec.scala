@@ -14,7 +14,7 @@ import graft.ops.SimilarityOps
 class CompactionSpec extends AnyFunSuite with SparkTestBase {
 
   private def readAll() =
-    spark.read.parquet(SimilarityOps.compactionDir(sf))
+    io.Layout.snapshot(SimilarityOps.compactionDir(sf)).readAll(spark)
       .select(col("vec_id"), col("cell").cast("long").as("cell"),
               col("s"), col("code"), col("err_e6"))
       .orderBy("vec_id", "s", "cell").collect()
@@ -49,7 +49,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestBase {
     streaming.StreamingOps.streamIngestCompact(spark, sf).collect() // ensure fold
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft_slsmidx_" +
       java.lang.Integer.toHexString(sf.hashCode)
-    val got = spark.read.parquet(dir)
+    val got = io.Layout.snapshot(dir).readAll(spark)
       .select(col("vec_id"), col("cell").cast("long").as("cell"),
               col("s"), col("code"), col("err_e6"))
       .orderBy("vec_id", "s", "cell").collect()
@@ -80,8 +80,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestBase {
     val deltaCells = delta.select("cell").distinct().count()
     val n = delta.count()
     assert(n > 0, "empty arrival slice — the lane tests nothing")
-    val totalCells = spark.read.parquet(SimilarityOps.compactionDir(sf))
-      .select("cell").distinct().count()
+    val totalCells = io.Layout.snapshot(SimilarityOps.compactionDir(sf)).parts.size.toLong
     assert(deltaCells <= totalCells)
   }
 }

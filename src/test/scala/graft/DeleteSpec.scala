@@ -14,7 +14,7 @@ import graft.ops.SimilarityOps
 class DeleteSpec extends AnyFunSuite with SparkTestBase {
 
   private def readAll() =
-    spark.read.parquet(SimilarityOps.deleteDir(sf))
+    io.Layout.snapshot(SimilarityOps.deleteDir(sf)).readAll(spark)
       .select(col("vec_id"), col("cell").cast("long").as("cell"),
               col("s"), col("code"), col("err_e6"))
       .orderBy("vec_id", "s", "cell").collect()

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * plan or result depend on the shell that launched it, which neither
   * the oracle nor Bench records. The session itself, and the core count
   * it reads from the environment, come from [[Sessions]] alone, so the
-  * oracle, the tests and Bench run one session policy.
+  * oracle, the tests and Bench run one session policy. Persisted
+  * layouts change only through the one commit log in `graft.io`.
   */
 class EngineEnvSpec extends AnyFunSuite {
 
@@ -43,6 +44,24 @@ class EngineEnvSpec extends AnyFunSuite {
       if f != factory
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
       if Seq("SparkSession" + ".builder", "SPARK_GRAFT" + "_CPUS").exists(line.contains)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("persisted layouts commit only through graft.io.Layout") {
+    // the names of the replaced protocols: delete-then-rename swaps, an
+    // ownership ledger beside an overlay, floor files and Spark-written
+    // manifest generations, tree clones, and a bare rename
+    val banned = Seq("stageAndSwap", "_OWNED", "_VACUUM_FLOOR", "manifest/gen=",
+      "cloneTree", "LayoutFs.rename")
+    val root = Paths.get("src/main/scala")
+    val io = Paths.get("src/main/scala/graft/io")
+    assert(Files.isDirectory(io), s"layout package $io not found")
+    val offenders = for {
+      f <- scalaFiles(root)
+      if !f.startsWith(io)
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if banned.exists(line.contains)
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }

@@ -3,32 +3,23 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** LayoutFs clone + maintenance contracts (r15 VERDICT #2/#3):
-  *  1. ZERO-COPY CLONE: cloneTree on the local scheme hardlinks every
-  *     data file — same inode, zero data bytes written — so a
-  *     mutation lane's entry cost tracks file COUNT (metadata), never
-  *     index bytes.
-  *  2. MUTATION ISOLATION: tombstoning buckets of the CLONE via
-  *     stage-and-swap leaves the pristine source byte-identical
-  *     (links are replaced, never written through), and untouched
-  *     buckets keep sharing inodes afterwards.
-  *  3. HADOOP-FS ROUTING: the helpers resolve paths through the
-  *     Hadoop FileSystem API — an explicit file:// URI (which
-  *     java.nio.file.Paths.get would reject) behaves identically to
-  *     a bare local path.
+/** Layout fork and file-system contracts:
+  *  1. CLONE-FREE FORK: a fork of the persisted admission index takes a
+  *     real fold and a real takedown; the pristine base stays
+  *     byte-identical, only the touched buckets get data in the fork,
+  *     the resolved view equals the closed-form state, and the fork's
+  *     log re-opens to the same state.
+  *  2. HADOOP-FS ROUTING: an explicit file:// URI (which
+  *     java.nio.file.Paths.get would reject) behaves like a bare local
+  *     path, and publishing an existing name refuses.
   */
 class LayoutCloneSpec extends AnyFunSuite with SparkTestBase {
-
-  private def ino(f: java.io.File): Long =
-    java.nio.file.Files.getAttribute(f.toPath, "unix:ino")
-      .asInstanceOf[Long]
 
   private def dataFiles(dir: String): Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
       else Seq(f)
-    walk(new java.io.File(dir)).filter(_.getName.endsWith(".parquet"))
-      .sortBy(_.getPath)
+    walk(new java.io.File(dir)).sortBy(_.getPath)
   }
 
   private def sha(f: java.io.File): String = {
@@ -37,86 +28,30 @@ class LayoutCloneSpec extends AnyFunSuite with SparkTestBase {
       .map("%02x".format(_)).mkString
   }
 
-  test("cloneTree hardlinks every data file (zero data bytes written)") {
-    val src = ops.PipelineOps.persistAdmissionIndex(spark, sf)
-    val dst = s"${System.getProperty("java.io.tmpdir")}/graft_clonespec"
-    io.LayoutFs.deleteTree(dst)
-    io.LayoutFs.cloneTree(src, dst)
-    val sFiles = dataFiles(src)
-    val dFiles = dataFiles(dst)
-    assert(sFiles.nonEmpty, "degenerate: empty source layout")
-    assert(sFiles.map(_.getName.stripPrefix(src)).size == dFiles.size,
-      "clone file-count mismatch")
-    val srcByRel = sFiles.map(f =>
-      f.getPath.stripPrefix(new java.io.File(src).getPath) -> f).toMap
-    dFiles.foreach { df =>
-      val rel = df.getPath.stripPrefix(new java.io.File(dst).getPath)
-      val sf0 = srcByRel(rel)
-      assert(ino(df) == ino(sf0),
-        s"$rel was byte-copied (inode ${ino(df)} != ${ino(sf0)}) — " +
-          "the clone must hardlink, not copy")
-    }
-  }
-
-  test("mutating the clone leaves the source byte-identical; untouched buckets stay linked") {
-    val src = ops.PipelineOps.persistAdmissionIndex(spark, sf)
-    val dst = s"${System.getProperty("java.io.tmpdir")}/graft_clonespec_mut"
-    io.LayoutFs.deleteTree(dst)
-    io.LayoutFs.cloneTree(src, dst)
-    val beforeSrc = dataFiles(src).map(f => f.getPath -> sha(f))
-    // tombstone a real takedown slice of the CLONE
-    val touched = ops.PipelineOps.deleteFromAdmissionIndex(spark, dst,
-      ops.PipelineOps.sharedBaseIndex(spark, sf)
-        .filter(ops.PipelineOps.takedownPred(col("doc_id"))))
-    assert(touched.nonEmpty, "degenerate: takedown touched no buckets")
-    // 1. source unchanged, byte-for-byte
-    val afterSrc = dataFiles(src).map(f => f.getPath -> sha(f))
-    assert(afterSrc == beforeSrc,
-      "mutating a hardlink clone altered the pristine source layout")
-    // 2. untouched clone buckets still share inodes with the source
-    val touchedDirs = touched.map(pb => s"pb=$pb").toSet
-    val srcRoot = new java.io.File(src).getPath
-    val dstRoot = new java.io.File(dst).getPath
-    val srcByRel = dataFiles(src).map(f =>
-      f.getPath.stripPrefix(srcRoot) -> f).toMap
-    val untouched = dataFiles(dst).filterNot(f =>
-      touchedDirs.exists(td => f.getPath.contains(s"/$td/")))
-    assert(untouched.nonEmpty, "degenerate: every bucket was touched")
-    untouched.foreach { df =>
-      val rel = df.getPath.stripPrefix(dstRoot)
-      assert(ino(df) == ino(srcByRel(rel)),
-        s"untouched $rel lost its link — swap rewrote an un-touched bucket")
-    }
-  }
-
   test("overlay entry mutates clone-free: base byte-identical, resolution exact, ledger re-openable") {
     import ops.PipelineOps
     val base = PipelineOps.persistAdmissionIndex(spark, sf)
     val beforeSrc = dataFiles(base).map(f => f.getPath -> sha(f))
-    // enter via the generation-pinned overlay (no clone at all) and
-    // run a real fold THEN a real delete through it
-    val ov = s"${System.getProperty("java.io.tmpdir")}/graft_ovspec"
-    io.LayoutFs.deleteTree(ov)
-    val idx = new PipelineOps.OverlayIndex(base, ov)
+    // a run-local fork of the base, then a real fold and a real delete
+    val fork = s"${System.getProperty("java.io.tmpdir")}/graft_ovspec"
+    io.Layout.fork(io.Layout.snapshot(base), fork)
     val extra = PipelineOps.sharedBaseIndex(spark, sf)
       .filter(col("doc_id") % 23 === 1)
       .select((col("doc_id") + 7000000L).as("doc_id"), col("sig"))
       .localCheckpoint(true)
-    val ft = PipelineOps.foldIntoAdmissionIndex(spark, idx, extra)
+    val ft = PipelineOps.foldIntoAdmissionIndex(spark, fork, extra)
     val del = PipelineOps.sharedBaseIndex(spark, sf)
       .filter(PipelineOps.takedownPred(col("doc_id")))
-    val dt = PipelineOps.deleteFromAdmissionIndex(spark, idx, del)
+    val dt = PipelineOps.deleteFromAdmissionIndex(spark, fork, del)
     assert(ft.nonEmpty && dt.nonEmpty, "degenerate: no buckets touched")
-    // 1. the pristine base is byte-identical — there is no write path
-    //    into it (the clone entry only ever protected it by copy)
+    // 1. the pristine base is byte-identical — no write path reaches it
     val afterSrc = dataFiles(base).map(f => f.getPath -> sha(f))
-    assert(afterSrc == beforeSrc,
-      "overlay mutation altered the pristine base layout")
-    // 2. only the touched buckets materialized in the overlay
-    val ovDirs = io.LayoutFs.listSubdirNames(ov)
-      .filter(_.startsWith("pb=")).map(_.stripPrefix("pb=").toLong).toSet
-    assert(ovDirs.subsetOf((ft ++ dt).toSet),
-      s"overlay holds un-touched buckets: ${ovDirs -- (ft ++ dt).toSet}")
+    assert(afterSrc == beforeSrc, "fork mutation altered the pristine base layout")
+    // 2. only the touched buckets have data in the fork
+    val state = io.Layout.snapshot(fork)
+    val local = state.parts.filter { case (_, d) => !d.startsWith("/") }.keySet
+    assert(local.subsetOf((ft ++ dt).toSet),
+      s"fork holds un-touched buckets: ${local -- (ft ++ dt).toSet}")
     // 3. the resolved view equals the closed-form expected state
     def rowsFrom(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
       df.select(col("doc_id"), col("band").cast("long"), col("key"))
@@ -124,25 +59,32 @@ class LayoutCloneSpec extends AnyFunSuite with SparkTestBase {
     val delIds = del.select("doc_id").collect().map(_.getLong(0)).toSet
     val expected = rowsFrom(
       PipelineOps.indexRowsOf(
-        PipelineOps.sharedBaseIndex(spark, sf).unionByName(extra), idx.kb))
+        PipelineOps.sharedBaseIndex(spark, sf).unionByName(extra),
+        PipelineOps.indexBuckets(state)))
       .filterNot { case (id, _, _) => delIds.contains(id) }
-    assert(rowsFrom(idx.readAll(spark)) == expected,
-      "overlay-resolved state != closed-form fold+delete result")
-    // 4. the ownership ledger persists: a re-opened handle resolves
-    //    identically (restart story)
-    val reopened = new PipelineOps.OverlayIndex(base, ov)
-    assert(reopened.ownedBuckets == idx.ownedBuckets, "ledger did not round-trip")
+    assert(rowsFrom(state.readAll(spark)) == expected,
+      "fork-resolved state != closed-form fold+delete result")
+    // 4. the log persists: a fresh reader resolves identically
+    //    (restart story)
+    val reopened = io.Layout.snapshot(fork)
+    assert(reopened == state, "the fork's log did not round-trip")
     assert(rowsFrom(reopened.readAll(spark)) == expected,
-      "re-opened overlay resolves differently")
-    io.LayoutFs.deleteTree(ov)
+      "re-opened fork resolves differently")
+    io.LayoutFs.deleteTree(fork)
   }
 
   test("LayoutFs resolves explicit file:// URIs through the Hadoop FileSystem") {
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft_clonespec_uri"
     io.LayoutFs.deleteTree(dir)
-    io.LayoutFs.writeSmallFile(s"file://$dir/_META", "kb=7\n")
-    assert(io.LayoutFs.exists(s"file://$dir/_META"))
-    assert(io.LayoutFs.readSmallFile(s"file://$dir/_META").get.trim == "kb=7")
+    io.LayoutFs.writeFile(s"file://$dir/.a.tmp", "kb=7\n")
+    assert(io.LayoutFs.publish(s"file://$dir/.a.tmp", s"file://$dir/a"))
+    assert(io.LayoutFs.exists(s"file://$dir/a"))
+    assert(io.LayoutFs.readFile(s"file://$dir/a").trim == "kb=7")
+    // a second writer of the same name loses, and the first content stays
+    io.LayoutFs.writeFile(s"file://$dir/.b.tmp", "kb=8\n")
+    assert(!io.LayoutFs.publish(s"file://$dir/.b.tmp", s"file://$dir/a"))
+    assert(io.LayoutFs.readFile(dir + "/a").trim == "kb=7")
+    assert(!io.LayoutFs.exists(s"$dir/.b.tmp"), "the losing writer's file was left")
     assert(io.LayoutFs.listSubdirNames(s"file://$dir") == Seq.empty)
     io.LayoutFs.deleteTree(s"file://$dir")
     assert(!io.LayoutFs.exists(dir))

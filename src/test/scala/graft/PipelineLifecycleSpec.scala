@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     mutation cost tracks the delta at every epoch, never the
   *     corpus.
   *  2. FOLD == REBUILD at EVERY epoch boundary: replaying the lane's
-  *     own mutation trace against a fresh clone, the index row set
+  *     own mutation trace against a fresh fork, the index row set
   *     after each fold/delete equals a from-scratch rebuild of the
   *     closed-form surviving set at that boundary.
   *  3. DELETE LIVENESS / FOLD LIVENESS through the card: every
@@ -31,7 +31,7 @@ class PipelineLifecycleSpec extends AnyFunSuite with SparkTestBase {
   test("q220: bucket minimality, per-boundary fold==rebuild, liveness") {
     val (card, trace, idx) = PipelineOps.pipelineLifecycleFull(spark, sf)
     val rows = card.collect()
-    val kb = idx.kb
+    val kb = PipelineOps.indexBuckets(io.Layout.snapshot(idx))
 
     // ---- 1. bucket-set minimality per epoch ----
     def pbsOf(sigs: org.apache.spark.sql.DataFrame): Set[Long] =
@@ -50,9 +50,7 @@ class PipelineLifecycleSpec extends AnyFunSuite with SparkTestBase {
     val root = s"${System.getProperty("java.io.tmpdir")}/graft_lc_spec"
     Fixtures.clearDir(java.nio.file.Paths.get(root))
     val replay = s"$root/replay"
-    ops.SimilarityOps.copyTree(
-      java.nio.file.Paths.get(PipelineOps.persistAdmissionIndex(spark, sf)),
-      java.nio.file.Paths.get(replay))
+    io.Layout.fork(io.Layout.snapshot(PipelineOps.persistAdmissionIndex(spark, sf)), replay)
     def rowsFrom(df: org.apache.spark.sql.DataFrame)
         : Set[(Long, Long, Long, Long, String)] =
       df.select(col("doc_id"), col("band").cast("long"), col("key"),
@@ -61,7 +59,7 @@ class PipelineLifecycleSpec extends AnyFunSuite with SparkTestBase {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
                    r.getString(4))).toSet
     def rowsOf(p: String): Set[(Long, Long, Long, Long, String)] =
-      rowsFrom(spark.read.parquet(p))
+      rowsFrom(io.Layout.snapshot(p).readAll(spark))
     var expected = PipelineOps.sharedBaseIndex(spark, sf)
     var boundary = 0
     def checkBoundary(what: String): Unit = {
@@ -81,9 +79,9 @@ class PipelineLifecycleSpec extends AnyFunSuite with SparkTestBase {
       checkBoundary(s"epoch ${ep.epoch} takedown")
     }
     // the replayed final state equals the lane's own final artifact
-    // (read through the overlay resolution: base buckets not owned by
-    // the overlay + the overlay's mutated buckets)
-    assert(rowsOf(replay) == rowsFrom(idx.readAll(spark)),
+    // (read through the fork's log: untouched buckets resolve into the
+    // base, mutated ones into the fork's own data directories)
+    assert(rowsOf(replay) == rowsOf(idx),
       "replayed mutation trace diverged from the lane's final index")
 
     // ---- 3. liveness through the card + trace ----
@@ -122,7 +120,7 @@ class PipelineLifecycleSpec extends AnyFunSuite with SparkTestBase {
 
   test("q220 epoch: a failing card awaits the admitted job and releases the handles") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-    val idx = PipelineOps.DirIndex(PipelineOps.persistAdmissionIndex(spark, sf))
+    val idx = PipelineOps.persistAdmissionIndex(spark, sf)
     // every delta id sits within 1e8 of Long.MaxValue, so a source with
     // two admissions overflows the card's admitted_checksum under ANSI;
     // the admitted relation does no arithmetic on ids and succeeds.

@@ -106,16 +106,16 @@ class PipelineTakedownSpec extends AnyFunSuite with SparkTestBase {
     }
 
     // ---- 6. tombstoned index == pristine minus deleted (read through
-    //         the clone-free overlay resolution) ----
+    //         the clone-free fork's log) ----
     val pristine = ops.PipelineOps.persistAdmissionIndex(spark, sf)
     val tombstoned = ops.PipelineOps.takedownIndex(spark, sf)
     def rowsFrom(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
       df.select(col("doc_id"), col("band").cast("long"), col("key"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     def rowsOf(dir: String): Set[(Long, Long, Long)] =
-      rowsFrom(spark.read.parquet(dir))
+      rowsFrom(io.Layout.snapshot(dir).readAll(spark))
     val want = rowsOf(pristine).filterNot { case (id, _, _) => isDel(id) }
-    val gotRows = rowsFrom(tombstoned.readAll(spark))
+    val gotRows = rowsOf(tombstoned)
     assert(gotRows == want,
       s"tombstoned index != pristine minus deletes: extra=" +
         s"${(gotRows -- want).take(3)}, missing=${(want -- gotRows).take(3)}")

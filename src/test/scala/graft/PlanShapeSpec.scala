@@ -8,6 +8,53 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
 
+  /** The value of `body` and the number of Spark jobs it started. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+    }
+    def drain(): Unit = org.apache.spark.sql.graftbridge.drainListenerBus(spark.sparkContext)
+    drain()
+    spark.sparkContext.addSparkListener(l)
+    try { val r = body; drain(); (r, n.get) }
+    finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** The partition directories a plan's file scans list. */
+  private def scannedDirs(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case f: FileSourceScanExec => Seq(f)
+      case other => other.children.flatMap(scans)
+    }
+    scans(df.queryExecution.executedPlan)
+      .flatMap(_.relation.location.rootPaths.map(_.getName))
+  }
+
+  /** Fence a pinned cell-layout read: resolving the committed state and
+    * building the read run no Spark job, every scan prunes on cell, and
+    * the scans list exactly the probed cells' partition directories.
+    */
+  private def assertPinnedRead(what: String, root: String, pin: Option[Long],
+                               cells: Seq[Long]): Unit = {
+    val (df, jobs) = jobsDuring(
+      ops.SimilarityOps.pinnedRead(spark, io.Layout.snapshot(root, pin), cells))
+    assert(jobs == 0, s"$what: owner resolution ran $jobs Spark jobs")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("PartitionFilters: ["), s"$what plan:\n$plan")
+    assert(!plan.contains("PartitionFilters: []"),
+      s"$what: a data directory scan does not prune partitions:\n$plan")
+    val dirs = scannedDirs(df)
+    val want = cells.filter(io.Layout.snapshot(root, pin).parts.contains).map(c => s"cell=$c")
+    assert(dirs.sorted == want.sorted,
+      s"$what scans $dirs, not exactly the probed cells' directories $want")
+  }
+
   private def physical(name: String): String = {
     val q = Registry.all.find(_.name == name).get
     q.build(spark, sf).queryExecution.executedPlan.toString
@@ -192,17 +239,14 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("q191 generation-pinned reads prune partitions in EVERY generation's FileScan (r11)") {
-    // the manifest must buy metadata-cost resolution, not save it and
-    // then scan whole generation directories: each per-dir read in the
-    // pinned union carries its own non-empty PartitionFilters
+    // the log must buy metadata-cost resolution, not save it and then
+    // scan whole data directories: resolving a pin reads one log entry
+    // (no Spark job), and each per-directory read in the pinned union
+    // lists only the probed cells and carries its own PartitionFilters
     ops.SimilarityOps.indexVersions(spark, sf).collect() // fixture
     val dir = ops.SimilarityOps.versionDir(sf)
-    Seq(0, 1).foreach { pin =>
-      val plan = ops.SimilarityOps.genPinnedRead(spark, dir, pin, Seq(0L, 1L))
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("PartitionFilters: ["), s"pin $pin plan:\n$plan")
-      assert(!plan.contains("PartitionFilters: []"),
-        s"pin-$pin generation scan does not prune partitions:\n$plan")
+    Seq(0L, 1L).foreach { pin =>
+      assertPinnedRead(s"pin $pin", dir, Some(pin), Seq(0L, 1L))
     }
   }
 
@@ -226,7 +270,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     ops.SimilarityOps.indexCompaction(spark, sf).collect() // ensure fixture
     val delta = ops.SimilarityOps.compactionDeltaFor(spark, sf)
     val (merged, _) = ops.SimilarityOps.compactionMerge(
-      spark, ops.SimilarityOps.compactionDir(sf), delta)
+      spark, io.Layout.snapshot(ops.SimilarityOps.compactionDir(sf)), delta)
     val plan = merged.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: ["), s"plan:\n$plan")
     assert(!plan.contains("PartitionFilters: []"),
@@ -261,7 +305,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     ops.SimilarityOps.indexDelete(spark, sf).collect() // ensure fixture
     val tombstones = ops.SimilarityOps.deleteTombstonesFor(spark, sf)
     val (survivors, _) = ops.SimilarityOps.deleteMerge(
-      spark, ops.SimilarityOps.deleteDir(sf), tombstones)
+      spark, io.Layout.snapshot(ops.SimilarityOps.deleteDir(sf)), tombstones)
     val plan = survivors.queryExecution.executedPlan.toString
     assert(plan.linesIterator.exists(l =>
         l.contains("graft_delidx") && l.contains("PartitionFilters: [cell")),
@@ -342,26 +386,15 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
   test("q210 post-vacuum pinned read prunes partitions at every " +
        "generation's FileScan (r12 plan-fence ask)") {
     // the vacuum must not change the read's shape: a pin-at-floor read
-    // over a vacuumed store still resolves owners from the manifest and
-    // scans each generation dir partition-PRUNED — an empty
+    // over a vacuumed store still resolves owners from one log entry
+    // and scans each data directory partition-PRUNED — an empty
     // PartitionFilters would mean the whole (partially reclaimed) store
-    // is scanned, silently including cells the vacuum half-emptied.
-    // r17: the registered lane vacuums a RUN-LOCAL manifest over the
-    // pristine store (clone-free) — fence that exact read shape.
-    ops.SimilarityOps.indexVersions(spark, sf)
-    val pristine = ops.SimilarityOps.versionDir(sf)
+    // is scanned. The registered lane vacuums a run-local fork of the
+    // pristine store — fence that exact read shape.
     val laneRoot = s"${System.getProperty("java.io.tmpdir")}/graft_vacfence"
-    io.LayoutFs.deleteTree(laneRoot)
-    val laneManifest = s"$laneRoot/manifest"
-    ops.SimilarityOps.seedManifest(
-      spark, s"$pristine/manifest", laneManifest, Seq(0, 1))
-    ops.SimilarityOps.vacuumManifest(spark, laneManifest, floor = 1)
-    val plan = ops.SimilarityOps.manifestPinnedRead(
-        spark, laneManifest, pristine, 1, Seq(0L, 1L))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: ["), s"plan:\n$plan")
-    assert(!plan.contains("PartitionFilters: []"),
-      s"post-vacuum pinned read does not prune partitions:\n$plan")
+    ops.SimilarityOps.forkVersions(spark, sf, laneRoot, upTo = 1)
+    io.Layout.vacuum(laneRoot, floor = 1L)
+    assertPinnedRead("post-vacuum pin 1", laneRoot, Some(1L), Seq(0L, 1L))
   }
 
   test("q211 video near-dup pair stage: df-capped postings equi-join, " +
@@ -403,21 +436,16 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
   test("q212 serving fetch reuses q193's pruned shape: pruned store " +
        "FileScans + broadcast probe join (r12 plan-fence ask)") {
     // replicate the lane's batch-0 moment outside the stream: the
-    // run-local gen-0 manifest over the PRISTINE store (r17 clone-free
-    // entry) and the exact per-batch serving relation the foreachBatch
-    // issues
+    // run-local gen-0 fork of the PRISTINE store and the exact
+    // per-batch serving relation the foreachBatch issues
     val hex = java.lang.Integer.toHexString(sf.hashCode)
     val laneRoot = s"${System.getProperty("java.io.tmpdir")}/graft_svvac_fence_$hex"
-    val laneManifest = s"$laneRoot/manifest"
-    Fixtures.clearDir(java.nio.file.Paths.get(laneRoot))
-    ops.SimilarityOps.indexVersions(spark, sf)
-    val storeRoot = ops.SimilarityOps.versionDir(sf)
-    ops.SimilarityOps.seedManifest(
-      spark, s"$storeRoot/manifest", laneManifest, Seq(0))
+    ops.SimilarityOps.forkVersions(spark, sf, laneRoot, upTo = 0)
+    assertPinnedRead("batch-0 fetch", laneRoot, None, Seq(0L, 1L))
     import spark.implicits._
     val probes = Seq((100L, 0L), (101L, 1L)).toDF("qid", "cell")
     val plan = streaming.StreamingOps.svServeRelation(
-        spark, laneManifest, storeRoot, 0, Seq(0L, 1L), probes)
+        spark, io.Layout.snapshot(laneRoot), Seq(0L, 1L), probes)
       .queryExecution.executedPlan.toString
     assert(plan.linesIterator.exists(l =>
         l.contains("graft_genidx") && l.contains("PartitionFilters: [cell")),
@@ -499,7 +527,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     val prior = bSigs.limit(2) // stand-in for the accumulated index
     val (verdicts, _, dg3k) = streaming.StreamingOps.spiBatchAdmit(
       spark, audit, benchGrams, prior,
-      db => ops.PipelineOps.probeBandedIndex(spark, ops.PipelineOps.DirIndex(idxDir), db))
+      db => ops.PipelineOps.probeBandedIndex(spark, idxDir, db))
     val plan = verdicts.queryExecution.executedPlan.toString
     dg3k.unpersist(false)
     assert(!plan.contains("CartesianProduct"), s"plan:\n$plan")

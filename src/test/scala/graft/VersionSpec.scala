@@ -2,34 +2,50 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.io.Layout
 import graft.ops.SimilarityOps
 
-/** q191 versioned-manifest properties the oracle can't see: full-index
+/** q191 versioned-index properties the oracle can't see: full-index
   * (not just probed-cell) snapshot equality under both pins, the
   * atomic-commit property (an UNCOMMITTED generation is invisible even
-  * though its data files are fully written), and the cross-generation
-  * resolution a pin-1 read performs.
+  * though its data files are fully written), and the cross-directory
+  * resolution a pin-1 read performs. Then q210/q212's vacuum: the
+  * floor, and the physical reclamation of a store the caller owns.
   */
 class VersionSpec extends AnyFunSuite with SparkTestBase {
 
   private def dir = SimilarityOps.versionDir(sf)
 
-  private def allCells(): Seq[Long] =
-    spark.read.parquet(s"$dir/manifest")
-      .select("cell").distinct().collect().map(_.getLong(0)).sorted.toSeq
-
-  private def pinned(pin: Int): Seq[(Long, Long, Long, Long, Long)] =
-    SimilarityOps.genPinnedRead(spark, dir, pin, allCells())
-      .orderBy("vec_id", "s", "cell").collect()
-      .map(r => (r.getLong(1), r.getLong(0), r.getLong(2), r.getLong(3),
-                 r.getLong(4))).toSeq
-
-  private def rebuilt(pred: org.apache.spark.sql.Column) =
-    SimilarityOps.residualCodesBatch(spark, sf, pred)
-      .select("vec_id", "cell", "s", "code", "err_e6")
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.select("vec_id", "cell", "s", "code", "err_e6")
       .orderBy("vec_id", "s", "cell").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
                  r.getLong(4))).toSeq
+
+  private def pinnedAt(root: String, pin: Long) = {
+    val snap = Layout.snapshot(root, Some(pin))
+    SimilarityOps.pinnedRead(spark, snap, snap.parts.keys.toSeq)
+  }
+
+  private def pinned(pin: Int) = rows(pinnedAt(dir, pin.toLong))
+
+  private def rebuilt(pred: org.apache.spark.sql.Column) =
+    rows(SimilarityOps.residualCodesBatch(spark, sf, pred))
+
+  /** A cell layout at a fresh root, entry 0 = `g0`, one fold per later
+    * generation: each replaces exactly the cells its rows hold.
+    */
+  private def store(name: String, g0: Seq[(Long, Long, Long, Long, Long)],
+                    folds: Seq[(Long, Long, Long, Long, Long)]*): String = {
+    import spark.implicits._
+    val root = tempDir(name).toString
+    def codes(rs: Seq[(Long, Long, Long, Long, Long)]) =
+      rs.toDF("vec_id", "cell", "s", "code", "err_e6")
+    folds.foldLeft(Layout.create(root, codes(g0), "cell")) { (prev, rs) =>
+      Layout.rewrite(prev, codes(rs), rs.map(_._2).distinct)
+    }
+    root
+  }
 
   test("pin 0 == pre-delta rebuild over ALL cells (time travel, g0 never mutated)") {
     SimilarityOps.indexVersions(spark, sf).collect() // build both generations
@@ -45,94 +61,93 @@ class VersionSpec extends AnyFunSuite with SparkTestBase {
 
   test("an uncommitted generation is invisible: manifest commit IS the swap") {
     SimilarityOps.indexVersions(spark, sf).collect()
-    val committed = java.nio.file.Paths.get(dir, "manifest", "gen=1")
-    val aside = java.nio.file.Paths.get(dir, "manifest_gen1_aside")
-    // simulate the pre-commit moment: g1's DATA files are fully
-    // written, but its manifest rows are not yet visible
+    val committed = java.nio.file.Paths.get(dir, "_log", "1")
+    val aside = java.nio.file.Paths.get(dir, "_log", ".1.aside")
+    // simulate the pre-commit moment: the fold's DATA files are fully
+    // written, but its log entry is not yet published
     java.nio.file.Files.move(committed, aside)
     try {
-      assert(pinned(1) == pinned(0),
-        "a reader observed generation-1 data before its manifest commit")
+      assert(Layout.snapshot(dir).version == 0L)
+      assert(rows(SimilarityOps.pinnedRead(spark, Layout.snapshot(dir),
+          Layout.snapshot(dir).parts.keys.toSeq)) == pinned(0),
+        "a reader observed generation-1 data before its log commit")
     } finally java.nio.file.Files.move(aside, committed)
   }
 
   test("a pin-1 read genuinely spans generations (manifest resolution, not a dir read)") {
     // at the test sf the 1/7 delta touches every cell, so the real
-    // fixture can't witness mixed ownership — drive the resolution
-    // logic on a synthetic two-generation index where cell 0 stays
-    // owned by g0 and cell 1 is rewritten by g1
-    import spark.implicits._
-    val root = tempDir("graft_genspec_").toString
-    def codes(rows: Seq[(Long, Long, Long, Long, Long)]) =
-      rows.toDF("vec_id", "cell", "s", "code", "err_e6")
-    codes(Seq((10L, 0L, 0L, 1L, 5L), (11L, 1L, 0L, 2L, 6L)))
-      .write.partitionBy("cell").parquet(s"$root/g0")
-    codes(Seq((11L, 1L, 0L, 9L, 7L), (12L, 1L, 0L, 3L, 8L)))
-      .write.partitionBy("cell").parquet(s"$root/g1")
-    Seq((0L, "g0"), (1L, "g0")).toDF("cell", "dir")
-      .write.parquet(s"$root/manifest/gen=0")
-    Seq((1L, "g1")).toDF("cell", "dir")
-      .write.parquet(s"$root/manifest/gen=1")
-    def read(pin: Int) =
-      SimilarityOps.genPinnedRead(spark, root, pin, Seq(0L, 1L))
-        .orderBy("cell", "vec_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSeq
-    // pin 0: both cells from g0
+    // fixture can't witness mixed ownership — drive the resolution on
+    // a synthetic store where cell 0 stays in the base directory and
+    // cell 1 is rewritten by the fold
+    val root = store("graft_genspec_",
+      Seq((10L, 0L, 0L, 1L, 5L), (11L, 1L, 0L, 2L, 6L)),
+      Seq((11L, 1L, 0L, 9L, 7L), (12L, 1L, 0L, 3L, 8L)))
+    def read(pin: Long) = pinnedAt(root, pin)
+      .orderBy("cell", "vec_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSeq
+    // pin 0: both cells from the base
     assert(read(0) == Seq((0L, 10L, 1L), (1L, 11L, 2L)))
-    // pin 1: cell 0 still resolves to g0, cell 1 to g1 — one read,
-    // two generation directories
+    // pin 1: cell 0 still resolves to the base, cell 1 to the fold —
+    // one read, two data directories
     assert(read(1) == Seq((0L, 10L, 1L), (1L, 11L, 9L), (1L, 12L, 3L)))
+    val g1 = Layout.snapshot(root, Some(1L))
+    assert(g1.dirOf(0L) != g1.dirOf(1L))
     // and the REAL fixture's fold must at least be non-trivial
     SimilarityOps.indexVersions(spark, sf).collect()
-    val g1Cells = spark.read.parquet(s"$dir/manifest")
-      .filter(col("gen") === 1).count()
-    assert(g1Cells > 0, "the delta touched no cells — the fold tested nothing")
+    val (real0, real1) = (Layout.snapshot(dir, Some(0L)), Layout.snapshot(dir, Some(1L)))
+    assert(real1.parts.exists { case (c, d) => !real0.parts.get(c).contains(d) },
+      "the delta touched no cells — the fold tested nothing")
   }
 
   test("re-entrant call is idempotent (marker-guarded: no double fold, no new generation)") {
     SimilarityOps.indexVersions(spark, sf).collect()
     val first = pinned(1)
-    val gens = java.nio.file.Files.list(
-      java.nio.file.Paths.get(dir, "manifest")).count()
+    val entries = Layout.versions(dir)
     SimilarityOps.indexVersions(spark, sf).collect()
     assert(pinned(1) == first)
-    assert(java.nio.file.Files.list(
-      java.nio.file.Paths.get(dir, "manifest")).count() == gens)
+    assert(Layout.versions(dir) == entries)
   }
 
   // ------------------------------------------------------------------
   // q210: the generation vacuum
   // ------------------------------------------------------------------
 
+  /** q191's store rebuilt at a root this spec owns, so its data can be
+    * reclaimed.
+    */
+  private def ownedStore(name: String): String = {
+    val root = tempDir(name).toString
+    val g0 = Layout.create(root, SimilarityOps.cellClustered(
+      SimilarityOps.compactionCodesFor(spark, sf, col("vec_id") % 7 =!= 3)), "cell")
+    SimilarityOps.foldCells(spark, g0, SimilarityOps.compactionDeltaFor(spark, sf))
+    root
+  }
+
   test("q210: vacuum mid-flight — a pin-1 read resolved BEFORE the " +
        "vacuum completes unchanged after gen-0 data is reclaimed") {
-    val root = SimilarityOps.cloneVersionStore(spark, sf)
-    def cells(): Seq[Long] = spark.read.parquet(s"$root/manifest")
-      .select("cell").distinct().collect().map(_.getLong(0)).sorted.toSeq
-    val want = SimilarityOps.genPinnedRead(spark, root, 1, cells())
-      .orderBy("vec_id", "s", "cell").collect().toSeq
-    // the IN-FLIGHT read: owner resolution (the manifest collect)
-    // happens at build time, BEFORE the vacuum deletes anything...
-    val inFlight = SimilarityOps.genPinnedRead(spark, root, 1, cells())
-      .orderBy("vec_id", "s", "cell")
-    val reclaimed = SimilarityOps.vacuumTo(spark, root, floor = 1)
+    val root = ownedStore("graft_vacspec_")
+    val want = rows(pinnedAt(root, 1L))
+    // the IN-FLIGHT read: owner resolution and file listing happen at
+    // build time, BEFORE the vacuum deletes anything...
+    val inFlight = pinnedAt(root, 1L)
+    val g0 = Layout.snapshot(root, Some(0L))
+    val reclaimed = Layout.vacuum(root, floor = 1L)
     assert(reclaimed.nonEmpty, "vacuum reclaimed nothing — inert fixture")
+    Layout.gc(root)
+    reclaimed.foreach { c =>
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(g0.dirOf(c), s"cell=$c")),
+        s"gc left the reclaimed gen-0 partition cell=$c behind")
+    }
     // ...and the fetch happens here, AFTER: it must still serve exactly
-    assert(inFlight.collect().toSeq == want,
-      "an in-flight pin-1 read changed under the vacuum")
+    assert(rows(inFlight) == want, "an in-flight pin-1 read changed under the vacuum")
     // a FRESH post-vacuum read agrees too (the lane's oracle property)
-    assert(SimilarityOps.genPinnedRead(spark, root, 1, cells())
-      .orderBy("vec_id", "s", "cell").collect().toSeq == want)
+    assert(rows(pinnedAt(root, 1L)) == want)
   }
 
   test("q210: pins below the recorded floor refuse loudly") {
-    val root = SimilarityOps.cloneVersionStore(spark, sf)
-    SimilarityOps.vacuumTo(spark, root, floor = 1)
-    val cells = spark.read.parquet(s"$root/manifest")
-      .select("cell").distinct().collect().map(_.getLong(0)).sorted.toSeq
-    val e = intercept[IllegalArgumentException] {
-      SimilarityOps.genPinnedRead(spark, root, 0, cells)
-    }
+    val root = ownedStore("graft_vacfloor_")
+    Layout.vacuum(root, floor = 1L)
+    val e = intercept[IllegalArgumentException](pinnedAt(root, 0L))
     assert(e.getMessage.contains("vacuum floor"),
       s"wrong failure mode: ${e.getMessage}")
   }
@@ -145,74 +160,50 @@ class VersionSpec extends AnyFunSuite with SparkTestBase {
     // batch 2 was served AFTER the vacuum (foreachBatch is sequential)
     assert(out.filter(_.getInt(0) == 2).forall(_.getInt(1) == 1),
       "batch 2 must serve pin 1")
-    // clone-free entry: the lane owns only a manifest + floor;
-    // the pristine store is the data root and must stay intact
+    // clone-free entry: the lane owns only its fork's log; every data
+    // directory it reads is the pristine store's
     val hex = java.lang.Integer.toHexString(sf.hashCode)
-    val laneRoot = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_svvac_$hex")
+    val laneRoot = s"${System.getProperty("java.io.tmpdir")}/graft_svvac_$hex"
+    val lane = Layout.snapshot(laneRoot)
+    assert(lane.floor == 1L, "vacuum floor was never committed — the online vacuum did not run")
+    assert(Layout.versions(laneRoot) == Seq(0L, 1L, 2L),
+      s"expected fork, swap and vacuum entries: ${Layout.versions(laneRoot)}")
     val pristine = SimilarityOps.versionDir(sf)
-    assert(!java.nio.file.Files.exists(laneRoot.resolve("store")),
-      "lane still materializes a store copy — entry is not clone-free")
-    assert(java.nio.file.Files.exists(laneRoot.resolve("_VACUUM_FLOOR")),
-      "vacuum floor was never recorded — the online vacuum did not run")
-    // superseded gen-0 rows are really gone FROM THE LANE MANIFEST:
-    // every cell gen 1 owns must have lost its gen-0 manifest row
-    // (the metadata half of the vacuum; the physical half is proven
-    // on spec-local copies by the q210 tests above)
-    val laneManifest = s"$laneRoot/manifest"
-    val g1Cells = spark.read.parquet(laneManifest)
-      .filter(org.apache.spark.sql.functions.col("gen") === 1)
-      .select("cell").collect().map(_.getLong(0))
-    assert(g1Cells.nonEmpty)
-    val g0Cells = spark.read.parquet(laneManifest)
-      .filter(org.apache.spark.sql.functions.col("gen") === 0)
-      .select("cell").collect().map(_.getLong(0)).toSet
-    g1Cells.foreach { c =>
-      assert(!g0Cells.contains(c),
-        s"superseded gen-0 manifest row for cell=$c survived the online vacuum")
-    }
+    assert(lane.parts.values.forall(_.startsWith(pristine + "/")),
+      "the lane reads data outside the pristine store — entry is not clone-free")
+    // the gen-0 bindings the vacuum superseded are unreadable now, and
     // the pristine store's own gen-0 data is untouched (shared fixture)
-    g1Cells.foreach { c =>
-      assert(java.nio.file.Files.exists(
-          java.nio.file.Paths.get(pristine, "g0", s"cell=$c")),
-        s"the clone-free vacuum deleted pristine data: g0/cell=$c")
+    val g0 = Layout.snapshot(pristine, Some(0L))
+    val superseded = g0.parts.keys.filter(c => lane.dirOf(c) != g0.dirOf(c))
+    assert(superseded.nonEmpty)
+    superseded.foreach { c =>
+      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(g0.dirOf(c), s"cell=$c")),
+        s"the clone-free vacuum deleted pristine data: cell=$c")
     }
-    // and sub-floor pins refuse on the live lane manifest
-    val e = intercept[IllegalArgumentException] {
-      SimilarityOps.manifestPinnedRead(spark,
-        laneManifest, pristine, 0, Seq(g1Cells.head))
-    }
+    // and sub-floor pins refuse on the live lane log
+    val e = intercept[IllegalArgumentException](Layout.snapshot(laneRoot, Some(0L)))
     assert(e.getMessage.contains("vacuum floor"))
   }
 
   test("q210: the vacuum is CELL-granular — generations still serving " +
        "untouched cells keep exactly those partitions") {
-    import spark.implicits._
     // synthetic store: g0 owns cells 0,1,2; g1 supersedes ONLY cell 1
     // (the real fixture's delta touches every cell at test sf, so the
     // partial-survival property needs a controlled store)
-    val root = tempDir("graft_vacuum_cellgran").toString
-    def writeGen(dir: String, rows: Seq[(Long, Long, Long, Long, Long)]): Unit =
-      rows.toDF("vec_id", "s", "code", "err_e6", "cell")
-        .write.partitionBy("cell").mode("overwrite").parquet(s"$root/$dir")
-    writeGen("g0", Seq((10L, 0L, 1L, 5L, 0L), (11L, 0L, 2L, 6L, 1L),
-                       (12L, 0L, 3L, 7L, 2L)))
-    writeGen("g1", Seq((11L, 0L, 9L, 1L, 1L))) // cell 1 rewritten
-    Seq((0L, "g0"), (1L, "g0"), (2L, "g0")).toDF("cell", "dir").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/manifest/gen=0")
-    Seq((1L, "g1")).toDF("cell", "dir").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/manifest/gen=1")
-    val reclaimed = SimilarityOps.vacuumTo(spark, root, floor = 1)
+    val root = store("graft_vacuum_cellgran",
+      Seq((10L, 0L, 0L, 1L, 5L), (11L, 1L, 0L, 2L, 6L), (12L, 2L, 0L, 3L, 7L)),
+      Seq((11L, 1L, 0L, 9L, 1L)))
+    val g0Dir = Layout.snapshot(root, Some(0L)).parts(0L)
+    val reclaimed = Layout.vacuum(root, floor = 1L)
     assert(reclaimed == Seq(1L), s"expected only cell 1 reclaimed: $reclaimed")
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(root, "g0", "cell=1")))
+    Layout.gc(root)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, g0Dir, "cell=1")))
     Seq(0L, 2L).foreach { c =>
-      assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(root, "g0", s"cell=$c")),
+      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(root, g0Dir, s"cell=$c")),
         s"untouched cell $c was wrongly reclaimed")
     }
-    // the pin-1 read still spans generations: cell 1 from g1, rest g0
-    val got = SimilarityOps.genPinnedRead(spark, root, 1, Seq(0L, 1L, 2L))
+    // the pin-1 read still spans directories: cell 1 from g1, rest g0
+    val got = pinnedAt(root, 1L)
       .select("cell", "vec_id", "code").orderBy("cell")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == Seq((0L, 10L, 1L), (1L, 11L, 9L), (2L, 12L, 3L)))
@@ -220,32 +211,20 @@ class VersionSpec extends AnyFunSuite with SparkTestBase {
 
   test("q210: the recorded vacuum floor is MONOTONE — a later vacuum " +
        "with a lower floor cannot re-admit reclaimed pins (r12 advice)") {
-    import spark.implicits._
-    val root = tempDir("graft_vacuum_monotone").toString
-    def writeGen(dir: String, rows: Seq[(Long, Long, Long, Long, Long)]): Unit =
-      rows.toDF("vec_id", "s", "code", "err_e6", "cell")
-        .write.partitionBy("cell").mode("overwrite").parquet(s"$root/$dir")
-    writeGen("g0", Seq((10L, 0L, 1L, 5L, 0L), (11L, 0L, 2L, 6L, 1L)))
-    writeGen("g1", Seq((11L, 0L, 9L, 1L, 1L)))
-    writeGen("g2", Seq((10L, 0L, 8L, 2L, 0L)))
-    Seq((0L, "g0"), (1L, "g0")).toDF("cell", "dir").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/manifest/gen=0")
-    Seq((1L, "g1")).toDF("cell", "dir").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/manifest/gen=1")
-    Seq((0L, "g2")).toDF("cell", "dir").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/manifest/gen=2")
-    // floor 2 reclaims g0/cell=0 (superseded by g2) and g0/cell=1 (g1)
-    SimilarityOps.vacuumTo(spark, root, floor = 2)
-    val floorPath = java.nio.file.Paths.get(root, "_VACUUM_FLOOR")
-    assert(new String(java.nio.file.Files.readAllBytes(floorPath)).trim == "2")
+    val root = store("graft_vacuum_monotone",
+      Seq((10L, 0L, 0L, 1L, 5L), (11L, 1L, 0L, 2L, 6L)),
+      Seq((11L, 1L, 0L, 9L, 1L)),
+      Seq((10L, 0L, 0L, 8L, 2L)))
+    // floor 2 reclaims g0's cell 0 (superseded by g2) and cell 1 (g1)
+    assert(Layout.vacuum(root, floor = 2L) == Seq(0L, 1L))
+    Layout.gc(root)
+    assert(Layout.snapshot(root).floor == 2L)
     // a LOWER later floor must not lower the record: g0's data is gone,
     // so a pin-1 read of cell 0 would silently lose the row
-    SimilarityOps.vacuumTo(spark, root, floor = 1)
-    assert(new String(java.nio.file.Files.readAllBytes(floorPath)).trim == "2",
-      "vacuumTo lowered the recorded floor — reclaimed pins re-admitted")
-    val e = intercept[IllegalArgumentException] {
-      SimilarityOps.genPinnedRead(spark, root, 1, Seq(0L))
-    }
+    assert(Layout.vacuum(root, floor = 1L).isEmpty)
+    assert(Layout.snapshot(root).floor == 2L,
+      "vacuum lowered the recorded floor — reclaimed pins re-admitted")
+    val e = intercept[IllegalArgumentException](pinnedAt(root, 1L))
     assert(e.getMessage.contains("vacuum floor"))
   }
 }
