@@ -13,10 +13,11 @@ import org.apache.spark.scheduler._
   * faster kernels). `compiles=` counts the classes Spark's code
   * generator compiled during the rep; a warm rep should compile none
   * (see [[Sessions]]), so a nonzero count there is a cache miss.
-  * After a lane's last rep it also prints one row per [[Steps]] tag —
-  * the composite lanes' logical steps, attributed from the real run —
-  * plus an `(untagged)` row; the rep's own noop write is the `sink`
-  * step.
+  * After a lane's last rep it also prints one row per [[Steps]] tag
+  * entered — the composite lanes' logical steps, attributed from the
+  * real run, with the summed wall time of the tag's bodies (`wall_s`)
+  * also for a step that runs no job — plus an `(untagged)` row; the
+  * rep's own noop write is the `sink` step.
   *
   * Usage: runMain graft.DevJobs <sfDir> <reps> <lane> [<lane>...]
   * Artifacts are pre-built untimed by [[Bench.prebuild]]; each rep
@@ -30,7 +31,7 @@ object DevJobs {
     * count twice. */
   final class StepTotals {
     var jobs, stages, tasks = 0
-    var taskMs, cpuMs, jobMs = 0L
+    var taskMs, cpuMs, jobMs, wallNs = 0L
   }
 
   final class Counter extends SparkListener {
@@ -55,6 +56,10 @@ object DevJobs {
       jobTag.put(j.jobId, (tag, j.time))
       j.stageIds.foreach(stageTag.putIfAbsent(_, tag))
       step(tag)(_.jobs += 1)
+    }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case Steps.Span(path, ns) => step(path)(_.wallNs += ns)
+      case _ =>
     }
     override def onJobEnd(j: SparkListenerJobEnd): Unit =
       Option(jobTag.get(j.jobId)).foreach { case (tag, t0) =>
@@ -106,15 +111,16 @@ object DevJobs {
             f"$nt%4d tasks  ${name.take(90)}"
       }
     }
-    /** One row per tag in first-job order, then `(untagged)`. */
+    /** One row per tag in first-seen order, then `(untagged)`. */
     def steps: Seq[String] = bySteps.synchronized {
       val untagged = bySteps.getOrElse(Untagged, new StepTotals)
       val header = f"    ${"step"}%-28s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s " +
-        f"${"task_s"}%7s ${"cpu_s"}%7s ${"job_wall_s"}%10s"
+        f"${"task_s"}%7s ${"cpu_s"}%7s ${"job_wall_s"}%10s ${"wall_s"}%7s"
       header +: (bySteps.toSeq.filter(_._1 != Untagged) :+ (Untagged -> untagged)).map {
         case (tag, t) =>
           f"    $tag%-28s ${t.jobs}%5d ${t.stages}%6d ${t.tasks}%6d " +
-            f"${t.taskMs / 1e3}%7.2f ${t.cpuMs / 1e3}%7.2f ${t.jobMs / 1e3}%10.2f"
+            f"${t.taskMs / 1e3}%7.2f ${t.cpuMs / 1e3}%7.2f ${t.jobMs / 1e3}%10.2f " +
+            f"${t.wallNs / 1e9}%7.2f"
       }
     }
   }

@@ -72,16 +72,10 @@ object Plans {
     // q97 pre-materialization plan (the registry entry checkpoints
     // eagerly inside its conf scope, so its plan prints as an RDD scan)
     locally {
-      val key = plans.BinnedRangeJoin.WidthConf
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, ops.EventOps.RangeJoinWidthMicros.toString)
-      val plan =
-        try ops.EventOps.rangeJoinAutoLazy(spark, d)
-          .queryExecution.explainString(SimpleMode)
-        finally prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
+      val plan = Sessions.withConf(spark,
+          plans.BinnedRangeJoin.WidthConf -> ops.EventOps.RangeJoinWidthMicros.toString) {
+        ops.EventOps.rangeJoinAutoLazy(spark, d).queryExecution.explainString(SimpleMode)
+      }
       sb.append("\n## q97_range_join_auto (pre-materialization)\n\n" +
         "the SAME interval join as q66 written as a naive BETWEEN — " +
         "the BinnedRangeJoin rule produces the binned plan\n\n```\n" +
@@ -368,20 +362,23 @@ object Plans {
       val plan179 = ops.SimilarityOps.indexLayout(spark, d)
         .queryExecution.explainString(SimpleMode)
       sb.append("\n## q179_index_layout (probe read-back)\n\n" +
-        "the persisted inverted-list index probed: the FileScan's " +
-        "PartitionFilters carries the probe-cell predicate, so a " +
-        "2-of-k-cell probe lists 2-of-k partition directories — at the " +
+        "the committed inverted-list index probed: the probe opens " +
+        "its cells from the layout's log entry (recorded schema, no " +
+        "job) and the FileScan's PartitionFilters carries the " +
+        "probe-cell predicate, so a 2-of-k-cell probe lists 2-of-k " +
+        "partition directories — at the " +
         "50k-cell cap that is 1/25000th of the index touched per " +
         "probe; PlanShapeSpec fails if the filter ever stops pruning\n\n```\n" +
         plan179 + "```\n")
     }
     locally {
-      val dir180 = ops.SimilarityOps.vectorLayoutDir(spark, d)
-      val plan180 = ops.SimilarityOps.probedVectorRead(spark, dir180, Seq(0L, 1L))
+      val plan180 = io.Layout.snapshot(ops.SimilarityOps.vectorLayoutDir(spark, d))
+        .open(spark, Seq(0L, 1L))
         .queryExecution.explainString(SimpleMode)
       sb.append("\n## q180_stream_ann_query (per-micro-batch serving fetch)\n\n" +
-        "the streaming serving path's static side IS the on-disk " +
-        "cell-partitioned layout: each micro-batch " +
+        "the streaming serving path's static side IS the committed " +
+        "cell layout, its snapshot resolved once before the stream " +
+        "starts: each micro-batch " +
         "collects its arrivals' probe cells (metadata-scale) and " +
         "issues exactly this read — the FileScan's PartitionFilters " +
         "carries the probed-cell predicate, so a probes-of-k fetch " +
@@ -440,13 +437,13 @@ object Plans {
         "in-memory lane (shared oracle + CompactionSpec differential)\n\n```\n" +
         plan185 + "```\n")
       ops.SimilarityOps.partitionedFilteredAnn(spark, d).collect()
-      val dir183 = ops.SimilarityOps.labelLayoutDir(spark, d)
-      val plan183 = ops.SimilarityOps.labelProbedRead(
-          spark, dir183, Seq(0L), Seq(0L, 1L))
+      // label 0's lists of cells 0 and 1 (list = lbl * k + cell)
+      val plan183 = io.Layout.snapshot(ops.SimilarityOps.labelLayoutDir(spark, d))
+        .open(spark, Seq(0L, 1L))
         .queryExecution.explainString(SimpleMode)
       sb.append("\n## q183_partitioned_filtered_ann (pre-filter read)\n\n" +
-        "label-partitioned pre-filter ANN: the (lbl, cell) layout " +
-        "prunes BOTH partition levels at the FileScan — a filtered " +
+        "label-partitioned pre-filter ANN: one list per (label, cell), " +
+        "keyed list = lbl * k + cell, pruned at the FileScan — a filtered " +
         "query reads only its own label's probed lists, so the label " +
         "filter executes before any candidate is fetched or scored " +
         "(q174's boost recall at ~1/|labels| the scored candidates)\n\n```\n" +

@@ -105,7 +105,7 @@ object Scaling {
     ("q176_mmr_rerank", "MMR diversified re-ranking (10 greedy rounds)", "embeddings"),
     ("q177_ivfpq_trained", "residual IVF-PQ under Lloyd-trained books", "embeddings"),
     ("q178_bmp_decode_resize", "REAL BMP decode + resize (own parser)", "documents"),
-    ("q179_index_layout", "index layout: partitionBy(cell) + pruned probe read", "embeddings"),
+    ("q179_index_layout", "index layout: committed cell layout + pruned probe read", "embeddings"),
     ("q180_stream_ann_query", "streaming ANN serving (on-disk pruned fetch)", "embeddings"),
     ("q181_dataset_card", "per-source dataset card (one-pass release summary)", "documents"),
     ("q182_index_compaction", "LSM index compaction (delta into base layout)", "embeddings"),
@@ -253,15 +253,9 @@ object Scaling {
         if (filtered) ops.AdvancedOps.withRuntimeFilterConf(spark) {
           measured(ops.AdvancedOps.runtimeFilterJoinLazy(spark, dir)
             .write.format("noop").mode("overwrite").save())
-        } else {
-          val prev = spark.conf.getOption(bcKey)
-          spark.conf.set(bcKey, "-1")
-          try measured(ops.AdvancedOps.runtimeFilterJoinLazy(spark, dir)
+        } else Sessions.withConf(spark, bcKey -> "-1") {
+          measured(ops.AdvancedOps.runtimeFilterJoinLazy(spark, dir)
             .write.format("noop").mode("overwrite").save())
-          finally prev match {
-            case Some(v) => spark.conf.set(bcKey, v)
-            case None    => spark.conf.unset(bcKey)
-          }
         }
       sb.append(f"| $sf | $arm | $t%.2f | $mb%.1f |\n")
       println(f"[scaling] q123 diff sf$sf $arm%-8s $t%6.2f s $mb%8.1f MB shuffled")

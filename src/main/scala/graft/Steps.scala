@@ -18,9 +18,17 @@ import scala.concurrent.{ExecutionContext, Future}
   * A dedicated property, never the job group or description: a
   * streaming query sets both on its own thread and `query.stop()`
   * cancels its jobs by group. Setting a tag launches no job.
+  *
+  * On exit every tag posts a [[Steps.Span]] (full tag, wall time) to
+  * the listener bus, so a step that runs no Spark job (a log commit, a
+  * driver-side merge) is still seen and timed.
   */
 object Steps {
   val Key = "graft.step"
+
+  /** One exit of tag `path` after `wallNs` nanoseconds in its body. */
+  final case class Span(path: String, wallNs: Long)
+    extends org.apache.spark.scheduler.SparkListenerEvent
 
   /** Run `body` with `name` appended to the calling thread's tag. */
   def tag[A](s: SparkSession, name: String)(body: => A): A =
@@ -44,6 +52,11 @@ object Steps {
     val sc = s.sparkContext
     val prev = sc.getLocalProperty(Key)
     sc.setLocalProperty(Key, full)
-    try body finally sc.setLocalProperty(Key, prev)
+    val t0 = System.nanoTime()
+    try body
+    finally {
+      sc.setLocalProperty(Key, prev)
+      org.apache.spark.sql.graftbridge.postEvent(sc, Span(full, System.nanoTime() - t0))
+    }
   }
 }

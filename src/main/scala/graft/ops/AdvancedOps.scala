@@ -726,15 +726,8 @@ object AdvancedOps {
   }
 
   /** Scoped conf for specs / plan dumps of the lazy variant. */
-  def withRuntimeFilterConf[T](s: SparkSession)(body: => T): T = {
-    val prev = RuntimeFilterConf.map { case (k, _) => k -> s.conf.getOption(k) }
-    RuntimeFilterConf.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
+  def withRuntimeFilterConf[T](s: SparkSession)(body: => T): T =
+    graft.Sessions.withConf(s, RuntimeFilterConf: _*)(body)
 
   // ---- q162: HyperLogLog register sketch — THE practical distinct
   //      counter at 100 TB (fixed 64 registers per group vs q120's

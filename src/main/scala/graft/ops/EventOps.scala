@@ -217,16 +217,11 @@ object EventOps {
   //      specs use [[rangeJoinAutoLazy]] inside their own conf scope.
   val RangeJoinWidthMicros: Long = 3600L * 1000000L
 
-  def rangeJoinAuto(s: SparkSession, d: String): DataFrame = {
-    val key = graft.plans.BinnedRangeJoin.WidthConf
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, RangeJoinWidthMicros.toString)
-    try rangeJoinAutoLazy(s, d).localCheckpoint(true)
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
+  def rangeJoinAuto(s: SparkSession, d: String): DataFrame =
+    graft.Sessions.withConf(s,
+        graft.plans.BinnedRangeJoin.WidthConf -> RangeJoinWidthMicros.toString) {
+      rangeJoinAutoLazy(s, d).localCheckpoint(true)
     }
-  }
 
   /** The naive-BETWEEN formulation, not materialized: the caller owns
     * setting [[graft.plans.BinnedRangeJoin.WidthConf]] for the rule to

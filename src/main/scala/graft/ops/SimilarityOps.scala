@@ -425,45 +425,27 @@ object SimilarityOps {
       assigned: DataFrame, probes: DataFrame): DataFrame =
     scoreProbed(assigned, probes)
 
-  /** ON-DISK serving index for the exact-rerank read path (r10 VERDICT
-    * #1, closing the q173→q179→q180 lifecycle loop): every corpus
-    * vector routed to its cell (the q50 assignment) WRITTEN
-    * partitionBy(cell) — the raw (v, nrm) sibling of q179's PQ-code
-    * postings, i.e. the piece of the index a serving tier re-ranks
-    * with. q180 no longer probes an in-memory checkpoint: each
-    * micro-batch reads ONLY its probed cells back through
-    * [[probedVectorRead]]'s partition-PRUNED scan, so a probes-of-k
-    * fetch touches probes-of-k partition directories on disk at any
-    * scale. Fixture-markered against the source parquet (the r7
-    * stale-fixture discipline).
+  /** On-disk serving index for the exact-rerank read path: every corpus
+    * vector routed to its cell (the q50 assignment), committed as a
+    * cell layout through [[Layout.create]] — the raw (v, nrm) sibling of
+    * q179's PQ-code postings, the piece of the index a serving tier
+    * re-ranks with. q180's micro-batches open only their probed cells
+    * from its snapshot, so a probes-of-k fetch touches probes-of-k
+    * partition directories at any scale. Staged against the source
+    * parquet.
     */
   private[graft] def vectorLayoutDir(s: SparkSession, d: String): String = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_srvvec_" +
+    val out = s"${System.getProperty("java.io.tmpdir")}/graft_srvveclog_" +
       java.lang.Integer.toHexString(d.hashCode)
     graft.Fixtures.staged(java.nio.file.Paths.get(out), s"$d/embeddings.parquet") {
       val (assigned, _) = ivfRouting(base(s, d), ivfCellCount(s, d))
       // one writer task per cell, clustered by vec_id within the list
-      assigned.repartition(col("cell"))
-        .sortWithinPartitions("cell", "vec_id")
-        .write.partitionBy("cell").mode("overwrite").parquet(out)
+      Layout.create(out, assigned.repartition(col("cell"))
+        .sortWithinPartitions("cell", "vec_id"), "cell")
+      ()
     }
     out
   }
-
-  /** Partition-pruned read of the probed cells' vector lists — the
-    * serving tier's per-request fetch against [[vectorLayoutDir]].
-    * `cells` is metadata-scale (arrivals × probes), inlined as a
-    * literal isin so pruning happens at the FileScan (PlanShapeSpec
-    * asserts PartitionFilters non-empty). The partition column comes
-    * back as the directory-inferred integer type — cast to long so
-    * joins against the routing's long cells line up.
-    */
-  private[graft] def probedVectorRead(
-      s: SparkSession, dir: String, cells: Seq[Long]): DataFrame =
-    s.read.parquet(dir)
-      .filter(col("cell").isin(cells: _*))
-      .select(col("cell").cast("long").as("cell"), col("vec_id"),
-              col("v"), col("nrm"))
 
   /** Exact-cosine scoring of a probe set's cell members — the shared
     * candidate generator behind [[simAnnIvf]] and q174's modes.
@@ -2992,36 +2974,33 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
   // ---- q179: INDEX STORAGE LAYOUT — the piece that makes IVF probes
   //      cheap ON DISK at 100 TB. The routed + residual-coded corpus
   //      (exactly the q172/q173 postings: vec_id, cell, s, code,
-  //      err_e6) is WRITTEN partitioned by cell — hash-repartition on
-  //      cell so each inverted list is owned by one writer task,
-  //      sorted within (cell, vec_id, s) so each list is a contiguous
-  //      clustered run — and a probe then reads ONLY its cells back:
-  //      the partition filter prunes at the FileScan (PlanShapeSpec
-  //      asserts non-empty PartitionFilters), so a 2-of-50k-cell probe
-  //      touches 2/50k of the files instead of scanning the index.
-  //      This closes the serving-index lifecycle: train (q165/q177),
-  //      ingest (q173), serve (q171/q172/q174), audit (q175), eval
-  //      (q163), and now PERSIST. Output = query 0's probe cells'
-  //      postings read back through the pruned scan; oracle derives
-  //      the same postings from the routing + residual-code CTEs
-  //      without seeing the directory (the q124 discipline). ----
+  //      err_e6) is committed as a cell layout (graft.io.Layout) —
+  //      hash-repartition on cell so each inverted list is owned by
+  //      one writer task, sorted within (cell, vec_id, s) so each list
+  //      is a contiguous clustered run — and a probe then opens ONLY
+  //      its cells' partition directories from the snapshot: the
+  //      partition filter prunes at the FileScan (PlanShapeSpec), so a
+  //      2-of-50k-cell probe touches 2/50k of the files instead of
+  //      scanning the index. This closes the serving-index lifecycle:
+  //      train (q165/q177), ingest (q173), serve (q171/q172/q174),
+  //      audit (q175), eval (q163), and now PERSIST. Output = query
+  //      0's probe cells' postings read back through the pruned scan;
+  //      oracle derives the same postings from the routing +
+  //      residual-code CTEs without seeing the directory (the q124
+  //      discipline). ----
   def indexLayout(s: SparkSession, d: String): DataFrame = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_ivfidx_" +
-      java.lang.Integer.toHexString(d.hashCode)
-    val kit = sharedKitAtNq(s, d)
+    val out = indexLayoutDir(d)
     graft.Fixtures.staged(java.nio.file.Paths.get(out), s"$d/embeddings.parquet") {
-      cellClustered(compactionCodes(kit, lit(true)))
-        .write.partitionBy("cell").mode("overwrite").parquet(out)
+      Layout.create(out, cellClustered(compactionCodes(sharedKitAtNq(s, d), lit(true))), "cell")
+      ()
     }
-    // the probe: query 0's IvfProbes cells — metadata-scale collect
-    val probeCells = kit.probes.filter(col("qid") === 0)
-      .select("cell").collect().map(_.getLong(0)).sorted
-    openCells(s, out, probeCells.toIndexedSeq)
-      .filter(col("cell").isin(probeCells: _*))
-      .select(col("cell").cast("long").as("cell"), col("vec_id"),
-              col("s"), col("code"), col("err_e6"))
-      .orderBy("cell", "vec_id", "s")
+    probeReadBack(s, d, out)
   }
+
+  /** q179's layout root — for specs needing the on-disk index. */
+  private[graft] def indexLayoutDir(d: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_ivflog_" +
+      java.lang.Integer.toHexString(d.hashCode)
 
   private val indexLayoutSql =
     s"""WITH $baseCte,
@@ -3139,29 +3118,6 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
   private[graft] def compactionCodesFor(
       s: SparkSession, d: String, pred: Column): DataFrame =
     compactionCodes(sharedKitAtNq(s, d), pred)
-
-  /** Open ONLY the given partition subdirectories of q179's write-once
-    * layout (`basePath` keeps the partition columns). A root open
-    * pays an O(all-partitions) partition-DISCOVERY listing BEFORE any
-    * pruning applies — measured on the text-side twin at an 8000-dir
-    * layout: 14 s per maintenance op via the root vs ~1.9 s targeted,
-    * flat across a 100x corpus (bench_evidence/r15_idx_prune.md). At
-    * deployment cell counts (50 k) the listing term would dominate
-    * every probe. Missing subdirs (cells that never materialized)
-    * skip — same rows as the root open + isin filter; the degenerate
-    * all-missing selection falls back to the root open filtered to
-    * false (schema-exact empty relation).
-    */
-  private[graft] def openPartDirs(
-      s: SparkSession, dir: String, subdirs: Seq[String]): DataFrame = {
-    val paths = subdirs.map(sd => s"$dir/$sd").filter(graft.io.LayoutFs.exists)
-    if (paths.isEmpty) s.read.parquet(dir).filter(lit(false))
-    else s.read.option("basePath", dir).parquet(paths: _*)
-  }
-
-  private[graft] def openCells(
-      s: SparkSession, dir: String, cells: Seq[Long]): DataFrame =
-    openPartDirs(s, dir, cells.map(c => s"cell=$c"))
 
   /** q179's probe read-back tail, shared by every committed cell
     * layout: query 0's probe cells read through the pruned scan.
@@ -3536,9 +3492,10 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
   //      probe boost pays linearly for candidates the filter then
   //      throws away). Here the index itself is partitioned by
   //      (label, cell): the corpus is routed once (same argmin as
-  //      q50) and written partitionBy(lbl, cell), so each inverted
-  //      list holds ONE label's members of ONE cell. A filtered query
-  //      then reads ONLY its own label's lists for its probed cells —
+  //      q50) and committed as one partition per (label, cell) list,
+  //      so each inverted list holds ONE label's members of ONE cell.
+  //      A filtered query then reads ONLY its own label's lists for
+  //      its probed cells —
   //      the filter prunes at the FileScan, BEFORE any scoring — and
   //      every candidate fetched already satisfies the filter:
   //      n_cand == n_kept by construction, vs q174's boost mode which
@@ -3579,16 +3536,15 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
       .select(col("qid"), col("qv"), col("qn"), col("qlbl"),
               col("cell").as("pcell"))
       .localCheckpoint(true) // NQueries·probes rows — metadata-scale
-    val dir = labelLayoutDir(s, d)
+    val layout = Layout.snapshot(labelLayoutDir(s, d))
     val qlbls = probes.select("qlbl").distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
     val pcells = probes.select("pcell").distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
     // the pre-filter read: only (query-label, probed-cell) lists leave disk
-    val lists = labelProbedRead(s, dir, qlbls, pcells)
+    val lists = layout.open(s, for { l <- qlbls; c <- pcells } yield l * k + c)
     val cand = lists.join(broadcast(probes),
-        col("lbl") === col("qlbl") && col("cell") === col("pcell")
-          && col("vec_id") =!= col("qid"))
+        col("list") === col("qlbl") * k + col("pcell") && col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
               round(vecDot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos_r"))
     val nCand = cand.groupBy("qid").agg(count(lit(1)).as("n_cand"))
@@ -3630,34 +3586,25 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
               col("sc").getField("cid").as("cell"))
   }
 
-  /** q183's on-disk (label, cell)-partitioned index — one inverted
-    * list per (label, cell), clustered by vec_id. Fixture-markered.
+  /** q183's on-disk label-partitioned index: one inverted list per
+    * (label, cell), keyed `list = lbl * k + cell` (one-to-one for any
+    * integer label, since 0 <= cell < k), each list clustered by
+    * vec_id. Staged against the source parquet.
     */
   private[graft] def labelLayoutDir(s: SparkSession, d: String): String = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_lblidx_" +
+    val out = s"${System.getProperty("java.io.tmpdir")}/graft_lbllog_" +
       java.lang.Integer.toHexString(d.hashCode)
     graft.Fixtures.staged(java.nio.file.Paths.get(out), s"$d/embeddings.parquet") {
-      labeledAssigned(labeledBase(s, d), ivfCellCount(s, d))
-        .repartition(col("lbl"), col("cell"))
-        .sortWithinPartitions("lbl", "cell", "vec_id")
-        .write.partitionBy("lbl", "cell").mode("overwrite").parquet(out)
+      val k = ivfCellCount(s, d)
+      val lists = labeledAssigned(labeledBase(s, d), k)
+        .select(col("vec_id"), col("v"), col("nrm"),
+                (col("lbl") * k + col("cell")).as("list"))
+      Layout.create(out,
+        lists.repartition(col("list")).sortWithinPartitions("list", "vec_id"), "list")
+      ()
     }
     out
   }
-
-  /** Partition-pruned read of the (query-label, probed-cell) lists —
-    * both literal isin sets are metadata-scale, so BOTH partition
-    * levels prune at the FileScan (PlanShapeSpec guards this).
-    */
-  private[graft] def labelProbedRead(
-      s: SparkSession, dir: String,
-      lbls: Seq[Long], cells: Seq[Long]): DataFrame =
-    openPartDirs(s, dir,
-        for { l <- lbls; c <- cells } yield s"lbl=$l/cell=$c")
-      .filter(col("lbl").isin(lbls: _*) && col("cell").isin(cells: _*))
-      .select(col("lbl").cast("long").as("lbl"),
-              col("cell").cast("long").as("cell"),
-              col("vec_id"), col("v"), col("nrm"))
 
   private val partitionedFilteredAnnSql =
     s"""WITH $baseCte,
@@ -3941,7 +3888,7 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
     Q("q177_ivfpq_trained", ivfPqResidualTrained, Some(ivfPqTrainedSql),
       "residual IVF-PQ under Lloyd-TRAINED books: the q165 training loop run on the residual relation (leakage-safe seeds), then served through q172's exact plan — the recall delta vs q172 prices training"),
     Q("q179_index_layout", indexLayout, Some(indexLayoutSql),
-      "index storage layout: postings written partitionBy(cell) — one inverted list per writer, clustered runs — probe cells read back through a partition-PRUNED scan (2-of-k cells touch 2-of-k files)"),
+      "index storage layout: postings committed as a cell layout (graft.io.Layout) — one inverted list per writer, clustered runs — probe cells opened from the log entry through a partition-PRUNED scan (2-of-k cells touch 2-of-k files)"),
     Q("q182_index_compaction", indexCompaction, Some(indexLayoutSql),
       "LSM index compaction: the q173 arrival delta folds into the base cell-partitioned layout — pruned read of ONLY the delta-touched cells, one exchange on the delta, the touched cells committed as the layout's next log entry; oracle = the full-rebuild chain, so green == compaction is hash-indistinguishable from rebuild"),
     Q("q183_partitioned_filtered_ann", partitionedFilteredAnn,

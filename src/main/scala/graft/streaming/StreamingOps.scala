@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Fixtures, Q, Steps, Tables}
+import graft.{Fixtures, Q, Sessions, Steps, Tables}
 import graft.functions.HashFns._
 import graft.io.{Layout, Snapshot}
 import graft.ops.EventOps
@@ -82,12 +82,8 @@ object StreamingOps {
     * the cross-batch assertions are untouched. Production streams size
     * this to throughput: it is a per-query knob, not a semantic one.
     */
-  private def withStreamShufflePartitions[T](s: SparkSession, n: Int = 8)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try f finally s.conf.set(key, old)
-  }
+  private def withStreamShufflePartitions[T](s: SparkSession, n: Int = 8)(f: => T): T =
+    Sessions.withConf(s, "spark.sql.shuffle.partitions" -> n.toString)(f)
 
   def streamWindowed(s: SparkSession, d: String): DataFrame = {
     val qname = "graft_stream_" + java.lang.Integer.toHexString(d.hashCode)
@@ -1043,13 +1039,13 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
   //      cells via an array_sort over (negsim, cid) structs — the
   //      exact ir0 ordering, no state store; (2) per micro-batch the
   //      serving tier FETCHES only the arriving queries' probed cells
-  //      from the cell-partitioned parquet layout (the q179 shape,
-  //      vectorLayoutDir): foreachBatch collects the batch's probe
-  //      cells (metadata-scale — arrivals × probes ids) and
-  //      probedVectorRead prunes the scan to those partition
-  //      directories on DISK (PlanShapeSpec asserts the fetch's
-  //      FileScan carries PartitionFilters); (3) the native vec_dot
-  //      cosine scores each candidate map-side — the bounded batch
+  //      from the committed cell layout (the q179 shape,
+  //      vectorLayoutDir): the snapshot is resolved once before the
+  //      stream starts, foreachBatch collects the batch's probe cells
+  //      (metadata-scale — arrivals × probes ids) and opens only those
+  //      partition directories, with the recorded schema: no root
+  //      listing and no schema job per batch (PlanShapeSpec); (3) the
+  //      native vec_dot cosine scores each candidate map-side — the bounded batch
   //      probe relation BROADCASTS against the pruned lists — and the
   //      scored rows append to the output log. Ranking the bounded
   //      per-query candidate set (≤ probes·cell-size rows) happens
@@ -1068,7 +1064,7 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
         .select("vec_id", "embedding"), dir.resolve("delta.parquet"))
     }
     val (kitDf, _) = graft.ops.SimilarityOps.ingestCoderKitDf(s, d)
-    val layout = graft.ops.SimilarityOps.vectorLayoutDir(s, d)
+    val layout = Layout.snapshot(graft.ops.SimilarityOps.vectorLayoutDir(s, d))
     val nProbes = graft.ops.SimilarityOps.IvfProbes
     val outDir = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), s"graft_saq_out_$hex")
@@ -1104,7 +1100,7 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
             val cells = b.select("cell").distinct()
               .collect().map(_.getLong(0)).sorted.toSeq
             if (cells.nonEmpty) {
-              graft.ops.SimilarityOps.probedVectorRead(s, layout, cells)
+              layout.open(s, cells)
                 .join(broadcast(b), Seq("cell"))
                 .filter(col("vec_id") =!= col("qid"))
                 .select(col("qid"), col("vec_id"),
@@ -1398,15 +1394,8 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
     // arrival slices: the q215 delta in doc_id order, three files
     // (staged by Bench.prebuild; its corpus read still infers a schema)
     val srcDir = Steps.tag(s, "static") { stageSpiSlices(s, d) }
-    // driver-side ledger of the batch ids this run has actually
-    // written to the store — the foreachBatch closure below owns
-    // every write, so probing LayoutFs.exists for batch=0..id-1 per
-    // micro-batch (O(n²) existence checks over the stream's life,
-    // each a remote metadata call on an object store) is redundant.
-    // The lane clears laneRoot at entry, so the ledger starts
-    // correctly empty; a one-time disk seed covers the
-    // restart-from-checkpoint shape this lane never stages.
-    val writtenBatches = scala.collection.mutable.TreeSet.empty[Long]
+    // the accumulated index: a batch-partitioned layout, empty at entry
+    createSeenStore(s, storeDir)
     // static artifacts, ready BEFORE the stream starts. The curated-
     // base index is the PERSISTED q217 artifact — each micro-batch
     // probes only its candidate buckets through the pruned FileScan
@@ -1465,35 +1454,12 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
               .withColumn("n_tok", size(tokens(col("rtext"))).cast("long"))
               .persist()
             try {
-              // prior-arrival index: batches STRICTLY BEFORE this one —
-              // path-addressed per-batch dirs (batch=<id>) make a
-              // re-executed micro-batch idempotent (blind appends
-              // would duplicate rows on retry) and the strict
-              // filter keeps this batch's own partial output, if any
-              // survived a crash, out of its re-run's probe side
-              // opened by TARGETED batch=<id> dirs strictly below this
-              // id, never a root listing: a root open re-lists every
-              // batch dir after each write invalidates the listing
-              // cache, an O(total-batches) term per micro-batch that
-              // grows with stream length (the same listing term the
-              // layout opens removed). batch 0 has no
-              // store yet: hand-built empty (nothing to derive a schema
-              // from on disk).
-              val priorIds = writtenBatches.synchronized {
-                if (writtenBatches.isEmpty && batchId > 0L)
-                  writtenBatches ++= (0L until batchId).filter(i =>
-                    graft.io.LayoutFs.exists(s"$storeDir/batch=$i"))
-                writtenBatches.iterator.filter(_ < batchId).toSeq
-              }
-              val prior =
-                if (priorIds.isEmpty) s.createDataFrame(
-                  new java.util.ArrayList[org.apache.spark.sql.Row](),
-                  org.apache.spark.sql.types.StructType(Seq(
-                    StructField("doc_id", LongType),
-                    StructField("sig", ArrayType(LongType)))))
-                else s.read.option("basePath", storeDir)
-                  .parquet(priorIds.map(i => s"$storeDir/batch=$i"): _*)
-                  .select("doc_id", "sig")
+              // prior-arrival index: the committed batches STRICTLY
+              // before this one, so a re-run batch never probes its own
+              // earlier output
+              val store = Layout.snapshot(storeDir)
+              val prior = store.open(s, store.parts.keys.filter(_ < batchId).toSeq)
+                .select("doc_id", "sig")
               val (verdicts, dSigs, dg3k) =
                 spiBatchAdmit(s, audit, benchGrams, prior,
                   db => PipelineOps.probeBandedIndex(s, idxDir, db))
@@ -1501,14 +1467,9 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
                 verdicts.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
               }
               // the stream's state lives in the index: this batch's
-              // clean signatures land in their OWN batch=<id> partition
-              // for later arrivals to probe — overwrite, not append, so
-              // a re-executed micro-batch replaces rather than
-              // duplicates its contribution (restart/retry-safe)
-              Steps.tag(s, "state") {
-                dSigs.write.mode("overwrite").parquet(s"$storeDir/batch=$batchId")
-              }
-              writtenBatches.synchronized { writtenBatches += batchId }
+              // clean signatures commit as its OWN partition for later
+              // arrivals to probe
+              Steps.tag(s, "state") { commitSeen(store, dSigs, batchId) }
               dg3k.unpersist(false)
               ()
             } finally { audit.unpersist(false); () }
@@ -1538,6 +1499,21 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
         .localCheckpoint(true)
     }
   }
+
+  /** q216's accumulated index at `dir`: an empty (doc_id, sig) layout
+    * partitioned by `batch`.
+    */
+  private[graft] def createSeenStore(s: SparkSession, dir: String): Snapshot =
+    Layout.create(dir, s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+      StructType.fromDDL("doc_id BIGINT, sig ARRAY<BIGINT>, batch BIGINT")), "batch")
+
+  /** Commit micro-batch `batchId`'s clean signatures as its own
+    * partition of the accumulated index: a re-run batch replaces its
+    * partition rather than duplicating it, and a crash leaves the
+    * previous entry whole.
+    */
+  private[graft] def commitSeen(prev: Snapshot, sigs: DataFrame, batchId: Long): Snapshot =
+    Layout.rewrite(prev, sigs.withColumn("batch", lit(batchId)), Seq(batchId))
 
   /** q216's per-batch admission relation — the whole stateless gate +
     * two-index admission chain for ONE micro-batch, over the already

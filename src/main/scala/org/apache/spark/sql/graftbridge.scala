@@ -25,6 +25,10 @@ object graftbridge {
     */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+  /** Deliver `e` to every listener of `sc` (their `onOtherEvent`). */
+  def postEvent(sc: org.apache.spark.SparkContext,
+                e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+    sc.listenerBus.post(e)
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(

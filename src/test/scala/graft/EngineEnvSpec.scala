@@ -57,12 +57,30 @@ class EngineEnvSpec extends AnyFunSuite {
     val root = Paths.get("src/main/scala")
     val io = Paths.get("src/main/scala/graft/io")
     assert(Files.isDirectory(io), s"layout package $io not found")
-    val offenders = for {
-      f <- scalaFiles(root)
-      if !f.startsWith(io)
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      if banned.exists(line.contains)
-    } yield s"$f:${i + 1}: ${line.trim}"
+    // a partitioned layout is written and opened through the log
+    // alone: no hand-picked partition directories under a basePath, no
+    // partitioned write, except where Spark's own partitioned write and
+    // prune is the operation a lane measures
+    val partitionedWrite = """\.write\s*\.partitionBy\(""".r
+    val sparkPartitioningLanes = Set(
+      "AdvancedOps.scala" -> "partitionPrune", "AdvancedOps.scala" -> "writeLayout")
+    val defName = """\bdef\s+(\w+)""".r
+    val offenders = scalaFiles(root).filterNot(_.startsWith(io)).flatMap { f =>
+      val text = Files.readString(f)
+      val lines = text.split("\n", -1)
+      def at(offset: Int): String = {
+        val n = text.substring(0, offset).count(_ == '\n')
+        s"$f:${n + 1}: ${lines(n).trim}"
+      }
+      val named = (banned :+ "option(\"basePath\"").flatMap { b =>
+        Iterator.iterate(text.indexOf(b))(i => text.indexOf(b, i + 1)).takeWhile(_ >= 0).map(at)
+      }
+      val writes = partitionedWrite.findAllMatchIn(text).map(_.start).filterNot { i =>
+        val lane = defName.findAllMatchIn(text.substring(0, i)).toSeq.lastOption.map(_.group(1))
+        lane.exists(l => sparkPartitioningLanes((f.getFileName.toString, l)))
+      }.map(at).toSeq
+      named ++ writes
+    }
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 }

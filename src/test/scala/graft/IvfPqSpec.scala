@@ -269,15 +269,11 @@ class IvfPqSpec extends AnyFunSuite with SparkTestBase {
       .map(rr => (rr.getLong(0), rr.getLong(1), rr.getLong(2),
                   rr.getLong(3), rr.getLong(4))).toSeq
     assert(got == want, "read-back postings != driver-side decode")
-    // the on-disk layout really is one directory per inverted list
-    val out = new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/graft_ivfidx_" +
-        java.lang.Integer.toHexString(sf.hashCode))
-    val cellDirs = out.listFiles().filter(f =>
-      f.isDirectory && f.getName.startsWith("cell="))
-    assert(cellDirs.length.toLong == vecs.map(v => r.cellOf(v._1)).distinct.length,
-      "partition directories != occupied cells")
-    info(s"${cellDirs.length} cell= directories; probe read ${got.size} postings " +
+    // the committed layout really is one partition per inverted list
+    val parts = graft.io.Layout.snapshot(SimilarityOps.indexLayoutDir(sf)).parts
+    assert(parts.keySet == vecs.map(v => r.cellOf(v._1)).toSet,
+      "committed partitions != occupied cells")
+    info(s"${parts.size} committed cell partitions; probe read ${got.size} postings " +
       s"from ${probeCells.size} cells")
   }
 

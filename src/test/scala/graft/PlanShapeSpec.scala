@@ -36,23 +36,29 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       .flatMap(_.relation.location.rootPaths.map(_.getName))
   }
 
-  /** Fence a pinned cell-layout read: resolving the committed state and
-    * building the read run no Spark job, every scan prunes on cell, and
-    * the scans list exactly the probed cells' partition directories.
+  /** Fence a pinned layout read: resolving the committed state and
+    * building the read run no Spark job, every scan prunes on the
+    * layout's partition column, and the scans list exactly the probed
+    * keys' partition directories. `read` builds the read from the
+    * snapshot; by default a cell layout's posting read.
     */
-  private def assertPinnedRead(what: String, root: String, pin: Option[Long],
-                               cells: Seq[Long]): Unit = {
-    val (df, jobs) = jobsDuring(
-      ops.SimilarityOps.pinnedRead(spark, io.Layout.snapshot(root, pin), cells))
-    assert(jobs == 0, s"$what: owner resolution ran $jobs Spark jobs")
+  private def assertPinnedRead(what: String, root: String, pin: Option[Long], keys: Seq[Long])(
+      read: (io.Snapshot, Seq[Long]) => org.apache.spark.sql.DataFrame =
+        ops.SimilarityOps.pinnedRead(spark, _, _)): Unit = {
+    val ((snap, df), jobs) = jobsDuring {
+      val snap = io.Layout.snapshot(root, pin)
+      (snap, read(snap, keys))
+    }
+    assert(jobs == 0, s"$what: resolving the snapshot and building the read ran $jobs Spark jobs")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: ["), s"$what plan:\n$plan")
     assert(!plan.contains("PartitionFilters: []"),
       s"$what: a data directory scan does not prune partitions:\n$plan")
     val dirs = scannedDirs(df)
-    val want = cells.filter(io.Layout.snapshot(root, pin).parts.contains).map(c => s"cell=$c")
+    val want = keys.filter(snap.parts.contains).map(k => s"${snap.partCol}=$k")
+    assert(want.nonEmpty, s"$what: none of the probed keys $keys is in the layout")
     assert(dirs.sorted == want.sorted,
-      s"$what scans $dirs, not exactly the probed cells' directories $want")
+      s"$what scans $dirs, not exactly the probed directories $want")
   }
 
   private def physical(name: String): String = {
@@ -238,6 +244,11 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       s"probe scan does not prune partitions:\n$plan")
   }
 
+  test("q179 probe opens its cells from the layout's log: no job, only the probed cell dirs") {
+    ops.SimilarityOps.indexLayout(spark, sf) // ensure layout
+    assertPinnedRead("q179 probe", ops.SimilarityOps.indexLayoutDir(sf), None, Seq(0L, 1L))()
+  }
+
   test("q191 generation-pinned reads prune partitions in EVERY generation's FileScan (r11)") {
     // the log must buy metadata-cost resolution, not save it and then
     // scan whole data directories: resolving a pin reads one log entry
@@ -246,20 +257,16 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     ops.SimilarityOps.indexVersions(spark, sf).collect() // fixture
     val dir = ops.SimilarityOps.versionDir(sf)
     Seq(0L, 1L).foreach { pin =>
-      assertPinnedRead(s"pin $pin", dir, Some(pin), Seq(0L, 1L))
+      assertPinnedRead(s"pin $pin", dir, Some(pin), Seq(0L, 1L))()
     }
   }
 
   test("q180 serving fetch prunes partitions at the on-disk layout's FileScan (r11)") {
-    // the r10 verdict ask #1: q180's static side must BE the
-    // cell-partitioned parquet layout, read pruned per micro-batch —
-    // this is the exact fetch relation foreachBatch issues
+    // q180's static side is the committed cell layout, resolved once
+    // before the stream starts; each micro-batch opens only its probe
+    // cells — the exact fetch relation foreachBatch issues
     val dir = ops.SimilarityOps.vectorLayoutDir(spark, sf)
-    val plan = ops.SimilarityOps.probedVectorRead(spark, dir, Seq(0L, 1L))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: ["), s"plan:\n$plan")
-    assert(!plan.contains("PartitionFilters: []"),
-      s"serving fetch does not prune partitions:\n$plan")
+    assertPinnedRead("q180 fetch", dir, None, Seq(0L, 1L))(_.open(spark, _))
   }
 
   test("q182 compaction merge: pruned base scan + ONE exchange on the delta only (r11)") {
@@ -282,19 +289,17 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
 
   test("q183 pre-filter read prunes BOTH partition levels at the FileScan (r11)") {
     // the lane's reason to exist: the label filter must prune at the
-    // scan, BEFORE any scoring — both the label level and the cell
-    // level of the (lbl, cell) layout appear in PartitionFilters
+    // scan, BEFORE any scoring — each (label, cell) list is one
+    // partition `list = lbl * k + cell`, and only the query label's
+    // lists of the probed cells are listed
     ops.SimilarityOps.partitionedFilteredAnn(spark, sf).collect() // ensure layout
     val dir = ops.SimilarityOps.labelLayoutDir(spark, sf)
-    val plan = ops.SimilarityOps.labelProbedRead(spark, dir, Seq(0L), Seq(0L, 1L))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: ["), s"plan:\n$plan")
-    assert(!plan.contains("PartitionFilters: []"),
-      s"pre-filter read does not prune partitions:\n$plan")
-    val pfSeg = plan.substring(plan.indexOf("PartitionFilters: ["))
-    val pf = pfSeg.substring(0, pfSeg.indexOf("]") + 1)
-    assert(pf.contains("lbl") && pf.contains("cell"),
-      s"both partition levels must prune, got: $pf")
+    val k = ops.SimilarityOps.ivfKFor(ops.SimilarityOps.embCount(spark, sf))
+    // a label with a list in cell 0 (a centroid's own cell is never empty)
+    val lbl = Math.floorDiv(
+      io.Layout.snapshot(dir).parts.keys.filter(Math.floorMod(_, k) == 0L).min, k)
+    val lists = Seq(0L, 1L).map(cell => lbl * k + cell)
+    assertPinnedRead("q183 pre-filter read", dir, None, lists)(_.open(spark, _))
   }
 
   test("q187 delete merge: pruned scan + broadcast anti join, ZERO shuffle exchanges (r11)") {
@@ -394,7 +399,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     val laneRoot = s"${System.getProperty("java.io.tmpdir")}/graft_vacfence"
     ops.SimilarityOps.forkVersions(spark, sf, laneRoot, upTo = 1)
     io.Layout.vacuum(laneRoot, floor = 1L)
-    assertPinnedRead("post-vacuum pin 1", laneRoot, Some(1L), Seq(0L, 1L))
+    assertPinnedRead("post-vacuum pin 1", laneRoot, Some(1L), Seq(0L, 1L))()
   }
 
   test("q211 video near-dup pair stage: df-capped postings equi-join, " +
@@ -441,7 +446,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     val hex = java.lang.Integer.toHexString(sf.hashCode)
     val laneRoot = s"${System.getProperty("java.io.tmpdir")}/graft_svvac_fence_$hex"
     ops.SimilarityOps.forkVersions(spark, sf, laneRoot, upTo = 0)
-    assertPinnedRead("batch-0 fetch", laneRoot, None, Seq(0L, 1L))
+    assertPinnedRead("batch-0 fetch", laneRoot, None, Seq(0L, 1L))()
     import spark.implicits._
     val probes = Seq((100L, 0L), (101L, 1L)).toDF("qid", "cell")
     val plan = streaming.StreamingOps.svServeRelation(

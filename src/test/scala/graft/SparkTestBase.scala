@@ -35,14 +35,8 @@ trait SparkTestBase extends BeforeAndAfterAll { this: Suite =>
     finally super.afterAll()
 
   /** Runs `f` with the given session confs set, then restores them. */
-  def withConf[A](pairs: (String, String)*)(f: => A): A = {
-    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  def withConf[A](pairs: (String, String)*)(f: => A): A =
+    Sessions.withConf(spark, pairs: _*)(f)
 
   /** `f`'s result and the file bytes its tasks read (summed task
     * `inputMetrics.bytesRead`).

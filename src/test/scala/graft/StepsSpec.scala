@@ -17,7 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  2. Futures run one after the other on the checkpoint pool (reused
   *     threads) carry their own tag, not the thread's stale one;
   *  3. a tag set inside a foreachBatch body leaves the stream's job
-  *     group alone, so `query.stop()` still cancels the batch's job.
+  *     group alone, so `query.stop()` still cancels the batch's job;
+  *  4. a tag whose body runs no Spark job still gets its timed row in
+  *     `DevJobs`' per-step table.
   */
 class StepsSpec extends AnyFunSuite with SparkTestBase {
   private def drain(): Unit =
@@ -127,5 +129,23 @@ class StepsSpec extends AnyFunSuite with SparkTestBase {
         "stop() did not cancel the tagged batch job")
       assert((System.nanoTime() - t0) / 1e9 < 60.0)
     } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("a tag whose body runs no job gets a DevJobs row with its wall time") {
+    val c = new DevJobs.Counter
+    drain()
+    spark.sparkContext.addSparkListener(c)
+    try {
+      Steps.tag(spark, "commit") { Thread.sleep(20) }
+      Steps.tag(spark, "outer") { Steps.tag(spark, "commit") { () } }
+      drain()
+    } finally spark.sparkContext.removeSparkListener(c)
+    assert(c.jobs == 0)
+    val rows = c.steps.drop(1).map(_.trim.split("\\s+").toSeq)
+    val byTag = rows.map(r => r.head -> r).toMap
+    assert(byTag.keySet == Set("commit", "outer", "outer/commit", "(untagged)"), rows)
+    assert(byTag("commit")(1) == "0", "a jobless step has no jobs")
+    assert(byTag("commit").last.toDouble >= 0.02, s"wall_s of a 20 ms body: ${byTag("commit")}")
+    assert(byTag("outer").last.toDouble >= byTag("outer/commit").last.toDouble)
   }
 }

@@ -13,6 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *     match — i.e. the accumulated index (the stream's state) did
   *     real work; a lane where every dup resolves within its own
   *     batch would never exercise it.
+  *  4. A RE-RUN BATCH REPLACES ITS PARTITION: committing the same
+  *     batch id twice to the accumulated index leaves its rows once.
   */
 class StreamPipelineSpec extends AnyFunSuite with SparkTestBase {
 
@@ -39,5 +41,24 @@ class StreamPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(dw.exists(_._4 >= 1L),
       "every dup_within resolved within batch 0 — the accumulated " +
         s"index was never exercised: ${dw.toSeq}")
+  }
+
+  test("q216 seen store: a batch id committed twice reads back exactly once") {
+    import spark.implicits._
+    val dir = tempDir("graft_spi_seen").resolve("seen").toString
+    val store0 = streaming.StreamingOps.createSeenStore(spark, dir)
+    assert(store0.parts.isEmpty && store0.open(spark, Seq(0L)).count() == 0L)
+    val sigs = Seq((10L, Seq(1L, 2L)), (11L, Seq(3L, 4L))).toDF("doc_id", "sig")
+    val once = streaming.StreamingOps.commitSeen(store0, sigs, 0L)
+    // the micro-batch re-executed after a restart: same id, same rows
+    val twice = streaming.StreamingOps.commitSeen(once, sigs, 0L)
+    val later = streaming.StreamingOps.commitSeen(twice,
+      Seq((12L, Seq(5L, 6L))).toDF("doc_id", "sig"), 1L)
+    val fresh = io.Layout.snapshot(dir)
+    assert(fresh.version == later.version && fresh.parts.keySet == Set(0L, 1L))
+    // batch 2's prior-arrival side: every committed batch below 2, once
+    val prior = fresh.open(spark, fresh.parts.keys.filter(_ < 2L).toSeq)
+      .select("doc_id", "sig").as[(Long, Seq[Long])].collect().sortBy(_._1).toSeq
+    assert(prior == Seq((10L, Seq(1L, 2L)), (11L, Seq(3L, 4L)), (12L, Seq(5L, 6L))))
   }
 }
